@@ -58,17 +58,11 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 def _verified_names() -> set[str]:
-    """Query names that already have a successful driver row in any
-    past-round CORRECTNESS_r*.json (hash-green, or weak-ran for
-    declared no-oracle queries). Used to rotate verification coverage:
-    the driver checks only the first 50 registrations per round, so
-    :func:`all_queries` pushes already-verified names to the back and
-    never-checked ones to the front."""
-    # Latest driver status per name wins: rounds are processed in
-    # order (sorted r01 < r02 < ...), so a green row in r02 followed by
-    # an ERROR in r03 demotes the name back into the front tier for
-    # re-verification (it would otherwise hide past the first-50 window
-    # forever).
+    """Query names whose latest driver row in the CORRECTNESS_r*.json
+    files ran clean (hash-green, or weak-ran for declared no-oracle
+    queries). Rounds are read in order, so the latest status per name
+    wins: a green row followed by an ERROR demotes the name to
+    :data:`_FAILED_LAST`. Also refreshes :data:`_LATEST_CLEAN_ROUND`."""
     latest: dict[str, bool] = {}
     _LATEST_CLEAN_ROUND.clear()
     for path in sorted(glob.glob(os.path.join(_REPO_DIR, "CORRECTNESS_r*.json"))):
@@ -101,7 +95,7 @@ def _verified_names() -> set[str]:
 
 
 # Latest round whose driver row ran clean, per name — refreshed by
-# _verified_names(); drives the _R7_REFRESH_PIN dissolve condition.
+# _verified_names(); orders the verified tier oldest row first.
 _LATEST_CLEAN_ROUND: dict[str, int] = {}
 
 
@@ -110,163 +104,7 @@ _LATEST_CLEAN_ROUND: dict[str, int] = {}
 _FAILED_LAST: set[str] = set()
 
 
-# The declared §2.1 contract query set (SURVEY.md §2.1 — 71 names).
-# A contract name that has never earned a green driver row sorts ahead
-# of EVERY extension registration, whatever module it lives in: the
-# round-3 lesson was that 15 newly-registered text extensions displaced
-# 8 never-checked contract names out of the driver's first-50 window
-# (module priority ranked whole modules, not contract membership).
-_CONTRACT_NAMES = frozenset(
-    """
-scan_project_filter scan_count scan_limit_offset scan_distinct_values
-filter_compound_predicates filter_like_pattern filter_in_list
-filter_between_dates filter_spatial_envelope project_computed
-project_struct_nest id_rewrite_concat explode_pos_with_id
-geo_route_by_type geo_reproject_webmercator join_inner_equi
-join_left_outer join_full_outer join_semi join_anti join_star_multiway
-join_theta_range join_asof_event join_upsert_merge agg_groupby_stats
-agg_having agg_global_no_group agg_count_distinct_exact
-agg_approx_count_distinct agg_grouping_sets agg_rollup agg_cube
-agg_conditional agg_extent_minmax window_rank_topk_per_group
-window_running_sum window_lag_lead window_moving_avg_rows
-window_range_frame window_ntile_percent window_first_last sort_multi_key
-topk_order_limit set_union_all set_union_distinct set_intersect
-set_except str_funcs date_funcs math_funcs array_funcs map_json_funcs
-cast_coalesce_defaults stream_tumbling_window_agg
-stream_sliding_window_agg stream_session_window dedup_exact
-dedup_key_last_write minhash_lsh_dedup sim_cosine_topk_pairs
-sim_knn_query_vector lsh_approx_join text_tokenize_wordcount
-text_ngram_count text_tfidf_top_terms text_lang_filter_stats
-multimodal_embedding_stats udf_scalar_default udf_pandas_reproject
-udaf_grouped_median udtf_json_explode
-""".split()
-)
-
-# The round-5 rotation backlog: the 52 extension names registered in
-# rounds 1-4 that had not yet earned a driver row when round 5 opened.
-# Pinned at contract tier so that NOTHING registered later can displace
-# them out of the driver's first-50 window (the round-3 lesson again:
-# module priority alone ranks whole modules, so a new registration in
-# an early-priority module would otherwise leapfrog this queue).
-_R5_BACKLOG_PIN = frozenset(
-    """
-multimodal_image_decode multimodal_video_frame_sample
-multimodal_image_resize multimodal_audio_chunk
-multimodal_embedding_quantize multimodal_image_patchify
-multimodal_audio_spectrum multimodal_scene_cuts dedup_cluster_components
-dedup_minhash_banding_exact dedup_cluster_keep_best
-dedup_containment_pairs dedup_simhash_hamming_pairs
-dedup_decontaminate_ngrams dedup_incremental_new_batch
-dedup_semantic_buckets dedup_line_level dedup_cross_split_leakage
-dedup_minhash_recall_curve profile_numeric_columns dq_rule_checks
-dq_benford_first_digit dq_referential_integrity profile_outliers_mad
-ts_resample_hourly_ffill ts_ohlc_downsample ts_gap_detect
-analytics_cohort_retention analytics_funnel_steps window_zscore_anomaly
-dim_scd2_intervals ts_rolling_distinct_users ts_active_streaks
-ts_resample_hourly_interp ts_seasonal_profile ts_cumulative_users
-cdc_merge_apply analytics_conversion_latency ts_sessionize_stats
-ts_ewma_halflife ts_cusum_change_point analytics_window_funnel
-graph_pagerank_fixed graph_triangle_count graph_degree_stats
-graph_two_hop_reach graph_kcore_peel analytics_order_priority_check
-analytics_order_gap_stats analytics_pareto_frontier
-analytics_rfm_segments etl_quarantine_split
-""".split()
-)
-
-# The round-6 rotation tail: the 40 extension names registered in round
-# 5 that had not yet earned a driver row when round 6 opened (plus the
-# three _R5_BACKLOG_PIN stragglers, they total 43 — exactly the set the
-# r5 verdict ordered landed, fitting one 50-name driver window). Pinned
-# at contract tier so no round-6 registration can displace them.
-_R6_BACKLOG_PIN = frozenset(
-    """
-join_band_bucketed window_groups_frame_emulated
-window_frame_exclude_emulated window_match_vshape set_union_by_name
-pivot_sql_clause agg_weighted_median agg_string_concat_ordered
-agg_boolean_bitwise agg_higher_moments agg_approx_percentile_sketch
-stats_regression_funcs stats_ttest_welch stats_mannwhitney_u
-text_top_ngram_coverage text_winnowing_fingerprint text_js_divergence
-sample_gumbel_topk_weighted sample_length_bucketed_batches
-text_ngram_novelty text_zlib_compression_ratio text_cdc_chunks
-sim_mmr_rerank sim_pca_whiten dedup_prefix_filter_join
-dq_distribution_drift dq_control_chart dq_k_anonymity
-dq_score_calibration ts_transition_matrix dq_freshness_staleness
-ts_autocorrelation ts_cross_correlation ts_sax_symbols
-ts_seasonal_naive_backtest ts_entropy_rate ts_seasonal_strength
-graph_degree_assortativity graph_adamic_adar_top_link
-analytics_survival_km
-""".split()
-)
-
-# The two two-round stragglers the r5 verdict ordered at the very front
-# of the round-6 driver window (A18's query and the r3-registered pareto
-# frontier — the only names that have sat out two rotation windows).
-_R6_FRONT = ("etl_quarantine_split", "analytics_pareto_frontier")
-
-# Rotation lap 2 (r7, VERDICT r6 'next' #1): every name whose
-# implementation changed AFTER its only driver row — the driver's hard
-# signal is stale for these even though local sweeps stay green. Built
-# mechanically by tools/staleness.py (function-source diff between HEAD
-# and each row-round's commit), ordered OLDEST driver row first; plus
-# sim_pca_whiten, whose pca_whiten HELPER was re-spelled in r6/r7
-# (helper-level changes are the tool's declared blind spot) and
-# stats_ks_two_sample / sim_pca_whiten again re-spelled this round.
-# Ordered tuple — window position follows staleness age.
-_R7_REFRESH_PIN = (
-    "agg_count_distinct_exact",        # row r1, re-spelled r4
-    "agg_groupby_stats",               # row r1, re-spelled r6
-    "analytics_top_revenue_supplier",  # row r1, re-spelled r4
-    "stats_gini_revenue",              # row r1, re-spelled r4
-    "stats_ks_two_sample",             # row r1, re-spelled r7 (bucketed ECDF)
-    "filter_spatial_polygon_intersects",  # row r2, re-spelled r3
-    "join_star_multiway",              # row r2, r6 orders-geo bridge
-    "window_ntile_percent",            # row r2, re-spelled r4
-    "agg_equidepth_histogram",         # row r3, re-spelled r4
-    "agg_median_two_phase",            # row r3, re-spelled r4
-    "sim_pca_whiten",                  # row r6 (weak), r7 two-level combine
-)
-
-# Round-10 re-spells whose only driver row predates the change and
-# whose row round is recent enough that the oldest-first rotation
-# would not surface them for several rounds (tools/staleness.py):
-# corpus_token_concentration switched to integer DIV (ADVICE r9) after
-# its r9 row. The r1-row re-spells (grouping_sets/rollup/cube,
-# small_qty_revenue) already lead the r10 window via oldest-first.
-# Dissolves once a clean r10+ row lands. ml_kmeans_clusters joined in
-# the r10 continuation session: its fit body moved into the shared
-# _km_fit helper (C201 silhouette pairing) after its r8 row — locally
-# re-checked bit-exact at two SFs, pinned for a fresh driver row.
-_R10_RESPELL_PIN = frozenset(
-    {"corpus_token_concentration", "ml_kmeans_clusters"}
-)
-
-# Round-11 oracle type-stability re-spells (VERDICT r10 "next" #1/#2):
-# every oracle whose output could carry a DECIMAL/HUGEINT-typed column
-# in a newer DuckDB (bare-decimal divisors with integer LHS, DECIMAL
-# literal lists, un-cast grid arithmetic) was re-spelled with
-# CAST(n AS DOUBLE) — value-identical locally (re-checked bit-exact at
-# sf0.001+sf0.01), but the old green driver rows predate the change,
-# so each needs a fresh row. tools/oracle_lint.py now enforces the
-# class. The three C12 reds (agg_rollup/cube/grouping_sets) re-front
-# via _FAILED_LAST on their own. Dissolves on a clean r11+ row.
-_R11_RESPELL_PIN = frozenset(
-    """
-stats_mannwhitney_u stats_bootstrap_poisson stats_bh_fdr
-analytics_small_qty_revenue analytics_profit_by_nation_year
-analytics_abc_classification etl_geometry_precision
-spatial_avg_nearest_neighbor spatial_hex_tessellation
-spatial_lof_outliers spatial_ripleys_k spatial_incremental_morans
-spatial_kernel_density sample_gumbel_topk_weighted
-sample_pack_sequences dedup_line_level sim_matryoshka_recall
-stats_jackknife_blocks
-""".split()
-)
-# stats_jackknife_blocks joined mid-r11: the sf1 certification sweep
-# caught its q - B*m^2 cancellation parking jack_se on the r4 grid
-# boundary; re-spelled to exact-integer-grid accumulations (green at
-# sf0.001/0.01/0.1/1).
-
-# Verification priority among not-yet-driver-checked queries: the
+# Verification priority among failed and never-verified queries: the
 # SURVEY §2.1 contract families (scans/filters/joins/windows/setops/
 # functions/etl/streaming) first, engine extensions after. Within a
 # module, registration (source) order is preserved.
@@ -331,66 +169,25 @@ def load_all() -> None:
 def all_queries() -> dict[str, QueryFn]:
     """All registered queries, ordered for the driver's partial check.
 
-    The driver verifies the first 50 entries per round, in dict order.
-    To converge on full coverage across rounds, names WITHOUT a green
-    CORRECTNESS row from any prior round sort first (contract families
-    before engine extensions), already-verified names last. Contents
-    are identical regardless of order.
+    The driver verifies the first 50 entries per round, in dict order,
+    so the order is the verification policy. Names whose latest driver
+    row failed come first and never-verified names next, both by
+    (module priority, registration order); verified names come last,
+    oldest clean row first, so each round re-verifies the stalest rows.
+    Contents are identical regardless of order.
     """
     load_all()
     verified = _verified_names()
     prio = {m: i for i, m in enumerate(_MODULE_PRIORITY)}
     insertion = {n: i for i, n in enumerate(QUERIES)}
 
-    refresh_pos = {n: i for i, n in enumerate(_R7_REFRESH_PIN)}
-
     def key(n: str) -> tuple[int, int, int]:
-        if (
-            n in _R10_RESPELL_PIN
-            and n in verified
-            and _LATEST_CLEAN_ROUND.get(n, 0) <= 9
-        ):
-            tier = -1  # re-spelled after its row (r10): re-verify first
-        elif (
-            n in _R11_RESPELL_PIN
-            and n in verified
-            and _LATEST_CLEAN_ROUND.get(n, 0) <= 10
-        ):
-            tier = -1  # r11 type-stability re-spell: re-verify first
-        elif n in _FAILED_LAST:
-            tier = -1  # fixed driver ERRORs re-verify first
-        elif n in _R6_FRONT and n not in verified:
-            tier = -1  # stragglers lead the round-6 window
-        elif (
-            n in refresh_pos
-            and n in verified
-            and _LATEST_CLEAN_ROUND.get(n, 0) <= 6
-        ):
-            # rotation lap 2: re-spelled-after-row names re-verify even
-            # though verified, ordered by staleness age (tuple order).
-            # The pin DISSOLVES once a clean r7+ driver row lands (or
-            # if the name is unverified — then the normal unchecked
-            # tiers already front-load it), so later rounds don't
-            # re-spend window slots on it.
-            return (0, -len(refresh_pos) + refresh_pos[n], insertion[n])
-        elif n in verified:
-            # Freshness rotation (r10, VERDICT r9 'next' #7): verified
-            # names sort by the AGE of their latest clean driver row,
-            # oldest first — each round's window re-verifies the ~50
-            # stalest rows (after unverified/new names take their
-            # slots), so environment drift can't hide behind an r1-era
-            # green row. Self-maintaining: a fresh row pushes the name
-            # to the back of the rotation.
-            return (2, _LATEST_CLEAN_ROUND.get(n, 0), insertion[n])
-        elif n in _CONTRACT_NAMES or n in _R5_BACKLOG_PIN or n in _R6_BACKLOG_PIN:
-            tier = 0  # contract / pinned-backlog, never driver-checked
-        else:
-            tier = 1  # extension, never driver-checked
-        return (
-            tier,
-            prio.get(MODULE_OF.get(n, ""), len(_MODULE_PRIORITY)),
-            insertion[n],
-        )
+        module = prio.get(MODULE_OF[n], len(_MODULE_PRIORITY))
+        if n in _FAILED_LAST:
+            return (0, module, insertion[n])
+        if n not in verified:
+            return (1, module, insertion[n])
+        return (2, _LATEST_CLEAN_ROUND[n], insertion[n])
 
     return {n: QUERIES[n] for n in sorted(QUERIES, key=key)}
 

@@ -14,14 +14,9 @@ reprs agree.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
-from check import canon, compare  # noqa: E402
+from tools.check import canon, compare
 
 
 def _hard(problems: list[str]) -> list[str]:

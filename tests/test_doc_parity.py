@@ -190,7 +190,8 @@ def test_optimization_doc_touched_queries_have_plan_dumps():
     The latest OPTIMIZATION_r{N}.md carries a machine-readable
     'Touched queries:' list (backtick-quoted names, r13+); for every
     listed name, plans/r{N}/<name>_before.txt AND _after.txt must
-    exist. Deleting a dump (or forgetting to commit one) fails this
+    exist, and every plans/r{N}/<name>_before.txt must be listed.
+    Deleting a dump, or dumping a query without listing it, fails this
     test. Rounds before r13 predate the convention and are skipped."""
     import glob
 
@@ -214,3 +215,9 @@ def test_optimization_doc_touched_queries_have_plan_dumps():
             if not os.path.exists(p):
                 missing.append(os.path.relpath(p, _REPO))
     assert not missing, f"touched queries missing plan dumps: {missing}"
+    dumped = {
+        os.path.basename(p)[: -len("_before.txt")]
+        for p in glob.glob(os.path.join(_REPO, "plans", f"r{n}", "*_before.txt"))
+    }
+    unlisted = sorted(dumped - set(names))
+    assert not unlisted, f"plan dumps for queries not in 'Touched queries:': {unlisted}"

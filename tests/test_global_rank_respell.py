@@ -16,20 +16,15 @@ window) against the probed plan-text formats, so the rule can't rot.
 from __future__ import annotations
 
 import pytest
-
-import sys
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from etl_arcgis_spark import registry  # noqa: E402
-from etl_arcgis_spark.operators.scale_patterns import (  # noqa: E402
+from etl_arcgis_spark import registry
+from etl_arcgis_spark.operators.scale_patterns import (
     bucketed_global_rank,
     bucketed_running_sums,
 )
-from tools.audit_plans import unpartitioned_window  # noqa: E402
+from tools.audit_plans import unpartitioned_window
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -526,9 +526,6 @@ def test_audit_allowlists_reference_real_queries():
     """Every name in the plan-audit allowlists must be a registered
     query — a typo'd or stale entry silently weakens the audit (it
     allowlists nothing while appearing to)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.audit_plans import NLJ_OK, PYTHON_OK, WINDOW_BOUNDED_OK
 
     registry.load_all()

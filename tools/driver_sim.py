@@ -16,17 +16,18 @@ Usage: python tools/driver_sim.py [--sf DIR] [--n 50]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from check import duck_con  # noqa: E402
 from oracle_lint import _DIVISOR_ALLOWLIST, _DIVISOR_RE, _HAZARD_TYPE_RE  # noqa: E402
 

@@ -9,9 +9,11 @@ Usage: python tools/dump_plans.py [--sf DIR]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
@@ -67,7 +69,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         plan = df._jdf.queryExecution().executedPlan().toString()
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print("wrote PLANS.md")
     spark.stop()

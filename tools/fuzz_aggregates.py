@@ -23,10 +23,11 @@ Usage: python tools/fuzz_aggregates.py [--n 200] [--seed 20260814]
 from __future__ import annotations
 
 import argparse
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 

@@ -12,10 +12,11 @@ Usage: python tools/fuzz_extended.py [--n 300] [--seed 20260813]
 from __future__ import annotations
 
 import argparse
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

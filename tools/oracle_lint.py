@@ -33,11 +33,11 @@ Exit 1 on any non-allowlisted hit. driver_sim runs this in --strict.
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_arcgis_spark import registry  # noqa: E402
 

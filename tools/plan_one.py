@@ -9,7 +9,7 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402

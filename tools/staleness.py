@@ -11,7 +11,6 @@ against (the parent of the `round N:` artifact commit).
 
 Output: one line per stale name, oldest driver row first —
     <name>  row=r<N>  module=<module>  reason=<changed|missing_then>
-Used to build registry._R7_REFRESH_PIN mechanically (VERDICT r6 §next 1).
 """
 
 from __future__ import annotations
