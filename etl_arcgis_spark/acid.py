@@ -97,11 +97,44 @@ def _read_manifest(root: str, version: int) -> dict[str, Any]:
         return json.load(fh)
 
 
-def _read_manifest_or_raise(root: str) -> dict[str, Any]:
-    v = current_version(root)
+def _snapshot(root: str, version: int | None = None) -> tuple[int, dict[str, Any]]:
+    """(version, manifest) of snapshot ``version``, the current one by
+    default — the one place a missing table or an expired snapshot is
+    reported."""
+    v = version if version is not None else current_version(root)
     if v is None:
         raise FileNotFoundError(f"no snapshot at {root}")
-    return _read_manifest(root, v)
+    try:
+        return v, _read_manifest(root, v)
+    except FileNotFoundError:
+        raise FileNotFoundError(f"snapshot v{v} not retained at {root}") from None
+
+
+# The TABLE STATE every commit inherits from its base snapshot unless it
+# changes it. Everything else in a manifest (predicate, row/file counts
+# of the commit, ...) describes one commit only and never carries.
+_TABLE_STATE = (
+    "key", "schema", "files", "rows", "partition_by", "deletes",
+    "last_seq", "constraints", "stream_sinks",
+)
+
+
+def _next_manifest(
+    base: dict[str, Any], base_v: int, operation: str, **changes: Any
+) -> dict[str, Any]:
+    """The manifest of a commit on top of snapshot ``base_v``: the base's
+    table state with ``changes`` applied, plus the commit's version,
+    parent, operation and its own stats (the other ``changes``). A
+    table-state key changed to None is dropped (compaction resolving
+    ``deletes``, de-partitioning). Every commit path builds its manifest
+    here, so none can shed the constraints or the stream-sink ledger."""
+    man = {k: base[k] for k in _TABLE_STATE if k in base}
+    man.update(changes)
+    for k in _TABLE_STATE:
+        if k in man and man[k] is None:
+            del man[k]
+    man.update(version=base_v + 1, parent=base_v, operation=operation)
+    return man
 
 
 def _col_stats(path: str) -> dict[str, list[Any]]:
@@ -387,22 +420,9 @@ def _publish(root: str, version: int, manifest: dict[str, Any]) -> None:
 
     # commit wall-clock stamp (Delta/Iceberg commit info): the basis of
     # timestamp time travel (version_as_of). Set HERE so every writer —
-    # including restore(), which clones an old manifest dict — gets a
-    # fresh stamp.
+    # including publish_staged() and fast_forward(), which re-publish a
+    # stored manifest — gets a fresh stamp.
     manifest["committed_at"] = _time.time()
-    # CHECK constraints are table-level governance: every commit
-    # carries the predecessor snapshot's constraint set forward unless
-    # the commit explicitly sets one (add/drop_constraint). Done at
-    # the single publish choke point so no commit path can silently
-    # shed the table's constraints — including restore(), which
-    # restores DATA while governance stays current (documented).
-    if "constraints" not in manifest and version > 1:
-        try:
-            prev = _read_manifest(root, version - 1)
-            if prev.get("constraints"):
-                manifest["constraints"] = prev["constraints"]
-        except FileNotFoundError:
-            pass  # expired predecessor: nothing to carry
     tmp = os.path.join(root, f".manifest-{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)
@@ -475,11 +495,8 @@ def add_constraint(
     enforces the predicate on the rows it writes and aborts the
     commit on violation; delete/compact/zorder commits cannot
     introduce rows and carry the constraint set forward untouched
-    (single-choke-point carry in _publish)."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    (_next_manifest carries it as table state)."""
+    base_v, man = _snapshot(root)
     cons = dict(man.get("constraints") or {})
     if name in cons:
         raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
@@ -489,46 +506,30 @@ def add_constraint(
         f"add_constraint({name!r}) on existing data",
     )
     cons[name] = expr
-    new_man = {
-        **{k: v for k, v in man.items() if k != "committed_at"},
-        "version": base_v + 1,
-        "operation": "add_constraint",
-        "parent": base_v,
-        "constraints": cons,
-    }
-    _publish(root, base_v + 1, new_man)
+    _publish(
+        root, base_v + 1,
+        _next_manifest(man, base_v, "add_constraint", constraints=cons),
+    )
     return base_v + 1
 
 
 def drop_constraint(root: str, name: str) -> int:
-    """ALTER TABLE DROP CONSTRAINT — metadata-only commit; the key
-    stays present (possibly empty) so _publish's carry-forward does
-    not resurrect the dropped predicate."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    """ALTER TABLE DROP CONSTRAINT — metadata-only commit."""
+    base_v, man = _snapshot(root)
     cons = dict(man.get("constraints") or {})
     if name not in cons:
         raise ValueError(f"no constraint named {name!r} (have {sorted(cons)})")
     del cons[name]
-    new_man = {
-        **{k: v for k, v in man.items() if k != "committed_at"},
-        "version": base_v + 1,
-        "operation": "drop_constraint",
-        "parent": base_v,
-        "constraints": cons,
-    }
-    _publish(root, base_v + 1, new_man)
+    _publish(
+        root, base_v + 1,
+        _next_manifest(man, base_v, "drop_constraint", constraints=cons),
+    )
     return base_v + 1
 
 
 def list_constraints(root: str) -> dict[str, str]:
     """The CHECK constraints in force at the current snapshot."""
-    v = current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    return dict(_read_manifest(root, v).get("constraints") or {})
+    return dict(_snapshot(root)[1].get("constraints") or {})
 
 
 def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
@@ -552,10 +553,7 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
     pruning is a may-contain filter, so a stats MISS is conservative
     (scan, don't skip) — correctness holds, the file just stops
     being skippable until a rewrite refreshes its stats."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     from pyspark.sql.types import StructField, StructType
 
     schema = (
@@ -596,17 +594,13 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
         al[new] = al.pop(old) if old in al else old
         e["aliases"] = al
         files2.append(e)
-    new_man = {
-        **{k: v for k, v in man.items() if k != "committed_at"},
-        "version": base_v + 1,
-        "operation": "rename_column",
-        "parent": base_v,
-        "schema": new_schema.json(),
-        "files": files2,
-        "renamed": {"from": old, "to": new},
-    }
-    if man.get("key") == old:
-        new_man["key"] = new
+    new_man = _next_manifest(
+        man, base_v, "rename_column",
+        key=new if man["key"] == old else man["key"],
+        schema=new_schema.json(),
+        files=files2,
+        renamed={"from": old, "to": new},
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -644,10 +638,7 @@ def read(spark: SparkSession, root: str, version: int | None = None) -> DataFram
     """Read a snapshot (latest by default; pass version for time
     travel). Snapshot isolation: the file list is fixed at manifest
     read time; later commits add new files this reader never sees."""
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, v)
+    v, man = _snapshot(root, version)
     paths = [os.path.join(root, f["path"]) for f in man["files"]]
     if not paths:
         # an empty TABLE is legitimate state (e.g. delete-all): the
@@ -867,10 +858,7 @@ def read_partition(
     str() of what was written (manifest entries are unescaped from the
     Hive dir names, so ':' and friends compare literally), with None
     selecting the NULL partition."""
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, v)
+    v, man = _snapshot(root, version)
     pcol = man.get("partition_by")
     if pcol is None:
         raise ValueError(f"table at {root} is not partitioned")
@@ -917,6 +905,38 @@ def read_partition(
     return out
 
 
+def _pad(df: DataFrame, schema: Any) -> DataFrame:
+    """``df`` with exactly ``schema``'s columns, in order: a column
+    none of the read files carries (schema evolution) reads as typed
+    nulls."""
+    for fld in schema.fields:
+        if fld.name not in df.columns:
+            df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
+    return df.select(*[fld.name for fld in schema.fields])
+
+
+def _read_kept(
+    spark: SparkSession,
+    root: str,
+    v: int,
+    man: dict[str, Any],
+    keep: list[dict[str, Any]],
+) -> DataFrame:
+    """The shared tail of the stats-pruned readers: read the file
+    entries pruning kept (an empty typed frame when none survive),
+    aligned to the full table schema — a pruned set that happens to
+    contain no post-evolution file would otherwise silently lack the
+    evolved column (reads must be schema-stable regardless of which
+    files the stats hit). The caller applies the exact residual
+    filter."""
+    if not keep:
+        return read(spark, root, v).filter(F.lit(False))
+    df = _read_paths(
+        spark, root, man, [os.path.join(root, f["path"]) for f in keep]
+    )
+    return _pad(df, read(spark, root, v).schema)
+
+
 def read_key_range(
     spark: SparkSession, root: str, lo: Any, hi: Any, version: int | None = None
 ) -> DataFrame:
@@ -925,10 +945,7 @@ def read_key_range(
     manifest-level file skipping that stacks on top of parquet's own
     row-group pruning (two pruning tiers, same as Iceberg scan
     planning). Files without stats are read conservatively."""
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, v)
+    v, man = _snapshot(root, version)
     key = man["key"]
     keep = [
         f
@@ -936,22 +953,9 @@ def read_key_range(
         if "key_range" not in f
         or not (f["key_range"][1] < lo or f["key_range"][0] > hi)
     ]
-    if not keep:
-        return read(spark, root, v).filter(F.lit(False))
-    # mergeSchema like read(), PLUS alignment to the full table schema:
-    # mergeSchema only unions the files actually read, so a pruned set
-    # that happens to contain no post-evolution file would otherwise
-    # silently lack the evolved column (reads must be schema-stable
-    # regardless of which files the range hits)
-    df = _read_paths(
-        spark, root, man, [os.path.join(root, f["path"]) for f in keep]
+    return _read_kept(spark, root, v, man, keep).filter(
+        (F.col(key) >= lo) & (F.col(key) <= hi)
     )
-    full = read(spark, root, v).schema
-    for fld in full.fields:
-        if fld.name not in df.columns:
-            df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-    df = df.select(*[fld.name for fld in full.fields])
-    return df.filter((F.col(key) >= lo) & (F.col(key) <= hi))
 
 
 def read_where(
@@ -968,10 +972,7 @@ def read_where(
     This is full Iceberg-style scan planning — partition pruning
     (read_partition) above it, parquet row-group pruning below it.
     Files without stats for the column read conservatively."""
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, v)
+    v, man = _snapshot(root, version)
     keep = []
     for f in man["files"]:
         # RENAME safety: a file's col_stats are keyed by its PHYSICAL
@@ -1013,17 +1014,9 @@ def read_where(
                 st = [pv, pv]
         if st is None or not (st[1] < lo or st[0] > hi):
             keep.append(f)
-    if not keep:
-        return read(spark, root, v).filter(F.lit(False))
-    df = _read_paths(
-        spark, root, man, [os.path.join(root, f["path"]) for f in keep]
+    return _read_kept(spark, root, v, man, keep).filter(
+        (F.col(col) >= lo) & (F.col(col) <= hi)
     )
-    full = read(spark, root, v).schema
-    for fld in full.fields:
-        if fld.name not in df.columns:
-            df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-    df = df.select(*[fld.name for fld in full.fields])
-    return df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
 
 
 def read_point(
@@ -1040,10 +1033,7 @@ def read_point(
     sidecar from an older hash scheme (no ``bloom_v`` stamp) is
     ignored rather than trusted: skipping on a stale-scheme negative
     would be the silent-row-drop bug the stamp exists to prevent."""
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, v)
+    v, man = _snapshot(root, version)
     key = man["key"]
     keep = []
     for f in man["files"]:
@@ -1058,18 +1048,7 @@ def read_point(
         ):
             continue
         keep.append(f)
-    if not keep:
-        return read(spark, root, v).filter(F.lit(False))
-    df = _read_paths(
-        spark, root, man, [os.path.join(root, f["path"]) for f in keep]
-    )
-    full = read(spark, root, v).schema
-    for fld in full.fields:
-        if fld.name not in df.columns:
-            df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-    return df.select(*[fld.name for fld in full.fields]).filter(
-        F.col(key) == value
-    )
+    return _read_kept(spark, root, v, man, keep).filter(F.col(key) == value)
 
 
 def merge(
@@ -1131,8 +1110,7 @@ def merge(
     via a follow-up column projection, or accept them as lineage
     columns, the Delta CDC-apply convention)."""
     _check_reserved_cols(source, "merge() source")
-    base_man = _read_manifest_or_raise(root)
-    key0 = base_man["key"]
+    key0 = _snapshot(root)[1]["key"]
     chk = source.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(key0).alias("n_nonnull"),
@@ -1151,10 +1129,7 @@ def merge(
             "(e.g. operators/dedup.dedup_key_last_write)"
         )
     for _ in range(max_retries):
-        base_v = current_version(root)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot at {root}")
-        man = _read_manifest(root, base_v)
+        base_v, man = _snapshot(root)
         key = man["key"]
         pcol = man.get("partition_by")
         cand = man["files"]
@@ -1250,27 +1225,20 @@ def merge(
             # itself carries forward (stale entries for rewritten
             # files are no-ops: basenames are fresh uuids)
             mor_del = _mor_deleted_counts(man)
-            new_man: dict[str, Any] = {
-                "version": base_v + 1,
-                "key": key,
-                "operation": "merge",
-                "schema": merged.schema.json(),
-                "files": untouched + new_files,
-                "rows": merged.count()
+            new_man = _next_manifest(
+                man, base_v, "merge",
+                schema=merged.schema.json(),
+                files=untouched + new_files,
+                rows=merged.count()
                 + sum(
                     f.get("rows", 0)
                     - mor_del.get(os.path.basename(f["path"]), 0)
                     for f in untouched
                 ),
-                "parent": base_v,
-                "rewrote_files": len(touched),
-                "carried_files": len(untouched),
-                "last_seq": new_seq,
-            }
-            if man.get("deletes"):
-                new_man["deletes"] = man["deletes"]
-            if pcol is not None:
-                new_man["partition_by"] = pcol
+                rewrote_files=len(touched),
+                carried_files=len(untouched),
+                last_seq=new_seq,
+            )
             if staged:
                 token = uuid.uuid4().hex
                 apath = os.path.join(root, f".audit-{token}.json")
@@ -1330,10 +1298,7 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
     allowed by design (event-log semantics; use merge() for keyed
     upsert). The cheapest possible commit: cost = new data only."""
     _check_reserved_cols(df, "append()")
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     _enforce_constraints(df, man, "append()")
     pcol = man.get("partition_by")
     if pcol is not None and pcol not in df.columns:
@@ -1342,20 +1307,13 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
     new_files = _write_data_files(
         df, root, key=man["key"], partition_by=pcol, seq=new_seq
     )
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "append",
-        "schema": df.schema.json(),
-        "files": man["files"] + new_files,
-        "rows": man.get("rows", 0) + df.count(),
-        "parent": base_v,
-        "last_seq": new_seq,
-    }
-    if man.get("deletes"):
-        new_man["deletes"] = man["deletes"]
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    new_man = _next_manifest(
+        man, base_v, "append",
+        schema=df.schema.json(),
+        files=man["files"] + new_files,
+        rows=man.get("rows", 0) + df.count(),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -1365,37 +1323,27 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
     list is exactly snapshot ``version``'s — history moves forward
     (the bad commits stay queryable via time travel until vacuum), the
     data files are shared, no data IO at all. The operational undo for
-    a bad merge/delete."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
+    a bad merge/delete.
+
+    Only the old snapshot's DATA comes back (key, schema, files, rows,
+    partition spec, delete overlay). Governance stays CURRENT: the
+    live CHECK constraints and stream-sink ledger carry from the
+    current snapshot like in any other commit, and the seq counter
+    never goes backwards (the next equality delete must still outrank
+    every file ever written)."""
+    base_v, cur = _snapshot(root)
     if version == base_v:
         return base_v
-    old = _read_manifest(root, version)
-    cur = _read_manifest(root, base_v)
-    new_man = dict(old)
-    # Governance stays CURRENT across a restore (ADVICE r10): restore
-    # revives the DATA (file list) of the old snapshot, but copying its
-    # manifest wholesale would also revive its 'constraints' key —
-    # resurrecting a since-dropped CHECK constraint (or shedding one
-    # added after that snapshot). Pin the live set explicitly.
-    new_man.pop("constraints", None)
-    if cur.get("constraints"):
-        new_man["constraints"] = cur["constraints"]
-    new_man.update(
-        {
-            "version": base_v + 1,
-            "operation": "restore",
-            "parent": base_v,
-            "restored_from": version,
-            # the seq counter never goes backwards: a restore revives an
-            # old FILE list, but the next equality delete must still
-            # outrank every file ever written
-            "last_seq": max(
-                int(old.get("last_seq", version)),
-                int(cur.get("last_seq", base_v)),
-            ),
-        }
+    _, old = _snapshot(root, version)
+    data = ("key", "schema", "files", "rows", "partition_by", "deletes")
+    new_man = _next_manifest(
+        cur, base_v, "restore",
+        **{k: old.get(k) for k in data},
+        last_seq=max(
+            int(old.get("last_seq", version)),
+            int(cur.get("last_seq", base_v)),
+        ),
+        restored_from=version,
     )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
@@ -1467,10 +1415,7 @@ def delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     SQL DELETE semantics on NULLs: a row is deleted iff the predicate
     is TRUE; rows where it evaluates NULL/UNKNOWN survive (the pre-r6
     ``NOT (pred)`` spelling silently deleted them)."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     pcol = man.get("partition_by")
     touched: list[dict[str, Any]] = []
     untouched: list[dict[str, Any]] = list(man["files"])
@@ -1489,22 +1434,13 @@ def delete_where(spark: SparkSession, root: str, predicate: str) -> int:
         new_files = untouched + _write_data_files(
             remaining, root, key=man["key"], partition_by=pcol, seq=new_seq
         )
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "delete",
-        "schema": man.get("schema")
-        or read(spark, root, base_v).schema.json(),
-        "files": new_files,
-        "rows": max(0, int(man.get("rows", 0)) - int(deleted_rows)),
-        "parent": base_v,
-        "predicate": predicate,
-        "last_seq": new_seq,
-    }
-    if man.get("deletes"):
-        new_man["deletes"] = man["deletes"]
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    new_man = _next_manifest(
+        man, base_v, "delete",
+        files=new_files,
+        rows=max(0, int(man.get("rows", 0)) - int(deleted_rows)),
+        predicate=predicate,
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -1529,7 +1465,7 @@ def version_as_of(root: str, ts: float) -> int:
             best = v
     if best is None:
         raise ValueError(
-            f"no snapshot at {root} committed at or before {ts}"
+            f"table at {root} has no snapshot committed at or before {ts}"
         )
     return best
 
@@ -1559,16 +1495,9 @@ def clone(
     VACUUM on the SOURCE that expires files the clone still references
     breaks the clone. Compact (or fully rewrite) the clone to make it
     self-contained before retiring source snapshots."""
-    src_v = version if version is not None else current_version(src_root)
-    if src_v is None:
-        raise FileNotFoundError(f"no snapshot at {src_root}")
-    if not os.path.exists(_manifest_path(src_root, src_v)):
-        raise FileNotFoundError(
-            f"snapshot v{src_v} not retained at {src_root}"
-        )
+    src_v, man = _snapshot(src_root, version)
     if current_version(dst_root) is not None:
         raise ValueError(f"table already exists at {dst_root}")
-    man = _read_manifest(src_root, src_v)
     os.makedirs(dst_root, exist_ok=True)
 
     def _rel(rel_to_src: str) -> str:
@@ -1636,10 +1565,7 @@ def delete_where_mor(spark: SparkSession, root: str, predicate: str) -> int:
     predicate is TRUE (NULL/UNKNOWN survive); positions are captured
     AFTER applying any existing overlay, so re-deleting an
     already-deleted row can never double-count."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     entries = list(man.get("deletes") or [])
     n = 0
     if man["files"]:
@@ -1683,22 +1609,13 @@ def delete_where_mor(spark: SparkSession, root: str, predicate: str) -> int:
         # would otherwise accumulate under root forever (vacuum also
         # sweeps aged .stage-* dirs as crash orphans)
         shutil.rmtree(staging, ignore_errors=True)
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "delete_mor",
-        "schema": man.get("schema")
-        or read(spark, root, base_v).schema.json(),
-        "files": man["files"],
-        "rows": max(0, int(man.get("rows", 0)) - n),
-        "parent": base_v,
-        "predicate": predicate,
-        "deletes": entries,
-        "deleted_rows": n,
-        "last_seq": int(man.get("last_seq", base_v)),
-    }
-    if man.get("partition_by") is not None:
-        new_man["partition_by"] = man["partition_by"]
+    new_man = _next_manifest(
+        man, base_v, "delete_mor",
+        rows=max(0, int(man.get("rows", 0)) - n),
+        predicate=predicate,
+        deletes=entries,
+        deleted_rows=n,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -1803,32 +1720,21 @@ def delete_eq(spark: SparkSession, root: str, keys: DataFrame) -> int:
     Cites the reference's keyed-delete leg of the upsert protocol
     (task.ts:235-350, query-by-key then act); the lakehouse form of A13
     for high-churn keys. Overlay resolution: compact_deletes()."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
+    base_v, man = _snapshot(root)
     _check_reserved_cols(keys, "delete_eq() keys")
-    man = _read_manifest(root, base_v)
     new_seq = _next_seq(man, base_v)
     entry, n = _eq_delete_entry(spark, root, man, keys, new_seq)
     entries = list(man.get("deletes") or [])
     if entry:
         entries.append(entry)
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "delete_eq",
-        "schema": man.get("schema")
-        or read(spark, root, base_v).schema.json(),
-        "files": man["files"],
-        "rows": max(0, int(man.get("rows", 0)) - n),
-        "parent": base_v,
-        "deletes": entries,
-        "deleted_rows": n,
-        "eq_cols": list(keys.columns),
-        "last_seq": new_seq,
-    }
-    if man.get("partition_by") is not None:
-        new_man["partition_by"] = man["partition_by"]
+    new_man = _next_manifest(
+        man, base_v, "delete_eq",
+        rows=max(0, int(man.get("rows", 0)) - n),
+        deletes=entries,
+        deleted_rows=n,
+        eq_cols=list(keys.columns),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -1851,11 +1757,8 @@ def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
     but CDF surfaces it as delete + insert rows (the Iceberg changelog
     convention for equality-delete upserts) rather than Delta's
     update_pre/postimage pairs."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
+    base_v, man = _snapshot(root)
     _check_reserved_cols(source, "upsert_mor() source")
-    man = _read_manifest(root, base_v)
     key = man["key"]
     chk = source.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1907,22 +1810,16 @@ def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
     merged_fields = list(tbl_schema.fields) + [
         f for f in source.schema.fields if f.name not in tbl_schema.fieldNames()
     ]
-    new_man = {
-        "version": base_v + 1,
-        "key": key,
-        "operation": "upsert_mor",
-        "schema": StructType(merged_fields).json(),
-        "files": man["files"] + new_files,
-        "rows": max(0, int(man.get("rows", 0)) - n_del) + int(chk["n"]),
-        "parent": base_v,
-        "matched_rows": n_del,
-        "inserted_rows": int(chk["n"]),
-        "last_seq": new_seq,
-    }
-    if entries:
-        new_man["deletes"] = entries
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    new_man = _next_manifest(
+        man, base_v, "upsert_mor",
+        schema=StructType(merged_fields).json(),
+        files=man["files"] + new_files,
+        rows=max(0, int(man.get("rows", 0)) - n_del) + int(chk["n"]),
+        deletes=entries or None,
+        matched_rows=n_del,
+        inserted_rows=int(chk["n"]),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -1936,10 +1833,7 @@ def compact_deletes(spark: SparkSession, root: str) -> int:
     file path-identical, and publish a snapshot with no ``deletes``.
     Read amplification returns to zero; the overlay parquet files age
     out via vacuum once their referencing manifests expire."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     entries = man.get("deletes") or []
     if not entries:
         return base_v  # idempotent no-op
@@ -1963,20 +1857,13 @@ def compact_deletes(spark: SparkSession, root: str) -> int:
         new_files = untouched + _write_data_files(
             survivors, root, key=man["key"], partition_by=pcol, seq=new_seq
         )
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "compact_deletes",
-        "schema": man.get("schema")
-        or read(spark, root, base_v).schema.json(),
-        "files": new_files,
-        "rows": man.get("rows", 0),
-        "parent": base_v,
-        "resolved_delete_files": len(entries),
-        "last_seq": new_seq,
-    }
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    new_man = _next_manifest(
+        man, base_v, "compact_deletes",
+        files=new_files,
+        deletes=None,
+        resolved_delete_files=len(entries),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -1998,24 +1885,9 @@ def update_where(
     (SQL UPDATE semantics). SET targets must be existing columns —
     schema evolution stays merge()'s job, so carried-file rows never
     silently lack an updated column."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     pcol = man.get("partition_by")
-    cols = [
-        f["name"]
-        for f in json.loads(
-            man.get("schema")
-            or read(spark, root, base_v).schema.json()
-        )["fields"]
-    ]
-    bad = [c for c in set_exprs if c not in cols]
-    if bad:
-        raise ValueError(
-            f"update_where SET targets {bad} are not table columns "
-            f"{cols}; add columns via merge() schema evolution first"
-        )
+    _check_set_targets(spark, root, base_v, man, set_exprs, "update_where")
     if pcol is not None and pcol in set_exprs:
         raise ValueError(
             f"update_where cannot SET the partition column {pcol!r} — "
@@ -2029,101 +1901,124 @@ def update_where(
             spark, root, man, predicate
         )
     new_files = untouched
+    new_seq = _next_seq(man, base_v)
     if touched:
-        updated = _read_paths(
-            spark, root, man,
-            [os.path.join(root, f["path"]) for f in touched],
-        )
-        # SQL UPDATE evaluates the predicate AND every SET expression
-        # against the OLD row: stage the flag and all new values first,
-        # then swap — sequential withColumn would leak one SET's new
-        # value into the next SET's (or the predicate's) inputs
-        order = updated.columns
-        updated = updated.withColumn("__upd", F.expr(f"({predicate})"))
-        for c, expr in set_exprs.items():
-            dt = updated.schema[c].dataType.simpleString()
-            # The raw SET expression is guarded under the predicate
-            # (ADVICE r7): SQL UPDATE only evaluates SET expressions on
-            # predicate-matched rows, so an expression that is only safe
-            # there (e.g. 100 / x under predicate x <> 0, or
-            # element_at/assert_true) must not run — and possibly throw —
-            # on non-matched rows sharing the file. CASE WHEN evaluates
-            # branches lazily per-row, so unmatched rows never touch it.
-            updated = updated.withColumn(
-                f"__raw_{c}",
-                F.when(F.col("__upd"), F.expr(f"({expr})")),
-            ).withColumn(
-                f"__new_{c}",
-                F.when(
-                    F.col("__upd"),
-                    F.expr(f"try_cast(__raw_{c} AS {dt})"),
-                ).otherwise(F.col(c)),
-            )
-        # cast-integrity gate (ADVICE r6 #4): the SET expression must
-        # cast to the column's existing dtype. A plain cast either
-        # NULLs malformed input silently (non-ANSI — silent corruption
-        # in a GDPR/backfill maintenance API) or throws an opaque
-        # mid-job SparkNumberFormatException (ANSI). try_cast makes
-        # failure observable in BOTH modes, then one agg over the
-        # touched files counts matched rows whose raw SET value is
-        # non-null but whose cast result is null; any such row fails
-        # the whole UPDATE with a clean error before a file is
-        # written.
-        viol = updated.agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.coalesce(F.col("__upd"), F.lit(False))
-                        & F.col(f"__raw_{c}").isNotNull()
-                        & F.col(f"__new_{c}").isNull(),
-                        1,
-                    ).otherwise(0)
-                ).alias(c)
-                for c in set_exprs
-            ]
-        ).collect()[0]
-        bad_casts = {c: int(viol[c]) for c in set_exprs if viol[c]}
-        if bad_casts:
-            tgt_types = {
-                c: updated.schema[c].dataType.simpleString()
-                for c in bad_casts
-            }
-            raise ValueError(
-                f"update_where SET expression(s) do not cast to the "
-                f"column type: {bad_casts} matched row(s) would be "
-                f"silently NULLed (targets {tgt_types}); fix the "
-                "expression or cast explicitly"
-            )
-        updated = updated.select(
-            *[
-                (F.col(f"__new_{c}").alias(c) if c in set_exprs else F.col(c))
-                for c in order
-            ]
+        updated = _apply_set(
+            _read_paths(
+                spark, root, man,
+                [os.path.join(root, f["path"]) for f in touched],
+            ),
+            predicate, set_exprs, "update_where",
         )
         _enforce_constraints(updated, man, "update_where()")
         new_files = untouched + _write_data_files(
-            updated, root, key=man["key"], partition_by=pcol,
-            seq=_next_seq(man, base_v),
+            updated, root, key=man["key"], partition_by=pcol, seq=new_seq
         )
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "update",
-        "schema": man.get("schema")
-        or read(spark, root, base_v).schema.json(),
-        "files": new_files,
-        "rows": int(man.get("rows", 0)),
-        "parent": base_v,
-        "predicate": predicate,
-        "updated_rows": int(n_updated),
-        "last_seq": _next_seq(man, base_v),
-    }
-    if man.get("deletes"):
-        new_man["deletes"] = man["deletes"]
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    new_man = _next_manifest(
+        man, base_v, "update",
+        files=new_files,
+        predicate=predicate,
+        updated_rows=int(n_updated),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
+
+
+def _check_set_targets(
+    spark: SparkSession,
+    root: str,
+    base_v: int,
+    man: dict[str, Any],
+    set_exprs: dict[str, str],
+    what: str,
+) -> None:
+    """Reject SET targets that are not table columns (see update_where)."""
+    cols = [
+        f["name"]
+        for f in json.loads(
+            man.get("schema") or read(spark, root, base_v).schema.json()
+        )["fields"]
+    ]
+    bad = [c for c in set_exprs if c not in cols]
+    if bad:
+        raise ValueError(
+            f"{what} SET targets {bad} are not table columns "
+            f"{cols}; add columns via merge() schema evolution first"
+        )
+
+
+def _apply_set(
+    df: DataFrame, predicate: str, set_exprs: dict[str, str], what: str
+) -> DataFrame:
+    """``df`` with SQL UPDATE's SET applied to the rows ``predicate``
+    matches (NULL/UNKNOWN rows stay as they are).
+
+    SQL UPDATE evaluates the predicate AND every SET expression against
+    the OLD row: stage the flag and all new values first, then swap —
+    sequential withColumn would leak one SET's new value into the next
+    SET's (or the predicate's) inputs."""
+    order = df.columns
+    updated = df.withColumn("__upd", F.expr(f"({predicate})"))
+    for c, expr in set_exprs.items():
+        dt = updated.schema[c].dataType.simpleString()
+        # The raw SET expression is guarded under the predicate
+        # (ADVICE r7): SQL UPDATE only evaluates SET expressions on
+        # predicate-matched rows, so an expression that is only safe
+        # there (e.g. 100 / x under predicate x <> 0, or
+        # element_at/assert_true) must not run — and possibly throw —
+        # on non-matched rows sharing the file. CASE WHEN evaluates
+        # branches lazily per-row, so unmatched rows never touch it.
+        updated = updated.withColumn(
+            f"__raw_{c}",
+            F.when(F.col("__upd"), F.expr(f"({expr})")),
+        ).withColumn(
+            f"__new_{c}",
+            F.when(
+                F.col("__upd"),
+                F.expr(f"try_cast(__raw_{c} AS {dt})"),
+            ).otherwise(F.col(c)),
+        )
+    # cast-integrity gate (ADVICE r6 #4): the SET expression must
+    # cast to the column's existing dtype. A plain cast either
+    # NULLs malformed input silently (non-ANSI — silent corruption
+    # in a GDPR/backfill maintenance API) or throws an opaque
+    # mid-job SparkNumberFormatException (ANSI). try_cast makes
+    # failure observable in BOTH modes, then one agg over the
+    # rows counts matched rows whose raw SET value is non-null but
+    # whose cast result is null; any such row fails the whole
+    # UPDATE with a clean error before a file is written.
+    viol = updated.agg(
+        *[
+            F.sum(
+                F.when(
+                    F.coalesce(F.col("__upd"), F.lit(False))
+                    & F.col(f"__raw_{c}").isNotNull()
+                    & F.col(f"__new_{c}").isNull(),
+                    1,
+                ).otherwise(0)
+            ).alias(c)
+            for c in set_exprs
+        ]
+    ).collect()[0]
+    bad_casts = {c: int(viol[c]) for c in set_exprs if viol[c]}
+    if bad_casts:
+        tgt_types = {
+            c: updated.schema[c].dataType.simpleString()
+            for c in bad_casts
+        }
+        raise ValueError(
+            f"{what} SET expression(s) do not cast to the "
+            f"column type: {bad_casts} matched row(s) would be "
+            f"silently NULLed (targets {tgt_types}); fix the "
+            "expression or cast explicitly"
+        )
+    return updated.select(
+        *[
+            (F.col(f"__new_{c}").alias(c) if c in set_exprs else F.col(c))
+            for c in order
+        ]
+    )
 
 
 def update_where_mor(
@@ -2157,147 +2052,62 @@ def update_where_mor(
     a SET value won't cast to the column type. CDF surfaces the commit
     as update_preimage/postimage pairs like Delta (table_changes pairs
     the equality-delete pre-images with the same-key re-inserts)."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     key = man["key"]
     pcol = man.get("partition_by")
-    cols = [
-        f["name"]
-        for f in json.loads(
-            man.get("schema") or read(spark, root, base_v).schema.json()
-        )["fields"]
-    ]
-    bad = [c for c in set_exprs if c not in cols]
-    if bad:
-        raise ValueError(
-            f"update_where_mor SET targets {bad} are not table columns "
-            f"{cols}; add columns via merge() schema evolution first"
-        )
+    _check_set_targets(spark, root, base_v, man, set_exprs, "update_where_mor")
     if key in set_exprs:
         raise ValueError(
             f"update_where_mor cannot SET the merge key {key!r} — the "
             "equality tombstone and the CDF pre/post pairing are keyed "
             "on it; use merge() or the CoW update_where"
         )
+    new_seq = _next_seq(man, base_v)
+    entries = list(man.get("deletes") or [])
+    new_files: list[dict[str, Any]] = []
     cur = read(spark, root, base_v)
     matched = cur.filter(F.expr(f"({predicate})")).cache()
     try:
+        # no match: parity with CoW, still publish a (no-op) snapshot
         n_matched = matched.count()
-        if n_matched == 0:
-            # parity with CoW: still publish a (no-op) snapshot
-            new_man = {
-                "version": base_v + 1,
-                "key": key,
-                "operation": "update_mor",
-                "schema": man.get("schema")
-                or read(spark, root, base_v).schema.json(),
-                "files": man["files"],
-                "rows": int(man.get("rows", 0)),
-                "parent": base_v,
-                "predicate": predicate,
-                "updated_rows": 0,
-                "last_seq": _next_seq(man, base_v),
-            }
-            if man.get("deletes"):
-                new_man["deletes"] = man["deletes"]
-            if pcol is not None:
-                new_man["partition_by"] = pcol
-            _publish(root, base_v + 1, new_man)
-            return base_v + 1
-        # duplicate-key hazard gate: the equality tombstone deletes by
-        # KEY, so every row sharing a matched key must itself be
-        # matched — otherwise MoR would delete rows CoW would keep.
-        n_sharing = (
-            cur.join(matched.select(key).distinct(), key, "semi").count()
-        )
-        if n_sharing != n_matched:
-            raise ValueError(
-                f"update_where_mor: {n_sharing - n_matched} unmatched "
-                f"row(s) share a merge key with matched rows — the "
-                "equality tombstone would delete them; this table "
-                "needs the copy-on-write update_where"
+        if n_matched:
+            # duplicate-key hazard gate: the equality tombstone deletes
+            # by KEY, so every row sharing a matched key must itself be
+            # matched — otherwise MoR would delete rows CoW would keep.
+            n_sharing = (
+                cur.join(matched.select(key).distinct(), key, "semi").count()
             )
-        # stage predicate + SET values against the OLD row, then swap
-        # (same guarded spelling as update_where; every row here
-        # matched, but the CASE keeps SET expressions off any row a
-        # future refactor lets through)
-        order = matched.columns
-        updated = matched.withColumn("__upd", F.expr(f"({predicate})"))
-        for c, expr in set_exprs.items():
-            dt = updated.schema[c].dataType.simpleString()
-            updated = updated.withColumn(
-                f"__raw_{c}",
-                F.when(F.col("__upd"), F.expr(f"({expr})")),
-            ).withColumn(
-                f"__new_{c}",
-                F.when(
-                    F.col("__upd"),
-                    F.expr(f"try_cast(__raw_{c} AS {dt})"),
-                ).otherwise(F.col(c)),
+            if n_sharing != n_matched:
+                raise ValueError(
+                    f"update_where_mor: {n_sharing - n_matched} unmatched "
+                    f"row(s) share a merge key with matched rows — the "
+                    "equality tombstone would delete them; this table "
+                    "needs the copy-on-write update_where"
+                )
+            # every row here matched, but the guarded SET spelling keeps
+            # SET expressions off any row a future refactor lets through
+            updated = _apply_set(
+                matched, predicate, set_exprs, "update_where_mor"
             )
-        viol = updated.agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.coalesce(F.col("__upd"), F.lit(False))
-                        & F.col(f"__raw_{c}").isNotNull()
-                        & F.col(f"__new_{c}").isNull(),
-                        1,
-                    ).otherwise(0)
-                ).alias(c)
-                for c in set_exprs
-            ]
-        ).collect()[0]
-        bad_casts = {c: int(viol[c]) for c in set_exprs if viol[c]}
-        if bad_casts:
-            tgt_types = {
-                c: updated.schema[c].dataType.simpleString()
-                for c in bad_casts
-            }
-            raise ValueError(
-                f"update_where_mor SET expression(s) do not cast to "
-                f"the column type: {bad_casts} matched row(s) would be "
-                f"silently NULLed (targets {tgt_types}); fix the "
-                "expression or cast explicitly"
+            _enforce_constraints(updated, man, "update_where_mor()")
+            entry, _ = _eq_delete_entry(
+                spark, root, man, matched.select(key), new_seq
             )
-        updated = updated.select(
-            *[
-                (F.col(f"__new_{c}").alias(c) if c in set_exprs else F.col(c))
-                for c in order
-            ]
-        )
-        _enforce_constraints(updated, man, "update_where_mor()")
-        new_seq = _next_seq(man, base_v)
-        entry, n_del = _eq_delete_entry(
-            spark, root, man, matched.select(key), new_seq
-        )
-        new_files = _write_data_files(
-            updated, root, key=key, partition_by=pcol, seq=new_seq
-        )
+            if entry:
+                entries.append(entry)
+            new_files = _write_data_files(
+                updated, root, key=key, partition_by=pcol, seq=new_seq
+            )
     finally:
         matched.unpersist()
-    entries = list(man.get("deletes") or [])
-    if entry:
-        entries.append(entry)
-    new_man = {
-        "version": base_v + 1,
-        "key": key,
-        "operation": "update_mor",
-        "schema": man.get("schema")
-        or read(spark, root, base_v).schema.json(),
-        "files": man["files"] + new_files,
-        "rows": int(man.get("rows", 0)),
-        "parent": base_v,
-        "predicate": predicate,
-        "updated_rows": int(n_matched),
-        "last_seq": new_seq,
-    }
-    if entries:
-        new_man["deletes"] = entries
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    new_man = _next_manifest(
+        man, base_v, "update_mor",
+        files=man["files"] + new_files,
+        deletes=entries or None,
+        predicate=predicate,
+        updated_rows=int(n_matched),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -2433,10 +2243,7 @@ def evolve_partition_spec(
     ``new_partition_by`` must be an existing string-typed data column
     (it IS data in every old file, which is what makes the lazy
     migration sound), or None to de-partition."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     old_pcol = man.get("partition_by")
     if new_partition_by == old_pcol:
         return base_v
@@ -2451,22 +2258,12 @@ def evolve_partition_spec(
         e = dict(f)
         e["spec"] = _file_spec(f, old_pcol)  # pin the legacy default
         files.append(e)
-    new_man = {
-        "version": base_v + 1,
-        "key": man["key"],
-        "operation": "evolve-spec",
-        "files": files,
-        "rows": man.get("rows", sum(f.get("rows", 0) for f in files)),
-        "parent": base_v,
-        "previous_partition_by": old_pcol,
-        "last_seq": int(man.get("last_seq", base_v)),
-    }
-    if man.get("deletes"):
-        new_man["deletes"] = man["deletes"]
-    if man.get("schema") is not None:
-        new_man["schema"] = man["schema"]
-    if new_partition_by is not None:
-        new_man["partition_by"] = new_partition_by
+    new_man = _next_manifest(
+        man, base_v, "evolve-spec",
+        files=files,
+        partition_by=new_partition_by,
+        previous_partition_by=old_pcol,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -2578,9 +2375,7 @@ def create_branch(
     refs = list_refs(root)
     if name in refs["branches"] or name in refs["tags"]:
         raise ValueError(f"ref {name!r} already exists")
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
+    v = _snapshot(root, version)[0]
     clone(spark, root, branch_root(root, name), version=v)
     import time as _time
 
@@ -2599,11 +2394,7 @@ def create_tag(root: str, name: str, version: int | None = None) -> int:
     refs = list_refs(root)
     if name in refs["tags"] or name in refs["branches"]:
         raise ValueError(f"ref {name!r} already exists (tags are immutable)")
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    if not os.path.exists(_manifest_path(root, v)):
-        raise FileNotFoundError(f"snapshot v{v} not retained")
+    v = _snapshot(root, version)[0]
     import time as _time
 
     refs["tags"][name] = {"version": int(v), "created_at": _time.time()}
@@ -2692,10 +2483,17 @@ def fast_forward(spark: SparkSession, root: str, name: str) -> int:
         return e
 
     head = main_v
+    # a branch is a clone, which does not copy main's CHECK constraints:
+    # until a branch commit sets its own, main's stay in force
+    cons = _read_manifest(root, main_v).get("constraints")
     for bv in bvs:
         if bv == 1:
             continue  # the clone commit is the fork point itself
         man = _read_manifest(broot, bv)
+        if "constraints" in man:
+            cons = man["constraints"]
+        elif cons:
+            man["constraints"] = cons
         head += 1
         man["version"] = head
         man["parent"] = head - 1
@@ -2782,10 +2580,7 @@ def compact(
     independent work (parallel across executors), and nothing blocks
     concurrent readers (they hold older manifests) or writers (the
     optimistic publish serializes with merges)."""
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     key = man["key"]
     pcol = man.get("partition_by")
     small = [f for f in man["files"] if f["bytes"] < target_file_bytes]
@@ -2832,44 +2627,32 @@ def compact(
     table_schema = read(spark, root, base_v).schema
     new_seq = _next_seq(man, base_v)
     for g in groups:
-        df = _read_paths(
-            spark, root, man, [os.path.join(root, f["path"]) for f in g]
-        )
-        for fld in table_schema.fields:  # evolved cols absent from every
-            if fld.name not in df.columns:  # file in this group: null-fill
-                df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-        df = (
-            df.select(*[fld.name for fld in table_schema.fields])
-            .coalesce(1)
-            .sortWithinPartitions(key)
-        )
+        df = _pad(  # evolved cols absent from every file in the group
+            _read_paths(
+                spark, root, man, [os.path.join(root, f["path"]) for f in g]
+            ),
+            table_schema,
+        ).coalesce(1).sortWithinPartitions(key)
         # rewritten files take the NEW sequence number: any carried
         # equality-delete entry (lower seq) no longer applies to them —
         # correct, because the rewrite read already applied the overlay
         new_files.extend(
             _write_data_files(df, root, key=key, partition_by=pcol, seq=new_seq)
         )
-    new_man = {
-        "version": base_v + 1,
-        "key": key,
-        "operation": "compact",
-        "schema": table_schema.json(),
-        "files": keep + new_files,
+    new_man = _next_manifest(
+        man, base_v, "compact",
+        schema=table_schema.json(),
+        files=keep + new_files,
         # visible rows are invariant under compaction; with a
         # merge-on-read overlay the kept entries' recorded counts
         # overstate, so trust the running total instead of recounting
-        "rows": man.get("rows", 0)
+        rows=man.get("rows", 0)
         if man.get("deletes")
         else sum(f.get("rows", 0) for f in keep + new_files),
-        "parent": base_v,
-        "compacted_files": len(grouped_paths),
-        "produced_files": len(new_files),
-        "last_seq": new_seq,
-    }
-    if man.get("deletes"):
-        new_man["deletes"] = man["deletes"]
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+        compacted_files=len(grouped_paths),
+        produced_files=len(new_files),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -2904,10 +2687,7 @@ def compact_zorder(
     file-level (not row-level) locality, which is all manifest
     pruning can use."""
     a, b = cols
-    base_v = current_version(root)
-    if base_v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, base_v)
+    base_v, man = _snapshot(root)
     key = man["key"]
     pcol = man.get("partition_by")
     for c in (a, b):
@@ -2928,20 +2708,21 @@ def compact_zorder(
     for f in man["files"]:
         pools.setdefault((_file_spec(f, pcol), f.get("partition")), []).append(f)
     new_files: list[dict[str, Any]] = []
+    new_seq = _next_seq(man, base_v)
     for pval, pool in sorted(pools.items(), key=lambda kv: str(kv[0])):
         total = sum(f["bytes"] for f in pool)
         pool_rows = sum(f.get("rows", 0) for f in pool)
         # clamp by row count: a degenerate byte target must not schedule
         # more range partitions than there are rows to spread
         n_out = max(1, min(-(-total // target_file_bytes), max(pool_rows, 1)))
-        df = _read_paths(
-            spark, root, man, [os.path.join(root, f["path"]) for f in pool]
-        )
-        for fld in table_schema.fields:  # schema evolution: null-fill
-            if fld.name not in df.columns:
-                df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
         df = (
-            df.select(*[fld.name for fld in table_schema.fields])
+            _pad(
+                _read_paths(
+                    spark, root, man,
+                    [os.path.join(root, f["path"]) for f in pool],
+                ),
+                table_schema,
+            )
             .withColumn("__zkey", F.expr(zterms).cast("bigint"))
             .repartitionByRange(n_out, F.col("__zkey"))
             .sortWithinPartitions("__zkey")
@@ -2951,24 +2732,21 @@ def compact_zorder(
         # Hive data/<col>=<val>/ layout basePath recovery relies on
         new_files.extend(
             _write_data_files(
-                df, root, key=key, partition_by=pcol, seq=_next_seq(man, base_v)
+                df, root, key=key, partition_by=pcol, seq=new_seq
             )
         )
-    new_man = {
-        "version": base_v + 1,
-        "key": key,
-        "operation": "zorder",
-        "zorder_by": [a, b],
-        "schema": table_schema.json(),
-        "files": new_files,
-        "rows": sum(f.get("rows", 0) for f in new_files),
-        "parent": base_v,
-        "compacted_files": len(man["files"]),
-        "produced_files": len(new_files),
-        "last_seq": _next_seq(man, base_v),
-    }
-    if pcol is not None:
-        new_man["partition_by"] = pcol
+    # every file is rewritten through the read overlay: deletes resolve
+    new_man = _next_manifest(
+        man, base_v, "zorder",
+        schema=table_schema.json(),
+        files=new_files,
+        rows=sum(f.get("rows", 0) for f in new_files),
+        deletes=None,
+        zorder_by=[a, b],
+        compacted_files=len(man["files"]),
+        produced_files=len(new_files),
+        last_seq=new_seq,
+    )
     _publish(root, base_v + 1, new_man)
     return base_v + 1
 
@@ -3042,10 +2820,7 @@ def table_changes(
                     spark, root, side_man,
                     [os.path.join(root, p) for p in paths],
                 )
-            for fld in full.fields:
-                if fld.name not in df.columns:
-                    df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-            return df.select(*[fld.name for fld in full.fields])
+            return _pad(df, full)
 
         # added files read under the CHILD manifest's overlay; REMOVED
         # files are the parent snapshot's rows, so they must read under
@@ -3169,14 +2944,8 @@ def table_changes(
 
             def _emit_deletes(hit: DataFrame) -> None:
                 nonlocal delta
-                hit = hit.drop("__mor_file", "__mor_pos")
-                for fld in full.fields:
-                    if fld.name not in hit.columns:
-                        hit = hit.withColumn(
-                            fld.name, F.lit(None).cast(fld.dataType)
-                        )
-                mor_delta = hit.select(
-                    *[fld.name for fld in full.fields]
+                mor_delta = _pad(
+                    hit.drop("__mor_file", "__mor_pos"), full
                 ).select(
                     "*",
                     F.lit("delete").alias("_change_type"),
@@ -3275,10 +3044,7 @@ def files_table(spark: SparkSession, root: str, version: int | None = None) -> D
     number of delete records (positions / key tuples). Reads ONLY the
     manifest plus one os.stat per delete file: no data IO,
     O(|files|) driver rows."""
-    v = version if version is not None else current_version(root)
-    if v is None:
-        raise FileNotFoundError(f"no snapshot at {root}")
-    man = _read_manifest(root, v)
+    man = _snapshot(root, version)[1]
     rows = []
     for f in man["files"]:
         # a missing key_range is SQL NULL, not the string 'None' —

@@ -68,10 +68,7 @@ def get_session(
         # (default true) the coalesce target is bytes/parallelism,
         # which dwarfs ANY floor on real data volumes — the floor only
         # binds on tiny-bytes stages, exactly where it should not.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MINPART", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # --- shuffle sizing: ~cores locally, data-driven on a cluster ---
         .config(
             "spark.sql.shuffle.partitions",

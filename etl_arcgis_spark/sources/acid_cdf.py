@@ -73,7 +73,7 @@ def _table_schema(root: str) -> StructType:
     parquet footers only — no Spark job."""
     import pyarrow.parquet as pq
 
-    man = acid._read_manifest_or_raise(root)
+    man = acid._snapshot(root)[1]
     fields: dict[str, Any] = {}
     for f in man["files"]:
         sch = pq.ParquetFile(os.path.join(root, f["path"])).schema_arrow

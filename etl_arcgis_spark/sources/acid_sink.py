@@ -101,13 +101,7 @@ class AcidStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
         staged = [m for m in messages if m is not None and m.rows > 0]
         for _attempt in range(5):
-            base_v = acid.current_version(self.root)
-            if base_v is None:
-                raise FileNotFoundError(
-                    f"acid_sink requires an existing table at {self.root} "
-                    "(acid.create first)"
-                )
-            man = acid._read_manifest(self.root, base_v)
+            base_v, man = acid._snapshot(self.root)
             sinks = dict(man.get("stream_sinks") or {})
             last = sinks.get(self.sink_id)
             if last is not None and int(last) >= batchId:
@@ -136,17 +130,14 @@ class AcidStreamWriter(DataSourceStreamWriter):
                 total += m.rows
                 m.rel_path = final_rel  # retry-safe: already moved
             sinks[self.sink_id] = batchId
-            new_man = {
-                **{k: v for k, v in man.items() if k != "committed_at"},
-                "version": base_v + 1,
-                "operation": "stream_append",
-                "parent": base_v,
-                "files": man["files"] + entries,
-                "rows": man.get("rows", 0) + total,
-                "last_seq": new_seq,
-                "stream_sinks": sinks,
-                "stream_batch": batchId,
-            }
+            new_man = acid._next_manifest(
+                man, base_v, "stream_append",
+                files=man["files"] + entries,
+                rows=man.get("rows", 0) + total,
+                last_seq=new_seq,
+                stream_sinks=sinks,
+                stream_batch=batchId,
+            )
             try:
                 acid._publish(self.root, base_v + 1, new_man)
                 return

@@ -1211,7 +1211,7 @@ def test_partition_spec_evolution_compact_migrates_layout(spark, ptbl):
 
 def test_partition_spec_evolution_to_none_and_validation(spark, ptbl):
     acid.evolve_partition_spec(spark, ptbl, None)
-    man = acid._read_manifest_or_raise(ptbl)
+    man = acid._snapshot(ptbl)[1]
     assert "partition_by" not in man
     assert sorted(r.id for r in acid.read(spark, ptbl).collect()) == list(range(30))
     with pytest.raises(ValueError):
@@ -1444,7 +1444,7 @@ def test_vacuum_grace_protects_in_flight_writer(spark, tbl):
     deletes them — proving the window is the only protection.)"""
     src = spark.createDataFrame([(2, "MID"), (7, "new")], "id INT, v STRING")
     # step 1 of a merge commit: write the data files, no manifest yet
-    man = acid._read_manifest_or_raise(tbl)
+    man = acid._snapshot(tbl)[1]
     new_files = acid._write_data_files(src, tbl, key=man["key"])
     paths = [os.path.join(tbl, f["path"]) for f in new_files]
     assert all(os.path.exists(p) for p in paths)
@@ -1472,7 +1472,7 @@ def test_vacuum_grace_protects_in_flight_writer(spark, tbl):
     with tempfile.TemporaryDirectory() as td:
         root2 = os.path.join(td, "copy")
         _sh.copytree(tbl, root2)
-        man2 = acid._read_manifest_or_raise(root2)
+        man2 = acid._snapshot(root2)[1]
         orphan_files = acid._write_data_files(
             spark.createDataFrame([(99, "orphan")], "id INT, v STRING"),
             root2,
@@ -1630,7 +1630,7 @@ def test_read_where_prunes_on_layout_column(spark, part_tbl):
     in the files' col_stats (they are directory-encoded), but the
     manifest partition value is exact [v, v] stats — a range probe must
     open only the matching partitions' files and return exact rows."""
-    man = acid._read_manifest_or_raise(part_tbl)
+    man = acid._snapshot(part_tbl)[1]
     red_files = {f["path"] for f in man["files"] if f["partition"] == "red"}
     got = acid.read_where(spark, part_tbl, "cat", "red", "red")
     rows = got.collect()
@@ -1651,7 +1651,7 @@ def test_delete_where_rewrites_only_hit_files(spark, part_tbl):
     """File-pruned copy-on-write DELETE: deleting one partition's rows
     rewrites only that partition's files — every other file carries
     into the new snapshot path-identical (no full-table rewrite)."""
-    man0 = acid._read_manifest_or_raise(part_tbl)
+    man0 = acid._snapshot(part_tbl)[1]
     other_files = {
         f["path"] for f in man0["files"] if f["partition"] != "red"
     }
@@ -1691,7 +1691,7 @@ def test_delete_where_escaped_partition_predicate(spark, tmp_path):
         "id INT, v STRING, p STRING",
     )
     acid.create(spark, root, df, key="id", partition_by="p")
-    man0 = acid._read_manifest_or_raise(root)
+    man0 = acid._snapshot(root)[1]
     keep_files = {
         f["path"] for f in man0["files"]
         if f["partition"] != "2024-01-01 00:00:00"
@@ -1709,7 +1709,7 @@ def test_update_where_file_pruned_and_old_row_semantics(spark, part_tbl):
     against the OLD row (two SETs swapping a pair of columns must not
     see each other's new values), NULL-predicate rows stay untouched,
     and CDF emits exactly the update pre/postimages."""
-    man0 = acid._read_manifest_or_raise(part_tbl)
+    man0 = acid._snapshot(part_tbl)[1]
     other_files = {
         f["path"] for f in man0["files"] if f["partition"] != "red"
     }
@@ -1882,7 +1882,7 @@ def test_legacy_raw_partition_entries_never_pruned(spark, tmp_path):
 
 
 def test_new_partition_entries_carry_part_v(spark, part_tbl):
-    man = acid._read_manifest_or_raise(part_tbl)
+    man = acid._snapshot(part_tbl)[1]
     assert all(f.get("part_v") == acid._PART_VERSION for f in man["files"])
 
 

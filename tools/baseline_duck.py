@@ -8,7 +8,7 @@ given parquet dir: 3 warm-ups, then median of 5 timed runs (fetch
 included, mirroring BASELINE.md "warm-run medians"). Prints one JSON
 line {"sf_dir": ..., "baseline_sec": {name: sec}}.
 
-    python tools/baseline_duck.py [--sf /root/repo/testdata_sf1]
+    python tools/baseline_duck.py [--sf <repo>/testdata_sf1]
 """
 
 from __future__ import annotations
@@ -20,28 +20,17 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import duckdb  # noqa: E402
-
+from bench import HEADLINE  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
-from etl_arcgis_spark.tables import TABLE_NAMES  # noqa: E402
-
-HEADLINE = [
-    "agg_groupby_stats",
-    "join_star_multiway",
-    "window_rank_topk_per_group",
-    "window_running_sum",
-    "stream_tumbling_window_agg",
-    "agg_count_distinct_exact",
-    "sim_cosine_topk_pairs",
-    "text_tokenize_wordcount",
-]
+from tools.check import duck_con  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/testdata_sf1")
+    ap.add_argument("--sf", default=os.path.join(ROOT, "testdata_sf1"))
     ap.add_argument("--runs", type=int, default=5)
     ap.add_argument("--warmups", type=int, default=3)
     ap.add_argument(
@@ -51,12 +40,7 @@ def main() -> int:
     args = ap.parse_args()
 
     registry.load_all()
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = duck_con(args.sf)
 
     out: dict[str, float] = {}
     for name in HEADLINE:

@@ -15,18 +15,11 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
 
-HEADLINE = [
-    "agg_groupby_stats",
-    "join_star_multiway",
-    "window_rank_topk_per_group",
-    "window_running_sum",
-    "stream_tumbling_window_agg",
-    "agg_count_distinct_exact",
-    "sim_cosine_topk_pairs",
-    "text_tokenize_wordcount",
+HEADLINE = bench.HEADLINE + [
     "agg_equidepth_histogram",
     "window_ntile_percent",
     "join_salted_skew",

@@ -4,7 +4,7 @@
 several headline queries sit AT OR BELOW Spark's fixed per-job floor
 (23-39 ms) — the 2x bench bar there measures JVM job overhead, not
 engine quality. This tool generates a 10x-larger sf1 fixture set under
-/root/repo/testdata_sf1 (gitignored; regenerate on demand) with the
+<repo>/testdata_sf1 (gitignored; regenerate on demand) with the
 SAME schemas, dtypes, value domains, and distributional shape as the
 driver fixtures (measured from /root/testdata/sf0.1 — see the stats
 table in SCALING.md §sf1), so the bench comparison becomes
@@ -19,7 +19,7 @@ Row counts (10x sf0.1): customer 150k, supplier 10k, part 200k,
 orders 1.5M, lineitem ~6.1M, events 1M, documents 50k,
 embeddings 20k; region/nation copied verbatim (fixed dims).
 
-    python tools/make_sf1.py [--out /root/repo/testdata_sf1] [--scale 10]
+    python tools/make_sf1.py [--out <repo>/testdata_sf1] [--scale 10]
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
 
 MKTSEGMENTS = ["MACHINERY", "AUTOMOBILE", "BUILDING", "HOUSEHOLD", "FURNITURE"]
@@ -201,7 +202,7 @@ def gen(out: str, scale: float = 10.0, seed: int = 42) -> None:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="/root/repo/testdata_sf1")
+    ap.add_argument("--out", default=os.path.join(ROOT, "testdata_sf1"))
     ap.add_argument("--scale", type=float, default=10.0)
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args()

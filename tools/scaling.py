@@ -32,19 +32,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-HEADLINE = [
-    "agg_groupby_stats",
-    "join_star_multiway",
-    "window_rank_topk_per_group",
-    "window_running_sum",
-    "stream_tumbling_window_agg",
-    "agg_count_distinct_exact",
-    "sim_cosine_topk_pairs",
-    "text_tokenize_wordcount",
+HEADLINE = bench.HEADLINE + [
     # round-4 additions: the rewritten two-phase global-rank family
     # (no-single-partition claim) + the bucketed pair-generation
     # representatives of the dedup/ANN families
@@ -91,10 +84,6 @@ HEADLINE = [
 ]
 
 
-def mat(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--n", type=int, default=5)
@@ -112,18 +101,18 @@ def main() -> None:
 
     for sf in SFS:  # warm every (query, sf) cache
         for name in HEADLINE:
-            mat(queries[name](spark, sf))
+            bench.materialize(queries[name](spark, sf))
 
     t: dict[tuple[str, str], float] = {}
     for _pass in range(2):
         for sf in SFS:
             for name in HEADLINE:
                 fn = queries[name]
-                mat(fn(spark, sf))
+                bench.materialize(fn(spark, sf))
                 runs = []
                 for _ in range(args.n):
                     t0 = time.perf_counter()
-                    mat(fn(spark, sf))
+                    bench.materialize(fn(spark, sf))
                     runs.append(time.perf_counter() - t0)
                 med = statistics.median(runs)
                 key = (name, sf)

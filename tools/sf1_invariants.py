@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
@@ -654,7 +655,7 @@ SF1_OUTPUT_EXPLOSION = {
 
 
 def main() -> int:
-    sf_dir = "/root/repo/testdata_sf1"
+    sf_dir = os.path.join(ROOT, "testdata_sf1")
     names = list(CHECKS)
     skip_explosion = True
     args = sys.argv[1:]

@@ -20,12 +20,9 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import materialize  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
 from etl_arcgis_spark.session import get_session  # noqa: E402
-
-
-def mat(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -47,11 +44,11 @@ def main() -> None:
             t_build0 = time.perf_counter()
             df = fn(spark, args.sf)
             build = time.perf_counter() - t_build0
-            mat(df)  # warm-up
+            materialize(df)  # warm-up
             runs = []
             for _ in range(args.n):
                 t0 = time.perf_counter()
-                mat(fn(spark, args.sf))
+                materialize(fn(spark, args.sf))
                 runs.append(time.perf_counter() - t0)
             out[name] = {"sec": round(min(runs), 4), "build": round(build, 4)}
         except Exception as e:
