@@ -50,6 +50,7 @@ import os
 import re
 import shutil
 import uuid
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1051,6 +1052,33 @@ def read_point(
     return _read_kept(spark, root, v, man, keep).filter(F.col(key) == value)
 
 
+def _check_source_keys(source: DataFrame, key: str, what: str) -> int:
+    """MERGE INTO's source preconditions, checked in ONE small Spark job
+    before any file is written: the merge key is non-null (a NULL key
+    can never match and would otherwise emit an all-NULL ghost row out
+    of the full-outer join) and unique (duplicate source keys would
+    multiply matched target rows; SQL MERGE errors on multiple
+    matches). Returns the source's row count."""
+    chk = source.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(key).alias("n_nonnull"),
+        F.count_distinct(key).alias("n_distinct"),
+    ).collect()[0]
+    if chk["n"] != chk["n_nonnull"]:
+        raise ValueError(
+            f"{what} source has {chk['n'] - chk['n_nonnull']} NULL "
+            f"{key!r} key(s); MERGE requires non-null merge keys"
+        )
+    if chk["n_nonnull"] != chk["n_distinct"]:
+        raise ValueError(
+            f"{what} source has duplicate {key!r} keys "
+            f"({chk['n_nonnull']} rows, {chk['n_distinct']} distinct); "
+            "MERGE requires unique source keys — dedupe first "
+            "(e.g. operators/dedup.dedup_key_last_write)"
+        )
+    return int(chk["n"])
+
+
 def merge(
     spark: SparkSession,
     root: str,
@@ -1110,24 +1138,7 @@ def merge(
     via a follow-up column projection, or accept them as lineage
     columns, the Delta CDC-apply convention)."""
     _check_reserved_cols(source, "merge() source")
-    key0 = _snapshot(root)[1]["key"]
-    chk = source.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(key0).alias("n_nonnull"),
-        F.count_distinct(key0).alias("n_distinct"),
-    ).collect()[0]
-    if chk["n"] != chk["n_nonnull"]:
-        raise ValueError(
-            f"merge source has {chk['n'] - chk['n_nonnull']} NULL "
-            f"{key0!r} key(s); MERGE requires non-null merge keys"
-        )
-    if chk["n_nonnull"] != chk["n_distinct"]:
-        raise ValueError(
-            f"merge source has duplicate {key0!r} keys "
-            f"({chk['n_nonnull']} rows, {chk['n_distinct']} distinct); "
-            "MERGE requires unique source keys — dedupe first "
-            "(e.g. operators/dedup.dedup_key_last_write)"
-        )
+    _check_source_keys(source, _snapshot(root)[1]["key"], "merge")
     for _ in range(max_retries):
         base_v, man = _snapshot(root)
         key = man["key"]
@@ -1506,32 +1517,23 @@ def clone(
             os.path.abspath(dst_root),
         )
 
-    files = []
-    for f in man["files"]:
-        e = dict(f)
-        e["path"] = _rel(f["path"])
-        files.append(e)
-    new_man: dict[str, Any] = {
-        "version": 1,
-        "key": man["key"],
-        "operation": "clone",
-        "schema": man.get("schema")
-        or read(spark, src_root, src_v).schema.json(),
-        "files": files,
-        "rows": man.get("rows", 0),
-        "cloned_from": os.path.abspath(src_root),
-        "cloned_version": src_v,
+    # the source's table state (constraints and the stream-sink ledger
+    # included, as Delta's CLONE copies table properties) with every
+    # file path rewritten to reach the source's files from the clone
+    new_man = _next_manifest(
+        man, 0, "clone",
+        schema=man.get("schema") or read(spark, src_root, src_v).schema.json(),
+        files=[{**f, "path": _rel(f["path"])} for f in man["files"]],
+        deletes=[{**e, "path": _rel(e["path"])} for e in man.get("deletes") or []]
+        or None,
         # carry the SOURCE's seq counter: cloned file entries keep their
         # original seqs, so the clone's own next seq must outrank them
         # (version numbers restart at 1 here — exactly why seq != version)
-        "last_seq": int(man.get("last_seq", src_v)),
-    }
-    if man.get("deletes"):
-        new_man["deletes"] = [
-            {**e, "path": _rel(e["path"])} for e in man["deletes"]
-        ]
-    if man.get("partition_by") is not None:
-        new_man["partition_by"] = man["partition_by"]
+        last_seq=int(man.get("last_seq", src_v)),
+        cloned_from=os.path.abspath(src_root),
+        cloned_version=src_v,
+    )
+    del new_man["parent"]  # v1 of a new table: no parent snapshot
     _publish(dst_root, 1, new_man)
     return 1
 
@@ -1760,22 +1762,7 @@ def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
     base_v, man = _snapshot(root)
     _check_reserved_cols(source, "upsert_mor() source")
     key = man["key"]
-    chk = source.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(key).alias("n_nonnull"),
-        F.count_distinct(key).alias("n_distinct"),
-    ).collect()[0]
-    if chk["n"] != chk["n_nonnull"]:
-        raise ValueError(
-            f"upsert_mor source has {chk['n'] - chk['n_nonnull']} NULL "
-            f"{key!r} key(s); MERGE requires non-null merge keys"
-        )
-    if chk["n"] != chk["n_distinct"]:
-        raise ValueError(
-            f"upsert_mor source has duplicate {key!r} keys "
-            f"({chk['n']} rows, {chk['n_distinct']} distinct); dedupe "
-            "first (e.g. dedup_key_last_write)"
-        )
+    n_source = _check_source_keys(source, key, "upsert_mor")
     pcol = man.get("partition_by")
     if pcol is not None and pcol not in source.columns:
         raise ValueError(f"upsert_mor must carry partition column {pcol!r}")
@@ -1814,10 +1801,10 @@ def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
         man, base_v, "upsert_mor",
         schema=StructType(merged_fields).json(),
         files=man["files"] + new_files,
-        rows=max(0, int(man.get("rows", 0)) - n_del) + int(chk["n"]),
+        rows=max(0, int(man.get("rows", 0)) - n_del) + n_source,
         deletes=entries or None,
         matched_rows=n_del,
-        inserted_rows=int(chk["n"]),
+        inserted_rows=n_source,
         last_seq=new_seq,
     )
     _publish(root, base_v + 1, new_man)
@@ -2483,17 +2470,10 @@ def fast_forward(spark: SparkSession, root: str, name: str) -> int:
         return e
 
     head = main_v
-    # a branch is a clone, which does not copy main's CHECK constraints:
-    # until a branch commit sets its own, main's stay in force
-    cons = _read_manifest(root, main_v).get("constraints")
     for bv in bvs:
         if bv == 1:
             continue  # the clone commit is the fork point itself
         man = _read_manifest(broot, bv)
-        if "constraints" in man:
-            cons = man["constraints"]
-        elif cons:
-            man["constraints"] = cons
         head += 1
         man["version"] = head
         man["parent"] = head - 1
@@ -2751,6 +2731,106 @@ def compact_zorder(
     return base_v + 1
 
 
+@dataclass(frozen=True)
+class _ChangePlan:
+    """What snapshot ``version`` changed against its parent, as plain
+    manifest data — the one per-version plan both change feeds diff
+    from: table_changes in Spark and the acid_cdf stream on driver-side
+    rows. File-level copy-on-write puts every rewritten row in the file
+    delta (``added`` / ``removed``, relative paths); merge-on-read puts
+    every deleted row behind a delete entry the version ADDED
+    (``new_deletes``), whose pre-images read from the ``targets`` files
+    under ``pre_overlay``: the child manifest with only the parent's
+    delete entries, so rows deleted earlier cannot reappear."""
+
+    version: int
+    key: str
+    child: dict[str, Any]
+    parent: dict[str, Any] | None
+    added: list[str]
+    removed: list[str]
+    new_deletes: list[dict[str, Any]]
+    pre_overlay: dict[str, Any]
+
+    def targets(self, entries: list[dict[str, Any]]) -> list[str]:
+        """The child's files ``entries`` target. Targets are recorded at
+        commit time, so they name only files that existed before it —
+        a commit's own new files (upsert_mor) are never among them."""
+        bns = {bn for e in entries for bn in e.get("targets") or {}}
+        return [
+            f["path"] for f in self.child["files"]
+            if os.path.basename(f["path"]) in bns
+        ]
+
+
+def _change_plan(root: str, version: int) -> _ChangePlan:
+    """The :class:`_ChangePlan` of ``version`` (v1 diffs against an
+    implicit empty snapshot). The change feed's retention contract is
+    checked here: both manifests must still be retained (pre-vacuum),
+    the constraint Delta CDF's retention imposes."""
+    mans = []
+    for v in range(max(version - 1, 1), version + 1):
+        try:
+            mans.append(_read_manifest(root, v))
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"snapshot v{v} not retained (vacuumed?) — the change "
+                f"feed of v{version} needs its manifest and its parent's"
+            ) from None
+    child = mans[-1]
+    parent = mans[0] if version > 1 else None
+    prev = {f["path"] for f in parent["files"]} if parent else set()
+    cur = {f["path"] for f in child["files"]}
+    prev_dels = {e["path"] for e in (parent or {}).get("deletes") or []}
+    dels = child.get("deletes") or []
+    return _ChangePlan(
+        version=version,
+        key=child["key"],
+        child=child,
+        parent=parent,
+        added=sorted(cur - prev),
+        removed=sorted(prev - cur),
+        new_deletes=[e for e in dels if e["path"] not in prev_dels],
+        pre_overlay={
+            **child, "deletes": [e for e in dels if e["path"] in prev_dels]
+        },
+    )
+
+
+def _pair_changes(
+    after: DataFrame, before: DataFrame, key: str, cols: list[str]
+) -> DataFrame:
+    """Row-level changes between two row sets of one version, with a
+    ``_change_type`` column: a key only in ``after`` is an 'insert',
+    only in ``before`` a 'delete', in both with any column differing
+    (one null-safe struct compare) an 'update_preimage' +
+    'update_postimage' pair; a row identical on both sides is no
+    change. One full outer join on ``key`` — a NULL key joins nothing,
+    so its row emits nothing."""
+    val_cols = [c for c in cols if c != key]
+    j = after.alias("a").join(
+        before.alias("b"), F.col(f"a.{key}") == F.col(f"b.{key}"), "full_outer"
+    )
+    a_key, b_key = F.col(f"a.{key}"), F.col(f"b.{key}")
+    same = F.struct(*[F.col(f"a.{c}") for c in val_cols]).eqNullSafe(
+        F.struct(*[F.col(f"b.{c}") for c in val_cols])
+    )
+    changed = a_key.isNotNull() & b_key.isNotNull() & ~same
+
+    def _side(cond: Any, side: str, change_type: str) -> DataFrame:
+        return j.filter(cond).select(
+            *[F.col(f"{side}.{c}").alias(c) for c in cols],
+            F.lit(change_type).alias("_change_type"),
+        )
+
+    return (
+        _side(a_key.isNotNull() & b_key.isNull(), "a", "insert")
+        .unionByName(_side(a_key.isNull() & b_key.isNotNull(), "b", "delete"))
+        .unionByName(_side(changed, "b", "update_preimage"))
+        .unionByName(_side(changed, "a", "update_postimage"))
+    )
+
+
 def table_changes(
     spark: SparkSession, root: str, v_from: int, v_to: int | None = None
 ) -> DataFrame:
@@ -2784,44 +2864,29 @@ def table_changes(
     with one null-safe struct equality; downstream incremental
     consumers get exactly-the-changes without re-scanning snapshots.
     """
-    vs = _list_versions(root)
     if v_to is None:
-        v_to = vs[-1] if vs else 0
+        v_to = current_version(root) or 0
     if v_from >= v_to:
         raise ValueError(f"empty change range ({v_from}, {v_to}]")
     # v_from=0 means "since before the table existed": v1 (create)
     # diffs against an implicit empty snapshot
-    for v in range(max(v_from, 1), v_to + 1):
-        if v not in vs:
-            raise FileNotFoundError(
-                f"snapshot v{v} not retained (vacuumed?) — CDF needs "
-                f"every manifest in [{v_from}, {v_to}]"
-            )
+    plans = [_change_plan(root, v) for v in range(v_from + 1, v_to + 1)]
     full = read(spark, root, v_to).schema  # widest schema in range
-    out: DataFrame | None = None
-    for v in range(v_from + 1, v_to + 1):
-        prev_man = None if v == 1 else _read_manifest(root, v - 1)
-        prev = (
-            set()
-            if prev_man is None
-            else {f["path"] for f in prev_man["files"]}
+    cols = full.fieldNames()
+
+    def _read_files(paths: list[str], side_man: dict[str, Any] | None) -> DataFrame:
+        if not paths:
+            return _pad(read(spark, root, v_to).limit(0), full)
+        return _pad(
+            _read_paths(
+                spark, root, side_man, [os.path.join(root, p) for p in paths]
+            ),
+            full,
         )
-        man = _read_manifest(root, v)
-        key = man["key"]
-        cur = {f["path"] for f in man["files"]}
-        added = sorted(cur - prev)
-        removed = sorted(prev - cur)
 
-        def _read_files(paths: list[str], side_man: dict[str, Any]) -> DataFrame:
-            if not paths:
-                df = read(spark, root, v_to).limit(0)
-            else:
-                df = _read_paths(
-                    spark, root, side_man,
-                    [os.path.join(root, p) for p in paths],
-                )
-            return _pad(df, full)
-
+    out: DataFrame | None = None
+    for plan in plans:
+        v, key = plan.version, plan.key
         # added files read under the CHILD manifest's overlay; REMOVED
         # files are the parent snapshot's rows, so they must read under
         # the PARENT manifest's overlay. Reading the pre-image under the
@@ -2831,8 +2896,8 @@ def table_changes(
         # reappear in `before`, and a maintenance commit — which, like
         # Delta CDF under OPTIMIZE, must emit NO changes — would emit
         # phantom 'delete' events re-exposing erased row content.
-        after = _read_files(added, man)
-        before = _read_files(removed, prev_man if prev_man is not None else man)
+        after = _read_files(plan.added, plan.child)
+        before = _read_files(plan.removed, plan.parent)
         # append() deliberately admits duplicate merge keys, and a
         # duplicated key that lives on only ONE side of the diff is
         # still well-defined (each row is its own insert/delete). What
@@ -2862,172 +2927,74 @@ def table_changes(
                     "keys breaks CDF for later rewrites of those "
                     "keys; dedupe with dedup_key_last_write first)"
                 )
-        cols = [f.name for f in full.fields]
-        val_cols = [c for c in cols if c != key]
-        a = after.alias("a")
-        b = before.alias("b")
-        j = a.join(b, F.col(f"a.{key}") == F.col(f"b.{key}"), "full_outer")
-        a_key = F.col(f"a.{key}")
-        b_key = F.col(f"b.{key}")
-        same = F.struct(*[F.col(f"a.{c}") for c in val_cols]).eqNullSafe(
-            F.struct(*[F.col(f"b.{c}") for c in val_cols])
-        )
-        ins = j.filter(a_key.isNotNull() & b_key.isNull()).select(
-            *[F.col(f"a.{c}").alias(c) for c in cols],
-            F.lit("insert").alias("_change_type"),
-        )
-        del_ = j.filter(a_key.isNull() & b_key.isNotNull()).select(
-            *[F.col(f"b.{c}").alias(c) for c in cols],
-            F.lit("delete").alias("_change_type"),
-        )
-        upd = j.filter(a_key.isNotNull() & b_key.isNotNull() & ~same)
-        pre = upd.select(
-            *[F.col(f"b.{c}").alias(c) for c in cols],
-            F.lit("update_preimage").alias("_change_type"),
-        )
-        post = upd.select(
-            *[F.col(f"a.{c}").alias(c) for c in cols],
-            F.lit("update_postimage").alias("_change_type"),
-        )
-        delta = (
-            ins.unionByName(del_)
-            .unionByName(pre)
-            .unionByName(post)
-            .withColumn("_commit_version", F.lit(v))
-        )
         # MERGE-ON-READ deletes: a delete_mor commit changes no data
         # files (the file diff above is empty), so surface its delta
         # from the DELETE-ENTRY diff instead — the pre-image rows are
         # read from v's data files under the PARENT overlay (so rows
         # already deleted earlier can't reappear), semi-joined against
         # the entries v added.
-        prev_del_paths = {
-            e["path"]
-            for e in ((prev_man.get("deletes") if prev_man else None) or [])
-        }
-        new_dels = [
-            e
-            for e in man.get("deletes") or []
-            if e["path"] not in prev_del_paths
+        pre_images: list[DataFrame] = []
+
+        def _pre_image(entries: list[dict[str, Any]]) -> DataFrame | None:
+            tgt = plan.targets(entries)
+            if not tgt:
+                return None
+            return _read_paths(
+                spark, root, plan.pre_overlay,
+                [os.path.join(root, p) for p in tgt], with_meta=True,
+            )
+
+        pos_new = [
+            e for e in plan.new_deletes
+            if e.get("kind", "positional") == "positional"
         ]
-        if new_dels:
-            man_pre = dict(man)
-            man_pre["deletes"] = [
-                e
-                for e in man.get("deletes") or []
-                if e["path"] in prev_del_paths
-            ]
-            pos_new = [
-                e for e in new_dels
-                if e.get("kind", "positional") == "positional"
-            ]
-            eq_new = [e for e in new_dels if e.get("kind") == "equality"]
-
-            def _pre_image(entries: list[dict[str, Any]]) -> DataFrame | None:
-                # targets recorded at commit time name only files that
-                # EXISTED then — files added by the same commit
-                # (upsert_mor) are never in them, so the pre-image
-                # reads old files only, under the PARENT overlay
-                tgt = set()
-                for e in entries:
-                    tgt.update((e.get("targets") or {}).keys())
-                tgt_paths = [
-                    os.path.join(root, f["path"])
-                    for f in man["files"]
-                    if os.path.basename(f["path"]) in tgt
-                ]
-                if not tgt_paths:
-                    return None
-                return _read_paths(
-                    spark, root, man_pre, tgt_paths, with_meta=True
+        eq_new = [e for e in plan.new_deletes if e.get("kind") == "equality"]
+        pre_img = _pre_image(pos_new)
+        if pre_img is not None:
+            dl_new = spark.read.schema("dfile STRING, dpos BIGINT").parquet(
+                *[os.path.join(root, e["path"]) for e in pos_new]
+            )
+            pre_images.append(
+                pre_img.join(
+                    dl_new,
+                    (pre_img["__mor_file"] == dl_new.dfile)
+                    & (pre_img["__mor_pos"] == dl_new.dpos),
+                    "semi",
                 )
-
-            def _emit_deletes(hit: DataFrame) -> None:
-                nonlocal delta
-                mor_delta = _pad(
-                    hit.drop("__mor_file", "__mor_pos"), full
-                ).select(
-                    "*",
-                    F.lit("delete").alias("_change_type"),
-                ).withColumn("_commit_version", F.lit(v))
-                delta = delta.unionByName(mor_delta)
-
-            pre_img = _pre_image(pos_new)
-            if pre_img is not None:
-                dl_new = spark.read.schema("dfile STRING, dpos BIGINT").parquet(
-                    *[os.path.join(root, e["path"]) for e in pos_new]
-                )
-                _emit_deletes(
-                    pre_img.join(
-                        dl_new,
-                        (pre_img["__mor_file"] == dl_new.dfile)
-                        & (pre_img["__mor_pos"] == dl_new.dpos),
-                        "semi",
-                    )
-                )
-            for e in eq_new:  # one semi-join per new equality file
-                pre_img = _pre_image([e])
-                if pre_img is None:
-                    continue
-                cols_e = list(e["cols"])
-                kdf = (
-                    spark.read.parquet(os.path.join(root, e["path"]))
-                    .select(*[F.col(c).alias(f"__eq_{c}") for c in cols_e])
-                )
-                cond = None
-                for c in cols_e:
-                    t = F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
-                    cond = t if cond is None else cond & t
-                _emit_deletes(pre_img.join(F.broadcast(kdf), cond, "semi"))
-        if man.get("operation") == "update_mor":
+            )
+        for e in eq_new:  # one semi-join per new equality file
+            pre_img = _pre_image([e])
+            if pre_img is None:
+                continue
+            cols_e = list(e["cols"])
+            kdf = (
+                spark.read.parquet(os.path.join(root, e["path"]))
+                .select(*[F.col(c).alias(f"__eq_{c}") for c in cols_e])
+            )
+            cond = None
+            for c in cols_e:
+                t = F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
+                cond = t if cond is None else cond & t
+            pre_images.append(pre_img.join(F.broadcast(kdf), cond, "semi"))
+        mor_deleted = None
+        for hit in pre_images:
+            hit = _pad(hit.drop("__mor_file", "__mor_pos"), full)
+            mor_deleted = hit if mor_deleted is None else mor_deleted.unionByName(hit)
+        if mor_deleted is not None and plan.child.get("operation") == "update_mor":
             # A predicate UPDATE spelled merge-on-read lands as an
-            # equality tombstone + same-seq re-insert, so the raw delta
-            # above is delete+insert rows on the SAME keys. Delta CDF's
-            # convention for UPDATE is pre/postimage pairs — pair them
-            # back up (update_where_mor forbids SET on the key, so the
-            # pairing is total), and drop pairs whose value columns are
-            # identical (a SET that computed the old value is not a
-            # change — matches the CoW diff, which drops carried rows).
-            cols = [f.name for f in full.fields]
-            val_cols = [c for c in cols if c != key]
-            ins_d = delta.filter(F.col("_change_type") == "insert").alias("a")
-            del_d = delta.filter(F.col("_change_type") == "delete").alias("b")
-            rest = delta.filter(
-                ~F.col("_change_type").isin("insert", "delete")
+            # equality tombstone + same-seq re-insert: delete and insert
+            # rows on the SAME keys. Delta CDF's convention for UPDATE
+            # is pre/postimage pairs, so the tombstoned pre-images pair
+            # with the re-inserts like a copy-on-write file diff
+            # (update_where_mor forbids SET on the key, so the pairing
+            # is total; a SET that computed the old value is no change).
+            before, mor_deleted = before.unionByName(mor_deleted), None
+        delta = _pair_changes(after, before, key, cols)
+        if mor_deleted is not None:
+            delta = delta.unionByName(
+                mor_deleted.withColumn("_change_type", F.lit("delete"))
             )
-            j2 = ins_d.join(
-                del_d, F.col(f"a.{key}") == F.col(f"b.{key}"), "full_outer"
-            )
-            a_key, b_key = F.col(f"a.{key}"), F.col(f"b.{key}")
-            same2 = F.struct(
-                *[F.col(f"a.{c}") for c in val_cols]
-            ).eqNullSafe(F.struct(*[F.col(f"b.{c}") for c in val_cols]))
-            pre2 = j2.filter(a_key.isNotNull() & b_key.isNotNull() & ~same2).select(
-                *[F.col(f"b.{c}").alias(c) for c in cols],
-                F.lit("update_preimage").alias("_change_type"),
-                F.lit(v).alias("_commit_version"),
-            )
-            post2 = j2.filter(a_key.isNotNull() & b_key.isNotNull() & ~same2).select(
-                *[F.col(f"a.{c}").alias(c) for c in cols],
-                F.lit("update_postimage").alias("_change_type"),
-                F.lit(v).alias("_commit_version"),
-            )
-            lone_ins = j2.filter(a_key.isNotNull() & b_key.isNull()).select(
-                *[F.col(f"a.{c}").alias(c) for c in cols],
-                F.lit("insert").alias("_change_type"),
-                F.lit(v).alias("_commit_version"),
-            )
-            lone_del = j2.filter(a_key.isNull() & b_key.isNotNull()).select(
-                *[F.col(f"b.{c}").alias(c) for c in cols],
-                F.lit("delete").alias("_change_type"),
-                F.lit(v).alias("_commit_version"),
-            )
-            delta = (
-                rest.unionByName(pre2)
-                .unionByName(post2)
-                .unionByName(lone_ins)
-                .unionByName(lone_del)
-            )
+        delta = delta.withColumn("_commit_version", F.lit(v))
         out = delta if out is None else out.unionByName(delta)
     return out
 

@@ -19,12 +19,15 @@ replayable offset log:
   crash, provided vacuum retains the range — the same retention
   contract as acid.table_changes).
 
-The per-batch diff runs DRIVER-SIDE in pyarrow/pandas: a simple stream
+The per-batch diff runs DRIVER-SIDE over pyarrow rows: a simple stream
 reader executes outside the Spark session, and a commit's file delta
 is bounded by the files that merge touched, not the table (file-level
-copy-on-write) — the same reason acid.table_changes scales. For bulk
-historical backfill, use the distributed acid.table_changes and start
-the stream at the backfill's end version.
+copy-on-write) — the same reason acid.table_changes scales. What to
+diff for each version (file delta, new delete entries, their targets)
+comes from acid._change_plan, the plan table_changes diffs from too;
+the schema is the one table_changes outputs. For bulk historical
+backfill, use the distributed acid.table_changes and start the stream
+at the backfill's end version.
 
 Reference: dfpc-coe/etl-arcgis task.ts:50-51 (the scheduled pull this
 replaces with an exact incremental feed) + task.ts:235-350 (the upsert
@@ -33,72 +36,121 @@ whose effects the feed re-derives row-level).
 
 from __future__ import annotations
 
+import json
 import os
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
-from .. import acid
+from .. import acid, tables
 
 FORMAT_NAME = "acid_cdf"
 
-_PA_TO_SPARK = {
-    "int8": IntegerType(),
-    "int16": IntegerType(),
-    "int32": IntegerType(),
-    "int64": LongType(),
-    "float": FloatType(),
-    "float32": FloatType(),
-    "double": DoubleType(),
-    "float64": DoubleType(),
-    "string": StringType(),
-    "large_string": StringType(),
-    "bool": BooleanType(),
-}
+Row = dict[str, Any]
 
 
 def _table_schema(root: str) -> StructType:
-    """Union of the current snapshot's file schemas (widest wins), via
-    parquet footers only — no Spark job."""
-    import pyarrow.parquet as pq
-
+    """The schema acid.table_changes gives the current snapshot: the
+    manifest's logical ``schema`` plus ``_change_type`` and an integer
+    ``_commit_version``. A manifest that predates ``schema`` falls back
+    to the union of its files' footer schemas (first type wins), with a
+    string partition column. Every field is nullable: a column added by
+    schema evolution is null in older rows."""
     man = acid._snapshot(root)[1]
-    fields: dict[str, Any] = {}
-    for f in man["files"]:
-        sch = pq.ParquetFile(os.path.join(root, f["path"])).schema_arrow
-        for fld in sch:
-            if fld.name not in fields:
-                fields[fld.name] = fld.type
-    pcol = man.get("partition_by")
-    if pcol is not None and pcol not in fields:
-        fields[pcol] = "string"  # partition col lives in the dir name
-    out = []
-    for name, typ in fields.items():
-        s = str(typ)
-        if s.startswith("timestamp"):
-            out.append(StructField(name, TimestampType()))
-        else:
-            out.append(StructField(name, _PA_TO_SPARK.get(s, StringType())))
-    out.append(StructField("_change_type", StringType()))
-    out.append(StructField("_commit_version", LongType()))
-    return StructType(out)
+    if man.get("schema"):
+        data = StructType.fromJson(json.loads(man["schema"])).fields
+    else:
+        seen: dict[str, StructField] = {}
+        for f in man["files"]:
+            path = os.path.join(root, f["path"])
+            for fld in tables.parquet_schema(path).fields:
+                seen.setdefault(fld.name, fld)
+        pcol = man.get("partition_by")
+        if pcol is not None:
+            seen.setdefault(pcol, StructField(pcol, StringType()))
+        data = list(seen.values())
+    return StructType(
+        [StructField(f.name, f.dataType) for f in data]
+        + [
+            StructField("_change_type", StringType()),
+            StructField("_commit_version", IntegerType()),
+        ]
+    )
+
+
+class _NaN:
+    """The one NaN: eqNullSafe (and Spark's join keys) treat NaN as
+    equal to NaN, Python's float NaN is unequal to itself."""
+
+
+_NAN = _NaN()
+
+
+def _cmp(value: Any) -> Any:
+    """``value`` as Spark's null-safe equality compares it: None equals
+    only None, NaN equals NaN, and an integer equals itself whether or
+    not its column holds nulls (values stay native, never str)."""
+    return _NAN if isinstance(value, float) and value != value else value
+
+
+def _key(row: Row, cols: list[str]) -> tuple:
+    return tuple(_cmp(row.get(c)) for c in cols)
+
+
+def _pair(
+    after: list[Row], before: list[Row], key: str, cols: list[str], v: int
+) -> Iterator[tuple[Row, str]]:
+    """acid._pair_changes on driver-side rows: a key only in ``after``
+    is an 'insert', only in ``before`` a 'delete', in both with any
+    column differing an 'update_preimage' + 'update_postimage' pair; a
+    row identical on both sides is no change. A NULL key joins nothing
+    (the equi-join's rule), so its row emits nothing. A key duplicated
+    on one side and present on the other has no row-level diff and
+    raises — table_changes' contract."""
+    a: dict[Any, list[Row]] = {}
+    b: dict[Any, list[Row]] = {}
+    for side, rows in ((a, after), (b, before)):
+        for r in rows:
+            if r.get(key) is not None:
+                side.setdefault(_cmp(r[key]), []).append(r)
+    for name, mine, other in (("added", a, b), ("removed", b, a)):
+        for k, rs in mine.items():
+            if len(rs) > 1 and k in other:
+                raise ValueError(
+                    f"CDF stream at v{v}: merge key {rs[0][key]!r} is "
+                    f"duplicated in the {name} files and present on "
+                    "the other side of the delta — the CDF source "
+                    "requires key-unique diffs (no duplicate-key "
+                    "append() for keys later rewritten)"
+                )
+    for k, rs in a.items():
+        if k not in b:
+            yield from ((r, "insert") for r in rs)
+    for k, rs in b.items():
+        if k not in a:
+            yield from ((r, "delete") for r in rs)
+    for k in a.keys() & b.keys():
+        post, pre = a[k][0], b[k][0]
+        if _key(post, cols) != _key(pre, cols):
+            yield pre, "update_preimage"
+            yield post, "update_postimage"
 
 
 class AcidCdfStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
         self.names = [f.name for f in schema.fields]
+        self.cols = [
+            n for n in self.names if n not in ("_change_type", "_commit_version")
+        ]
+        self.types = {f.name: f.dataType for f in schema.fields}
         self.root = options["root"]
         start = options.get("startingversion")
         self._starting = int(start) if start is not None else None
@@ -113,311 +165,118 @@ class AcidCdfStreamReader(SimpleDataSourceStreamReader):
 
     # -- reading ----------------------------------------------------
 
-    def _load(self, paths: list[str], pcol: str | None, man=None):
-        """Read data files into one pandas frame, reattaching the
-        partition value from the Hive dir name when partitioned, plus
-        (__file, __pos) row identity for the merge-on-read overlay.
-        Applies the manifest's per-file column-RENAME aliases
-        (physical -> logical) so pre-rename files surface logical
-        names — the pandas twin of acid._read_paths' alias groups."""
-        import pandas as pd
+    def _load(self, paths: list[str], man: dict[str, Any] | None) -> list[Row]:
+        """Rows of data files as read under manifest ``man``, with the
+        delete overlay of ``man`` applied — the driver-side twin of
+        acid._read_paths. Columns take LOGICAL names (a file's
+        rename aliases map them to its physical names); a column the
+        file lacks reads as None; a Hive directory ``<col>=<val>``
+        supplies its column, typed as the schema types it. Each row
+        carries (__file, __pos), its identity for positional deletes."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        aliases_of = {}
-        if man is not None:
-            aliases_of = {
-                os.path.basename(f["path"]): f.get("aliases") or {}
-                for f in man.get("files", [])
-            }
-        frames = []
+        if not paths:
+            return []
+        aliases = {
+            os.path.basename(f["path"]): f.get("aliases") or {}
+            for f in man["files"]
+        }
+        rows: list[Row] = []
         for p in paths:
             full = os.path.join(self.root, p)
-            df = pq.read_table(full).to_pandas()
-            al = aliases_of.get(os.path.basename(full), {})
-            if al:
-                df = df.rename(
-                    columns={phys: logical for logical, phys in al.items()}
-                )
-            if pcol is not None and pcol not in df.columns:
-                part_dir = os.path.basename(os.path.dirname(full))
-                if "=" in part_dir:
-                    df[pcol] = part_dir.split("=", 1)[1]
-            df["__file"] = os.path.basename(full)
-            df["__pos"] = range(len(df))
-            frames.append(df)
-        if not frames:
-            return pd.DataFrame()
-        return pd.concat(frames, ignore_index=True)
+            bn = os.path.basename(full)
+            t = pq.read_table(full)
+            al = aliases.get(bn, {})
+            cols = {
+                c: t.column(al.get(c, c)).to_pylist()
+                for c in self.cols
+                if al.get(c, c) in t.column_names
+            }
+            part = os.path.basename(os.path.dirname(full))
+            pcol, _, raw = part.partition("=")
+            if raw and pcol in self.types:
+                val = acid._decode_hive_value(raw)
+                if val is not None:
+                    arrow_t = to_arrow_type(self.types[pcol])
+                    val = pa.array([val]).cast(arrow_t).to_pylist()[0]
+                cols[pcol] = [val] * t.num_rows
+            for i in range(t.num_rows):
+                r = {c: vals[i] for c, vals in cols.items()}
+                r["__file"], r["__pos"] = bn, i
+                rows.append(r)
+        dels = man.get("deletes") or []
+        if not dels:
+            return rows
+        seq_of = {
+            os.path.basename(f["path"]): int(f.get("seq", 0))
+            for f in man["files"]
+        }
+        return [
+            r for r, hit in zip(rows, self._matches(rows, dels, seq_of))
+            if not hit
+        ]
 
-    def _overlay(self, df, man):
-        """Apply a manifest's merge-on-read delete overlay to a loaded
-        frame — BOTH kinds, same semantics as acid._read_paths:
-        positional entries anti-match (__file, __pos); equality entries
-        null-safe-match their key columns, guarded by the data sequence
-        number (rows from files at/after the entry's seq survive)."""
-        import pandas as pd
+    def _matches(
+        self,
+        rows: list[Row],
+        entries: list[dict[str, Any]],
+        seq_of: dict[str, int] | None = None,
+    ) -> list[bool]:
+        """Per row, whether some delete entry matches it — the one
+        matcher behind the overlay and the new-entry pre-images, with
+        acid._read_paths' rules: a positional entry matches its
+        (file, pos) pairs; an equality entry matches rows whose
+        ``cols`` null-safely equal one of its key tuples. Given
+        ``seq_of`` (the overlay), an equality entry matches only rows
+        from files with a lower data sequence number, so a same-commit
+        re-insert (upsert_mor) survives its own tombstone."""
         import pyarrow.parquet as pq
 
-        dels = (man or {}).get("deletes") or []
-        if not dels or df is None or len(df) == 0:
-            return df
-        pos = [e for e in dels if e.get("kind", "positional") == "positional"]
-        eq = [e for e in dels if e.get("kind") == "equality"]
-        if pos:
-            pairs = set()
-            for e in pos:
-                t = pq.read_table(os.path.join(self.root, e["path"])).to_pandas()
-                pairs.update(zip(t["dfile"], t["dpos"]))
-            keep = [
-                (f, p) not in pairs
-                for f, p in zip(df["__file"], df["__pos"])
-            ]
-            df = df[pd.Series(keep, index=df.index)]
-        if eq and len(df):
-            seq_of = {
-                os.path.basename(f["path"]): int(f.get("seq", 0))
-                for f in man["files"]
-            }
-            fseq = df["__file"].map(lambda bn: seq_of.get(bn, 0))
-            for e in eq:
+        hit = [False] * len(rows)
+        for e in entries:
+            keys = pq.read_table(os.path.join(self.root, e["path"])).to_pylist()
+            if e.get("kind") == "equality":
                 cols = list(e["cols"])
-                kt = pq.read_table(
-                    os.path.join(self.root, e["path"])
-                ).to_pandas()
-                # Native-value tuples with explicit null tagging — NOT
-                # str-coerced: stringification would false-match values
-                # that render identically but differ natively (and an
-                # actual string equal to a null sentinel). A (is_null,
-                # value) tuple mirrors Spark's eqNullSafe: Python's
-                # numeric equality (int 5 == float 5.0, equal hashes)
-                # absorbs pandas' int->float widening after schema
-                # evolution, while strings never equal numbers.
-                def _kt(row):
-                    return tuple(
-                        (True, None) if pd.isna(v) else (False, v)
-                        for v in row
+                keyset = {_key(k, cols) for k in keys}
+                seq = int(e.get("seq", 0))
+
+                def match(r: Row) -> bool:
+                    return _key(r, cols) in keyset and (
+                        seq_of is None or seq_of.get(r["__file"], 0) < seq
                     )
+            else:
+                pairs = {(k["dfile"], k["dpos"]) for k in keys}
 
-                keyset = set(map(_kt, kt[cols].values))
-                match = pd.Series(
-                    [_kt(r) in keyset for r in df[cols].values],
-                    index=df.index,
-                )
-                drop = match & (fseq < int(e.get("seq", 0)))
-                df = df[~drop]
-                fseq = fseq[~drop]
-        return df
+                def match(r: Row) -> bool:
+                    return (r["__file"], r["__pos"]) in pairs
 
-    def _diff_version(self, v: int):
-        """Yield change tuples for snapshot v vs v-1 — file-delta diff
-        plus the merge-on-read delete-entry diff, same semantics as
-        acid.table_changes: removed files read under the PARENT
-        manifest's overlay (a compaction that resolves the overlay must
-        emit nothing), added files under the child's (upsert_mor's own
-        appends survive their same-commit tombstone via the seq
-        guard), and NEW delete entries emit their matched pre-image
-        rows as 'delete' events."""
-        import pandas as pd
+            hit = [h or match(r) for h, r in zip(hit, rows)]
+        return hit
 
-        man = acid._read_manifest(self.root, v)
-        key = man["key"]
-        pcol = man.get("partition_by")
-        man_prev = None if v == 1 else acid._read_manifest(self.root, v - 1)
-        prev = (
-            set()
-            if man_prev is None
-            else {f["path"] for f in man_prev["files"]}
-        )
-        cur = {f["path"] for f in man["files"]}
-        after = self._overlay(self._load(sorted(cur - prev), pcol, man), man)
-        before = self._overlay(
-            self._load(sorted(prev - cur), pcol, man_prev or man),
-            man_prev or man
-        )
-        data_cols = [
-            n for n in self.names if n not in ("_change_type", "_commit_version")
-        ]
-        for df in (after, before):
-            for c in data_cols:
-                if len(df) and c not in df.columns:
-                    df[c] = None
-
-        def emit(frame, ctype):
-            for row in frame.itertuples(index=False):
-                d = dict(zip(frame.columns, row))
-                yield tuple(
-                    [
-                        None if (isinstance(d.get(n), float) and pd.isna(d.get(n)))
-                        else d.get(n)
-                        for n in data_cols
-                    ]
-                    + [ctype, v]
-                )
-
-        # merge-on-read delete-entry diff: entries ADDED by v emit
-        # their matched pre-image rows (read under the parent overlay;
-        # targets name only files that existed pre-commit)
-        mor_pre = None
-        prev_del = {
-            e["path"]
-            for e in ((man_prev or {}).get("deletes") or [])
-        }
-        new_dels = [
-            e for e in man.get("deletes") or [] if e["path"] not in prev_del
-        ]
-        if new_dels:
-            import pyarrow.parquet as pq
-
-            man_pre = dict(man)
-            man_pre["deletes"] = [
-                e for e in man.get("deletes") or [] if e["path"] in prev_del
+    def _diff_version(self, v: int) -> Iterator[tuple]:
+        """Change tuples for snapshot v, as acid.table_changes derives
+        them from the same plan: added files under the child's overlay
+        against removed files under the parent's, and the rows the NEW
+        delete entries match (read under the parent's overlay) as
+        deletes — or, for update_mor, paired with the re-inserts."""
+        plan = acid._change_plan(self.root, v)
+        after = self._load(plan.added, plan.child)
+        before = self._load(plan.removed, plan.parent)
+        deleted: list[Row] = []
+        if plan.new_deletes:
+            cand = self._load(plan.targets(plan.new_deletes), plan.pre_overlay)
+            deleted = [
+                r for r, hit in zip(cand, self._matches(cand, plan.new_deletes))
+                if hit
             ]
-            tgt = set()
-            for e in new_dels:
-                tgt.update((e.get("targets") or {}).keys())
-            tgt_paths = sorted(
-                f["path"]
-                for f in man["files"]
-                if os.path.basename(f["path"]) in tgt
-            )
-            pre = self._overlay(self._load(tgt_paths, pcol, man_pre), man_pre)
-            if pre is not None and len(pre):
-                for c in data_cols:
-                    if c not in pre.columns:
-                        pre[c] = None
-                hit = pd.Series(False, index=pre.index)
-                for e in new_dels:
-                    if e.get("kind") == "equality":
-                        cols = list(e["cols"])
-                        kt = pq.read_table(
-                            os.path.join(self.root, e["path"])
-                        ).to_pandas()
-
-                        # native (is_null, value) tuples — same
-                        # eqNullSafe-mirror as _overlay, no str coercion
-                        def _kt2(row):
-                            return tuple(
-                                (True, None) if pd.isna(x) else (False, x)
-                                for x in row
-                            )
-
-                        keyset = set(map(_kt2, kt[cols].values))
-                        hit |= pd.Series(
-                            [_kt2(r) in keyset for r in pre[cols].values],
-                            index=pre.index,
-                        )
-                    else:
-                        t = pq.read_table(
-                            os.path.join(self.root, e["path"])
-                        ).to_pandas()
-                        pairs = set(zip(t["dfile"], t["dpos"]))
-                        hit |= pd.Series(
-                            [
-                                (f, p) in pairs
-                                for f, p in zip(pre["__file"], pre["__pos"])
-                            ],
-                            index=pre.index,
-                        )
-                if man.get("operation") == "update_mor":
-                    mor_pre = pre[hit]
-                else:
-                    yield from emit(pre[hit], "delete")
-
-        if man.get("operation") == "update_mor":
-            # pair the equality-delete pre-images with the same-key
-            # re-inserts into update_pre/postimage rows — the stream
-            # must match acid.table_changes' Delta-CDF convention
-            # (update_where_mor forbids SET on the key, so the pairing
-            # is total; identical pairs are not changes and drop).
-            pre_f = (
-                mor_pre[data_cols]
-                if mor_pre is not None and len(mor_pre)
-                else pd.DataFrame(columns=data_cols)
-            )
-            ins_f = after[data_cols] if len(after) else pd.DataFrame(columns=data_cols)
-            m = ins_f.merge(
-                pre_f, on=key, how="outer", suffixes=("__a", "__b"),
-                indicator=True,
-            )
-            val_cols = [c for c in data_cols if c != key]
-            for row in m.itertuples(index=False):
-                d = dict(zip(m.columns, row))
-                a_row = {key: d[key], **{c: d[f"{c}__a"] for c in val_cols}}
-                b_row = {key: d[key], **{c: d[f"{c}__b"] for c in val_cols}}
-
-                def _tup(r, ctype):
-                    return tuple(
-                        [
-                            None
-                            if (isinstance(r.get(n), float) and pd.isna(r.get(n)))
-                            else r.get(n)
-                            for n in data_cols
-                        ]
-                        + [ctype, v]
-                    )
-
-                if d["_merge"] == "left_only":
-                    yield _tup(a_row, "insert")
-                elif d["_merge"] == "right_only":
-                    yield _tup(b_row, "delete")
-                else:
-                    same = all(
-                        (pd.isna(a_row[c]) and pd.isna(b_row[c]))
-                        or (
-                            not pd.isna(a_row[c])
-                            and not pd.isna(b_row[c])
-                            and a_row[c] == b_row[c]
-                        )
-                        for c in val_cols
-                    )
-                    if not same:
-                        yield _tup(b_row, "update_preimage")
-                        yield _tup(a_row, "update_postimage")
-            return
-
-        if len(after) == 0 and len(before) == 0:
-            return
-        if len(before) == 0:
-            yield from emit(after, "insert")
-            return
-        if len(after) == 0:
-            yield from emit(before, "delete")
-            return
-        a = after.set_index(key)
-        b = before.set_index(key)
-        # Same contract as acid.table_changes: a key duplicated in a
-        # delta is fine while it stays on one side (each row is its
-        # own insert/delete), but duplicated AND present on the other
-        # side has no row-level diff — the .loc alignment below would
-        # multiply images or raise a cryptic pandas reindex error
-        # mid-stream. Fail with the contract instead.
-        both = set(a.index) & set(b.index)
-        for side, idx in (("added", a.index), ("removed", b.index)):
-            bad = sorted(k for k in set(idx[idx.duplicated()]) if k in both)
-            if bad:
-                raise ValueError(
-                    f"CDF stream at v{v}: merge key {bad[0]!r} is "
-                    f"duplicated in the {side} files and present on "
-                    "the other side of the delta — the CDF source "
-                    "requires key-unique diffs (no duplicate-key "
-                    "append() for keys later rewritten)"
-                )
-        a_keys, b_keys = set(a.index), set(b.index)
-        yield from emit(a.loc[sorted(a_keys - b_keys)].reset_index(), "insert")
-        yield from emit(b.loc[sorted(b_keys - a_keys)].reset_index(), "delete")
-        common = sorted(a_keys & b_keys)
-        if common:
-            av = a.loc[common, [c for c in data_cols if c != key and c in a.columns]]
-            bv = b.loc[common, [c for c in data_cols if c != key and c in b.columns]]
-            bv = bv.reindex(columns=av.columns)
-            neq = ~(
-                (av.fillna("\x00NULL").astype(str) == bv.fillna("\x00NULL").astype(str))
-                .all(axis=1)
-            )
-            changed = [k for k, flag in zip(common, neq) if flag]
-            if changed:
-                yield from emit(b.loc[changed].reset_index(), "update_preimage")
-                yield from emit(a.loc[changed].reset_index(), "update_postimage")
+        if plan.child.get("operation") == "update_mor":
+            before, deleted = before + deleted, []
+        changes = [*_pair(after, before, plan.key, self.cols, v)]
+        changes += [(r, "delete") for r in deleted]
+        for r, change_type in changes:
+            yield (*(r.get(c) for c in self.cols), change_type, v)
 
     def _range_rows(self, start_v: int, end_v: int):
         for v in range(start_v + 1, end_v + 1):

@@ -54,15 +54,7 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import (
@@ -102,7 +94,7 @@ _WHERE_TOKEN = re.compile(
 
 
 def _parse_where(where: str):
-    """Parse the SQL-92 subset the connector pushes — conjunctions of
+    """Parse the SQL-92 subset a ``where`` may use — conjunctions of
     ``col OP literal``, ``col IN (...)``, ``col IS NOT NULL`` — into a
     row predicate. Raises ValueError on anything else (the server
     rejects the request like ArcGIS would a malformed where)."""
@@ -430,64 +422,31 @@ class HttpPagePartition(InputPartition):
     count: int
 
 
-_FILTER_SQL_OPS = {
-    EqualTo: "=",
-    GreaterThan: ">",
-    GreaterThanOrEqual: ">=",
-    LessThan: "<",
-    LessThanOrEqual: "<=",
-}
-
-
-def _sql_lit(v) -> str:
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, bool):
-        return "1" if v else "0"
-    return str(v)
-
-
 class ArcGISHttpReader(DataSourceReader):
     """Paged HTTP scan: plan time asks returnCountOnly for the layer
-    cardinality (under the pushed where — the server prunes, we plan
+    cardinality under the ``where`` option (the server prunes, we plan
     fewer pages), then one InputPartition per resultOffset window
-    (esri-dump ITER, task.ts:418, parallelized)."""
+    (esri-dump ITER, task.ts:418, parallelized).
+
+    The ``where`` option is the one server-side filter — the reference's
+    ARCGIS_QUERY (task.ts:406-408). Spark's filters stay Catalyst's: the
+    reader implements no pushFilters, because Spark 4.1 deduplicates
+    two scans of one relation whose Python-side pushed filters differ
+    (a union of two filtered branches would return one branch twice),
+    the hazard ArcGISSimReader documents."""
 
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
         self.options = options
         self.url = options["url"].rstrip("/")
         self.page_size = int(options.get("pagesize", 1000))
-        self.where_parts: list[str] = []
-        if options.get("where"):
-            self.where_parts.append(options["where"])
-
-    def _where(self) -> str:
-        return " AND ".join(self.where_parts) or "1=1"
-
-    def pushFilters(self, filters: list[Filter]):  # noqa: N802 (API name)
-        """Translate the SQL-92-expressible filter classes into where
-        fragments the server evaluates (task.ts:406-408 forwards
-        ARCGIS_QUERY the same way); everything else stays Catalyst's."""
-        for f in filters:
-            cls = type(f)
-            if cls in _FILTER_SQL_OPS and len(f.attribute) == 1:
-                self.where_parts.append(
-                    f"{f.attribute[0]} {_FILTER_SQL_OPS[cls]} {_sql_lit(f.value)}"
-                )
-            elif cls is In and len(f.attribute) == 1 and f.value:
-                vals = ", ".join(_sql_lit(v) for v in f.value)
-                self.where_parts.append(f"{f.attribute[0]} IN ({vals})")
-            elif cls is IsNotNull and len(f.attribute) == 1:
-                self.where_parts.append(f"{f.attribute[0]} IS NOT NULL")
-            else:
-                yield f
+        self.where = options.get("where") or "1=1"
 
     def partitions(self) -> list[HttpPagePartition]:
         broker = HttpTokenBroker(self.url)
         res = _fetch_with_retry(
             broker, self.url + "/layer/query",
-            {"where": self._where(), "returnCountOnly": "true"},
+            {"where": self.where, "returnCountOnly": "true"},
         )
         n = int(res["count"])
         pages = max(1, math.ceil(n / self.page_size))
@@ -501,7 +460,7 @@ class ArcGISHttpReader(DataSourceReader):
         res = _fetch_with_retry(
             broker, self.url + "/layer/query",
             {
-                "where": self._where(),
+                "where": self.where,
                 "resultOffset": partition.offset,
                 "resultRecordCount": partition.count,
                 "f": "json",

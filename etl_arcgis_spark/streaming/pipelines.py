@@ -17,7 +17,7 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import (
@@ -169,6 +169,18 @@ def stateful_sessionize(stream: DataFrame, watermark: str = "30 minutes") -> Dat
     )
 
 
+def _latest_per_key(df: DataFrame, key: str) -> DataFrame:
+    """The last write per ``key`` — newest event time ``us`` (epoch
+    micros), then highest event id — as the upserted (key, us,
+    event_id, value) row."""
+    w = Window.partitionBy(key).orderBy(F.desc("us"), F.desc("event_id"))
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(key, "us", "event_id", "value")
+    )
+
+
 def upsert_sink(stream: DataFrame, target_dir: str) -> Any:
     """C38/A13: foreachBatch micro-batch MERGE into a keyed parquet
     target — last write (by event time, then event id) wins, mirroring
@@ -189,26 +201,20 @@ def upsert_sink(stream: DataFrame, target_dir: str) -> Any:
     the same merge is ``MERGE INTO`` (row-level update); plain parquet
     needs rewrite-and-swap.
     """
-    from pyspark.sql import Window
-
     cur_dir = os.path.join(target_dir, "current")
-    w = Window.partitionBy("user_id").orderBy(F.desc("us"), F.desc("event_id"))
-
-    def _rank1(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "us", "event_id", "value")
-        )
 
     def merge(batch_df: DataFrame, epoch: int) -> None:
         import shutil
 
         spark = batch_df.sparkSession
         recover_upsert_state(target_dir)
-        latest = _rank1(batch_df.withColumn("us", F.unix_micros("ts")))
+        latest = _latest_per_key(
+            batch_df.withColumn("us", F.unix_micros("ts")), "user_id"
+        )
         if os.path.isdir(cur_dir):
-            latest = _rank1(spark.read.parquet(cur_dir).unionByName(latest))
+            latest = _latest_per_key(
+                spark.read.parquet(cur_dir).unionByName(latest), "user_id"
+            )
         stage = os.path.join(target_dir, f"_stage_{epoch}")
         latest.write.mode("overwrite").parquet(stage)  # materializes BEFORE swap
         retired = os.path.join(target_dir, f"_retired_{epoch}")
@@ -477,19 +483,12 @@ def acid_upsert_sink(stream: DataFrame, table_root: str, key: str = "user_id") -
     queryable audit trail (acid.history) the reference's HTTP submit
     never had.
     """
-    from pyspark.sql import Window
-
     from .. import acid
-
-    w = Window.partitionBy(key).orderBy(F.desc("us"), F.desc("event_id"))
 
     def merge(batch_df: DataFrame, epoch: int) -> None:
         spark = batch_df.sparkSession
-        latest = (
-            batch_df.withColumn("us", F.unix_micros("ts"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(key, "us", "event_id", "value")
+        latest = _latest_per_key(
+            batch_df.withColumn("us", F.unix_micros("ts")), key
         )
         if acid.current_version(table_root) is None:
             acid.create(spark, table_root, latest, key=key)
@@ -517,19 +516,12 @@ def acid_upsert_sink_mor(
     Reference parity: the same keyed upsert as task.ts:267-349, with
     the query-by-key leg replaced by the equality tombstone — the
     writer never needs to locate the old rows at all."""
-    from pyspark.sql import Window
-
     from .. import acid
-
-    w = Window.partitionBy(key).orderBy(F.desc("us"), F.desc("event_id"))
 
     def upsert(batch_df: DataFrame, epoch: int) -> None:
         spark = batch_df.sparkSession
-        latest = (
-            batch_df.withColumn("us", F.unix_micros("ts"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(key, "us", "event_id", "value")
+        latest = _latest_per_key(
+            batch_df.withColumn("us", F.unix_micros("ts")), key
         )
         if acid.current_version(table_root) is None:
             acid.create(spark, table_root, latest, key=key)
@@ -568,19 +560,12 @@ def acid_wap_sink(
     concurrent writer surfaces as CommitConflict at publish — the
     batch re-stages on the new snapshot (bounded retry), preserving
     exactly-once visibility."""
-    from pyspark.sql import Window
-
     from .. import acid
-
-    w = Window.partitionBy(key).orderBy(F.desc("us"), F.desc("event_id"))
 
     def stage_audit_publish(batch_df: DataFrame, epoch: int) -> None:
         spark = batch_df.sparkSession
-        latest = (
-            batch_df.withColumn("us", F.unix_micros("ts"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(key, "us", "event_id", "value")
+        latest = _latest_per_key(
+            batch_df.withColumn("us", F.unix_micros("ts")), key
         )
         if acid.current_version(table_root) is None:
             # The FIRST batch is audited too: the would-be table after

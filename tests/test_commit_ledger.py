@@ -30,6 +30,14 @@ WRITERS = {
         spark, root, "id = 1", {"x": "x + 1"}
     ),
     "compact": lambda spark, root: acid.compact(spark, root),
+    "fast_forward": lambda spark, root: (
+        acid.create_branch(spark, root, "b"),
+        acid.append(
+            spark, acid.branch_root(root, "b"),
+            spark.createDataFrame([(20, 20, "a")], SCHEMA),
+        ),
+        acid.fast_forward(spark, root, "b"),
+    ),
 }
 
 

@@ -111,19 +111,33 @@ def test_token_broker_ttl_cache(monkeypatch):
     assert tok2 != tok1 and broker.mint_count == 2
 
 
-def test_union_two_scans_same_relation(spark, layer_file):
+@pytest.mark.parametrize("fmt", ["arcgis_sim", "arcgis_http"])
+def test_union_two_scans_same_relation(spark, layer_file, fmt):
     """Regression: one query scanning the same relation twice with
     different filters (union branches) must return both branches' rows.
 
     With pushdown enabled this silently breaks on Spark 4.1.2 — the two
     BatchScans are deduplicated even though their Python-side pushed
-    filters differ — which is exactly why the default ``arcgis_sim``
-    format does not implement pushFilters."""
-    df = spark.read.format("arcgis_sim").option("path", layer_file).load()
-    u = df.filter(F.col("callsign") == "unit-1").unionByName(
-        df.filter(F.col("callsign") == "unit-2")
-    )
-    got = sorted(r["oid"] for r in u.collect())
+    filters differ — which is exactly why neither the default
+    ``arcgis_sim`` format nor ``arcgis_http`` implements pushFilters."""
+    srv = None
+    if fmt == "arcgis_http":
+        from etl_arcgis_spark.sources import arcgis_http
+
+        arcgis_http.register(spark)
+        srv = arcgis_http.SimFeatureServer(layer_file)
+        reader = spark.read.format(fmt).option("url", srv.start())
+    else:
+        reader = spark.read.format(fmt).option("path", layer_file)
+    try:
+        df = reader.load()
+        u = df.filter(F.col("callsign") == "unit-1").unionByName(
+            df.filter(F.col("callsign") == "unit-2")
+        )
+        got = sorted(r["oid"] for r in u.collect())
+    finally:
+        if srv is not None:
+            srv.stop()
     want = sorted(o for o in range(250) if o % 7 in (1, 2))
     assert got == want
 

@@ -98,12 +98,12 @@ def test_paged_scan_parity_and_windows(spark, server):
 
 
 def test_where_pushdown_server_side(spark, server):
-    """A3 twin: pushed filters travel as a SQL-92 where the SERVER
-    evaluates — page planning sees the pruned count."""
+    """A3 twin: the ``where`` option travels as a SQL-92 where the
+    SERVER evaluates — page planning sees the pruned count."""
     srv, url = server
     register(spark)
-    df = _reader(spark, url, pagesize=100).filter(
-        (F.col("speed") > 40) & (F.col("callsign") == "unit-3")
+    df = _reader(
+        spark, url, pagesize=100, where="speed > 40 AND callsign = 'unit-3'"
     )
     rows = df.collect()
     assert rows
