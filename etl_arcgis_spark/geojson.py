@@ -123,13 +123,10 @@ def _merc_y(lat: Column) -> Column:
     return F.lit(_R) * F.log(F.tan(F.lit(_PI / 4) + F.radians(lat) / 2))
 
 
-def reproject_web_mercator(df: DataFrame) -> DataFrame:
-    """A10 (task.ts:194,203-207,213-217): EPSG:4326 -> EPSG:3857 over
+def _map_vertices(df: DataFrame, vertex) -> DataFrame:
+    """Apply ``vertex`` (a ``[x, y]`` Column -> Column function) to
     every vertex of every ring of every part — one nested ``transform``
     chain, type-agnostic thanks to the canonical depth-4 coords."""
-    vertex = lambda pt: F.array(
-        _merc_x(pt.getItem(0)), _merc_y(pt.getItem(1))
-    )
     return df.withColumn(
         "coords",
         F.transform(
@@ -139,19 +136,22 @@ def reproject_web_mercator(df: DataFrame) -> DataFrame:
     )
 
 
+def reproject_web_mercator(df: DataFrame) -> DataFrame:
+    """A10 (task.ts:194,203-207,213-217): EPSG:4326 -> EPSG:3857 over
+    every vertex."""
+    return _map_vertices(
+        df, lambda pt: F.array(_merc_x(pt.getItem(0)), _merc_y(pt.getItem(1)))
+    )
+
+
 def reproject_inverse(df: DataFrame) -> DataFrame:
     """Inverse Web-Mercator (3857 -> 4326), for round-trip property
     tests: lon = degrees(x/R); lat = degrees(2·atan(exp(y/R)) − π/2)."""
-    pi = 3.141592653589793
-    vertex = lambda pt: F.array(
-        F.degrees(pt.getItem(0) / F.lit(_R)),
-        F.degrees(F.atan(F.exp(pt.getItem(1) / F.lit(_R))) * 2 - F.lit(pi / 2)),
-    )
-    return df.withColumn(
-        "coords",
-        F.transform(
-            "coords",
-            lambda part: F.transform(part, lambda ring: F.transform(ring, vertex)),
+    return _map_vertices(
+        df,
+        lambda pt: F.array(
+            F.degrees(pt.getItem(0) / F.lit(_R)),
+            F.degrees(F.atan(F.exp(pt.getItem(1) / F.lit(_R))) * 2 - F.lit(_PI / 2)),
         ),
     )
 

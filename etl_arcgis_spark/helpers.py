@@ -24,6 +24,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+# The customer lon/lat lattice. The fixture tables carry no geometry, so
+# every spatial operator derives exact half-integer coordinates from the
+# key (mod 360 and 160); the same text runs on both engines.
+LON = "(c_custkey % 360) - 180 + 0.5"
+LAT = "(c_custkey % 160) - 80 + 0.5"
+
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..helpers import ev_us, r4, r4_sql
+from ..helpers import LAT, LON, ev_us, r4, r4_sql
 from ..registry import query
 from ..tables import row_count, sql_over, table
 from .scale_patterns import bucketed_global_rank, bucketed_running_sums
@@ -252,16 +252,11 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Same derived coordinates as filter_spatial_envelope (filters.py).
-_LON = "(c_custkey % 360) - 180 + 0.5"
-_LAT = "(c_custkey % 160) - 80 + 0.5"
-
-
 @query(
     "agg_extent_minmax",
     oracle=f"""
-SELECT CAST(min({_LON}) AS DOUBLE) AS xmin, CAST(max({_LON}) AS DOUBLE) AS xmax,
-       CAST(min({_LAT}) AS DOUBLE) AS ymin, CAST(max({_LAT}) AS DOUBLE) AS ymax,
+SELECT CAST(min({LON}) AS DOUBLE) AS xmin, CAST(max({LON}) AS DOUBLE) AS xmax,
+       CAST(min({LAT}) AS DOUBLE) AS ymin, CAST(max({LAT}) AS DOUBLE) AS ymax,
        count(*) AS n
 FROM customer
 """,
@@ -270,7 +265,7 @@ def agg_extent_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B9: ``returnExtentOnly`` — the layer's bounding box as a min/max
     aggregate (metadata-cheap on column-statistics-bearing formats)."""
     cu = table(spark, sf_dir, "customer")
-    lon, lat = F.expr(_LON).cast("double"), F.expr(_LAT).cast("double")
+    lon, lat = F.expr(LON).cast("double"), F.expr(LAT).cast("double")
     return cu.agg(
         F.min(lon).alias("xmin"),
         F.max(lon).alias("xmax"),

@@ -20,10 +20,13 @@ through the same functions (tests/ exercises those on GeoJSON fixtures).
 
 from __future__ import annotations
 
+import math
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..helpers import r4
+from ..helpers import LAT, LON, r4
 from ..registry import query
 from ..tables import table
 
@@ -152,33 +155,95 @@ def geo_route_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return routed.filter(F.col("route").isNotNull()).select("event_id", "geom_type", "route")
 
 
+# ---------------------------------------------------------------------------
+# Reprojection machinery. Every projection is a list of (name, SQL)
+# stages over columns lon/lat whose expression text is identical on both
+# engines: Spark adds one column per stage (apply_stages), the oracle one
+# CTE per stage (_cte_chain). The fixture tables carry no geometry, so the
+# queries project the customer lattice (helpers.LON/LAT), cut to the
+# kernel's validity window where it has one. Windows use integer bounds
+# over the half-integer lattice, so no point ever sits on a boundary.
+
+_LATTICE = (
+    "c_custkey",
+    f"CAST({LON} AS DOUBLE) AS lon",
+    f"CAST({LAT} AS DOUBLE) AS lat",
+)
+_CONUS_WINDOW = "lon BETWEEN -130 AND -60 AND lat BETWEEN 20 AND 55"
+_EU_WINDOW = "lon BETWEEN -70 AND 35 AND lat BETWEEN 35 AND 70"
+
+# degree <-> radian conversions are literal multiplies (never
+# radians()/pi() inside the series kernels: their operation order
+# differs per engine)
+_RAD = 0.017453292519943295
+_DEG = 57.29577951308232
+
+
+def lattice(spark: SparkSession, sf_dir: str, window: str | None = None) -> DataFrame:
+    """The customer lattice as (c_custkey, lon, lat), optionally cut to
+    a validity window (SQL over lon/lat)."""
+    df = table(spark, sf_dir, "customer").selectExpr(*_LATTICE)
+    return df if window is None else df.filter(window)
+
+
+def _lattice_sql(window: str | None = None) -> str:
+    """The DuckDB spelling of :func:`lattice`."""
+    sql = f"SELECT {', '.join(_LATTICE)} FROM customer"
+    return sql if window is None else f"SELECT * FROM ({sql}) WHERE {window}"
+
+
+def apply_stages(df: DataFrame, stages: list[tuple[str, str]]) -> DataFrame:
+    """Add each (name, SQL) stage to ``df`` as a column, in order."""
+    for name, expr in stages:
+        df = df.withColumn(name, F.expr(expr))
+    return df
+
+
+def _cte_chain(
+    base: str, stages: list[tuple[str, str]], pfx: str = "s"
+) -> tuple[str, str]:
+    """The DuckDB spelling of :func:`apply_stages`: the CTE list
+    ``{pfx}0 AS (base), {pfx}1 AS (SELECT *, <stage 1>), ...`` and the
+    name of its last CTE."""
+    ctes = [f"{pfx}0 AS ({base})"]
+    for i, (name, expr) in enumerate(stages, 1):
+        ctes.append(f"{pfx}{i} AS (SELECT *, {expr} AS {name} FROM {pfx}{i - 1})")
+    return ",\n".join(ctes), f"{pfx}{len(stages)}"
+
+
+def lattice_oracle(
+    stages: list[tuple[str, str]], outputs: str, window: str | None = None
+) -> str:
+    """Oracle of a lattice projection: ``SELECT c_custkey, <outputs>``
+    over the stage chain."""
+    ctes, last = _cte_chain(_lattice_sql(window), stages)
+    return f"WITH {ctes}\nSELECT c_custkey, {outputs}\nFROM {last}"
+
+
 # A10: Web-Mercator forward projection (the proj4 EPSG:4326→3857 math
 # the reference applies per vertex, task.ts:194). R = WGS84 semi-major.
-_LON = "(c_custkey % 360) - 180 + 0.5"
-_LAT = "(c_custkey % 160) - 80 + 0.5"
-_X = f"6378137.0 * radians({_LON})"
-_Y = f"6378137.0 * ln(tan(pi() / 4 + radians({_LAT}) / 2))"
+WMERC_STAGES = [
+    ("prj_x", "6378137.0 * radians(lon)"),
+    ("prj_y", "6378137.0 * ln(tan(pi() / 4 + radians(lat) / 2))"),
+]
 
 
 @query(
     "geo_reproject_webmercator",
-    oracle=f"""
-SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon, CAST({_LAT} AS DOUBLE) AS lat,
-       round({_X}, 4) AS x_3857, round({_Y}, 4) AS y_3857
-FROM customer
-""",
+    oracle=lattice_oracle(
+        WMERC_STAGES, "lon, lat, round(prj_x, 4) AS x_3857, round(prj_y, 4) AS y_3857"
+    ),
 )
 def geo_reproject_webmercator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10: EPSG:4326 -> EPSG:3857 as pure SQL math — stays inside
     whole-stage codegen (the pandas-UDF variant of the same transform is
     ``udf_pandas_reproject``; this one is the fast path)."""
-    cu = table(spark, sf_dir, "customer")
-    return cu.select(
+    return apply_stages(lattice(spark, sf_dir), WMERC_STAGES).select(
         "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-        r4(F.expr(_X)).alias("x_3857"),
-        r4(F.expr(_Y)).alias("y_3857"),
+        "lon",
+        "lat",
+        r4(F.col("prj_x")).alias("x_3857"),
+        r4(F.col("prj_y")).alias("y_3857"),
     )
 
 
@@ -320,8 +385,7 @@ FROM b
 # the r4 grid (midpoint margin probed over the finite lattice value
 # set in tests/test_geo_utm.py).
 
-_UTM_A = 6367449.145823415        # rectifying radius A
-_UTM_K0A = 6364902.166165086      # k0 * A, k0 = 0.9996
+_UTM_K0A = 6364902.166165086      # k0 * A: k0 = 0.9996, rectifying radius A
 _UTM_E = 0.08181919084262149      # eccentricity e = 2*sqrt(n)/(1+n)
 _UTM_AL = (0.0008377318206303529, 7.608527714248998e-07,
            1.1976380015605232e-09, 2.4433761945220637e-12)
@@ -329,8 +393,6 @@ _UTM_BE = (0.0008377321640600574, 5.905869567933988e-08,
            1.6734888803548486e-10, 2.1677377630220362e-13)
 _UTM_DE = (0.003356551469125213, 6.571873083960133e-06,
            1.76465640047585e-08, 5.4004820816935436e-11)
-_UTM_RAD = 0.017453292519943295
-_UTM_DEG = 57.29577951308232
 
 
 def _sh(x: str) -> str:
@@ -359,8 +421,8 @@ def _utm_fwd_stages() -> list[tuple[str, str]]:
     )
     return [
         ("zone", "CAST(floor((lon + 180) / 6) AS BIGINT) + 1"),
-        ("lamr", f"(lon - (zone * 6 - 183)) * {_UTM_RAD!r}"),
-        ("sp", f"sin(lat * {_UTM_RAD!r})"),
+        ("lamr", f"(lon - (zone * 6 - 183)) * {_RAD!r}"),
+        ("sp", f"sin(lat * {_RAD!r})"),
         ("tt", _sh(f"{_ath('sp')} - {_UTM_E!r} * {_ath(f'{_UTM_E!r} * sp')}")),
         ("xip", "atan(tt / cos(lamr))"),
         ("etap", _ath("sin(lamr) / sqrt(1 + tt * tt)")),
@@ -408,39 +470,26 @@ def _utm_inv_stages() -> list[tuple[str, str]]:
         ("phi0", f"chi + {d_sum}"),
         ("psi", _ath("sin(xipi) / " + _ch("etapi"))),
         ("phir", "atan(" + _sh(f"psi + {e} * " + _ath(f"{e} * sin(phi0)")) + ")"),
-        ("lat_inv", f"phir * {_UTM_DEG!r}"),
+        ("lat_inv", f"phir * {_DEG!r}"),
         (
             "lon_inv",
             f"(zone * 6 - 183) + atan({_sh('etapi')} / cos(xipi))"
-            f" * {_UTM_DEG!r}",
+            f" * {_DEG!r}",
         ),
     ]
 
 
-def _utm_oracle() -> str:
-    stages = _utm_fwd_stages()
-    ctes = [
-        f"""WITH s0 AS (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat
-  FROM customer
-)"""
-    ]
-    prev = "s0"
-    for i, (name, expr) in enumerate(stages, 1):
-        ctes.append(f", s{i} AS (SELECT *, {expr} AS {name} FROM {prev})")
-        prev = f"s{i}"
-    return (
-        "".join(ctes)
-        + f"""
-SELECT c_custkey, zone,
-       CASE WHEN lat < 0 THEN 'S' ELSE 'N' END AS hemi,
-       round(easting, 4) AS easting, round(northing, 4) AS northing
-FROM {prev}"""
-    )
+_HEMI = "CASE WHEN lat < 0 THEN 'S' ELSE 'N' END"
 
 
-@query("geo_reproject_utm", oracle=_utm_oracle())
+@query(
+    "geo_reproject_utm",
+    oracle=lattice_oracle(
+        _utm_fwd_stages(),
+        f"zone, {_HEMI} AS hemi,"
+        " round(easting, 4) AS easting, round(northing, 4) AS northing",
+    ),
+)
 def geo_reproject_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10+/C178: general ``outSR`` — EPSG:4326 -> UTM (EPSG:326xx/
     327xx), the zone derived per-row from lon. The reference's ETL
@@ -463,17 +512,10 @@ def geo_reproject_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-integer lon is never a multiple of 6. The inverse series
     (_utm_inv_stages) closes the round trip to < 1e-6 m (property
     test), the published contract of the n^4 truncation."""
-    df = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-    )
-    for name, expr in _utm_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df.select(
+    return apply_stages(lattice(spark, sf_dir), _utm_fwd_stages()).select(
         "c_custkey",
         "zone",
-        F.expr("CASE WHEN lat < 0 THEN 'S' ELSE 'N' END").alias("hemi"),
+        F.expr(_HEMI).alias("hemi"),
         r4(F.col("easting")).alias("easting"),
         r4(F.col("northing")).alias("northing"),
     )
@@ -608,20 +650,59 @@ FROM b
     )
 
 
-# --- C199: general outSR, conic family — Lambert Conformal Conic 2SP ----
-#
-# The reference forwards outSR verbatim (task.ts:410-414); beyond the
-# cylindrical families already built (3857 Mercator A10, UTM transverse
-# Mercator C178), the state-plane workhorse is the CONIC family: most
-# US state-plane zones are LCC 2SP. Constants below follow Snyder 1987
-# §15 (ellipsoidal two-standard-parallel form); the per-projection
-# scalars (n, a*F, rho0) are computed ONCE in Python and embedded as
+# ---------------------------------------------------------------------------
+# Conic and azimuthal outSR families (task.ts:410-414 forwards any
+# wkid): Lambert Conformal Conic (C199), Albers equal-area conic (C208)
+# and Lambert azimuthal equal-area (C224), after Snyder 1987. The
+# per-projection scalars are computed ONCE in Python and embedded as
 # repr() literals, so both engines parse the identical doubles and the
 # row expressions stay engine-neutral (the r8 UTM libm recipe: exp/ln
 # spellings with identical text, no pi()/radians(), probed r4 margins).
 
-_LCC_RAD = 0.017453292519943295  # degrees -> radians (same literal as UTM)
-_LCC_QPI = 0.7853981633974483    # pi/4
+_GRS80 = (6378137.0, 0.0066943800229007869)  # (a, e^2)
+_LCC_QPI = 0.7853981633974483  # pi/4
+
+
+def _snyder_m(e2: float, phi: float) -> float:
+    """Snyder (14-15): m(phi) = cos(phi) / sqrt(1 - e^2 sin^2(phi))."""
+    return math.cos(phi) / math.sqrt(1 - e2 * math.sin(phi) ** 2)
+
+
+def _snyder_q(e2: float, phi: float) -> float:
+    """Snyder (3-12): the authalic q(phi)."""
+    e = math.sqrt(e2)
+    sp = math.sin(phi)
+    return (1 - e2) * (
+        sp / (1 - e2 * sp * sp)
+        - (1 / (2 * e)) * math.log((1 - e * sp) / (1 + e * sp))
+    )
+
+
+def _q_to_phi_stages(c: dict[str, float], sfx: str) -> list[tuple[str, str]]:
+    """Latitude from the authalic column ``qpr`` (Snyder 3-16): the
+    spherical start asin(q/2) plus three Newton refinements, in stages
+    ph0{sfx}..ph3{sfx}. Shared by the Albers and LAEA inverses."""
+    e = c["e"]
+    e2 = 1.0 - c["one_m_e2"]
+
+    def ref(prev: str) -> str:
+        s = f"sin({prev})"
+        return (
+            f"{prev} + (1 - {e2!r} * {s} * {s}) * (1 - {e2!r} * {s} * {s})"
+            f" / (2 * cos({prev}))"
+            f" * (qpr / {c['one_m_e2']!r}"
+            f"    - {s} / (1 - {e2!r} * {s} * {s})"
+            f"    + {c['qe']!r} * ln((1 - {e!r} * {s}) / (1 + {e!r} * {s})))"
+        )
+
+    stages = [(f"ph0{sfx}", "asin(qpr / 2)")]
+    for i in (1, 2, 3):
+        stages.append((f"ph{i}{sfx}", ref(stages[-1][0])))
+    return stages
+
+
+# --- C199: Lambert Conformal Conic 2SP (Snyder §15), the state-plane
+# workhorse: most US state-plane zones are LCC 2SP.
 
 
 def _lcc_consts(
@@ -633,26 +714,22 @@ def _lcc_consts(
     lam0_deg: float,
 ) -> dict[str, float]:
     """Snyder §15 projection scalars for an LCC 2SP instance."""
-    import math as _m
-
-    e = _m.sqrt(e2)
-
-    def m(phi):
-        return _m.cos(phi) / _m.sqrt(1 - e2 * _m.sin(phi) ** 2)
+    e = math.sqrt(e2)
 
     def t(phi):
-        sp = _m.sin(phi)
-        return _m.tan(_m.pi / 4 - phi / 2) / (
+        sp = math.sin(phi)
+        return math.tan(math.pi / 4 - phi / 2) / (
             ((1 - e * sp) / (1 + e * sp)) ** (e / 2)
         )
 
     p1, p2, p0 = (
-        phi1_deg * _m.pi / 180,
-        phi2_deg * _m.pi / 180,
-        phi0_deg * _m.pi / 180,
+        phi1_deg * math.pi / 180,
+        phi2_deg * math.pi / 180,
+        phi0_deg * math.pi / 180,
     )
-    n = (_m.log(m(p1)) - _m.log(m(p2))) / (_m.log(t(p1)) - _m.log(t(p2)))
-    F = m(p1) / (n * t(p1) ** n)
+    m1, m2 = _snyder_m(e2, p1), _snyder_m(e2, p2)
+    n = (math.log(m1) - math.log(m2)) / (math.log(t(p1)) - math.log(t(p2)))
+    F = m1 / (n * t(p1) ** n)
     return {
         "e": e,
         "eh": e / 2.0,
@@ -661,24 +738,22 @@ def _lcc_consts(
         "aF": a * F,
         "rho0": a * F * t(p0) ** n,
         "lam0": lam0_deg,
-        "thr": n * _LCC_RAD,  # theta per degree of (lon - lam0)
+        "thr": n * _RAD,  # theta per degree of (lon - lam0)
     }
 
 
 # EPSG:102004 — USA Contiguous Lambert Conformal Conic (GRS80/NAD83):
 # phi1 = 33, phi2 = 45, phi0 = 39, lam0 = -96, E0 = N0 = 0.
-_LCC_CONUS = _lcc_consts(
-    6378137.0, 0.0066943800229007869, 33.0, 45.0, 39.0, -96.0
-)
+_LCC_CONUS = _lcc_consts(*_GRS80, 33.0, 45.0, 39.0, -96.0)
 
 
-def _lcc_fwd_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
+def _lcc_fwd_stages() -> list[tuple[str, str]]:
     """(name, engine-neutral SQL) stages: lon/lat degrees -> LCC E/N.
     t^n is spelled exp(n * ln t) with identical text on both engines;
     tan/sin/cos/ln/exp/atan are the only libm calls."""
-    c = c or _LCC_CONUS
+    c = _LCC_CONUS
     return [
-        ("phir", f"lat * {_LCC_RAD!r}"),
+        ("phir", f"lat * {_RAD!r}"),
         ("tht", f"(lon - {c['lam0']!r}) * {c['thr']!r}"),
         ("esp", f"{c['e']!r} * sin(phir)"),
         (
@@ -692,12 +767,12 @@ def _lcc_fwd_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
     ]
 
 
-def _lcc_inv_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
+def _lcc_inv_stages() -> list[tuple[str, str]]:
     """Inverse LCC -> lon/lat from columns lcc_e/lcc_n (round-trip test
     surface): Snyder's iterative conformal-to-geodetic, three
     fixed-point refinements (contraction ~e^2/2 per step takes the
     chi-start error ~3e-3 rad below 1e-9 rad)."""
-    c = c or _LCC_CONUS
+    c = _LCC_CONUS
     hpi = 1.5707963267948966  # pi/2
 
     def refh(prev: str) -> str:
@@ -714,43 +789,263 @@ def _lcc_inv_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
         ("ph1", refh("chi")),
         ("ph2", refh("ph1")),
         ("ph3", refh("ph2")),
-        ("lat_inv", f"ph3 / {_LCC_RAD!r}"),
+        ("lat_inv", f"ph3 / {_RAD!r}"),
         ("lon_inv", f"{c['lam0']!r} + thtp / {c['thr']!r}"),
     ]
 
 
-def _lcc_oracle() -> str:
-    ctes = [
-        f"""WITH s0 AS (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat
-  FROM customer
-  WHERE CAST({_LON} AS DOUBLE) BETWEEN -130 AND -60
-    AND CAST({_LAT} AS DOUBLE) BETWEEN 20 AND 55
-)"""
+# --- C208: Albers equal-area conic (Snyder §14), the projection of
+# choice when AREA must be preserved (USGS/Census national grids): the
+# conic twin of LCC with the opposite invariant (area vs angle).
+
+
+def _alb_consts(
+    a: float,
+    e2: float,
+    phi1_deg: float,
+    phi2_deg: float,
+    phi0_deg: float,
+    lam0_deg: float,
+) -> dict[str, float]:
+    """Snyder §14 projection scalars for an Albers 2SP instance."""
+    e = math.sqrt(e2)
+    p1, p2, p0 = (
+        phi1_deg * math.pi / 180,
+        phi2_deg * math.pi / 180,
+        phi0_deg * math.pi / 180,
+    )
+    m1, m2 = _snyder_m(e2, p1), _snyder_m(e2, p2)
+    q1, q2 = _snyder_q(e2, p1), _snyder_q(e2, p2)
+    n = (m1 ** 2 - m2 ** 2) / (q2 - q1)
+    c = m1 ** 2 + n * q1
+    return {
+        "e": e,
+        "one_m_e2": 1.0 - e2,
+        "qe": 1.0 / (2.0 * e),
+        "n": n,
+        "c": c,
+        "k": a / n,                                  # rho = k * sqrt(c - n q)
+        "rho0": (a / n) * math.sqrt(c - n * _snyder_q(e2, p0)),
+        "lam0": lam0_deg,
+        "thr": n * _RAD,                             # theta per degree
+    }
+
+
+# EPSG:102003 — USA Contiguous Albers Equal Area Conic (GRS80/NAD83):
+# phi1 = 29.5, phi2 = 45.5, phi0 = 37.5, lam0 = -96, E0 = N0 = 0.
+_ALB_CONUS = _alb_consts(*_GRS80, 29.5, 45.5, 37.5, -96.0)
+
+
+def _alb_fwd_stages() -> list[tuple[str, str]]:
+    """(name, engine-neutral SQL) stages: lon/lat degrees -> Albers
+    E/N. sin/cos/sqrt/ln are the only libm calls; every scalar is a
+    shared 17-digit literal (the r8 recipe)."""
+    c = _ALB_CONUS
+    return [
+        ("phir", f"lat * {_RAD!r}"),
+        ("tht", f"(lon - {c['lam0']!r}) * {c['thr']!r}"),
+        ("esp", f"{c['e']!r} * sin(phir)"),
+        (
+            "qv",
+            f"{c['one_m_e2']!r} * (sin(phir) / (1 - esp * esp)"
+            f" - {c['qe']!r} * ln((1 - esp) / (1 + esp)))",
+        ),
+        ("rho", f"{c['k']!r} * sqrt({c['c']!r} - {c['n']!r} * qv)"),
+        ("alb_e", "rho * sin(tht)"),
+        ("alb_n", f"{c['rho0']!r} - rho * cos(tht)"),
     ]
-    prev = "s0"
-    for i, (name, expr) in enumerate(_lcc_fwd_stages(), 1):
-        ctes.append(f", s{i} AS (SELECT *, {expr} AS {name} FROM {prev})")
-        prev = f"s{i}"
-    return (
-        "".join(ctes)
-        + f"""
-SELECT c_custkey, round(lcc_e, 4) AS easting, round(lcc_n, 4) AS northing
-FROM {prev}"""
+
+
+def _alb_inv_stages() -> list[tuple[str, str]]:
+    """Inverse Albers -> lon/lat from alb_e/alb_n (round-trip test
+    surface): Snyder §14 q-to-phi."""
+    c = _ALB_CONUS
+    return [
+        ("rpr", f"sqrt(alb_e * alb_e + ({c['rho0']!r} - alb_n) * ({c['rho0']!r} - alb_n))"),
+        ("thtp", f"atan(alb_e / ({c['rho0']!r} - alb_n))"),
+        ("qpr", f"({c['c']!r} - (rpr / {c['k']!r}) * (rpr / {c['k']!r})) / {c['n']!r}"),
+        *_q_to_phi_stages(c, ""),
+        ("lat_inv", f"ph3 / {_RAD!r}"),
+        ("lon_inv", f"{c['lam0']!r} + thtp / {c['thr']!r}"),
+    ]
+
+
+# --- C224: Lambert azimuthal equal-area (Snyder §24), the third
+# projection family: with cylindrical (3857/UTM), conic (LCC/Albers)
+# and azimuthal, every forwarded-outSR family the ArcGIS REST surface
+# can name has a native member. Instance: ETRS89-LAEA (EPSG:3035), the
+# EU statistical grid.
+
+
+def _laea_consts(
+    a: float, e2: float, phi0_deg: float, lam0_deg: float,
+    fe: float, fn: float,
+) -> dict[str, float]:
+    e = math.sqrt(e2)
+    p0 = phi0_deg * math.pi / 180
+    qp = _snyder_q(e2, math.pi / 2)
+    rq = a * math.sqrt(qp / 2)
+    b1 = math.asin(_snyder_q(e2, p0) / qp)
+    d = a * _snyder_m(e2, p0) / (rq * math.cos(b1))
+    return {
+        "e": e,
+        "one_m_e2": 1.0 - e2,
+        "qe": 1.0 / (2.0 * e),
+        "qp": qp,
+        "rq": rq,
+        "d": d,
+        "sb1": math.sin(b1),
+        "cb1": math.cos(b1),
+        "lam0": lam0_deg,
+        "fe": fe,
+        "fn": fn,
+    }
+
+
+# EPSG:3035 — ETRS89-extended / LAEA Europe (GRS80): phi0 = 52,
+# lam0 = 10, FE = 4321000, FN = 3210000.
+_LAEA_EU = _laea_consts(*_GRS80, 52.0, 10.0, 4321000.0, 3210000.0)
+
+
+def _laea_fwd_stages() -> list[tuple[str, str]]:
+    """lon/lat degrees -> LAEA E/N (Snyder 24-2..24-19, ellipsoidal
+    via the authalic sphere)."""
+    c = _LAEA_EU
+    return [
+        ("phir", f"lat * {_RAD!r}"),
+        ("lamr", f"(lon - {c['lam0']!r}) * {_RAD!r}"),
+        ("esp", f"{c['e']!r} * sin(phir)"),
+        (
+            "qv",
+            f"{c['one_m_e2']!r} * (sin(phir) / (1 - esp * esp)"
+            f" - {c['qe']!r} * ln((1 - esp) / (1 + esp)))",
+        ),
+        ("beta", f"asin(qv / {c['qp']!r})"),
+        (
+            "bb",
+            f"{c['rq']!r} * sqrt(2 / (1 + {c['sb1']!r} * sin(beta)"
+            f" + {c['cb1']!r} * cos(beta) * cos(lamr)))",
+        ),
+        ("laea_e", f"{c['fe']!r} + bb * {c['d']!r} * cos(beta) * sin(lamr)"),
+        (
+            "laea_n",
+            f"{c['fn']!r} + (bb / {c['d']!r}) * ({c['cb1']!r} * sin(beta)"
+            f" - {c['sb1']!r} * cos(beta) * cos(lamr))",
+        ),
+    ]
+
+
+def _laea_inv_stages() -> list[tuple[str, str]]:
+    """Inverse LAEA -> lon/lat (Snyder 24-26..24-34 + the q-to-phi
+    refinements)."""
+    c = _LAEA_EU
+    return [
+        ("xp", f"(laea_e - {c['fe']!r}) / {c['d']!r}"),
+        ("yp", f"{c['d']!r} * (laea_n - {c['fn']!r})"),
+        ("rho", "sqrt(xp * xp + yp * yp)"),
+        ("ce", f"2 * asin(rho / (2 * {c['rq']!r}))"),
+        (
+            "betai",
+            f"asin(cos(ce) * {c['sb1']!r}"
+            f" + (yp * sin(ce) * {c['cb1']!r} / rho))",
+        ),
+        ("qpr", f"{c['qp']!r} * sin(betai)"),
+        *_q_to_phi_stages(c, "i"),
+        ("lat_inv", f"ph3i / {_RAD!r}"),
+        (
+            "lon_inv",
+            f"{c['lam0']!r} + atan(xp * sin(ce) / (rho * cos(ce) * {c['cb1']!r}"
+            f" - yp * sin(ce) * {c['sb1']!r})) / {_RAD!r}",
+        ),
+    ]
+
+
+# ---------------------------------------------------------------------------
+# The outSR kernel table: wkid -> (family, stage
+# list, validity-window SQL, terminal (x, y) stage columns). It is the
+# one source of every projection the engine routes: reproject_by_wkid
+# dispatches rows through it, and the bespoke LCC / Albers / LAEA
+# queries are its 102004 / 102003 / 3035 entries run over the lattice.
+# UTM wkids resolve by range rule (EPSG:32601-32660 north, 32701-32760
+# south); 102003 and 5070 name the same Albers CONUS parameters.
+
+
+class _Kernel(NamedTuple):
+    family: str
+    stages: list[tuple[str, str]]
+    window: str
+    xy: tuple[str, str]
+
+
+_KERNELS = {
+    3857: _Kernel("webmercator", WMERC_STAGES, "lat BETWEEN -85 AND 85",
+                  ("prj_x", "prj_y")),
+    102003: _Kernel("albers_conus", _alb_fwd_stages(), _CONUS_WINDOW,
+                    ("alb_e", "alb_n")),
+    102004: _Kernel("lcc_conus", _lcc_fwd_stages(), _CONUS_WINDOW,
+                    ("lcc_e", "lcc_n")),
+    3035: _Kernel("laea_europe", _laea_fwd_stages(), _EU_WINDOW,
+                  ("laea_e", "laea_n")),
+}
+_KERNELS[5070] = _KERNELS[102003]
+
+
+def _utm_fixed_stages(zone: int) -> list[tuple[str, str]]:
+    """The C178 Krueger stages with the zone PINNED by the wkid
+    (EPSG:326xx = zone (wkid-32600) north, 327xx south) instead of
+    derived per-row from lon: identical arithmetic for in-zone rows
+    (zone*6-183 yields the same central meridian double), which the
+    dispatch-vs-bespoke equality test pins."""
+    return [("zone", f"CAST({zone} AS BIGINT)")] + _utm_fwd_stages()[1:]
+
+
+def _utm_window(zone: int, south: bool) -> str:
+    lo, hi = zone * 6 - 186, zone * 6 - 180
+    hemi = "lat < 0 AND lat >= -80" if south else "lat >= 0 AND lat <= 84"
+    return f"lon >= {lo} AND lon < {hi} AND {hemi}"
+
+
+def _outsr_family(wkid: int) -> _Kernel | None:
+    """The kernel-table entry for ``wkid``, or None if unsupported."""
+    for base, hemi in ((32600, "n"), (32700, "s")):
+        if base + 1 <= wkid <= base + 60:
+            z = wkid - base
+            return _Kernel(f"utm_{z}{hemi}", _utm_fixed_stages(z),
+                           _utm_window(z, hemi == "s"), ("easting", "northing"))
+    return _KERNELS.get(wkid)
+
+
+def _kernel_oracle(wkid: int) -> str:
+    """The DuckDB spelling of :func:`_kernel_query`."""
+    k = _outsr_family(wkid)
+    x, y = k.xy
+    return lattice_oracle(
+        k.stages, f"round({x}, 4) AS easting, round({y}, 4) AS northing", k.window
     )
 
 
-@query("geo_reproject_lcc", oracle=_lcc_oracle())
+def _kernel_query(spark: SparkSession, sf_dir: str, wkid: int) -> DataFrame:
+    """One kernel-table entry over its window of the lattice:
+    (c_custkey, easting, northing) on the r4 grid."""
+    k = _outsr_family(wkid)
+    x, y = k.xy
+    return apply_stages(lattice(spark, sf_dir, k.window), k.stages).select(
+        "c_custkey",
+        r4(F.col(x)).alias("easting"),
+        r4(F.col(y)).alias("northing"),
+    )
+
+
+@query("geo_reproject_lcc", oracle=_kernel_oracle(102004))
 def geo_reproject_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C199: general ``outSR``, CONIC family — EPSG:4326 -> the USA
-    Contiguous Lambert Conformal Conic (EPSG:102004-class, GRS80), the
-    projection family behind most US state-plane zones, over the CONUS
-    window of the customer lattice. Completes the forwarded-outSR
-    surface (task.ts:410-414) beyond the cylindrical families: 3857
-    (A10), UTM (C178). Snyder §15 ellipsoidal 2SP; projection scalars
-    precomputed as shared 17-digit literals; pure whole-stage-codegen
-    SQL math — no UDF, no shuffle; filter pushed to the scan.
+    Contiguous Lambert Conformal Conic (EPSG:102004, GRS80; its
+    kernel-table entry), the projection family behind most US
+    state-plane zones, over the CONUS window of the customer lattice.
+    Completes the forwarded-outSR surface (task.ts:410-414) beyond the
+    cylindrical families: 3857 (A10), UTM (C178). Snyder §15
+    ellipsoidal 2SP; projection scalars precomputed as shared 17-digit
+    literals; pure whole-stage-codegen SQL math — no UDF, no shuffle.
 
     Determinism: the r8 libm recipe (identical expression text, exp/ln
     powers, literal constants) over a FINITE lattice value set; the r4
@@ -758,20 +1053,7 @@ def geo_reproject_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages close the round trip below 1e-6 deg (property test), and
     scale on both standard parallels is 1 to first order (anchor
     test pinning n, F against the ellipsoid, not our own code)."""
-    df = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-    ).filter(
-        F.col("lon").between(-130, -60) & F.col("lat").between(20, 55)
-    )
-    for name, expr in _lcc_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df.select(
-        "c_custkey",
-        r4(F.col("lcc_e")).alias("easting"),
-        r4(F.col("lcc_n")).alias("northing"),
-    )
+    return _kernel_query(spark, sf_dir, 102004)
 
 
 # ---------------------------------------------------------------------------
@@ -916,148 +1198,15 @@ def etl_ring_orientation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# C208: general outSR, EQUAL-AREA conic family — Albers (Snyder §14),
-# the projection of choice when AREA must be preserved (USGS/Census
-# national grids; EPSG:102003 / 5070 class). Completes the conic pair
-# beside the conformal LCC (C199): same forwarded-outSR surface
-# (task.ts:410-414), opposite invariant (area vs angle).
-
-_ALB_RAD = 0.017453292519943295
-
-
-def _alb_consts(
-    a: float,
-    e2: float,
-    phi1_deg: float,
-    phi2_deg: float,
-    phi0_deg: float,
-    lam0_deg: float,
-) -> dict[str, float]:
-    """Snyder §14 projection scalars for an Albers 2SP instance."""
-    import math as _m
-
-    e = _m.sqrt(e2)
-
-    def m(phi):
-        return _m.cos(phi) / _m.sqrt(1 - e2 * _m.sin(phi) ** 2)
-
-    def q(phi):
-        sp = _m.sin(phi)
-        return (1 - e2) * (
-            sp / (1 - e2 * sp * sp)
-            - (1 / (2 * e)) * _m.log((1 - e * sp) / (1 + e * sp))
-        )
-
-    p1, p2, p0 = (
-        phi1_deg * _m.pi / 180,
-        phi2_deg * _m.pi / 180,
-        phi0_deg * _m.pi / 180,
-    )
-    n = (m(p1) ** 2 - m(p2) ** 2) / (q(p2) - q(p1))
-    c = m(p1) ** 2 + n * q(p1)
-    return {
-        "e": e,
-        "one_m_e2": 1.0 - e2,
-        "qe": 1.0 / (2.0 * e),
-        "n": n,
-        "c": c,
-        "k": a / n,                                  # rho = k * sqrt(c - n q)
-        "rho0": (a / n) * _m.sqrt(c - n * q(p0)),
-        "lam0": lam0_deg,
-        "thr": n * _ALB_RAD,                         # theta per degree
-    }
-
-
-# EPSG:102003 — USA Contiguous Albers Equal Area Conic (GRS80/NAD83):
-# phi1 = 29.5, phi2 = 45.5, phi0 = 37.5, lam0 = -96, E0 = N0 = 0.
-_ALB_CONUS = _alb_consts(
-    6378137.0, 0.0066943800229007869, 29.5, 45.5, 37.5, -96.0
-)
-
-
-def _alb_fwd_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
-    """(name, engine-neutral SQL) stages: lon/lat degrees -> Albers
-    E/N. sin/cos/sqrt/ln are the only libm calls; every scalar is a
-    shared 17-digit literal (the r8 recipe)."""
-    c = c or _ALB_CONUS
-    return [
-        ("phir", f"lat * {_ALB_RAD!r}"),
-        ("tht", f"(lon - {c['lam0']!r}) * {c['thr']!r}"),
-        ("esp", f"{c['e']!r} * sin(phir)"),
-        (
-            "qv",
-            f"{c['one_m_e2']!r} * (sin(phir) / (1 - esp * esp)"
-            f" - {c['qe']!r} * ln((1 - esp) / (1 + esp)))",
-        ),
-        ("rho", f"{c['k']!r} * sqrt({c['c']!r} - {c['n']!r} * qv)"),
-        ("alb_e", "rho * sin(tht)"),
-        ("alb_n", f"{c['rho0']!r} - rho * cos(tht)"),
-    ]
-
-
-def _alb_inv_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
-    """Inverse Albers -> lon/lat from alb_e/alb_n (round-trip test
-    surface): Snyder §14 iterative q-to-phi, three Newton-style
-    refinements from the spherical start asin(q/2)."""
-    c = c or _ALB_CONUS
-    e = c["e"]
-    e2 = 1.0 - c["one_m_e2"]
-
-    def ref(prev: str) -> str:
-        s = f"sin({prev})"
-        return (
-            f"{prev} + (1 - {e2!r} * {s} * {s}) * (1 - {e2!r} * {s} * {s})"
-            f" / (2 * cos({prev}))"
-            f" * (qpr / {c['one_m_e2']!r}"
-            f"    - {s} / (1 - {e2!r} * {s} * {s})"
-            f"    + {c['qe']!r} * ln((1 - {e!r} * {s}) / (1 + {e!r} * {s})))"
-        )
-
-    return [
-        ("rpr", f"sqrt(alb_e * alb_e + ({c['rho0']!r} - alb_n) * ({c['rho0']!r} - alb_n))"),
-        ("thtp", f"atan(alb_e / ({c['rho0']!r} - alb_n))"),
-        ("qpr", f"({c['c']!r} - (rpr / {c['k']!r}) * (rpr / {c['k']!r})) / {c['n']!r}"),
-        ("ph0", "asin(qpr / 2)"),
-        ("ph1", ref("ph0")),
-        ("ph2", ref("ph1")),
-        ("ph3", ref("ph2")),
-        ("lat_inv", f"ph3 / {_ALB_RAD!r}"),
-        ("lon_inv", f"{c['lam0']!r} + thtp / {c['thr']!r}"),
-    ]
-
-
-def _alb_oracle() -> str:
-    ctes = [
-        f"""WITH s0 AS (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat
-  FROM customer
-  WHERE CAST({_LON} AS DOUBLE) BETWEEN -130 AND -60
-    AND CAST({_LAT} AS DOUBLE) BETWEEN 20 AND 55
-)"""
-    ]
-    prev = "s0"
-    for i, (name, expr) in enumerate(_alb_fwd_stages(), 1):
-        ctes.append(f", s{i} AS (SELECT *, {expr} AS {name} FROM {prev})")
-        prev = f"s{i}"
-    return (
-        "".join(ctes)
-        + f"""
-SELECT c_custkey, round(alb_e, 4) AS easting, round(alb_n, 4) AS northing
-FROM {prev}"""
-    )
-
-
-@query("geo_reproject_albers", oracle=_alb_oracle())
+@query("geo_reproject_albers", oracle=_kernel_oracle(102003))
 def geo_reproject_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C208: general ``outSR``, EQUAL-AREA conic — EPSG:4326 -> USA
-    Contiguous Albers (EPSG:102003-class, GRS80) over the CONUS
-    window of the customer lattice; the area-true national-grid twin
-    of the conformal LCC (C199), closing the conic family in both
-    invariants. Snyder §14 ellipsoidal 2SP; projection scalars
-    precomputed as shared 17-digit literals; pure whole-stage-codegen
-    SQL math — no UDF, no shuffle; filter pushed to the scan.
+    Contiguous Albers (EPSG:102003, GRS80; its kernel-table entry) over
+    the CONUS window of the customer lattice; the area-true
+    national-grid twin of the conformal LCC (C199), closing the conic
+    family in both invariants. Snyder §14 ellipsoidal 2SP; projection
+    scalars precomputed as shared 17-digit literals; pure
+    whole-stage-codegen SQL math — no UDF, no shuffle.
 
     Determinism: the r8 libm recipe (identical expression text over a
     finite lattice value set, r4 output grid); the inverse stages
@@ -1065,261 +1214,24 @@ def geo_reproject_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|d(E,N)/d(lon,lat)| == a^2 cos(phi) (1-e^2) / (1-e^2 sin^2)^2,
     Snyder 14-16) is probed numerically in tests/test_round10_ops.py
     — an anchor against the ELLIPSOID, not against our own code."""
-    df = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-    ).filter(
-        F.col("lon").between(-130, -60) & F.col("lat").between(20, 55)
-    )
-    for name, expr in _alb_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df.select(
-        "c_custkey",
-        r4(F.col("alb_e")).alias("easting"),
-        r4(F.col("alb_n")).alias("northing"),
-    )
+    return _kernel_query(spark, sf_dir, 102003)
 
 
-# ---------------------------------------------------------------------------
-# C224: general outSR, AZIMUTHAL equal-area (LAEA, Snyder §24) — the
-# third projection family: with cylindrical (3857/UTM), conic
-# (LCC/Albers) and now azimuthal, every forwarded-outSR family the
-# ArcGIS REST surface can name (task.ts:410-414) has a native member.
-# Instance: ETRS89-LAEA (EPSG:3035), the EU statistical grid.
-
-
-def _laea_consts(
-    a: float, e2: float, phi0_deg: float, lam0_deg: float,
-    fe: float, fn: float,
-) -> dict[str, float]:
-    import math as _m
-
-    e = _m.sqrt(e2)
-
-    def q(phi):
-        sp = _m.sin(phi)
-        return (1 - e2) * (
-            sp / (1 - e2 * sp * sp)
-            - (1 / (2 * e)) * _m.log((1 - e * sp) / (1 + e * sp))
-        )
-
-    p0 = phi0_deg * _m.pi / 180
-    qp = q(_m.pi / 2)
-    rq = a * _m.sqrt(qp / 2)
-    b1 = _m.asin(q(p0) / qp)
-    d = (a * _m.cos(p0) / _m.sqrt(1 - e2 * _m.sin(p0) ** 2)) / (
-        rq * _m.cos(b1)
-    )
-    return {
-        "e": e,
-        "one_m_e2": 1.0 - e2,
-        "qe": 1.0 / (2.0 * e),
-        "qp": qp,
-        "rq": rq,
-        "d": d,
-        "sb1": _m.sin(b1),
-        "cb1": _m.cos(b1),
-        "lam0": lam0_deg,
-        "fe": fe,
-        "fn": fn,
-    }
-
-
-# EPSG:3035 — ETRS89-extended / LAEA Europe (GRS80): phi0 = 52,
-# lam0 = 10, FE = 4321000, FN = 3210000.
-_LAEA_EU = _laea_consts(
-    6378137.0, 0.0066943800229007869, 52.0, 10.0, 4321000.0, 3210000.0
-)
-
-
-def _laea_fwd_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
-    """lon/lat degrees -> LAEA E/N (Snyder 24-2..24-19, ellipsoidal
-    via the authalic sphere)."""
-    c = c or _LAEA_EU
-    return [
-        ("phir", f"lat * {_ALB_RAD!r}"),
-        ("lamr", f"(lon - {c['lam0']!r}) * {_ALB_RAD!r}"),
-        ("esp", f"{c['e']!r} * sin(phir)"),
-        (
-            "qv",
-            f"{c['one_m_e2']!r} * (sin(phir) / (1 - esp * esp)"
-            f" - {c['qe']!r} * ln((1 - esp) / (1 + esp)))",
-        ),
-        ("beta", f"asin(qv / {c['qp']!r})"),
-        (
-            "bb",
-            f"{c['rq']!r} * sqrt(2 / (1 + {c['sb1']!r} * sin(beta)"
-            f" + {c['cb1']!r} * cos(beta) * cos(lamr)))",
-        ),
-        ("laea_e", f"{c['fe']!r} + bb * {c['d']!r} * cos(beta) * sin(lamr)"),
-        (
-            "laea_n",
-            f"{c['fn']!r} + (bb / {c['d']!r}) * ({c['cb1']!r} * sin(beta)"
-            f" - {c['sb1']!r} * cos(beta) * cos(lamr))",
-        ),
-    ]
-
-
-def _laea_inv_stages(c: dict[str, float] | None = None) -> list[tuple[str, str]]:
-    """Inverse LAEA -> lon/lat (Snyder 24-26..24-34 + the Albers
-    q->phi Newton refinements)."""
-    c = c or _LAEA_EU
-    e = c["e"]
-    e2 = 1.0 - c["one_m_e2"]
-
-    def ref(prev: str) -> str:
-        s = f"sin({prev})"
-        return (
-            f"{prev} + (1 - {e2!r} * {s} * {s}) * (1 - {e2!r} * {s} * {s})"
-            f" / (2 * cos({prev}))"
-            f" * (qpr / {c['one_m_e2']!r}"
-            f"    - {s} / (1 - {e2!r} * {s} * {s})"
-            f"    + {c['qe']!r} * ln((1 - {e!r} * {s}) / (1 + {e!r} * {s})))"
-        )
-
-    return [
-        ("xp", f"(laea_e - {c['fe']!r}) / {c['d']!r}"),
-        ("yp", f"{c['d']!r} * (laea_n - {c['fn']!r})"),
-        ("rho", "sqrt(xp * xp + yp * yp)"),
-        ("ce", f"2 * asin(rho / (2 * {c['rq']!r}))"),
-        (
-            "betai",
-            f"asin(cos(ce) * {c['sb1']!r}"
-            f" + (yp * sin(ce) * {c['cb1']!r} / rho))",
-        ),
-        ("qpr", f"{c['qp']!r} * sin(betai)"),
-        ("ph0i", "asin(qpr / 2)"),
-        ("ph1i", ref("ph0i")),
-        ("ph2i", ref("ph1i")),
-        ("ph3i", ref("ph2i")),
-        ("lat_inv", f"ph3i / {_ALB_RAD!r}"),
-        (
-            "lon_inv",
-            f"{c['lam0']!r} + atan(xp * sin(ce) / (rho * cos(ce) * {c['cb1']!r}"
-            f" - yp * sin(ce) * {c['sb1']!r})) / {_ALB_RAD!r}",
-        ),
-    ]
-
-
-def _laea_oracle() -> str:
-    ctes = [
-        f"""WITH s0 AS (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat
-  FROM customer
-  WHERE CAST({_LON} AS DOUBLE) BETWEEN -70 AND 35
-    AND CAST({_LAT} AS DOUBLE) BETWEEN 35 AND 70
-)"""
-    ]
-    prev = "s0"
-    for i, (name, expr) in enumerate(_laea_fwd_stages(), 1):
-        ctes.append(f", s{i} AS (SELECT *, {expr} AS {name} FROM {prev})")
-        prev = f"s{i}"
-    return (
-        "".join(ctes)
-        + f"""
-SELECT c_custkey, round(laea_e, 4) AS easting, round(laea_n, 4) AS northing
-FROM {prev}"""
-    )
-
-
-@query("geo_reproject_laea", oracle=_laea_oracle())
+@query("geo_reproject_laea", oracle=_kernel_oracle(3035))
 def geo_reproject_laea(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C224: general ``outSR``, AZIMUTHAL equal-area — EPSG:4326 ->
-    ETRS89-LAEA Europe (EPSG:3035, GRS80) over the North-Atlantic/European
-    window of the customer lattice (widened so every SF populates it); with the cylindrical (A10 3857, C178 UTM)
-    and conic (C199 LCC, C208 Albers) members this closes all three
-    projection families of the forwarded-outSR surface. Snyder §24
-    ellipsoidal via the authalic sphere; shared 17-digit literals,
-    pure codegen SQL math, filter pushed to the scan.
+    ETRS89-LAEA Europe (EPSG:3035, GRS80; its kernel-table entry) over
+    the North-Atlantic/European window of the customer lattice (widened
+    so every SF populates it); with the cylindrical (A10 3857, C178
+    UTM) and conic (C199 LCC, C208 Albers) members this closes all
+    three projection families of the forwarded-outSR surface. Snyder
+    §24 ellipsoidal via the authalic sphere; shared 17-digit literals,
+    pure codegen SQL math.
 
     Determinism: the r8 libm recipe; round trip closes < 1e-6 deg
     and the equal-area Jacobian invariant is probed against the
     ellipsoid in tests (the C208 anchor methodology)."""
-    df = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-    ).filter(
-        F.col("lon").between(-70, 35) & F.col("lat").between(35, 70)
-    )
-    for name, expr in _laea_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df.select(
-        "c_custkey",
-        r4(F.col("laea_e")).alias("easting"),
-        r4(F.col("laea_n")).alias("northing"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# r11: general outSR WKID DISPATCH + A18 quarantine (VERDICT r10 "next"
-# #4). The reference forwards ANY CRS through proj4 (task.ts:194,
-# 203-217); the repo has the three projection FAMILIES as bespoke
-# kernels (cylindrical 3857/UTM, conic LCC/Albers, azimuthal LAEA) but
-# until now no `outSR=<wkid>` router. _OUTSR_FAMILIES is the EPSG
-# parameter table: wkid -> (family, stage list, validity-window SQL,
-# output column pair); reproject_by_wkid() routes each row to its
-# kernel and routes UNSUPPORTED wkids (and rows outside a family's
-# validity window) to the A18 quarantine status instead of undefined
-# behavior. Windows use integer bounds over the half-integer lattice,
-# so boundary classification can never sit on a tie.
-
-
-def _utm_fixed_stages(zone: int, south: bool) -> list[tuple[str, str]]:
-    """The C178 Krueger stages with the zone PINNED by the wkid
-    (EPSG:326xx = zone (wkid-32600) north, 327xx south) instead of
-    derived per-row from lon: identical arithmetic for in-zone rows
-    (zone*6-183 yields the same central meridian double), which the
-    dispatch-vs-bespoke equality test pins."""
-    stages = _utm_fwd_stages()
-    return [("zone", f"CAST({zone} AS BIGINT)")] + stages[1:]
-
-
-def _utm_window(zone: int, south: bool) -> str:
-    lo, hi = zone * 6 - 186, zone * 6 - 180
-    hemi = "lat < 0 AND lat >= -80" if south else "lat >= 0 AND lat <= 84"
-    return f"lon >= {lo} AND lon < {hi} AND {hemi}"
-
-
-_WMERC_STAGES: list[tuple[str, str]] = [
-    ("prj_x", "6378137.0 * radians(lon)"),
-    ("prj_y", "6378137.0 * ln(tan(pi() / 4 + radians(lat) / 2))"),
-]
-
-_CONUS_WINDOW = "lon BETWEEN -130 AND -60 AND lat BETWEEN 20 AND 55"
-_EU_WINDOW = "lon BETWEEN -70 AND 35 AND lat BETWEEN 35 AND 70"
-
-
-def _outsr_family(wkid: int):
-    """EPSG parameter lookup: returns (family_name, stages, window_sql,
-    (x_col, y_col)) or None for an unsupported wkid. UTM wkids resolve
-    by range rule (EPSG:32601-32660 N, 32701-32760 S); the conic /
-    azimuthal instances carry their EPSG parameter sets (102003/5070
-    share the Albers CONUS parameters; 102004 LCC CONUS; 3035
-    ETRS89-LAEA)."""
-    if wkid == 3857:
-        return ("webmercator", _WMERC_STAGES,
-                "lat BETWEEN -85 AND 85", ("prj_x", "prj_y"))
-    if 32601 <= wkid <= 32660:
-        z = wkid - 32600
-        return (f"utm_{z}n", _utm_fixed_stages(z, False),
-                _utm_window(z, False), ("easting", "northing"))
-    if 32701 <= wkid <= 32760:
-        z = wkid - 32700
-        return (f"utm_{z}s", _utm_fixed_stages(z, True),
-                _utm_window(z, True), ("easting", "northing"))
-    if wkid in (102003, 5070):
-        return ("albers_conus", _alb_fwd_stages(),
-                _CONUS_WINDOW, ("alb_e", "alb_n"))
-    if wkid == 102004:
-        return ("lcc_conus", _lcc_fwd_stages(),
-                _CONUS_WINDOW, ("lcc_e", "lcc_n"))
-    if wkid == 3035:
-        return ("laea_europe", _laea_fwd_stages(),
-                _EU_WINDOW, ("laea_e", "laea_n"))
-    return None
+    return _kernel_query(spark, sf_dir, 3035)
 
 
 def reproject_by_wkid(df: DataFrame, wkids: list[int]) -> DataFrame:
@@ -1330,23 +1242,18 @@ def reproject_by_wkid(df: DataFrame, wkids: list[int]) -> DataFrame:
     Returns the unified frame: input key columns + wkid + status +
     easting/northing (NULL on quarantined rows).
 
-    ONE scan, ONE projection (r12, VERDICT r11 finding #3): the r11
-    spelling unioned 2 filtered legs per wkid + a quarantine leg, which
-    Catalyst planned as 15 scans of the base at 7 CRSes. Now each
-    family's stage chain runs over NULL-MASKED inputs
-    (``CASE WHEN wkid = <w> AND <window> THEN lon END``): codegen
-    short-circuits NULL children, so a row only pays for its own
-    family's math, every intermediate is one lateral column in a single
-    projection, and the final easting/northing/status are CASE routers
-    over the per-family terminals. Map-only, no shuffle, no UDF;
-    tests/test_plans.py pins the one-scan property.
+    One scan, one projection: each family's stage chain runs over
+    NULL-MASKED inputs (``CASE WHEN wkid = <w> AND <window> THEN lon
+    END``): codegen short-circuits NULL children, so a row only pays
+    for its own family's math, every intermediate is one lateral column
+    in a single projection, and the final easting/northing/status are
+    CASE routers over the per-family terminals. Map-only, no shuffle,
+    no UDF; tests/test_plans.py pins the one-scan property.
 
-    Quarantine contract (A18, r12 per ADVICE r11): EVERY input row is
-    accounted for — rows with NULL wkid/lon/lat land in
-    ``quarantine:null_input`` (the r11 legs silently dropped them:
-    a NULL predicate fails both a filter and its negation), unsupported
-    wkids in ``quarantine:unsupported_wkid``, in-family rows outside
-    the validity window in ``quarantine:out_of_window``."""
+    Quarantine contract (A18): EVERY input row is accounted for — rows
+    with NULL wkid/lon/lat land in ``quarantine:null_input``,
+    unsupported wkids in ``quarantine:unsupported_wkid``, in-family
+    rows outside the validity window in ``quarantine:out_of_window``."""
     import re as _re
 
     keys = [c for c in df.columns if c not in ("lon", "lat", "wkid")]
@@ -1417,52 +1324,44 @@ def reproject_by_wkid(df: DataFrame, wkids: list[int]) -> DataFrame:
 # engines), covering all three families, both UTM range rules, the
 # Albers alias pair, and one unsupported wkid.
 _DISPATCH_WKIDS = [3857, 32614, 32755, 5070, 102004, 3035, 99999]
-_DISPATCH_WKID_CASE = (
-    "CASE "
+_DISPATCH_WKID = (
+    "CAST(CASE "
     + " ".join(
         f"WHEN c_custkey % 7 = {i} THEN {w}"
         for i, w in enumerate(_DISPATCH_WKIDS)
     )
-    + " END"
+    + " END AS BIGINT) AS wkid"
 )
 
 
 def _dispatch_oracle() -> str:
-    base = f"""WITH base AS (
-  SELECT c_custkey,
-         CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat,
-         CAST({_DISPATCH_WKID_CASE} AS BIGINT) AS wkid
-  FROM customer
-)"""
-    ctes = [base]
+    """The routing as a union of per-wkid legs over one base CTE: an
+    independent spelling of reproject_by_wkid's CASE router."""
+    ctes = [f"base AS (SELECT *, {_DISPATCH_WKID} FROM ({_lattice_sql()}))"]
     selects = []
     supported = []
     for wkid in _DISPATCH_WKIDS:
-        spec = _outsr_family(wkid)
-        if spec is None:
+        k = _outsr_family(wkid)
+        if k is None:
             continue
         supported.append(wkid)
-        _fam, stages, window, (xe, ye) = spec
-        prev = f"w{wkid}_0"
-        ctes.append(
-            f", {prev} AS (SELECT * FROM base WHERE wkid = {wkid}"
-            f" AND ({window}))"
+        chain, last = _cte_chain(
+            f"SELECT * FROM base WHERE wkid = {wkid} AND ({k.window})",
+            k.stages,
+            f"w{wkid}_",
         )
-        for i, (name, expr) in enumerate(stages, 1):
-            cur = f"w{wkid}_{i}"
-            ctes.append(f", {cur} AS (SELECT *, {expr} AS {name} FROM {prev})")
-            prev = cur
+        ctes.append(chain)
+        x, y = k.xy
         selects.append(
             f"SELECT c_custkey, wkid, 'projected' AS status,\n"
-            f"       round({xe}, 4) AS easting, round({ye}, 4) AS northing\n"
-            f"FROM {prev}"
+            f"       round({x}, 4) AS easting, round({y}, 4) AS northing\n"
+            f"FROM {last}"
         )
         selects.append(
             f"SELECT c_custkey, wkid, 'quarantine:out_of_window' AS status,\n"
             f"       CAST(NULL AS DOUBLE) AS easting,"
             f" CAST(NULL AS DOUBLE) AS northing\n"
-            f"FROM base WHERE wkid = {wkid} AND NOT ({window})"
+            f"FROM base WHERE wkid = {wkid} AND NOT ({k.window})"
         )
     in_list = ", ".join(str(w) for w in supported)
     selects.append(
@@ -1471,7 +1370,7 @@ def _dispatch_oracle() -> str:
         f" CAST(NULL AS DOUBLE) AS northing\n"
         f"FROM base WHERE wkid NOT IN ({in_list})"
     )
-    return "".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
+    return "WITH " + ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
 
 
 @query("geo_reproject_dispatch", oracle=_dispatch_oracle())
@@ -1480,24 +1379,21 @@ def geo_reproject_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     A18 quarantine. The reference forwards any CRS through proj4
     (task.ts:194,203-217); this is the engine's defined-behavior
     equivalent: each row's requested wkid routes to the matching
-    kernel from the EPSG parameter table (_outsr_family — Mercator,
-    UTM north+south by range rule, Albers under both its EPSG aliases,
+    kernel of the outSR kernel table (_outsr_family — Mercator, UTM
+    north+south by range rule, Albers under both its EPSG aliases,
     LCC, LAEA), rows outside the family's validity window and rows
     naming an unimplemented wkid land in quarantine statuses (A18)
     rather than undefined behavior.
 
-    Scale: one scan, seven map-only legs over pruned subsets, union —
-    no shuffle, no UDF, all whole-stage codegen; at 100 TB the same
-    router runs per-partition with the CRS list as config. Equality
-    of each dispatched leg with its bespoke operator is pinned in
-    tests/test_outsr_dispatch.py."""
-    df = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-        F.expr(_DISPATCH_WKID_CASE).cast("bigint").alias("wkid"),
+    Scale: one scan, one projection (reproject_by_wkid): each family's
+    stages run over inputs null-masked to its wkid and window, and CASE
+    routers pick each row's terminals — no shuffle, no UDF, all
+    whole-stage codegen; at 100 TB the same router runs per-partition
+    with the CRS list as config. Equality of each dispatched wkid with
+    its bespoke operator is pinned in tests/test_outsr_dispatch.py."""
+    return reproject_by_wkid(
+        lattice(spark, sf_dir).selectExpr("*", _DISPATCH_WKID), _DISPATCH_WKIDS
     )
-    return reproject_by_wkid(df, _DISPATCH_WKIDS)
 
 
 # ---------------------------------------------------------------------------
@@ -1520,8 +1416,6 @@ _M_DA = 6378137.0 - _M_A27            # a_wgs84 - a_clarke1866
 _M_DF = (1.0 / 298.257223563) - _M_F27
 # DMA TR 8350.2-B CONUS mean NAD27 -> WGS84 shift (meters)
 _M_DX, _M_DY, _M_DZ = -8.0, 160.0, 176.0
-_M_RAD = 0.017453292519943295
-_M_DEG = 57.29577951308232
 
 
 def _molodensky_stages() -> list[tuple[str, str]]:
@@ -1530,8 +1424,8 @@ def _molodensky_stages() -> list[tuple[str, str]]:
     a, e2 = _M_A27, _M_E27_SQ
     adf_fda = a * _M_DF + _M_F27 * _M_DA
     return [
-        ("phir", f"lat * {_M_RAD!r}"),
-        ("lamr", f"lon * {_M_RAD!r}"),
+        ("phir", f"lat * {_RAD!r}"),
+        ("lamr", f"lon * {_RAD!r}"),
         ("sp", "sin(phir)"),
         ("cp", "cos(phir)"),
         ("w2", f"1 - {e2!r} * sp * sp"),
@@ -1548,60 +1442,42 @@ def _molodensky_stages() -> list[tuple[str, str]]:
             f"(({_M_DX!r}) * (-sin(lamr)) + ({_M_DY!r}) * cos(lamr))"
             " / (nu * cp)",
         ),
-        ("lat_w84", f"(phir + dphi) * {_M_DEG!r}"),
-        ("lon_w84", f"(lamr + dlam) * {_M_DEG!r}"),
+        ("lat_w84", f"(phir + dphi) * {_DEG!r}"),
+        ("lon_w84", f"(lamr + dlam) * {_DEG!r}"),
     ]
 
 
 def molodensky_py(lon: float, lat: float) -> tuple[float, float]:
     """Python twin of _molodensky_stages (same formula, independent
     transcription) for the parity test."""
-    import math as _m
-
     a, e2 = _M_A27, _M_E27_SQ
-    phir, lamr = lat * _M_RAD, lon * _M_RAD
-    sp, cp = _m.sin(phir), _m.cos(phir)
+    phir, lamr = lat * _RAD, lon * _RAD
+    sp, cp = math.sin(phir), math.cos(phir)
     w2 = 1 - e2 * sp * sp
-    rho = a * (1 - e2) / (w2 * _m.sqrt(w2))
-    nu = a / _m.sqrt(w2)
+    rho = a * (1 - e2) / (w2 * math.sqrt(w2))
+    nu = a / math.sqrt(w2)
     adf_fda = a * _M_DF + _M_F27 * _M_DA
     dphi = (
-        _M_DX * (-sp) * _m.cos(lamr)
-        + _M_DY * (-sp) * _m.sin(lamr)
+        _M_DX * (-sp) * math.cos(lamr)
+        + _M_DY * (-sp) * math.sin(lamr)
         + _M_DZ * cp
-        + adf_fda * _m.sin(2 * phir)
+        + adf_fda * math.sin(2 * phir)
     ) / rho
-    dlam = (_M_DX * (-_m.sin(lamr)) + _M_DY * _m.cos(lamr)) / (nu * cp)
-    return (lamr + dlam) * _M_DEG, (phir + dphi) * _M_DEG
+    dlam = (_M_DX * (-math.sin(lamr)) + _M_DY * math.cos(lamr)) / (nu * cp)
+    return (lamr + dlam) * _DEG, (phir + dphi) * _DEG
 
 
-def _molodensky_oracle() -> str:
-    ctes = [
-        f"""WITH s0 AS (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat
-  FROM customer
-  WHERE CAST({_LON} AS DOUBLE) BETWEEN -130 AND -60
-    AND CAST({_LAT} AS DOUBLE) BETWEEN 20 AND 55
-)"""
-    ]
-    prev = "s0"
-    for i, (name, expr) in enumerate(_molodensky_stages(), 1):
-        ctes.append(f", s{i} AS (SELECT *, {expr} AS {name} FROM {prev})")
-        prev = f"s{i}"
-    return (
-        "".join(ctes)
-        + f"""
-SELECT c_custkey,
-       round(lon_w84, 7) AS lon_wgs84, round(lat_w84, 7) AS lat_wgs84,
+@query(
+    "etl_datum_shift_nad27",
+    oracle=lattice_oracle(
+        _molodensky_stages(),
+        f"""round(lon_w84, 7) AS lon_wgs84, round(lat_w84, 7) AS lat_wgs84,
        round((lat_w84 - lat) * 111194.9266, 2) AS shift_north_m,
-       round((lon_w84 - lon) * 111194.9266 * cos(lat * {_M_RAD!r}), 2)
-         AS shift_east_m
-FROM {prev}"""
-    )
-
-
-@query("etl_datum_shift_nad27", oracle=_molodensky_oracle())
+       round((lon_w84 - lon) * 111194.9266 * cos(lat * {_RAD!r}), 2)
+         AS shift_east_m""",
+        _CONUS_WINDOW,
+    ),
+)
 def etl_datum_shift_nad27(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C231: NAD27 -> WGS84 DATUM SHIFT (abridged Molodensky, DMA TR
     8350.2 CONUS-average +towgs84=-8,160,176) over the CONUS window —
@@ -1615,18 +1491,10 @@ def etl_datum_shift_nad27(spark: SparkSession, sf_dir: str) -> DataFrame:
     shift decomposed into metric north/east components (the familiar
     ~tens-of-meters NAD27 CONUS signature — a built-in sanity check).
 
-    Scale: map-only whole-stage-codegen SQL, filter pushed to the
-    scan; the same stage list chains in front of any _outsr_family
-    kernel for projected targets on shifted datums."""
-    df = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-    ).filter(
-        F.col("lon").between(-130, -60) & F.col("lat").between(20, 55)
-    )
-    for name, expr in _molodensky_stages():
-        df = df.withColumn(name, F.expr(expr))
+    Scale: map-only whole-stage-codegen SQL; the same stage list
+    chains in front of any kernel-table entry (_outsr_family) for
+    projected targets on shifted datums."""
+    df = apply_stages(lattice(spark, sf_dir, _CONUS_WINDOW), _molodensky_stages())
     return df.select(
         "c_custkey",
         F.round(F.col("lon_w84"), 7).alias("lon_wgs84"),
@@ -1637,7 +1505,7 @@ def etl_datum_shift_nad27(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             (F.col("lon_w84") - F.col("lon"))
             * 111194.9266
-            * F.cos(F.col("lat") * _M_RAD),
+            * F.cos(F.col("lat") * _RAD),
             2,
         ).alias("shift_east_m"),
     )

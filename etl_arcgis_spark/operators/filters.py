@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..helpers import LAT, LON
 from ..registry import query
 from ..tables import table
 
@@ -105,20 +106,12 @@ def filter_between_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Synthetic lon/lat derived deterministically from the key: the driver
-# tables carry no geometry, so the spatial surface (B11) is exercised on
-# derived coordinates — same expression on both engines, exact doubles
-# (small integers + 0.5).
-_LON = "(c_custkey % 360) - 180 + 0.5"
-_LAT = "(c_custkey % 160) - 80 + 0.5"
-
-
 @query(
     "filter_spatial_envelope",
     oracle=f"""
-SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon, CAST({_LAT} AS DOUBLE) AS lat
+SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon, CAST({LAT} AS DOUBLE) AS lat
 FROM customer
-WHERE ({_LON}) BETWEEN -150.0 AND 60.0 AND ({_LAT}) BETWEEN -40.0 AND 45.0
+WHERE ({LON}) BETWEEN -150.0 AND 60.0 AND ({LAT}) BETWEEN -40.0 AND 45.0
 """,
 )
 def filter_spatial_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,8 +125,8 @@ def filter_spatial_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cu = table(spark, sf_dir, "customer")
     return (
-        cu.withColumn("lon", F.expr(_LON).cast("double"))
-        .withColumn("lat", F.expr(_LAT).cast("double"))
+        cu.withColumn("lon", F.expr(LON).cast("double"))
+        .withColumn("lat", F.expr(LAT).cast("double"))
         .filter(F.col("lon").between(-150.0, 60.0) & F.col("lat").between(-40.0, 45.0))
         .select("c_custkey", "lon", "lat")
     )
@@ -181,7 +174,7 @@ _PIP_ENV_LAT = (min(y for _, y in _POLYGON), max(y for _, y in _POLYGON))
     oracle=f"""
 SELECT c_custkey, lon, lat
 FROM (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon, CAST({_LAT} AS DOUBLE) AS lat
+  SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon, CAST({LAT} AS DOUBLE) AS lat
   FROM customer
 )
 WHERE lon BETWEEN {_PIP_ENV_LON[0]} AND {_PIP_ENV_LON[1]}
@@ -202,8 +195,8 @@ def filter_spatial_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFra
     candidate polygon after an envelope bucket join."""
     cu = table(spark, sf_dir, "customer")
     return (
-        cu.withColumn("lon", F.expr(_LON).cast("double"))
-        .withColumn("lat", F.expr(_LAT).cast("double"))
+        cu.withColumn("lon", F.expr(LON).cast("double"))
+        .withColumn("lat", F.expr(LAT).cast("double"))
         .filter(
             F.col("lon").between(*_PIP_ENV_LON)
             & F.col("lat").between(*_PIP_ENV_LAT)
@@ -281,8 +274,8 @@ SELECT c_custkey, lon, lat, w FROM (
        {_ray_cast_sql("lon", "lat")} AS center_in,
        {_l1_boundary_dist_sql()} AS bdist
   FROM (
-    SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-           CAST({_LAT} AS DOUBLE) AS lat,
+    SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon,
+           CAST({LAT} AS DOUBLE) AS lat,
            CAST({_DIAMOND_W} AS DOUBLE) AS w
     FROM customer
   )
@@ -370,8 +363,8 @@ SELECT c_custkey, lon, lat, w FROM (
          ({qx0} >= lon - w AND {qx1} <= lon + w
           AND {qy0} >= lat - w AND {qy1} <= lat + w) AS q_in_a
   FROM (
-    SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-           CAST({_LAT} AS DOUBLE) AS lat,
+    SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon,
+           CAST({LAT} AS DOUBLE) AS lat,
            CAST({_ENV_W} AS DOUBLE) AS w
     FROM customer
   )
@@ -469,8 +462,8 @@ SELECT c_custkey, lon, lat, n_crossings FROM (
   SELECT c_custkey, lon, lat,
          CAST({_seg_cross_count_sql()} AS BIGINT) AS n_crossings
   FROM (
-    SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-           CAST({_LAT} AS DOUBLE) AS lat
+    SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon,
+           CAST({LAT} AS DOUBLE) AS lat
     FROM customer
   )
   WHERE {_CROSS_PREFILTER}

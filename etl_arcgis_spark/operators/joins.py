@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..helpers import ev_us, r4, r4_sql
+from ..helpers import LAT, LON, ev_us, r4, r4_sql
 from ..registry import query
 from ..tables import dim_customer_geo, row_count, sql_over, table
 
@@ -386,18 +386,14 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CELL = 2.5  # grid cell size == search radius (degrees)
-# synthetic lon/lat, same convention as filters.py (driver tables carry
-# no geometry; coords are exact doubles derived from the key)
-_J_LON = "(c_custkey % 360) - 180 + 0.5"
-_J_LAT = "(c_custkey % 160) - 80 + 0.5"
 
 
 @query(
     "join_spatial_grid_distance",
     oracle=f"""
 WITH p AS (
-  SELECT c_custkey, CAST({_J_LON} AS DOUBLE) AS lon,
-         CAST({_J_LAT} AS DOUBLE) AS lat
+  SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat
   FROM customer
 )
 SELECT a.c_custkey AS key_a, b.c_custkey AS key_b,
@@ -434,8 +430,8 @@ def join_spatial_grid_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "customer")
         .select(
             "c_custkey",
-            F.expr(_J_LON).cast("double").alias("lon"),
-            F.expr(_J_LAT).cast("double").alias("lat"),
+            F.expr(LON).cast("double").alias("lon"),
+            F.expr(LAT).cast("double").alias("lat"),
         )
         .withColumn("cx", F.floor(F.col("lon") / _CELL).cast("bigint"))
         .withColumn("cy", F.floor(F.col("lat") / _CELL).cast("bigint"))

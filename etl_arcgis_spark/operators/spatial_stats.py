@@ -33,21 +33,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..helpers import r4
+from ..helpers import LAT, LON, r4
 from ..registry import query
 from ..tables import row_count, table
 
-# Derived point layer, same convention as filters.py/joins.py: exact
-# half-integer lon/lat from the customer key (the key mod (360, 160)
-# lattice), attribute x = account balance.
-_LON = "(c_custkey % 360) - 180 + 0.5"
-_LAT = "(c_custkey % 160) - 80 + 0.5"
-
 _BAND = 2.5  # distance band for Moran/Gi* (degrees); band^2 = 6.25 exact
 
+# Derived point layer: the customer lon/lat lattice (helpers.LON/LAT),
+# attribute x = account balance.
 _P_SQL = f"""
-  SELECT c_custkey AS k, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat, c_acctbal AS x
+  SELECT c_custkey AS k, CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat, c_acctbal AS x
   FROM customer
 """
 
@@ -55,8 +51,8 @@ _P_SQL = f"""
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
     return table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
         F.col("c_acctbal").alias("x"),
     )
 
@@ -513,8 +509,8 @@ WITH base AS (
   SELECT c_custkey,
          CAST(3 + (c_custkey % 4) AS INT) AS nv,
          CAST(1 + (c_custkey % 3) AS DOUBLE) AS r,
-         CAST({_LON} AS DOUBLE) AS cx,
-         CAST({_LAT} AS DOUBLE) AS cy
+         CAST({LON} AS DOUBLE) AS cx,
+         CAST({LAT} AS DOUBLE) AS cy
   FROM customer
 ), v AS (
   SELECT c_custkey, nv,
@@ -567,8 +563,8 @@ def spatial_shoelace_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         (F.lit(3) + F.col("c_custkey") % 4).cast("int").alias("nv"),
         (F.lit(1) + F.col("c_custkey") % 3).cast("double").alias("r"),
-        F.expr(_LON).cast("double").alias("cx"),
-        F.expr(_LAT).cast("double").alias("cy"),
+        F.expr(LON).cast("double").alias("cx"),
+        F.expr(LAT).cast("double").alias("cy"),
     )
     two_pi = 2.0 * 3.141592653589793
     v = base.withColumn(
@@ -630,8 +626,8 @@ def _sw_oracle() -> str:
     zones = " UNION ALL ".join(zone_selects)
     return f"""
 WITH p AS (
-  SELECT c_custkey, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat, c_acctbal AS bal
+  SELECT c_custkey, CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat, c_acctbal AS bal
   FROM customer
 ), z AS ({zones}),
 hit AS (
@@ -682,8 +678,8 @@ def spatial_summarize_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     the term is dead on both."""
     p = table(spark, sf_dir, "customer").select(
         "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
         F.col("c_acctbal").alias("bal"),
     )
     zones = spark.createDataFrame(
@@ -909,8 +905,8 @@ _S_LAT = "(s_suppkey % 160) - 80 + 0.5"
     "spatial_near_join",
     oracle=f"""
 WITH c AS (
-  SELECT c_custkey AS k, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat
+  SELECT c_custkey AS k, CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat
   FROM customer
 ), s AS (
   SELECT s_suppkey AS k, CAST({_S_LON} AS DOUBLE) AS lon,
@@ -952,8 +948,8 @@ def spatial_near_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: brute-force all-pairs nearest within radius."""
     c = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
     )
     s = table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"),
@@ -1018,7 +1014,7 @@ def _qk_digits_sql(tx: str, ty: str) -> str:
     "spatial_quadkey_rollup",
     oracle=f"""
 WITH p AS (
-  SELECT CAST({_LON} AS DOUBLE) AS lon, CAST({_LAT} AS DOUBLE) AS lat,
+  SELECT CAST({LON} AS DOUBLE) AS lon, CAST({LAT} AS DOUBLE) AS lat,
          c_acctbal AS bal
   FROM customer
 ), t AS (
@@ -1066,8 +1062,8 @@ def spatial_quadkey_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadkey string doubles as the range-partition / Z-ORDER key
     (scale_patterns.zorder_key is the binary twin)."""
     p = table(spark, sf_dir, "customer").select(
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
         F.col("c_acctbal").alias("bal"),
     )
     ntiles = 1 << _QK_Z
@@ -1121,7 +1117,7 @@ _KDE_H = 4.0  # quartic-kernel bandwidth; grid cell == h, centers 4i+2
     "spatial_kernel_density",
     oracle=f"""
 WITH p AS (
-  SELECT CAST({_LON} AS DOUBLE) AS lon, CAST({_LAT} AS DOUBLE) AS lat
+  SELECT CAST({LON} AS DOUBLE) AS lon, CAST({LAT} AS DOUBLE) AS lat
   FROM customer
 ), cells AS (
   SELECT DISTINCT
@@ -1171,8 +1167,8 @@ def spatial_kernel_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel's support IS the emitted cell set). Oracle: brute-force
     points x candidate-centers join."""
     p = table(spark, sf_dir, "customer").select(
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
     )
     h, h2 = _KDE_H, _KDE_H * _KDE_H
     cand = (
@@ -1217,8 +1213,8 @@ def _median_center_oracle() -> str:
     """Unrolled Weiszfeld CTE chain (same iterate count, same start,
     same d floor as the Spark spelling)."""
     ctes = [
-        f"p AS (SELECT CAST({_LON} AS DOUBLE) AS lon,"
-        f" CAST({_LAT} AS DOUBLE) AS lat FROM customer)",
+        f"p AS (SELECT CAST({LON} AS DOUBLE) AS lon,"
+        f" CAST({LAT} AS DOUBLE) AS lat FROM customer)",
         "c0 AS (SELECT avg(lon) AS cx, avg(lat) AS cy,"
         " CAST(count(*) AS BIGINT) AS n FROM p)",
     ]
@@ -1309,8 +1305,8 @@ def spatial_median_center(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH od AS (
   SELECT year(o.o_orderdate) AS yr,
-         CAST({_S_LON} AS DOUBLE) - CAST({_LON} AS DOUBLE) AS dx,
-         CAST({_S_LAT} AS DOUBLE) - CAST({_LAT} AS DOUBLE) AS dy
+         CAST({_S_LON} AS DOUBLE) - CAST({LON} AS DOUBLE) AS dx,
+         CAST({_S_LAT} AS DOUBLE) - CAST({LAT} AS DOUBLE) AS dy
   FROM lineitem l
   JOIN orders o   ON l.l_orderkey = o.o_orderkey
   JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1361,8 +1357,8 @@ def spatial_directional_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("ck"),
-        F.expr(_LON).cast("double").alias("cx"),
-        F.expr(_LAT).cast("double").alias("cy"),
+        F.expr(LON).cast("double").alias("cx"),
+        F.expr(LAT).cast("double").alias("cy"),
     )
     s = table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("sk"),
@@ -1412,8 +1408,8 @@ _EH_Z = 1.96
     oracle=f"""
 WITH pts AS (
   SELECT c_custkey AS k,
-         CAST(floor(CAST({_LON} AS DOUBLE) / {_EH_CELL}) AS BIGINT) AS cx,
-         CAST(floor(CAST({_LAT} AS DOUBLE) / {_EH_CELL}) AS BIGINT) AS cy
+         CAST(floor(CAST({LON} AS DOUBLE) / {_EH_CELL}) AS BIGINT) AS cx,
+         CAST(floor(CAST({LAT} AS DOUBLE) / {_EH_CELL}) AS BIGINT) AS cy
   FROM customer
 ),
 binned AS (
@@ -1545,8 +1541,8 @@ def spatial_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
-        F.floor(F.expr(_LON).cast("double") / _EH_CELL).alias("cx"),
-        F.floor(F.expr(_LAT).cast("double") / _EH_CELL).alias("cy"),
+        F.floor(F.expr(LON).cast("double") / _EH_CELL).alias("cx"),
+        F.floor(F.expr(LAT).cast("double") / _EH_CELL).alias("cy"),
     )
     o = table(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -1886,8 +1882,8 @@ WITH base AS (
   SELECT c_custkey,
          CAST(3 + (c_custkey % 4) AS INT) AS nv,
          CAST(1 + (c_custkey % 3) AS DOUBLE) AS r,
-         CAST({_LON} AS DOUBLE) AS cx,
-         CAST({_LAT} AS DOUBLE) AS cy
+         CAST({LON} AS DOUBLE) AS cx,
+         CAST({LAT} AS DOUBLE) AS cy
   FROM customer
 ), v AS (
   SELECT c_custkey, nv,
@@ -1952,8 +1948,8 @@ def etl_quantize_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         (F.lit(3) + (F.col("c_custkey") % 4)).cast("int").alias("nv"),
         (F.lit(1) + (F.col("c_custkey") % 3)).cast("double").alias("r"),
-        F.expr(_LON).cast("double").alias("cx"),
-        F.expr(_LAT).cast("double").alias("cy"),
+        F.expr(LON).cast("double").alias("cx"),
+        F.expr(LAT).cast("double").alias("cy"),
     )
     v = base.select(
         "c_custkey",
@@ -2011,8 +2007,8 @@ _CLQ_L = 840   # lcm(1..8): scales n_aB/n_a into an exact integer
     "spatial_colocation_quotient",
     oracle=f"""
 WITH p AS (
-  SELECT c_custkey AS k, CAST({_LON} AS DOUBLE) AS lon,
-         CAST({_LAT} AS DOUBLE) AS lat, c_mktsegment AS cat
+  SELECT c_custkey AS k, CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat, c_mktsegment AS cat
   FROM customer
 ),
 und AS (
@@ -2596,8 +2592,8 @@ def _gp_snap(x: str, p: int) -> str:
 
 
 _GP_SQL_COLS = f"""
-  CAST({_LON} AS DOUBLE) + {{jx}} AS lon,
-  CAST({_LAT} AS DOUBLE) + {{jy}} AS lat
+  CAST({LON} AS DOUBLE) + {{jx}} AS lon,
+  CAST({LAT} AS DOUBLE) + {{jy}} AS lat
 """
 
 
@@ -2606,8 +2602,8 @@ _GP_SQL_COLS = f"""
     oracle=f"""
 WITH pts AS (
   SELECT c_custkey, c_mktsegment,
-         CAST({_LON} AS DOUBLE) + {_gp_jit('x', 'duck')} AS lon,
-         CAST({_LAT} AS DOUBLE) + {_gp_jit('y', 'duck')} AS lat
+         CAST({LON} AS DOUBLE) + {_gp_jit('x', 'duck')} AS lon,
+         CAST({LAT} AS DOUBLE) + {_gp_jit('y', 'duck')} AS lat
   FROM customer
 ), snapped AS (
   SELECT c_mktsegment,
@@ -2654,8 +2650,8 @@ def etl_geometry_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     jx, jy = _gp_jit("x", "spark"), _gp_jit("y", "spark")
     pts = table(spark, sf_dir, "customer").select(
         "c_mktsegment",
-        F.expr(f"CAST({_LON} AS DOUBLE) + {jx}").alias("lon"),
-        F.expr(f"CAST({_LAT} AS DOUBLE) + {jy}").alias("lat"),
+        F.expr(f"CAST({LON} AS DOUBLE) + {jx}").alias("lon"),
+        F.expr(f"CAST({LAT} AS DOUBLE) + {jy}").alias("lat"),
     )
     snapped = pts.select(
         "c_mktsegment",
@@ -2697,16 +2693,16 @@ def _jittered_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     jx, jy = _gp_jit("x", "spark"), _gp_jit("y", "spark")
     return table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
-        F.expr(f"CAST({_LON} AS DOUBLE) + {jx}").alias("lon"),
-        F.expr(f"CAST({_LAT} AS DOUBLE) + {jy}").alias("lat"),
+        F.expr(f"CAST({LON} AS DOUBLE) + {jx}").alias("lon"),
+        F.expr(f"CAST({LAT} AS DOUBLE) + {jy}").alias("lat"),
         F.col("c_acctbal").alias("x"),
     )
 
 
 _JP_SQL = f"""
   SELECT c_custkey AS k,
-         CAST({_LON} AS DOUBLE) + {_gp_jit('x', 'duck')} AS lon,
-         CAST({_LAT} AS DOUBLE) + {_gp_jit('y', 'duck')} AS lat
+         CAST({LON} AS DOUBLE) + {_gp_jit('x', 'duck')} AS lon,
+         CAST({LAT} AS DOUBLE) + {_gp_jit('y', 'duck')} AS lat
   FROM customer
 """
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..helpers import r4
 from ..registry import query
 from ..tables import table
+from .etl import WMERC_STAGES, lattice, lattice_oracle
 
 
 @query(
@@ -55,18 +56,11 @@ def udf_scalar_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LON = "(c_custkey % 360) - 180 + 0.5"
-_LAT = "(c_custkey % 160) - 80 + 0.5"
-
-
 @query(
     "udf_pandas_reproject",
-    oracle=f"""
-SELECT c_custkey,
-       round(6378137.0 * radians({_LON}), 4) AS x_3857,
-       round(6378137.0 * ln(tan(pi() / 4 + radians({_LAT}) / 2)), 4) AS y_3857
-FROM customer
-""",
+    oracle=lattice_oracle(
+        WMERC_STAGES, "round(prj_x, 4) AS x_3857, round(prj_y, 4) AS y_3857"
+    ),
 )
 def udf_pandas_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C50: Web-Mercator reprojection as an Arrow-batched pandas UDF —
@@ -82,12 +76,7 @@ def udf_pandas_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merc_y(lat: pd.Series) -> pd.Series:
         return 6378137.0 * np.log(np.tan(np.pi / 4 + np.radians(lat) / 2))
 
-    cu = table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
-    )
-    return cu.select(
+    return lattice(spark, sf_dir).select(
         "c_custkey",
         r4(merc_x("lon")).alias("x_3857"),
         r4(merc_y("lat")).alias("y_3857"),

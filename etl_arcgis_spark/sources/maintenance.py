@@ -24,16 +24,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..tables import parquet_parts
+
 
 def dir_bytes(path: str) -> int:
     """Total size of the parquet data files under path (driver-side
     listing — metadata only, no data read)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
+    return sum(os.path.getsize(p) for p in parquet_parts(path))
 
 
 def plan_target_files(path: str, target_file_mb: int = 128) -> int:

@@ -121,48 +121,49 @@ def _arrow_to_spark(t) -> T.DataType:
     raise TypeError(f"fixture schema has unmapped arrow type {t!r}")
 
 
+def parquet_parts(path: str) -> list[str]:
+    """The parquet data files of a table path, sorted: the path itself
+    for a single-file table, every ``*.parquet`` file under a
+    Spark-written directory (hive partition subdirectories included;
+    hidden and ``_``-prefixed entries skipped, as Spark's reader skips
+    them), or ``[]`` if the path is absent."""
+    import os
+
+    if not os.path.isdir(path):
+        return [path] if os.path.exists(path) else []
+    parts = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        parts += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+    return sorted(parts)
+
+
 def input_bytes(sf_dir: str, name: str) -> int:
     """On-disk parquet byte size of a fixture table — a driver-side
     stat() the operators use to derive scale-adaptive partition widths
-    (optimization r12). Accepts single-file fixtures and Spark-written
-    directories; 0 if the table is absent (callers fall back to their
-    floor)."""
+    (optimization r12). 0 if the table is absent (callers fall back to
+    their floor)."""
     import os
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
+    return sum(os.path.getsize(p) for p in parquet_parts(f"{sf_dir}/{name}.parquet"))
 
 
 def row_count(sf_dir: str, name: str) -> int:
-    """Exact row count of a fixture table from the parquet FOOTER
+    """Exact row count of a fixture table from the parquet FOOTERS
     (driver-side pyarrow metadata read, no Spark job) — the hint
     spread_for_fanout's data-adaptive width cap keys on (optimization
-    r13, VERDICT r12 order #7). Directory fixtures sum their parts;
-    0 if the table is absent (callers treat 0 as 'no hint')."""
-    import os
-
+    r13, VERDICT r12 order #7). 0 if the table is absent (callers treat
+    0 as 'no hint')."""
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_"))
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except OSError:
-        return 0
+    return sum(
+        pq.ParquetFile(p).metadata.num_rows
+        for p in parquet_parts(f"{sf_dir}/{name}.parquet")
+    )
 
 
 def parquet_schema(path: str) -> T.StructType:
@@ -172,19 +173,23 @@ def parquet_schema(path: str) -> T.StructType:
     Accepts either a single parquet file (the driver fixtures) or a
     Spark-written parquet DIRECTORY (test fixtures built via
     df.write.parquet): for a directory the footer of the first
-    part-file is read — Spark-written parts share one schema."""
+    part-file is read — Spark-written parts share one schema. A
+    hive-partitioned directory raises: its part files lack the
+    partition columns, which live only in the directory names."""
     import os
 
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        parts = sorted(
-            f for f in os.listdir(path)
-            if f.endswith((".parquet", ".snappy.parquet")) and not f.startswith((".", "_"))
-        )
+        parts = parquet_parts(path)
         if not parts:
             raise FileNotFoundError(f"no part files under parquet dir {path!r}")
-        path = os.path.join(path, parts[0])
+        if any(os.sep in os.path.relpath(p, path) for p in parts):
+            raise ValueError(
+                f"parquet dir {path!r} is partitioned: its part files lack "
+                "the partition columns"
+            )
+        path = parts[0]
     pf = pq.ParquetFile(path)
     arrow = pf.schema_arrow
     # Spark writes timestamps as INT96 by default; pyarrow surfaces

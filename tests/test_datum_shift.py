@@ -22,8 +22,8 @@ def test_sql_matches_python_twin(spark):
         table(spark, SF, "customer")
         .select(
             "c_custkey",
-            F.expr(etl._LON).cast("double").alias("lon"),
-            F.expr(etl._LAT).cast("double").alias("lat"),
+            F.expr(etl.LON).cast("double").alias("lon"),
+            F.expr(etl.LAT).cast("double").alias("lat"),
         )
         .filter(F.col("lon").between(-130, -60) & F.col("lat").between(20, 55))
         .collect()

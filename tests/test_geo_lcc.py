@@ -8,27 +8,21 @@ import math
 
 from pyspark.sql import functions as F
 
+from etl_arcgis_spark.helpers import LAT, LON
 from etl_arcgis_spark.operators.etl import (
-    _LAT,
-    _LCC_CONUS,
-    _LON,
     _lcc_fwd_stages,
     _lcc_inv_stages,
+    apply_stages,
 )
 from etl_arcgis_spark.tables import table
 
 
 def _fwd(df):
-    for name, expr in _lcc_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df
+    return apply_stages(df, _lcc_fwd_stages())
 
 
 def _fwd_inv(df):
-    df = _fwd(df)
-    for name, expr in _lcc_inv_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df
+    return apply_stages(_fwd(df), _lcc_inv_stages())
 
 
 def test_lcc_round_trip_closure(spark):
@@ -37,8 +31,8 @@ def test_lcc_round_trip_closure(spark):
     df = (
         table(spark, "/root/testdata/sf0.01", "customer")
         .select(
-            F.expr(_LON).cast("double").alias("lon"),
-            F.expr(_LAT).cast("double").alias("lat"),
+            F.expr(LON).cast("double").alias("lon"),
+            F.expr(LAT).cast("double").alias("lat"),
         )
         .filter(F.col("lon").between(-130, -60) & F.col("lat").between(20, 55))
     )
@@ -106,8 +100,8 @@ def test_lcc_r4_midpoint_margin(spark):
     df = (
         table(spark, "/root/testdata/sf0.1", "customer")
         .select(
-            F.expr(_LON).cast("double").alias("lon"),
-            F.expr(_LAT).cast("double").alias("lat"),
+            F.expr(LON).cast("double").alias("lon"),
+            F.expr(LAT).cast("double").alias("lat"),
         )
         .filter(F.col("lon").between(-130, -60) & F.col("lat").between(20, 55))
         .distinct()

@@ -7,22 +7,19 @@ import math
 
 from pyspark.sql import functions as F
 
+from etl_arcgis_spark.helpers import LAT, LON
 from etl_arcgis_spark.operators.etl import (
-    _LAT,
-    _LON,
     _utm_fwd_stages,
     _utm_inv_stages,
+    apply_stages,
 )
 from etl_arcgis_spark.tables import table
 
 
 def _fwd_inv(df):
-    for name, expr in _utm_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
+    df = apply_stages(df, _utm_fwd_stages())
     df = df.withColumn("south", F.expr("lat < 0"))  # = forward's hemi
-    for name, expr in _utm_inv_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df
+    return apply_stages(df, _utm_inv_stages())
 
 
 def test_utm_round_trip_closure_below_1e6_m(spark):
@@ -30,8 +27,8 @@ def test_utm_round_trip_closure_below_1e6_m(spark):
     fixture lattice (|lat| <= 79.5) — the published contract of the
     n^4 Krueger truncation plus one fixed-point conformal refinement."""
     df = table(spark, "/root/testdata/sf0.01", "customer").select(
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
     )
     pdf = _fwd_inv(df).select("lat", "lon", "lat_inv", "lon_inv").toPandas()
     import numpy as np
@@ -53,9 +50,7 @@ def test_utm_known_value_anchor(spark):
     df = spark.createDataFrame(
         [(7.8509671, 47.9941214)], "lon double, lat double"
     )
-    for name, expr in _utm_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    r = df.select("zone", "easting", "northing").collect()[0]
+    r = apply_stages(df, _utm_fwd_stages()).select("zone", "easting", "northing").collect()[0]
     assert r.zone == 32
     assert abs(r.easting - 414278.17) < 0.05
     assert abs(r.northing - 5316285.59) < 0.05
@@ -63,9 +58,7 @@ def test_utm_known_value_anchor(spark):
     df_s = spark.createDataFrame(
         [(7.8509671, -47.9941214)], "lon double, lat double"
     )
-    for name, expr in _utm_fwd_stages():
-        df_s = df_s.withColumn(name, F.expr(expr))
-    r_s = df_s.select("easting", "northing").collect()[0]
+    r_s = apply_stages(df_s, _utm_fwd_stages()).select("easting", "northing").collect()[0]
     assert abs(r_s.northing - (10000000 - 5316285.59)) < 0.05
     assert abs(r_s.easting - r.easting) < 1e-6
 
@@ -80,11 +73,10 @@ def test_utm_r4_midpoint_margin(spark):
     lon offsets, so sf0.01 already exercises every distinct
     transcendental input."""
     df = table(spark, "/root/testdata/sf0.01", "customer").select(
-        F.expr(_LON).cast("double").alias("lon"),
-        F.expr(_LAT).cast("double").alias("lat"),
+        F.expr(LON).cast("double").alias("lon"),
+        F.expr(LAT).cast("double").alias("lat"),
     )
-    for name, expr in _utm_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
+    df = apply_stages(df, _utm_fwd_stages())
     pdf = df.select("easting", "northing").toPandas()
     import numpy as np
 

@@ -5,10 +5,15 @@ from __future__ import annotations
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
-from etl_arcgis_spark.sources.maintenance import compact_parquet, plan_target_files
-from etl_arcgis_spark.tables import table
+from etl_arcgis_spark.sources.maintenance import (
+    compact_parquet,
+    dir_bytes,
+    plan_target_files,
+)
+from etl_arcgis_spark.tables import input_bytes, parquet_schema, row_count, table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -79,3 +84,18 @@ def test_recover_swap_incomplete_staging_uses_retired(tmp_path):
     assert promoted == out + "._retired"
     assert os.path.isfile(os.path.join(out, "old.parquet"))
     assert not os.path.exists(out + "._staging")
+
+
+def test_size_hints_list_partitioned_dirs(spark, tmp_path):
+    """One part-file lister serves every size hint: over a Spark-written
+    partitionBy directory, row_count and input_bytes see the files under
+    the partition subdirectories (not 0), input_bytes agrees with
+    dir_bytes, and parquet_schema refuses the layout rather than return
+    a schema without the partition column."""
+    ev = table(spark, SF_DIR, "events").select("event_id", "event_type", "value")
+    path = str(tmp_path / "ev.parquet")
+    ev.write.partitionBy("event_type").parquet(path)
+    assert row_count(str(tmp_path), "ev") == ev.count()
+    assert input_bytes(str(tmp_path), "ev") == dir_bytes(path) > 0
+    with pytest.raises(ValueError, match="partition"):
+        parquet_schema(path)

@@ -16,8 +16,8 @@ def _points(spark, wkid: int):
 
     return table(spark, SF, "customer").select(
         "c_custkey",
-        F.expr(etl._LON).cast("double").alias("lon"),
-        F.expr(etl._LAT).cast("double").alias("lat"),
+        F.expr(etl.LON).cast("double").alias("lon"),
+        F.expr(etl.LAT).cast("double").alias("lat"),
         F.lit(wkid).cast("bigint").alias("wkid"),
     )
 

@@ -453,25 +453,22 @@ def test_periodogram_detects_planted_period(spark):
 
 
 def _alb_fwd(spark, pts):
-    from etl_arcgis_spark.operators.etl import _alb_fwd_stages
+    from etl_arcgis_spark.operators.etl import _alb_fwd_stages, apply_stages
 
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    for name, expr in _alb_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df
+    return apply_stages(
+        spark.createDataFrame(pts, "lon double, lat double"), _alb_fwd_stages()
+    )
 
 
 def test_albers_round_trip_closure(spark):
-    from etl_arcgis_spark.operators.etl import _alb_inv_stages
+    from etl_arcgis_spark.operators.etl import _alb_inv_stages, apply_stages
 
     pts = [
         (float(lon), float(lat))
         for lon in range(-125, -64, 10)
         for lat in range(22, 54, 7)
     ]
-    df = _alb_fwd(spark, pts)
-    for name, expr in _alb_inv_stages():
-        df = df.withColumn(name, F.expr(expr))
+    df = apply_stages(_alb_fwd(spark, pts), _alb_inv_stages())
     pdf = df.select("lat", "lon", "lat_inv", "lon_inv").toPandas()
     assert float((pdf.lat_inv - pdf.lat).abs().max()) < 1e-6
     assert float((pdf.lon_inv - pdf.lon).abs().max()) < 1e-6
@@ -991,25 +988,22 @@ def test_betweenness_matches_python_twin(spark):
 
 
 def _laea_fwd(spark, pts):
-    from etl_arcgis_spark.operators.etl import _laea_fwd_stages
+    from etl_arcgis_spark.operators.etl import _laea_fwd_stages, apply_stages
 
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    for name, expr in _laea_fwd_stages():
-        df = df.withColumn(name, F.expr(expr))
-    return df
+    return apply_stages(
+        spark.createDataFrame(pts, "lon double, lat double"), _laea_fwd_stages()
+    )
 
 
 def test_laea_round_trip_closure(spark):
-    from etl_arcgis_spark.operators.etl import _laea_inv_stages
+    from etl_arcgis_spark.operators.etl import _laea_inv_stages, apply_stages
 
     pts = [
         (float(lon), float(lat))
         for lon in range(-8, 31, 6)
         for lat in range(36, 69, 6)
     ]
-    df = _laea_fwd(spark, pts)
-    for name, expr in _laea_inv_stages():
-        df = df.withColumn(name, F.expr(expr))
+    df = apply_stages(_laea_fwd(spark, pts), _laea_inv_stages())
     pdf = df.select("lat", "lon", "lat_inv", "lon_inv").toPandas()
     assert float((pdf.lat_inv - pdf.lat).abs().max()) < 1e-6
     assert float((pdf.lon_inv - pdf.lon).abs().max()) < 1e-6
