@@ -31,12 +31,19 @@ requested version - time travel), and read exactly its file list —
 snapshot isolation by immutability.
 
 Scale: merge() is FILE-LEVEL copy-on-write — manifest entries carry
-per-file key-range stats (read from parquet footers, no Spark job),
-and only files with at least one source key inside their range are
-rewritten; everything else carries forward path-identical. read_
-key_range() uses the same stats for file skipping, and compact()
-bin-packs merge-fragmented small files under the same protocol. The
-commit protocol is IDENTICAL at any scale, which is the point.
+per-file key-range stats and row counts (read from parquet footers, no
+Spark job), and only files with at least one source key inside their
+range are rewritten; everything else carries forward path-identical.
+A merge reads its source once before the write: one aggregate checks
+the keys, finds the files to rewrite and collects the partitions the
+source writes. Nothing is counted after the write: a commit's ``rows``
+is the sum of its files' footer counts. Files holding at most
+_BLOOM_BITS distinct keys also carry a key Bloom sidecar for
+read_point(); bigger files get none, as a saturated filter skips
+nothing. read_key_range() uses the same stats for file skipping, and
+compact() bin-packs merge-fragmented small files under the same
+protocol. The commit protocol is IDENTICAL at any scale, which is the
+point.
 
 Reference: dfpc-coe/etl-arcgis task.ts:235-350 (the keyed upsert this
 makes transactional).
@@ -256,21 +263,25 @@ def _bloom_of_column(path: str, col: str) -> str | None:
     from the just-written parquet file (pyarrow, single column, no
     Spark job) — the per-file point-lookup index Iceberg/Delta attach
     for high-cardinality keys, where [min, max] ranges are too loose
-    to skip anything (e.g. uuid-ish keys interleaved across files)."""
+    to skip anything (e.g. uuid-ish keys interleaved across files).
+
+    None (no sidecar) when the file holds more than ``_BLOOM_BITS``
+    distinct non-null values: past one key per bit, a share of at
+    least 1 - e^-3 of the bits is set, so a k=3 filter passes at least
+    (1 - e^-3)^3 = 86% of absent probes. It could not skip the file
+    and would only cost the hashing. The distinct
+    count comes first, from pyarrow, before any value is hashed.
+    Readers treat a missing sidecar as "may contain"."""
     try:
         import base64
 
         import pyarrow.parquet as pq
 
-        vals = pq.read_table(path, columns=[col]).column(0)
+        vals = pq.read_table(path, columns=[col]).column(0).unique().drop_null()
+        if len(vals) > _BLOOM_BITS:
+            return None
         bits = bytearray(_BLOOM_BITS // 8)
-        n = 0
-        for v in vals.unique().to_pylist():
-            if v is None:
-                continue
-            n += 1
-            if n > 100_000:  # sidecar is for file-sized key sets
-                return None
+        for v in vals.to_pylist():
             for pos in _bloom_positions(v):
                 bits[pos // 8] |= 1 << (pos % 8)
         return base64.b64encode(bytes(bits)).decode()
@@ -331,12 +342,10 @@ def _file_entry(final: str, root: str, key: str | None) -> dict[str, Any]:
         "path": os.path.relpath(final, root),
         "bytes": os.path.getsize(final),
     }
-    try:
-        import pyarrow.parquet as pq
+    # the footer row count is what every writer's manifest `rows` sums
+    import pyarrow.parquet as pq
 
-        entry["rows"] = pq.ParquetFile(final).metadata.num_rows
-    except Exception:  # noqa: BLE001
-        pass
+    entry["rows"] = pq.ParquetFile(final).metadata.num_rows
     stats = _col_stats(final)
     if stats:
         entry["col_stats"] = stats
@@ -627,7 +636,8 @@ def create(
     files = _write_data_files(df, root, key=key, partition_by=partition_by, seq=1)
     man: dict[str, Any] = {
         "version": 1, "key": key, "operation": "create", "files": files,
-        "rows": df.count(), "schema": df.schema.json(), "last_seq": 1,
+        "rows": sum(f["rows"] for f in files), "schema": df.schema.json(),
+        "last_seq": 1,
     }
     if partition_by is not None:
         man["partition_by"] = partition_by
@@ -1052,31 +1062,106 @@ def read_point(
     return _read_kept(spark, root, v, man, keep).filter(F.col(key) == value)
 
 
-def _check_source_keys(source: DataFrame, key: str, what: str) -> int:
-    """MERGE INTO's source preconditions, checked in ONE small Spark job
-    before any file is written: the merge key is non-null (a NULL key
-    can never match and would otherwise emit an all-NULL ghost row out
-    of the full-outer join) and unique (duplicate source keys would
-    multiply matched target rows; SQL MERGE errors on multiple
-    matches). Returns the source's row count."""
-    chk = source.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(key).alias("n_nonnull"),
-        F.count_distinct(key).alias("n_distinct"),
-    ).collect()[0]
+def _ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+@dataclass
+class _SourceScan:
+    """What one aggregate over a write's source answers before any
+    file is written (see _scan_source)."""
+
+    rows: int
+    hit: set[int]  # indices of the ``files`` a source key falls inside
+    parts: set[str | None] | None  # source partition values, NULL kept
+
+
+def _range_hits(k: Any, ranged: list[tuple[int, dict[str, Any]]]) -> Any:
+    """Per-row array of the indices ``i`` of the ``(i, file entry)``
+    pairs whose recorded [min, max] key range holds ``k``. The ranges
+    enter the plan as ONE JSON literal parsed by from_json
+    (constant-folded once), not one column expression or py4j call per
+    file. The range type is inferred from the
+    recorded values the way a Python row would be (bool, bigint,
+    double, string), so ``k`` compares under Spark's usual coercion."""
+    vals = [v for _, f in ranged for v in f["key_range"]]
+    if all(isinstance(v, bool) for v in vals):
+        typ = "boolean"
+    elif all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
+        typ = "bigint"
+    elif all(isinstance(v, (int, float)) and not isinstance(v, bool) for v in vals):
+        typ = "double"
+    else:
+        typ = "string"
+    ranges = F.from_json(
+        F.lit(json.dumps([
+            {"i": i, "lo": f["key_range"][0], "hi": f["key_range"][1]}
+            for i, f in ranged
+        ])),
+        f"array<struct<i:int,lo:{typ},hi:{typ}>>",
+    )
+    return F.transform(
+        F.filter(ranges, lambda r: (k >= r["lo"]) & (k <= r["hi"])),
+        lambda r: r["i"],
+    )
+
+
+def _scan_source(
+    source: DataFrame,
+    key: str,
+    what: str,
+    files: list[dict[str, Any]] | None = None,
+    pcol: str | None = None,
+    unique: bool = True,
+) -> _SourceScan:
+    """MERGE INTO's source preconditions and write planning, answered
+    by ONE aggregate over the source before any file is written:
+
+    - the merge key is non-null (a NULL key can never match and would
+      otherwise emit an all-NULL ghost row out of the full-outer join;
+      an appended NULL key is dropped by both change feeds) and, with
+      ``unique``, unique (duplicate source keys would multiply matched
+      target rows; SQL MERGE errors on multiple matches);
+    - which of ``files`` hold a source key inside their recorded key
+      range (entries without a range are never hits — callers treat
+      them as touched);
+    - with ``pcol``, the set of the source's partition values, NULL
+      included (None; non-NULL values as ``str``).
+
+    Violations raise ValueError."""
+    k = F.col(key)
+    aggs = [F.count(F.lit(1)).alias("n"), F.count(key).alias("n_nonnull")]
+    if unique:
+        aggs.append(F.count_distinct(key).alias("n_distinct"))
+    ranged = [(i, f) for i, f in enumerate(files or []) if "key_range" in f]
+    if ranged:
+        aggs.append(F.flatten(F.collect_set(_range_hits(k, ranged))).alias("hits"))
+    if pcol is not None:
+        aggs += [
+            F.collect_set(pcol).alias("parts"),
+            F.max(F.col(pcol).isNull()).alias("part_null"),
+        ]
+    chk = source.agg(*aggs).collect()[0]
     if chk["n"] != chk["n_nonnull"]:
         raise ValueError(
             f"{what} source has {chk['n'] - chk['n_nonnull']} NULL "
-            f"{key!r} key(s); MERGE requires non-null merge keys"
+            f"{key!r} key(s); the merge key must be non-null"
         )
-    if chk["n_nonnull"] != chk["n_distinct"]:
+    if unique and chk["n_nonnull"] != chk["n_distinct"]:
         raise ValueError(
             f"{what} source has duplicate {key!r} keys "
             f"({chk['n_nonnull']} rows, {chk['n_distinct']} distinct); "
             "MERGE requires unique source keys — dedupe first "
             "(e.g. operators/dedup.dedup_key_last_write)"
         )
-    return int(chk["n"])
+    parts = None
+    if pcol is not None:
+        parts = {str(v) for v in chk["parts"]}
+        if chk["part_null"]:
+            parts.add(None)
+    hit = set(chk["hits"]) if ranged else set()
+    return _SourceScan(rows=int(chk["n"]), hit=hit, parts=parts)
 
 
 def merge(
@@ -1112,12 +1197,17 @@ def merge(
     On a concurrent-commit conflict the merge RE-READS the new current
     snapshot and retries — optimistic concurrency, no locks held.
 
-    Source preconditions (checked in ONE small Spark job, standard
-    MERGE INTO semantics): the merge key must be non-null (a NULL key
-    can never match and would otherwise emit an all-NULL ghost row out
-    of the full-outer join) and unique (duplicate source keys would
-    multiply matched target rows; SQL MERGE errors on multiple
-    matches). Violations raise ValueError before any file is written.
+    The source is read ONCE before the write: one aggregate
+    (_scan_source) checks the MERGE INTO preconditions — the merge key
+    must be non-null (a NULL key can never match and would otherwise
+    emit an all-NULL ghost row out of the full-outer join) and unique
+    (duplicate source keys would multiply matched target rows; SQL
+    MERGE errors on multiple matches); violations raise ValueError
+    before any file is written — and, in the same pass, finds the files
+    whose key range holds a source key and the source's partition
+    values. After the write nothing is recomputed: the manifest's
+    ``rows`` sums the new files' footer row counts and the carried
+    files' recorded ones.
 
     Conditional clauses (the full MERGE matrix, SQL spelling —
     predicates over ``s.*``/``t.*``):
@@ -1138,48 +1228,35 @@ def merge(
     via a follow-up column projection, or accept them as lineage
     columns, the Delta CDC-apply convention)."""
     _check_reserved_cols(source, "merge() source")
-    _check_source_keys(source, _snapshot(root)[1]["key"], "merge")
     for _ in range(max_retries):
         base_v, man = _snapshot(root)
         key = man["key"]
         pcol = man.get("partition_by")
-        cand = man["files"]
-        if pcol is not None:
-            # partition pruning BEFORE key-range stats: only files in
-            # partitions the source actually writes can be touched
-            # (|distinct source partitions| is bounded — one collect)
-            if pcol not in source.columns:
-                raise ValueError(
-                    f"merge source must carry partition column {pcol!r}"
-                )
-            # logical values: None stays None (manifest partition
-            # entries are decoded from the Hive dir names, so a NULL
-            # partition is None on both sides — not 'None' / the
-            # __HIVE_DEFAULT_PARTITION__ sentinel string)
-            src_parts = {
-                None if r[0] is None else str(r[0])
-                for r in source.select(pcol).distinct().collect()
-            }
-            # trust a file's partition value only if its layout spec IS
-            # the current spec AND the value carries the logical-
-            # encoding stamp (part_v); files from an older spec
-            # (partition evolution) or with unstamped (possibly
-            # raw-escaped, pre-r6) values stay candidates and fall
-            # through to key-range pruning — conservative, never wrong
-            cand = [
-                f for f in cand
-                if _file_spec(f, pcol) != pcol
+        if pcol is not None and pcol not in source.columns:
+            raise ValueError(
+                f"merge source must carry partition column {pcol!r}"
+            )
+        scan = _scan_source(source, key, "merge", man["files"], pcol)
+        # a file is rewritten iff it may hold a source key: first its
+        # partition, then its key range. Partition values are logical
+        # (None stays None: manifest partition entries are decoded from
+        # the Hive dir names). A file's partition value is trusted only
+        # if its layout spec IS the current spec AND the value carries
+        # the logical-encoding stamp (part_v); files from an older spec
+        # (partition evolution) or with unstamped (possibly raw-escaped,
+        # pre-r6) values stay candidates for key-range pruning —
+        # conservative, never wrong. Entries without a key range are
+        # conservatively touched.
+        touched, untouched = [], []
+        for i, f in enumerate(man["files"]):
+            in_part = (
+                pcol is None
+                or _file_spec(f, pcol) != pcol
                 or f.get("part_v") != _PART_VERSION
-                or f.get("partition") in src_parts
-            ]
-            kept = {f["path"] for f in cand}
-            part_untouched = [f for f in man["files"] if f["path"] not in kept]
-        else:
-            part_untouched = []
-        touched, untouched = _split_by_key_overlap(
-            spark, root, cand, source, key
-        )
-        untouched = part_untouched + untouched
+                or f.get("partition") in scan.parts
+            )
+            in_range = "key_range" not in f or i in scan.hit
+            (touched if in_part and in_range else untouched).append(f)
         if touched:
             target = _read_paths(
                 spark, root, man,
@@ -1194,31 +1271,31 @@ def merge(
         # does not rewrite) read them as null via mergeSchema
         new_cols = [c for c in source.columns if c not in target.columns]
         cols = target.columns
-        matched = F.col(f"s.{key}").isNotNull()
         joined = tgt.join(
             src, F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer"
         )
+        # the post-image projection is SQL text, one py4j call for all
+        # columns (Column builders cost several calls per column)
+        matched = f"s.{_ident(key)} IS NOT NULL"
         take_source = matched
         if update_condition is not None:
             # matched but condition false: keep the TARGET row
-            take_source = matched & (
-                F.col(f"t.{key}").isNull() | F.expr(update_condition)
+            take_source = (
+                f"{matched} AND (t.{_ident(key)} IS NULL OR ({update_condition}))"
             )
         if delete_condition is not None:
-            dele = F.expr(delete_condition)
             # matched + delete-cond -> drop; unmatched tombstone -> no-op
-            joined = joined.filter(~(matched & F.coalesce(dele, F.lit(False))))
-        merged = joined.select(
+            joined = joined.filter(
+                f"NOT ({matched} AND coalesce(({delete_condition}), false))"
+            )
+        merged = joined.selectExpr(
             *[
-                F.when(take_source, F.col(f"s.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
+                f"CASE WHEN {take_source} THEN s.{_ident(c)} "
+                f"ELSE t.{_ident(c)} END AS {_ident(c)}"
                 for c in cols
             ],
             *[
-                F.when(take_source, F.col(f"s.{c}"))
-                .otherwise(F.lit(None))
-                .alias(c)
+                f"CASE WHEN {take_source} THEN s.{_ident(c)} END AS {_ident(c)}"
                 for c in new_cols
             ],
         )
@@ -1240,7 +1317,7 @@ def merge(
                 man, base_v, "merge",
                 schema=merged.schema.json(),
                 files=untouched + new_files,
-                rows=merged.count()
+                rows=sum(f["rows"] for f in new_files)
                 + sum(
                     f.get("rows", 0)
                     - mor_del.get(os.path.basename(f["path"]), 0)
@@ -1267,53 +1344,21 @@ def merge(
     raise CommitConflict(f"merge lost {max_retries} races at {root}")
 
 
-def _split_by_key_overlap(
-    spark: SparkSession,
-    root: str,
-    files: list[dict[str, Any]],
-    source: DataFrame,
-    key: str,
-) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
-    """(touched, untouched) file entries: touched iff >= 1 source key
-    lies in the file's recorded [min, max] key range. Entries without
-    stats are conservatively touched. The overlap check is ONE Spark
-    job: the (tiny) range list broadcasts against the source keys."""
-    no_stats = [f for f in files if "key_range" not in f]
-    with_stats = [f for f in files if "key_range" in f]
-    if not with_stats:
-        return files, []
-    ranges = spark.createDataFrame(
-        [(i, f["key_range"][0], f["key_range"][1]) for i, f in enumerate(with_stats)],
-        ["fid", "lo", "hi"],
-    )
-    hit = (
-        source.select(F.col(key).alias("k"))
-        .join(
-            F.broadcast(ranges),
-            (F.col("k") >= F.col("lo")) & (F.col("k") <= F.col("hi")),
-        )
-        .select("fid")
-        .distinct()
-        .collect()
-    )
-    hit_ids = {r.fid for r in hit}
-    touched = no_stats + [f for i, f in enumerate(with_stats) if i in hit_ids]
-    untouched = [f for i, f in enumerate(with_stats) if i not in hit_ids]
-    return touched, untouched
-
-
 def append(spark: SparkSession, root: str, df: DataFrame) -> int:
     """Append-only commit (the reference's INSERT mode, task.ts:455-457
     / A14, made transactional): write new files, carry EVERY existing
     file forward path-identical — no join, no rewrite, key duplicates
     allowed by design (event-log semantics; use merge() for keyed
-    upsert). The cheapest possible commit: cost = new data only."""
+    upsert). NULL keys are not: both change feeds pair rows by key and
+    would drop them, so a NULL key raises ValueError before any file is
+    written. The cheapest possible commit: cost = new data only."""
     _check_reserved_cols(df, "append()")
     base_v, man = _snapshot(root)
-    _enforce_constraints(df, man, "append()")
     pcol = man.get("partition_by")
     if pcol is not None and pcol not in df.columns:
         raise ValueError(f"append must carry partition column {pcol!r}")
+    _scan_source(df, man["key"], "append", unique=False)
+    _enforce_constraints(df, man, "append()")
     new_seq = _next_seq(man, base_v)
     new_files = _write_data_files(
         df, root, key=man["key"], partition_by=pcol, seq=new_seq
@@ -1322,7 +1367,7 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
         man, base_v, "append",
         schema=df.schema.json(),
         files=man["files"] + new_files,
-        rows=man.get("rows", 0) + df.count(),
+        rows=man.get("rows", 0) + sum(f["rows"] for f in new_files),
         last_seq=new_seq,
     )
     _publish(root, base_v + 1, new_man)
@@ -1762,7 +1807,7 @@ def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
     base_v, man = _snapshot(root)
     _check_reserved_cols(source, "upsert_mor() source")
     key = man["key"]
-    n_source = _check_source_keys(source, key, "upsert_mor")
+    n_source = _scan_source(source, key, "upsert_mor").rows
     pcol = man.get("partition_by")
     if pcol is not None and pcol not in source.columns:
         raise ValueError(f"upsert_mor must carry partition column {pcol!r}")

@@ -189,15 +189,25 @@ def free_checkpoint(df: DataFrame) -> None:
     round t is materialized, making peak storage O(1 round), not
     O(rounds).
 
-    Defensive by design: the py4j accessor path (analyzed plan ->
-    LogicalRDD -> rdd -> unpersist) is version-sensitive, and failing
-    to free is always safe, so any exception is swallowed."""
+    The py4j accessor path (analyzed plan -> LogicalRDD -> rdd ->
+    unpersist) is version-sensitive. Failing to free is safe, so a
+    ``Py4JError`` on that path (a renamed accessor) becomes a
+    RuntimeWarning rather than an exception; any other error (e.g. a
+    non-DataFrame argument) propagates."""
+    from py4j.protocol import Py4JError
+
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:
-        pass
+    except Py4JError as e:
+        import warnings
+
+        warnings.warn(
+            f"free_checkpoint could not release the checkpoint blocks: {e}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def salted_groupby_sum(

@@ -3005,11 +3005,11 @@ def spatial_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "spatial_huff_model",
-    oracle="""
+    oracle=f"""
 WITH cust AS MATERIALIZED (
   SELECT c_custkey,
-         CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS x,
-         CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS y
+         CAST({LON} AS DOUBLE) AS x,
+         CAST({LAT} AS DOUBLE) AS y
   FROM customer
 ), st AS MATERIALIZED (
   SELECT s_suppkey,
@@ -3072,8 +3072,8 @@ def spatial_huff_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     origins = (
         table(spark, sf_dir, "customer")
         .selectExpr(
-            "CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS x",
-            "CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS y",
+            f"CAST({LON} AS DOUBLE) AS x",
+            f"CAST({LAT} AS DOUBLE) AS y",
         )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("double").alias("m"))
@@ -3114,11 +3114,11 @@ def spatial_huff_model(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "spatial_gwr_local_mean",
-    oracle="""
+    oracle=f"""
 WITH p AS MATERIALIZED (
   SELECT c_custkey AS k,
-         CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon,
-         CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS lat,
+         CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat,
          CAST(c_acctbal AS DOUBLE) AS v
   FROM customer
 ), pairs AS MATERIALIZED (
@@ -3170,8 +3170,8 @@ def spatial_gwr_local_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     p = table(spark, sf_dir, "customer").selectExpr(
         "c_custkey AS k",
-        "CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon",
-        "CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS lat",
+        f"CAST({LON} AS DOUBLE) AS lon",
+        f"CAST({LAT} AS DOUBLE) AS lat",
         "CAST(c_acctbal AS DOUBLE) AS v",
     )
     h = 6.0
@@ -3252,8 +3252,8 @@ WITH g AS (
   FROM (SELECT unnest(generate_series(-175, 175, 10)) AS x) gx
   CROSS JOIN (SELECT unnest(generate_series(-75, 75, 10)) AS y) gy
 ), p AS (
-  SELECT CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon,
-         CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS lat,
+  SELECT CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat,
          CAST(floor(CAST(c_acctbal AS DOUBLE) * 100 + 0.5) AS BIGINT) AS cents
   FROM customer
 ), pairs AS (
@@ -3308,8 +3308,8 @@ def spatial_idw_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         table(spark, sf_dir, "customer")
         .selectExpr(
-            "CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon",
-            "CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS lat",
+            f"CAST({LON} AS DOUBLE) AS lon",
+            f"CAST({LAT} AS DOUBLE) AS lat",
             "CAST(floor(CAST(c_acctbal AS DOUBLE) * 100 + 0.5) AS BIGINT) AS cents",
         )
         .withColumn("cx", F.floor(F.col("lon") / h).cast("bigint"))
@@ -3405,10 +3405,10 @@ _PIPJ_POLY_BASE = """
   FROM nation
 """
 
-_PIPJ_PT_BASE = """
+_PIPJ_PT_BASE = f"""
   SELECT c_custkey,
-         CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS px,
-         CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS py
+         CAST({LON} AS DOUBLE) AS px,
+         CAST({LAT} AS DOUBLE) AS py
   FROM customer
 """
 
@@ -3486,8 +3486,8 @@ def join_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "customer")
         .selectExpr(
             "c_custkey",
-            "CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS px",
-            "CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS py",
+            f"CAST({LON} AS DOUBLE) AS px",
+            f"CAST({LAT} AS DOUBLE) AS py",
         )
         .withColumn("gx", F.floor(F.col("px") / _PIPJ_CELL))
         .withColumn("gy", F.floor(F.col("py") / _PIPJ_CELL))
@@ -3526,8 +3526,8 @@ WITH g AS (
   FROM (SELECT unnest(generate_series(-172, 172, 4)) AS x) gx
   CROSS JOIN (SELECT unnest(generate_series(-76, 76, 4)) AS y) gy
 ), p AS (
-  SELECT CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon,
-         CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS lat,
+  SELECT CAST({LON} AS DOUBLE) AS lon,
+         CAST({LAT} AS DOUBLE) AS lat,
          CAST(floor(CAST(c_acctbal AS DOUBLE) * 100 + 0.5) AS BIGINT) AS cents
   FROM customer
 ), pairs AS (
@@ -3593,8 +3593,8 @@ def spatial_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         table(spark, sf_dir, "customer")
         .selectExpr(
-            "CAST((c_custkey % 360) - 180 + 0.5 AS DOUBLE) AS lon",
-            "CAST((c_custkey % 160) - 80 + 0.5 AS DOUBLE) AS lat",
+            f"CAST({LON} AS DOUBLE) AS lon",
+            f"CAST({LAT} AS DOUBLE) AS lat",
             "CAST(floor(CAST(c_acctbal AS DOUBLE) * 100 + 0.5) AS BIGINT) AS cents",
         )
         .withColumn("cx", F.floor(F.col("lon") / h).cast("bigint"))

@@ -1,0 +1,154 @@
+"""A keyed merge reads its source once and counts nothing after the
+write; blooms are written only where they can prune; append() rejects
+NULL merge keys.
+
+Default tier on purpose — the test_acid*.py suites all run under
+``-m slow``, and these are the guards on the merge's Spark job count,
+its manifest counts and the bloom rule."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from etl_arcgis_spark import acid
+
+# Spark jobs one merge runs on the shape below: the source aggregate,
+# then the join's shuffle stages and the write. Measured 6 (13 when the
+# source was scanned three times and the join recounted after the write).
+MERGE_JOB_BUDGET = 6
+
+
+def _table(spark, root, n=40_000, files=8):
+    """``files`` range-partitioned files of ``n // files`` keys each."""
+    src = spark.range(n).select(
+        F.col("id").alias("fid"),
+        (F.col("id") * 3).alias("x"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+    )
+    acid.create(spark, root, src.repartitionByRange(files, "fid"), key="fid")
+
+
+def _batch(path, updates, inserts):
+    """A micro-batch parquet file: ``updates`` existing keys with new
+    values, then ``inserts`` new keys."""
+    fid = list(updates) + list(inserts)
+    pq.write_table(
+        pa.table({
+            "fid": pa.array(fid, pa.int64()),
+            "x": pa.array([-k for k in fid], pa.int64()),
+            "v": [f"b{k}" for k in fid],
+        }),
+        path,
+    )
+    return path
+
+
+def test_merge_stays_within_job_budget(spark, tmp_path):
+    root = str(tmp_path / "t")
+    _table(spark, root)
+    assert len(acid._snapshot(root)[1]["files"]) >= 8
+    path = _batch(
+        str(tmp_path / "b.parquet"),
+        range(0, 12_000, 7),  # keys in the first three files
+        range(40_000, 40_500),
+    )
+    src = spark.read.parquet(path)
+    sc = spark.sparkContext
+    group = "merge-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        acid.merge(spark, root, src)
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= MERGE_JOB_BUDGET, f"merge ran {len(jobs)} Spark jobs"
+
+
+def test_merge_manifest_counts(spark, tmp_path):
+    """rows / rewrote_files / carried_files of a merge, now summed from
+    file footers, equal what the recounting merge recorded."""
+    root = str(tmp_path / "t")
+    _table(spark, root)
+    path = _batch(
+        str(tmp_path / "b.parquet"), range(0, 12_000, 7), range(40_000, 40_500)
+    )
+    v = acid.merge(spark, root, spark.read.parquet(path))
+    man = acid._read_manifest(root, v)
+    assert (man["rows"], man["rewrote_files"], man["carried_files"]) == (40_500, 3, 5)
+    assert man["rows"] == acid.read(spark, root).count()
+    # a pure insert above every range rewrites nothing
+    live = len(man["files"])
+    path = _batch(str(tmp_path / "c.parquet"), [], range(50_000, 50_010))
+    v = acid.merge(spark, root, spark.read.parquet(path))
+    man = acid._read_manifest(root, v)
+    assert (man["rows"], man["rewrote_files"], man["carried_files"]) == (40_510, 0, live)
+
+
+def test_partitioned_merge_manifest_counts(spark, tmp_path):
+    """Partition pruning from the same source aggregate, NULL partition
+    included: only files in partitions the source writes AND whose key
+    range holds a source key are rewritten."""
+    root = str(tmp_path / "p")
+    df = spark.createDataFrame(
+        [(i, f"v{i}", ["a", "b", None][i % 3]) for i in range(60)],
+        "id INT, v STRING, p STRING",
+    )
+    acid.create(spark, root, df.repartition(2), key="id", partition_by="p")
+    files = len(acid._snapshot(root)[1]["files"])
+    src = spark.createDataFrame(
+        [(2, "X", None), (5, "Y", None), (100, "Z", "a")],
+        "id INT, v STRING, p STRING",
+    )
+    v = acid.merge(spark, root, src)
+    man = acid._read_manifest(root, v)
+    assert man["rows"] == 61 == acid.read(spark, root).count()
+    # NULL partition: its files hold ids 2 and 5; partition a: id 100 is
+    # above every range; partition b is not written by the source
+    null_files = [f for f in acid._read_manifest(root, 1)["files"] if f["partition"] is None]
+    assert man["rewrote_files"] == len(null_files)
+    assert man["carried_files"] == files - len(null_files)
+    got = {r.id: (r.v, r.p) for r in acid.read(spark, root).collect()}
+    assert got[2] == ("X", None) and got[5] == ("Y", None) and got[100] == ("Z", "a")
+
+
+def test_no_bloom_past_one_key_per_bit(spark, tmp_path):
+    """A file with more distinct keys than the bloom has bits gets no
+    key_bloom (it could not skip the file); read_point still finds its
+    rows. A small file of the same table keeps its bloom."""
+    root = str(tmp_path / "t")
+    n_big = acid._BLOOM_BITS + 200
+    big = spark.range(n_big).select(
+        F.col("id").alias("fid"), F.concat(F.lit("v"), F.col("id").cast("string")).alias("v")
+    )
+    acid.create(spark, root, big.coalesce(1), key="fid")
+    small = spark.range(n_big, n_big + 50).select(
+        F.col("id").alias("fid"), F.concat(F.lit("v"), F.col("id").cast("string")).alias("v")
+    )
+    v = acid.append(spark, root, small.coalesce(1))
+    big_f, small_f = acid._read_manifest(root, v)["files"]
+    assert big_f["rows"] == n_big and "key_bloom" not in big_f
+    assert small_f["rows"] == 50 and small_f["bloom_v"] == acid._BLOOM_VERSION
+    for k in (0, 517, n_big - 1, n_big + 7):
+        assert [r.v for r in acid.read_point(spark, root, k).collect()] == [f"v{k}"]
+
+
+def test_append_rejects_null_merge_keys(spark, tmp_path):
+    """A NULL key would be dropped by both change feeds: append()
+    raises before any file is written."""
+    root = str(tmp_path / "t")
+    schema = "id INT, v STRING"
+    acid.create(spark, root, spark.createDataFrame([(1, "a")], schema), key="id")
+    data = os.path.join(root, "data")
+    before = sorted(os.listdir(data))
+    with pytest.raises(ValueError, match="NULL"):
+        acid.append(spark, root, spark.createDataFrame([(2, "b"), (None, "c")], schema))
+    assert acid.current_version(root) == 1
+    assert sorted(os.listdir(data)) == before
+    # duplicate keys stay allowed (event-log semantics)
+    v = acid.append(spark, root, spark.createDataFrame([(1, "b"), (1, "c")], schema))
+    assert acid._read_manifest(root, v)["rows"] == 3 == acid.read(spark, root).count()

@@ -261,3 +261,50 @@ def test_free_checkpoint_unpersist_path_fires_on_this_spark_version(spark):
         "still persisted — update the accessor path for this Spark "
         "version"
     )
+
+
+def test_free_checkpoint_frees_block_bytes_and_warns_on_accessor_drift(spark):
+    """free_checkpoint releases the storage blocks of a localCheckpoint:
+    the bytes the storage status reports for the checkpoint RDD drop
+    to zero, with no warning raised. A py4j accessor failure (a Spark
+    upgrade renaming the path) warns instead of passing silently, and
+    any other error propagates."""
+    import time
+    import warnings
+
+    import pytest
+    from py4j.protocol import Py4JError
+
+    from etl_arcgis_spark.operators.scale_patterns import free_checkpoint
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def held_bytes(rdd_id):
+        return sum(
+            i.memSize() + i.diskSize()
+            for i in jsc.getRDDStorageInfo()
+            if i.id() == rdd_id
+        )
+
+    df = spark.range(50_000).select((F.col("id") * 3).alias("x")).localCheckpoint()
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    assert held_bytes(rdd_id) > 0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        free_checkpoint(df)
+    for _ in range(50):  # unpersist(False) is non-blocking
+        if held_bytes(rdd_id) == 0:
+            break
+        time.sleep(0.1)
+    assert held_bytes(rdd_id) == 0
+
+    class _Drifted:  # a DataFrame whose py4j accessor was renamed away
+        class _jdf:
+            @staticmethod
+            def queryExecution():
+                raise Py4JError("Method queryExecution([]) does not exist")
+
+    with pytest.warns(RuntimeWarning, match="could not release"):
+        free_checkpoint(_Drifted())
+    with pytest.raises(AttributeError):
+        free_checkpoint(object())
