@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_arcgis_spark import acid
+from perfbench.tracing import SparkCounters
 
 # Spark jobs one merge runs on the shape below: the source aggregate,
 # then the join's shuffle stages and the write. Measured 6 (13 when the
@@ -58,15 +59,13 @@ def test_merge_stays_within_job_budget(spark, tmp_path):
         range(40_000, 40_500),
     )
     src = spark.read.parquet(path)
-    sc = spark.sparkContext
-    group = "merge-job-budget"
-    sc.setJobGroup(group, group)
+    counters = SparkCounters(spark)
+    before = counters.begin("merge-job-budget")
     try:
         acid.merge(spark, root, src)
     finally:
-        sc.setJobGroup(None, None)  # type: ignore[arg-type]
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= MERGE_JOB_BUDGET, f"merge ran {len(jobs)} Spark jobs"
+        jobs = counters.end("merge-job-budget", before)["jobs"]
+    assert jobs <= MERGE_JOB_BUDGET, f"merge ran {jobs:.0f} Spark jobs"
 
 
 def test_merge_manifest_counts(spark, tmp_path):

@@ -17,6 +17,15 @@ of N), then reports per-query:
 Exponents are computed on increments (differences), which cancels the
 per-query fixed floor without needing to estimate it.
 
+Every timing goes through ``bench.measure`` on ``bench.bench_session``
+(the session the bench times: 4 shuffle partitions, AQE off): 1 warm-up
+run, which is the counted run, then N timed runs, median; the minimum
+over two interleaved passes is reported. Per query the JSON also
+carries ``shuffle_write_bytes`` and ``input_bytes`` at each SF, from
+perfbench's status-store counters of the counted run (every job the
+build runs, checkpoints included): a map-side-combined aggregate's
+shuffle bytes stay flat across the three SFs.
+
 Usage: python tools/scaling.py [--n 5] [name ...]
 """
 
@@ -26,15 +35,12 @@ import argparse
 import json
 import math
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from etl_arcgis_spark import registry  # noqa: E402
-from etl_arcgis_spark.session import get_session  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 HEADLINE = bench.HEADLINE + [
@@ -93,30 +99,23 @@ def main() -> None:
     if args.names:
         HEADLINE = args.names
 
-    spark = get_session("scaling", shuffle_partitions=4)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.inMemoryColumnarStorage.compressed", "false")
-    spark.conf.set("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
+    spark = bench.bench_session("scaling")
     queries = registry.all_queries()
 
-    for sf in SFS:  # warm every (query, sf) cache
+    for sf in SFS:  # JIT warm-up pass
         for name in HEADLINE:
             bench.materialize(queries[name](spark, sf))
 
     t: dict[tuple[str, str], float] = {}
+    layers: dict[tuple[str, str], dict] = {}
     for _pass in range(2):
         for sf in SFS:
             for name in HEADLINE:
                 fn = queries[name]
-                bench.materialize(fn(spark, sf))
-                runs = []
-                for _ in range(args.n):
-                    t0 = time.perf_counter()
-                    bench.materialize(fn(spark, sf))
-                    runs.append(time.perf_counter() - t0)
-                med = statistics.median(runs)
+                _, med, totals = bench.measure(spark, lambda: fn(spark, sf), name, 1, args.n)
                 key = (name, sf)
-                t[key] = min(t.get(key, med), med)
+                if med < t.get(key, float("inf")):
+                    t[key], layers[key] = med, totals
 
     out = {}
     for name in HEADLINE:
@@ -128,6 +127,10 @@ def main() -> None:
             "sec": {"sf0.001": round(t001, 4), "sf0.01": round(t01, 4), "sf0.1": round(t1, 4)},
             "incr_sec": [round(dt1, 4), round(dt2, 4)],
             "exponent_10x": round(exponent, 2) if exponent is not None else None,
+            **{
+                f: {os.path.basename(sf): layers[(name, sf)][f] for sf in SFS}
+                for f in ("shuffle_write_bytes", "input_bytes")
+            },
         }
     print(json.dumps({"metric": "scaling_probe", "queries": out}, indent=1))
     spark.stop()
