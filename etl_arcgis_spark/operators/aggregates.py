@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from ..helpers import LAT, LON, ev_us, r4, r4_sql
 from ..registry import query
 from ..tables import row_count, sql_over, table
-from .scale_patterns import bucketed_global_rank, bucketed_running_sums
+from .scale_patterns import barrier, bucketed_global_rank, bucketed_running_sums
 
 
 @query(
@@ -3747,7 +3747,7 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("lang") == "en", "en").otherwise("xx").alias("side"),
         F.split("text", " ").alias("l"),
     )
-    g3 = (
+    g3 = barrier(
         t.select(
             "side",
             F.explode(
@@ -3767,33 +3767,30 @@ def agg_kmv_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the explode+distinct; one checkpoint of the (side, trigram)
         # distinct set (vocabulary-bounded) bounds it to a single
         # evaluation (optimization r12 session 4, guide §2.6)
-        .localCheckpoint()
     )
-    # K-row sketches and the 1-row theta are localCheckpoint()ed
+    # K-row sketches and the 1-row theta are behind barriers
     # (optimization r12 session 5): ka/kb are each consumed by ku AND
     # common, theta by common AND the final select — without barriers
     # Catalyst inlined the TakeOrdered-over-md5 subtree into every
     # reference and re-hashed the vocabulary per consumer. Each side
     # is filtered BEFORE hashing so every distinct trigram is md5'd
     # exactly once per sketch build. All checkpoints are K- or 1-row.
-    ka = (
+    ka = barrier(
         g3.filter("side = 'en'")
         .select(F.expr(_kmv_h("spark", "g")).alias("hv"))
         .orderBy("hv")
         .limit(_KMV_K)
-        .localCheckpoint()
     )
-    kb = (
+    kb = barrier(
         g3.filter("side = 'xx'")
         .select(F.expr(_kmv_h("spark", "g")).alias("hv"))
         .orderBy("hv")
         .limit(_KMV_K)
-        .localCheckpoint()
     )
     ku = ka.union(kb).distinct().orderBy("hv").limit(_KMV_K)
-    theta = ku.agg(
-        (F.max("hv").cast("double") / F.lit(_KMV_SCALE)).alias("th")
-    ).localCheckpoint()
+    theta = barrier(
+        ku.agg((F.max("hv").cast("double") / F.lit(_KMV_SCALE)).alias("th"))
+    )
     common = (
         ka.join(kb, "hv")
         .crossJoin(F.broadcast(theta))
@@ -5482,17 +5479,19 @@ def ml_perceptron_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once (3 ints/row — SAME cast expressions as before, so the
     # exact-integer trajectory is unchanged) and every epoch is one
     # aggregate over it with the weight literals inlined as before.
-    f = sql_over(
-        spark,
-        sf_dir,
-        """
+    f = barrier(
+        sql_over(
+            spark,
+            sf_dir,
+            """
 SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE -1 END AS y,
        CAST(l_quantity AS BIGINT) AS q,
        CAST(round(l_discount * 100, 0) AS BIGINT) AS d
 FROM lineitem
 """,
-        ("lineitem",),
-    ).localCheckpoint()
+            ("lineitem",),
+        )
+    )
     b = wq = wd = 0
     out = []
     for t in range(1, _PERC_EPOCHS + 1):
@@ -6251,8 +6250,9 @@ SELECT l_orderkey, l_linenumber,
 FROM lineitem
 """
     ).createOrReplaceTempView("cooks_f")
-    fit2 = spark.sql(
-        """
+    fit2 = barrier(
+        spark.sql(
+            """
 WITH mo AS (
   SELECT CAST(count(1) AS BIGINT) AS n,
          CAST(sum(x) AS BIGINT) AS sx, CAST(sum(x * x) AS BIGINT) AS sxx,
@@ -6272,7 +6272,9 @@ SELECT n, sx, b, sxx_c,
          / CAST(n - 2 AS DOUBLE) AS mse
 FROM fit
 """
-    ).localCheckpoint(eager=False)
+        ),
+        eager=False,
+    )
     # lazy checkpoint (ADVICE r12): merely CONSTRUCTING this DataFrame
     # (plan-dump tooling) must not run the full lineitem scan; the
     # barrier still materializes exactly once, at the first action.

@@ -146,12 +146,12 @@ def _register_funnel_views(spark: SparkSession, sf_dir: str) -> None:
     spread_for_fanout pattern, width-capped per VERDICT r12 order #7);
     all other stages inherit shuffle parallelism. Row sets are
     identical — placement only."""
-    from .scale_patterns import free_checkpoint, spread_width
+    from .scale_patterns import barrier, spread_width
 
     table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     p = spread_width(spark, sf_dir, "documents")
 
-    exactfull = spark.sql(f"""
+    exactfull = barrier(spark.sql(f"""
         WITH t AS (
           SELECT /*+ REPARTITION({p}) */ doc_id, source, text,
                  split(text, ' ') AS l
@@ -172,7 +172,7 @@ def _register_funnel_views(spark: SparkSession, sf_dir: str) -> None:
         SELECT doc_id, source, l,
                row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
         FROM gated
-    """).localCheckpoint()
+    """))
     exactfull.createOrReplaceTempView("corpus_f_exactfull")
     spark.sql(
         "SELECT doc_id, source, l FROM corpus_f_exactfull"
@@ -181,17 +181,17 @@ def _register_funnel_views(spark: SparkSession, sf_dir: str) -> None:
         "SELECT doc_id, source, l FROM corpus_f_exactfull WHERE rn = 1"
     ).createOrReplaceTempView("corpus_f_exact")
 
-    g4 = spark.sql(f"""
+    g4 = barrier(spark.sql(f"""
         SELECT doc_id,
                explode(transform(sequence(1, size(l) - 3),
                        i -> concat_ws(' ', slice(l, i, 4)))) AS g4g
         FROM (SELECT /*+ REPARTITION({p}) */ doc_id, split(text, ' ') AS l
               FROM documents)
         WHERE size(l) >= 4
-    """).localCheckpoint()
+    """))
     g4.createOrReplaceTempView("corpus_f_g4")
 
-    nclean = spark.sql("""
+    nclean = barrier(spark.sql("""
         WITH grams AS (
           SELECT DISTINCT doc_id, source, bg FROM (
             SELECT doc_id, source,
@@ -225,7 +225,7 @@ def _register_funnel_views(spark: SparkSession, sf_dir: str) -> None:
         SELECT n.doc_id, n.l,
                (n.doc_id % 97 <> 0 AND c.doc_id IS NULL) AS is_clean
         FROM neard n LEFT JOIN contaminated c ON c.doc_id = n.doc_id
-    """).localCheckpoint()
+    """), g4)  # g4 is read only inside the nclean subtree
     nclean.createOrReplaceTempView("corpus_f_nclean")
     spark.sql(
         "SELECT doc_id, l FROM corpus_f_nclean"
@@ -233,10 +233,6 @@ def _register_funnel_views(spark: SparkSession, sf_dir: str) -> None:
     spark.sql(
         "SELECT doc_id FROM corpus_f_nclean WHERE is_clean"
     ).createOrReplaceTempView("corpus_f_clean")
-    # g4's blocks are dead once nclean is materialized (both its
-    # consumers live inside the nclean subtree) — free them now; the
-    # view stays registered only until _drop_funnel_views
-    free_checkpoint(g4)
 
 
 _FUNNEL_VIEWS = (
@@ -417,7 +413,7 @@ def corpus_curate_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     per reference. Oracle keeps the one-text spelling as ground
     truth."""
     _register_funnel_views(spark, sf_dir)
-    from .scale_patterns import free_checkpoint, spread_width
+    from .scale_patterns import barrier, spread_width
 
     p = spread_width(spark, sf_dir, "documents")
 
@@ -429,7 +425,7 @@ def corpus_curate_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT doc_id, l FROM corpus_f_nclean WHERE is_clean"
     ).createOrReplaceTempView("corpus_f_cleanl")
 
-    bk2 = spark.sql(f"""
+    bk2 = barrier(spark.sql(f"""
         SELECT x.doc_id,
                (instr('0123456789abcdef', substring(md5(g), 1, 1)) - 1) * 16
                + instr('0123456789abcdef', substring(md5(g), 2, 1)) - 1 AS b,
@@ -440,10 +436,10 @@ def corpus_curate_select(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM (SELECT /*+ REPARTITION({p}) */ doc_id, l
                     FROM corpus_f_cleanl WHERE size(l) >= 2)) x
         JOIN documents d ON x.doc_id = d.doc_id
-    """).localCheckpoint()
+    """))
     bk2.createOrReplaceTempView("corpus_f_bk2")
 
-    dsir = spark.sql("""
+    dsir = barrier(spark.sql("""
         WITH raw2 AS (
           SELECT b, count(1) AS rc,
                  sum(CASE WHEN is_target THEN 1 ELSE 0 END) AS tc
@@ -458,11 +454,8 @@ def corpus_curate_select(spark: SparkSession, sf_dir: str) -> DataFrame:
           GROUP BY k.doc_id
         )
         SELECT doc_id FROM scored WHERE n_pos * 2 >= n_grams
-    """).localCheckpoint()
+    """), bk2)  # bk2 is read only by dsir's two CTE references
     dsir.createOrReplaceTempView("corpus_f_dsir")
-    # bk2's blocks are dead once dsir is materialized (its only
-    # consumers are dsir's two CTE references)
-    free_checkpoint(bk2)
 
     out = spark.sql("""
         WITH surv AS (

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..helpers import ev_us, r4
 from ..registry import query
 from ..tables import row_count, table
+from .scale_patterns import barrier, free_checkpoint
 
 
 @query(
@@ -312,8 +313,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
       (Kiveris et al., "Connected Components in MapReduce"), which
       converges in O(log d) rounds with the identical join shape.
     - each round is one shuffle join on the edge list + one groupBy min;
-      labels persist round-over-round and the previous round is
-      unpersisted, so memory is O(|V| + |E|), never materializing
+      each round's labels sit behind a barrier that frees the previous
+      round, so memory is O(|V| + |E|), never materializing
       reachability pairs (the oracle's closure table would be O(sum
       |component|^2) — fine for an oracle, wrong at scale).
     - convergence check is a count of changed labels (one cheap action
@@ -353,7 +354,7 @@ def propagate_min_labels(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     Convergence is a count() of changed labels per round — read off a
     ``chg`` column of the round's own checkpoint (the old label rides
     through the propagate join), so no extra per-round join. Each
-    round's label table is **localCheckpoint**ed — the pointer-jump
+    round's label table is behind a ``barrier`` — the pointer-jump
     self-join would otherwise double the logical plan every round and
     Catalyst re-analysis, not execution, becomes the bottleneck
     (measured: 40-node chain went 250 s -> 3 s); round t-1's blocks
@@ -364,26 +365,27 @@ def propagate_min_labels(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     other node can adopt its label, so it is exactly a singleton
     component — appended after the loop. Near-dup graphs are sparse,
     so per-round shuffles are O(|V(E)|), not O(|V|), at any scale.
-    Memory stays O(|V| + |E|); on a real cluster swap localCheckpoint
-    for a reliable ``spark.sparkContext.setCheckpointDir`` checkpoint
-    so executor loss cannot drop a round.
+    Memory stays O(|V| + |E|); on a real cluster swap the barrier's
+    localCheckpoint for a reliable ``spark.sparkContext.setCheckpointDir``
+    checkpoint (one line, in ``scale_patterns.barrier``) so executor
+    loss cannot drop a round.
     """
-    from .scale_patterns import free_checkpoint
-
     # direction-double IN PARTITION (optimization r12): the union-of-
     # two-selects spelling inlines the pair-generation plan twice, so
-    # persist() EXECUTED it twice (measured 5.2 s vs 2.4 s for one
+    # materializing it EXECUTED it twice (measured 5.2 s vs 2.4 s for one
     # pass at sf0.1). explode(array(fwd, rev)) doubles each row after
     # one evaluation — same rows, half the work, no extra shuffle.
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
-    sym = sym.persist()
+    sym = barrier(
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            ).alias("e")
+        ).select("e.src", "e.dst"),
+        eager=False,
+    )
 
     # ACTIVE-SET restriction (optimization r12, guide §2.3 shuffle
     # fewer rows): a node with no incident edge neither sends nor
@@ -396,64 +398,55 @@ def propagate_min_labels(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
     # O(|V(E)|) — the same argument holds at 100 TB, where the dup
     # fraction bounds the active set. endpoints is checkpointed: the
     # final anti-join must not re-run the pair generation after sym
-    # is unpersisted.
-    endpoints = (
-        sym.select(F.col("src").alias("doc_id")).distinct().localCheckpoint(eager=True)
-    )
-    labels_ck = (
+    # is freed.
+    endpoints = barrier(sym.select(F.col("src").alias("doc_id")).distinct())
+    labels_ck = barrier(
         nodes.join(endpoints, "doc_id", "semi")
         .select("doc_id", F.col("doc_id").alias("component_id"))
-        .localCheckpoint(eager=True)
     )
     labels = labels_ck
-    try:
-        for _ in range(30):  # log2-ish rounds: covers any realistic diameter
-            msgs = sym.join(
-                labels, sym["src"] == labels["doc_id"], "inner"
-            ).select(sym["dst"].alias("doc_id"), F.col("component_id"))
-            # propagate via join instead of union+groupBy so the OLD
-            # label rides along — convergence then reads a column of
-            # the round's own checkpoint instead of paying a separate
-            # |V|-row join per round (optimization r12)
-            nbr = msgs.groupBy("doc_id").agg(
-                F.min("component_id").alias("nbr_comp")
-            )
-            stepped = labels.join(nbr, "doc_id", "left").select(
-                "doc_id",
-                F.col("component_id").alias("old_comp"),
-                F.least(
-                    "component_id", F.coalesce("nbr_comp", "component_id")
-                ).alias("component_id"),
-            )
-            parent = stepped.select(
-                F.col("doc_id").alias("p_id"), F.col("component_id").alias("p_comp")
-            )
-            new_labels = (
-                stepped.join(parent, stepped["component_id"] == parent["p_id"], "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("p_comp", "component_id").alias("component_id"),
-                    (
-                        F.coalesce("p_comp", "component_id") != F.col("old_comp")
-                    ).alias("chg"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = new_labels.filter("chg").count()
-            # round t-1's checkpoint blocks are dead once round t is
-            # materialized — free them so peak storage is O(1 round),
-            # not O(rounds) (optimization r12)
-            free_checkpoint(labels_ck)
-            labels_ck = new_labels
-            labels = new_labels.select("doc_id", "component_id")
-            if changed == 0:
-                break
-        singletons = nodes.join(endpoints, "doc_id", "anti").select(
-            "doc_id", F.col("doc_id").alias("component_id")
+    for _ in range(30):  # log2-ish rounds: covers any realistic diameter
+        msgs = sym.join(
+            labels, sym["src"] == labels["doc_id"], "inner"
+        ).select(sym["dst"].alias("doc_id"), F.col("component_id"))
+        # propagate via join instead of union+groupBy so the OLD
+        # label rides along — convergence then reads a column of
+        # the round's own checkpoint instead of paying a separate
+        # |V|-row join per round (optimization r12)
+        nbr = msgs.groupBy("doc_id").agg(
+            F.min("component_id").alias("nbr_comp")
         )
-        return labels.unionByName(singletons)
-    finally:
-        sym.unpersist()
+        stepped = labels.join(nbr, "doc_id", "left").select(
+            "doc_id",
+            F.col("component_id").alias("old_comp"),
+            F.least(
+                "component_id", F.coalesce("nbr_comp", "component_id")
+            ).alias("component_id"),
+        )
+        parent = stepped.select(
+            F.col("doc_id").alias("p_id"), F.col("component_id").alias("p_comp")
+        )
+        # round t-1's checkpoint is dead once round t lands
+        labels_ck = barrier(
+            stepped.join(parent, stepped["component_id"] == parent["p_id"], "left")
+            .select(
+                "doc_id",
+                F.coalesce("p_comp", "component_id").alias("component_id"),
+                (
+                    F.coalesce("p_comp", "component_id") != F.col("old_comp")
+                ).alias("chg"),
+            ),
+            labels_ck,
+        )
+        changed = labels_ck.filter("chg").count()
+        labels = labels_ck.select("doc_id", "component_id")
+        if changed == 0:
+            break
+    free_checkpoint(sym)  # the result reads only the label and endpoint barriers
+    singletons = nodes.join(endpoints, "doc_id", "anti").select(
+        "doc_id", F.col("doc_id").alias("component_id")
+    )
+    return labels.unionByName(singletons)
 
 
 @query(
@@ -1444,7 +1437,7 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, t: float) -> DataFrame:
     from pyspark.sql import Window
 
     docs = docs.withColumn("l", F.split("text", " "))
-    toks = (
+    toks = barrier(
         docs.select(
             "doc_id",
             F.explode(
@@ -1456,7 +1449,6 @@ def prefix_filter_jaccard_pairs(docs: DataFrame, t: float) -> DataFrame:
         )
         .distinct()
         .select("doc_id", F.xxhash64("w").alias("h"))
-        .localCheckpoint()
     )
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
     df_tab = toks.groupBy("h").agg(F.count(F.lit(1)).alias("df"))

@@ -8,10 +8,11 @@ customer<->supplier graph induced by order lines.
 Iterative algorithms are where a declarative engine has to think about
 lineage: each iteration is a join + aggregate over the previous rank
 vector. This module unrolls a FIXED iteration count (deterministic,
-oracle-expressible as chained CTEs); the transition matrix is built
-once and persisted, and at cluster scale each iteration's result
-would be localCheckpoint()ed to truncate lineage — the loop shape is
-identical.
+oracle-expressible as chained CTEs). Every intermediate goes through
+``scale_patterns.barrier``: an edge list or transition matrix is built
+once behind a lazy barrier, per-round vectors behind eager ones that
+free the round they replace, and a query's result behind a last
+barrier that frees everything the result no longer reads.
 """
 
 from __future__ import annotations
@@ -22,19 +23,20 @@ from pyspark.sql import functions as F
 from ..helpers import r4
 from ..registry import query
 from ..tables import table
+from .scale_patterns import barrier, direction_double, free_checkpoint
 
 _D = 0.85        # damping
 _ITERS = 5
-# Explicit co-partitioning width for the iterative stages. persist() +
-# localCheckpoint() pin physical plans, which keeps AQE from coalescing
-# the tiny per-iteration shuffles on a vanilla session — so the loop
-# sizes its own exchanges. MUST equal spark.sql.shuffle.partitions
-# (optimization r12): the loop joins only reuse the persisted
-# clustering when the partition counts match — a fixed 16 against a
-# 32-partition session re-exchanged AND re-sorted the persisted edge
-# list every iteration. Conf-derived is also the scale story: at
-# cluster SF shuffle.partitions is sized to the data, and the
-# persisted layout follows it.
+# Explicit co-partitioning width for the iterative stages. Barriers
+# pin physical plans, which keeps AQE from coalescing the tiny
+# per-iteration shuffles on a vanilla session — so the loop sizes its
+# own exchanges. MUST equal spark.sql.shuffle.partitions (optimization
+# r12): the loop joins only reuse a barriered edge list's clustering
+# when the partition counts match — a fixed 16 against a 32-partition
+# session re-exchanged AND re-sorted the edge list every iteration.
+# Conf-derived is also the scale story: at cluster SF
+# shuffle.partitions is sized to the data, and the barriered layout
+# follows it.
 
 
 def _parts(spark) -> int:
@@ -59,7 +61,7 @@ def _node_str(col):
 
 
 def _graph_parts(spark, sf_dir: str) -> int:
-    """Width of the persisted per-iteration edge layouts, derived from
+    """Width of the barriered per-iteration edge layouts, derived from
     INPUT SIZE (guide §2.5: scale-adaptive, not a core-count constant):
     ~3 MB of source parquet per partition — the edge list is a
     projected+deduped derivative of lineitem, so its bytes track
@@ -137,9 +139,10 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each iteration is ONE shuffle join (transition matrix x
     rank vector, both partitioned on the join key — at cluster SF,
     pre-partition both on src and the per-iteration exchange
-    disappears) + an agg on dst. The matrix is built once and
-    persisted; iteration results would be localCheckpoint()ed at 100 TB
-    to truncate lineage. Degree skew (a mega-customer) is the usual
+    disappears) + an agg on dst. The matrix is built once behind a lazy
+    barrier; the 5 rounds stay one unrolled plan, behind the result's
+    barrier (at 100 TB each round would take a barrier of its own to
+    truncate lineage). Degree skew (a mega-customer) is the usual
     hazard: AQE skew-join, or split hub rows with the salting utility
     (scale_patterns.salted_groupby_sum's layout applied to edges).
     """.format(iters=_ITERS)
@@ -153,75 +156,68 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    from .scale_patterns import direction_double, free_checkpoint
-
     # one evaluation of the lineitem⋈orders edge aggregate
     # (optimization r12): direction_double replaces the union-of-
-    # selects (which executed e0 twice), and the eager checkpoint
-    # makes the edges/outw legs of the norm join share ONE
-    # materialization instead of re-running the builder per leg.
-    # Freed right after norm (its only consumer) is pinned below.
-    edges = direction_double(e0, "src", "dst", ("w",)).localCheckpoint(eager=True)
+    # selects (which executed e0 twice), and the eager barrier makes
+    # the edges/outw legs of the norm join share ONE materialization
+    # instead of re-running the builder per leg. Freed right after
+    # norm (its only consumer) is materialized below.
+    edges = barrier(direction_double(e0, "src", "dst", ("w",)))
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
     # partition-once, iterate-many (optimization r12, guide §2.1): the
     # transition matrix is hash-clustered AND sorted on the per-
-    # iteration join key at persist time, so each round's SMJ reuses
+    # iteration join key behind its barrier, so each round's SMJ reuses
     # both the partitioning and the ordering — zero exchange, zero
     # sort on the big side inside the loop (the rank vector alone
     # shuffles, |nodes| rows). Width derived from input size
     # (_graph_parts), not core count.
-    norm = (
+    norm = barrier(
         edges.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("ow")).alias("p"))
         .repartition(_graph_parts(spark, sf_dir), "src")
-        .sortWithinPartitions("src")
-        .persist()
+        .sortWithinPartitions("src"),
+        eager=False,
     )
-    try:
-        # n_nodes off the persisted matrix (distinct src == outw rows):
-        # the old outw.count() re-ran the whole lineitem⋈orders build
-        # for one scalar (optimization r12)
-        n_nodes = norm.select("src").distinct().count()
-        # norm (the edges checkpoint's only consumer) is persisted and
-        # now materialized by the count above — the edge blocks are dead
-        free_checkpoint(edges)
+    # n_nodes off the matrix (distinct src == outw rows): the old
+    # outw.count() re-ran the whole lineitem⋈orders build for one
+    # scalar (optimization r12). The count materializes norm, so the
+    # edge blocks are dead after it.
+    n_nodes = norm.select("src").distinct().count()
+    free_checkpoint(edges)
+    ranks = (
+        norm.select("src")
+        .distinct()
+        .select(F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("rank"))
+    )
+    for _ in range(_ITERS):
+        # NO repartition before the agg (optimization r12, guide
+        # §2.3): the r5 spelling repartitioned the JOINED edge set
+        # by dst — a full |edges|-row exchange per iteration that
+        # also forbade map-side combine. Letting the groupBy plan
+        # itself puts a partial aggregate below the exchange, so
+        # only |parts| x |nodes| partial rows cross the wire.
         ranks = (
-            norm.select("src")
-            .distinct()
-            .select(F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("rank"))
-        )
-        for _ in range(_ITERS):
-            # NO repartition before the agg (optimization r12, guide
-            # §2.3): the r5 spelling repartitioned the JOINED edge set
-            # by dst — a full |edges|-row exchange per iteration that
-            # also forbade map-side combine. Letting the groupBy plan
-            # itself puts a partial aggregate below the exchange, so
-            # only |parts| x |nodes| partial rows cross the wire.
-            ranks = (
-                norm.join(ranks, norm["src"] == ranks["node"])
-                .groupBy(norm["dst"])
-                .agg(
-                    (F.lit((1.0 - _D) / n_nodes)
-                     + F.lit(_D) * F.sum(norm["p"] * ranks["rank"])).alias("rank")
-                )
-                .select(F.col("dst").alias("node"), "rank")
+            norm.join(ranks, norm["src"] == ranks["node"])
+            .groupBy(norm["dst"])
+            .agg(
+                (F.lit((1.0 - _D) / n_nodes)
+                 + F.lit(_D) * F.sum(norm["p"] * ranks["rank"])).alias("rank")
             )
-        # string spelling + STRING tie-break on the |nodes|-row frame
-        # only (narrow keys, r12 session 4 — see _node_str)
-        out = (
-            ranks.select(
-                _node_str(F.col("node")).alias("node"),
-                r4(F.col("rank") * n_nodes).alias("rank_scaled"),
-            )
-            .orderBy(F.desc("rank_scaled"), F.asc("node"))
-            .limit(50)
+            .select(F.col("dst").alias("node"), "rank")
         )
-        # materialize before unpersisting the transition matrix the
-        # plan depends on; explicit conf-width partitioning keeps the
-        # checkpoint's RDD-path evaluation (which skips AQE) small
-        return out.localCheckpoint()
-    finally:
-        norm.unpersist()
+    # string spelling + STRING tie-break on the |nodes|-row frame
+    # only (narrow keys, r12 session 4 — see _node_str)
+    out = (
+        ranks.select(
+            _node_str(F.col("node")).alias("node"),
+            r4(F.col("rank") * n_nodes).alias("rank_scaled"),
+        )
+        .orderBy(F.desc("rank_scaled"), F.asc("node"))
+        .limit(50)
+    )
+    # explicit conf-width partitioning keeps the barrier's RDD-path
+    # evaluation (which skips AQE) small
+    return barrier(out, norm)
 
 
 @query(
@@ -281,15 +277,20 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # The oriented edge list is dimension-sized (scales with |parts in
-    # one brand|, not the fact). persist() pins the plan away from AQE
+    # one brand|, not the fact). The barrier pins the plan away from AQE
     # coalescing, so size the width explicitly FROM the data: count the
-    # edges (cheap — the relation is small by construction), then give
-    # the cached relation one partition per ~50k edges. At the fixture
-    # that's 1; at cluster scale the width follows |e| instead of being
-    # hardcoded.
-    e = e.persist()
+    # edges (cheap — the relation is small by construction; the count
+    # materializes the barrier), then give the edge list one partition
+    # per ~50k edges. At the fixture that's 1; at cluster scale the
+    # width follows |e| instead of being hardcoded.
+    e = barrier(e, eager=False)
     width = int(e.count() // 50_000) + 1  # never widens: coalesce only shrinks
     e = e.coalesce(width)
+    if width == 1:
+        # a checkpoint keeps the optimizer's size estimate, not the size
+        # the count just measured: one partition of edges is broadcast
+        # to the wedge joins, as a materialized cache would have been
+        e = F.broadcast(e)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.v") == F.col("e2.u"))
@@ -345,8 +346,6 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from .scale_patterns import direction_double
-
     edges = direction_double(e0, "src", "dst")  # one e0 evaluation (r12)
     # narrow keys through the data-sized dedup/degree aggregates; the
     # oracle's min(node) is a STRING min, so the string spelling is
@@ -494,8 +493,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round is one degree aggregate + two hash semi-joins of
     the edge list against the (shrinking) survivor set — all keyed
     shuffles, no single-task stage; the loop materializes each round's
-    edge list via localCheckpoint to truncate lineage (same discipline
-    as graph_pagerank_fixed). At 1000 executors a full k-core
+    edge list behind a barrier that frees the round it replaces (same
+    discipline as graph_pagerank_fixed). At 1000 executors a full k-core
     decomposition would iterate to fixpoint with the same per-round
     plan; the FIXED round count here keeps the result a deterministic
     oracle-checkable contract.
@@ -519,8 +518,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") >= 2)
         .select("src", "dst")
     )
-    from .scale_patterns import direction_double
-
     und = direction_double(
         e0.select(F.col("src").alias("a"), F.col("dst").alias("b")), "a", "b"
     )  # one e0 evaluation (r12)
@@ -538,21 +535,24 @@ def kcore_rounds(
     [(round, surviving_nodes, surviving_undirected_edges), ...].
     Each round: degree aggregate -> drop nodes with degree < k -> keep
     edges whose BOTH endpoints survive; edge lists are repartitioned on
-    the join key and localCheckpoint()ed to truncate lineage."""
+    the join key behind a barrier that frees the previous round."""
     parts = parts or _parts(und.sparkSession)
-    und = und.repartition(parts, "a").localCheckpoint()
+    und = barrier(und.repartition(parts, "a"))
     rows = []
     for r in range(1, rounds + 1):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         surv = deg.filter(F.col("d") >= k).select("a")
-        und = (
+        n_nodes = surv.count()  # reads round r-1: count it before the free
+        und = barrier(
             und.join(surv.withColumnRenamed("a", "ka"), F.col("a") == F.col("ka"))
             .drop("ka")
             .join(surv.withColumnRenamed("a", "kb"), F.col("b") == F.col("kb"))
             .drop("kb")
+            .repartition(parts, "a"),
+            und,
         )
-        und = und.repartition(parts, "a").localCheckpoint()
-        rows.append((r, surv.count(), und.count() // 2))
+        rows.append((r, n_nodes, und.count() // 2))
+    free_checkpoint(und)  # rows are plain ints
     return rows
 
 
@@ -664,14 +664,13 @@ def graph_adamic_adar_top_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph surface; extension tier."""
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
-    cp = (
+    cp = barrier(
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
         # three consumers (both pair-join sides + the degree table)
         # each inlined — and executed — the join+distinct build;
         # one checkpoint bounds it to a single evaluation (r12)
-        .localCheckpoint()
     )
     deg = cp.groupBy("p").agg(F.count(F.lit(1)).alias("d"))
     a = cp.select(F.col("c").alias("ca"), "p")
@@ -722,18 +721,15 @@ def _lpa_edges_labels(spark: SparkSession, sf_dir: str):
     # partition-once + share-once (optimization r12, guide §2.1/§2.6):
     # both LPA rounds join on edges["src"], and graph_modularity joins
     # the SAME edge list again downstream — one clustered+sorted
-    # localCheckpoint stops every consumer from re-running the
+    # barrier stops every consumer from re-running the
     # lineitem⋈orders build and re-shuffling the edge list. The final
     # labels are checkpointed too: modularity stamps them onto BOTH
     # edge endpoints, which otherwise re-evaluates the whole 2-round
     # vote/argmax chain twice.
-    from .scale_patterns import direction_double
-
-    edges = (
+    edges = barrier(
         direction_double(e0, "src", "dst", ("w",))  # one e0 evaluation (r12)
         .repartition(_graph_parts(spark, sf_dir), "src")
         .sortWithinPartitions("src")
-        .localCheckpoint()
     )
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -762,7 +758,7 @@ def _lpa_edges_labels(spark: SparkSession, sf_dir: str):
             .filter(F.col("rn") == 1)
             .select(F.col("vnode").alias("node"), "label")
         )
-    return edges, labels.localCheckpoint()
+    return edges, barrier(labels)
 
 
 def _oracle_lpa() -> str:
@@ -825,7 +821,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted count + a node-PARTITIONED rank (argmax per node, never a
     global sort); edge weights are exact bigints so the argmax has no
     float ambiguity. At cluster scale the per-round label vector would
-    be localCheckpoint()ed like the pagerank loop above."""
+    take a barrier of its own, like the HITS score vectors."""
     edges, labels = _lpa_edges_labels(spark, sf_dir)
     return (
         labels.groupBy(F.col("label").alias("cid"))
@@ -983,73 +979,70 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
     # partition-once, iterate-many (optimization r12, guide §2.1): the
-    # a-step joins on c, the h-step on s — persist ONE clustered+sorted
-    # copy per key so neither join exchanges or sorts the edge list
-    # inside the loop; only the |nodes|-row score vectors shuffle.
+    # a-step joins on c, the h-step on s — one clustered+sorted copy
+    # per key behind a lazy barrier, so neither join exchanges or sorts
+    # the edge list inside the loop; only the |nodes|-row score vectors
+    # shuffle.
     gp = _graph_parts(spark, sf_dir)
-    edges_c = edges.repartition(gp, "c").sortWithinPartitions("c").persist()
-    edges_s = edges.repartition(gp, "s").sortWithinPartitions("s").persist()
-    edges = edges_c
-    try:
-        hub = edges.select("c").distinct().select(
-            F.col("c").alias("node"), F.lit(1.0).alias("score")
-        )
-        # max-normalize INSIDE the half-round plan (optimization r12):
-        # the r10 spelling ran a separate max-aggregate job whose plan
-        # re-evaluated the matrix-vector join, so every half-round paid
-        # the matvec TWICE (once for amax, once for the checkpointed
-        # normalize). An unpartitioned max window over the per-round
-        # aggregate — bounded input: |suppliers| resp. |customers| rows,
-        # the audit-allowlisted pattern — evaluates the matvec once per
-        # half-round, in the single checkpoint job.
-        from pyspark.sql import Window
+    edges_c = barrier(edges.repartition(gp, "c").sortWithinPartitions("c"), eager=False)
+    edges_s = barrier(edges.repartition(gp, "s").sortWithinPartitions("s"), eager=False)
+    hub = edges_c.select("c").distinct().select(
+        F.col("c").alias("node"), F.lit(1.0).alias("score")
+    )
+    # max-normalize INSIDE the half-round plan (optimization r12):
+    # the r10 spelling ran a separate max-aggregate job whose plan
+    # re-evaluated the matrix-vector join, so every half-round paid
+    # the matvec TWICE (once for amax, once for the checkpointed
+    # normalize). An unpartitioned max window over the per-round
+    # aggregate — bounded input: |suppliers| resp. |customers| rows,
+    # the audit-allowlisted pattern — evaluates the matvec once per
+    # half-round, in the single barrier job.
+    from pyspark.sql import Window
 
-        wall = Window.partitionBy()
-        auth = None
-        for _ in range(_HITS_ITERS):
-            edges = edges_c
-            ar = (
-                edges.join(hub, edges["c"] == hub["node"])
-                .groupBy(edges["s"].alias("node"))
-                .agg(F.sum(edges["w"] * hub["score"]).alias("raw"))
-            )
-            # eager lineage truncation per half-round: the score
-            # vectors are |nodes|-row; without it the unrolled plan
-            # re-evaluates every earlier round per downstream branch
-            auth = ar.select(
-                "node", (F.col("raw") / F.max("raw").over(wall)).alias("score")
-            ).localCheckpoint()
-            edges = edges_s
-            hr = (
-                edges.join(auth, edges["s"] == auth["node"])
-                .groupBy(edges["c"].alias("node"))
-                .agg(F.sum(edges["w"] * auth["score"]).alias("raw"))
-            )
-            hub = hr.select(
-                "node", (F.col("raw") / F.max("raw").over(wall)).alias("score")
-            ).localCheckpoint()
-        top_a = (
-            auth.select(
-                F.lit("authority").alias("kind"),
-                F.concat(F.lit("s"), F.col("node").cast("string")).alias("node"),
-                r4(F.col("score")).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("node"))
-            .limit(20)
+    wall = Window.partitionBy()
+    auth = hub  # round 0: plain plans, so freeing them is a no-op
+    for _ in range(_HITS_ITERS):
+        # eager lineage truncation per half-round: the score vectors
+        # are |nodes|-row; without it the unrolled plan re-evaluates
+        # every earlier round per downstream branch. Each barrier frees
+        # its own previous round, dead since the other half-round read it.
+        ar = (
+            edges_c.join(hub, edges_c["c"] == hub["node"])
+            .groupBy(edges_c["s"].alias("node"))
+            .agg(F.sum(edges_c["w"] * hub["score"]).alias("raw"))
         )
-        top_h = (
-            hub.select(
-                F.lit("hub").alias("kind"),
-                F.concat(F.lit("c"), F.col("node").cast("string")).alias("node"),
-                r4(F.col("score")).alias("score"),
-            )
-            .orderBy(F.desc("score"), F.asc("node"))
-            .limit(20)
+        auth = barrier(
+            ar.select("node", (F.col("raw") / F.max("raw").over(wall)).alias("score")),
+            auth,
         )
-        return top_a.unionAll(top_h).localCheckpoint()
-    finally:
-        edges_c.unpersist()
-        edges_s.unpersist()
+        hr = (
+            edges_s.join(auth, edges_s["s"] == auth["node"])
+            .groupBy(edges_s["c"].alias("node"))
+            .agg(F.sum(edges_s["w"] * auth["score"]).alias("raw"))
+        )
+        hub = barrier(
+            hr.select("node", (F.col("raw") / F.max("raw").over(wall)).alias("score")),
+            hub,
+        )
+    top_a = (
+        auth.select(
+            F.lit("authority").alias("kind"),
+            F.concat(F.lit("s"), F.col("node").cast("string")).alias("node"),
+            r4(F.col("score")).alias("score"),
+        )
+        .orderBy(F.desc("score"), F.asc("node"))
+        .limit(20)
+    )
+    top_h = (
+        hub.select(
+            F.lit("hub").alias("kind"),
+            F.concat(F.lit("c"), F.col("node").cast("string")).alias("node"),
+            r4(F.col("score")).alias("score"),
+        )
+        .orderBy(F.desc("score"), F.asc("node"))
+        .limit(20)
+    )
+    return barrier(top_a.unionAll(top_h), edges_c, edges_s, auth, hub)
 
 
 # ---------------------------------------------------------------------------
@@ -1179,7 +1172,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: every round is one edge join + one hash aggregate, all
     keyed (src, node) — sources process TOGETHER as one column, so
     pivot count scales the data volume, not the round count; depth is
-    the diameter cap. localCheckpoint truncates the per-round lineage
+    the diameter cap. A barrier per round truncates the lineage
     (C205 discipline). Pivot sampling is the standard
     Bader-Pich/Brandes estimator shape for 100 TB graphs: exact
     per-pivot, sampled over pivots.""".format(s=_BC_SOURCES, d=_BC_DEPTH)
@@ -1196,145 +1189,143 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # partition-once, iterate-many (optimization r12, guide §2.1):
     # every one of the 8 loop joins keys on edges["u"] — cluster+sort
-    # on u at persist time so no round exchanges or sorts the edge
-    # list; only the (src,node)-bounded frontier/delta frames shuffle.
-    from .scale_patterns import direction_double
-
-    edges = (
+    # on u behind a lazy barrier so no round exchanges or sorts the
+    # edge list; only the (src,node)-bounded frontier/delta frames
+    # shuffle.
+    edges = barrier(
         direction_double(
             e0.select(F.col("a").alias("u"), F.col("b").alias("v")), "u", "v"
         )  # one e0 evaluation (r12)
         .repartition(_graph_parts(spark, sf_dir), "u")
-        .sortWithinPartitions("u")
-        .persist()
+        .sortWithinPartitions("u"),
+        eager=False,
     )
-    try:
-        # packed state key (optimization r13): pk = node*16 + src DIV 2
-        # — a bijection of (src, node) into one long (src = 2k, k < 8).
-        # Initially node == src.
-        f = (
-            table(spark, sf_dir, "customer")
-            .filter(F.col("c_custkey") < _BC_SOURCES)
-            .select((F.col("c_custkey").cast("bigint") * 2).alias("src"))
+    # packed state key (optimization r13): pk = node*16 + src DIV 2
+    # — a bijection of (src, node) into one long (src = 2k, k < 8).
+    # Initially node == src.
+    f = (
+        table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") < _BC_SOURCES)
+        .select((F.col("c_custkey").cast("bigint") * 2).alias("src"))
+        .select(
+            (F.col("src") * 16 + F.expr("src DIV 2")).alias("pk"),
+            F.lit(1).cast("bigint").alias("sigma"),
+            F.lit(0).alias("lvl"),
+        )
+    )
+    visited = barrier(f)
+    frontier = visited
+    rounds = [visited]  # every round barrier; the result's barrier frees them
+    for k in range(1, _BC_DEPTH + 1):
+        cand = (
+            edges.join(frontier, edges["u"] == F.expr("pk DIV 16"))
             .select(
-                (F.col("src") * 16 + F.expr("src DIV 2")).alias("pk"),
-                F.lit(1).cast("bigint").alias("sigma"),
-                F.lit(0).alias("lvl"),
+                (edges["v"] * 16 + F.expr("pk % 16")).alias("pk"), "sigma"
             )
         )
-        visited = f.localCheckpoint()
-        frontier = visited
-        for k in range(1, _BC_DEPTH + 1):
-            cand = (
-                edges.join(frontier, edges["u"] == F.expr("pk DIV 16"))
-                .select(
-                    (edges["v"] * 16 + F.expr("pk % 16")).alias("pk"), "sigma"
-                )
+        # aggregate BEFORE the anti-join (optimization r12, guide
+        # §2.3): the two commute — the anti-join drops whole
+        # (src,node) keys, so summing sigma first computes the same
+        # sigma for surviving keys — and the map-side combine
+        # shrinks the shuffled volume from |cand| raw rows (deg-
+        # expanded, ~1M at sf0.1 round 2) to <= |src|x|nodes|
+        # partials at ANY scale.
+        nxt = barrier(
+            cand.groupBy("pk")
+            .agg(F.sum("sigma").cast("bigint").alias("sigma"))
+            .join(
+                visited.select(F.col("pk").alias("vpk")),
+                F.col("pk") == F.col("vpk"),
+                "left_anti",
             )
-            # aggregate BEFORE the anti-join (optimization r12, guide
-            # §2.3): the two commute — the anti-join drops whole
-            # (src,node) keys, so summing sigma first computes the same
-            # sigma for surviving keys — and the map-side combine
-            # shrinks the shuffled volume from |cand| raw rows (deg-
-            # expanded, ~1M at sf0.1 round 2) to <= |src|x|nodes|
-            # partials at ANY scale.
-            nxt = (
-                cand.groupBy("pk")
-                .agg(F.sum("sigma").cast("bigint").alias("sigma"))
-                .join(
-                    visited.select(F.col("pk").alias("vpk")),
-                    F.col("pk") == F.col("vpk"),
-                    "left_anti",
-                )
-                .withColumn("lvl", F.lit(k))
-                .localCheckpoint()
-            )
-            # no checkpoint on the union: both legs are themselves
-            # checkpointed, so the lineage is already truncated — the
-            # r10 checkpoint here re-materialized the whole visited
-            # set once per round (optimization r12)
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-        # backward accumulation
-        deltas = (
-            visited.filter(F.col("lvl") == _BC_DEPTH)
-            .select("pk", "lvl", "sigma",
-                    F.lit(0).cast("bigint").alias("dq"))
-            .localCheckpoint()
+            .withColumn("lvl", F.lit(k))
         )
-        acc = deltas
-        for k in range(_BC_DEPTH - 1, -1, -1):
-            lower = visited.filter(F.col("lvl") == k)
-            succ = deltas.filter(F.col("lvl") == k + 1).select(
-                F.col("pk").alias("wpk"),
-                F.col("sigma").alias("wsig"), F.col("dq").alias("wdq"),
-            )
-            # shuffled-hash hint on the successor side (optimization
-            # r12, guide §3.2): succ is the pivot-bounded delta table,
-            # far smaller than the deg-expanded lower⋈edges stream —
-            # SHJ builds on succ and skips the SMJ sort of the big
-            # intermediate (per partition, at any scale). The join key
-            # is the packed successor state (v*16 + src DIV 2) == wpk:
-            # one long instead of the (src, wn) composite.
-            contrib = (
-                lower.join(edges, edges["u"] == F.expr("pk DIV 16"))
-                .join(
-                    succ.hint("shuffle_hash"),
-                    (edges["v"] * 16 + F.expr("pk % 16")) == F.col("wpk"),
-                )
-                .groupBy("pk", "lvl", "sigma")
-                .agg(
-                    F.sum(
-                        F.expr(f"(sigma * ({_BC_Q} + wdq)) DIV wsig")
-                    ).cast("bigint").alias("dq")
-                )
-            )
-            lvl_d = (
-                lower.join(
-                    contrib.select(
-                        F.col("pk").alias("cpk"), F.col("dq").alias("cdq")
-                    ),
-                    F.col("pk") == F.col("cpk"),
-                    "left",
-                )
-                .select(
-                    "pk", "lvl", "sigma",
-                    F.coalesce(F.col("cdq"), F.lit(0)).cast("bigint").alias("dq"),
-                )
-                .localCheckpoint()
-            )
-            deltas = lvl_d
-            acc = acc.unionByName(lvl_d)  # legs checkpointed; no re-mat
-        bc = (
-            acc.select(
-                F.expr("pk DIV 16").alias("node"),
-                ((F.col("pk") % 16) * 2).alias("src"),
-                "dq",
-            )
-            .filter(F.col("node") != F.col("src"))
-            .groupBy("node")
-            .agg(F.sum("dq").cast("bigint").alias("bcq"))
+        # no checkpoint on the union: both legs are themselves
+        # checkpointed, so the lineage is already truncated — the
+        # r10 checkpoint here re-materialized the whole visited
+        # set once per round (optimization r12)
+        visited = visited.unionByName(nxt)
+        frontier = nxt
+        rounds.append(nxt)
+    # backward accumulation
+    deltas = barrier(
+        visited.filter(F.col("lvl") == _BC_DEPTH)
+        .select("pk", "lvl", "sigma",
+                F.lit(0).cast("bigint").alias("dq"))
+    )
+    acc = deltas
+    rounds.append(deltas)
+    for k in range(_BC_DEPTH - 1, -1, -1):
+        lower = visited.filter(F.col("lvl") == k)
+        succ = deltas.filter(F.col("lvl") == k + 1).select(
+            F.col("pk").alias("wpk"),
+            F.col("sigma").alias("wsig"), F.col("dq").alias("wdq"),
         )
-        # re-materialize the oracle's string spelling on the |nodes|-row
-        # aggregate only, and tie-break on the STRING so the top-20 row
-        # order matches the oracle bit-for-bit ('c10' < 'c2' lexically).
-        node_str = F.concat(
-            F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-            F.expr("node div 2").cast("string"),
-        )
-        return (
-            bc.select(
-                node_str.alias("node"),
-                r4(F.col("bcq").cast("double") / _BC_Q).alias("betweenness"),
-                "bcq",
+        # shuffled-hash hint on the successor side (optimization
+        # r12, guide §3.2): succ is the pivot-bounded delta table,
+        # far smaller than the deg-expanded lower⋈edges stream —
+        # SHJ builds on succ and skips the SMJ sort of the big
+        # intermediate (per partition, at any scale). The join key
+        # is the packed successor state (v*16 + src DIV 2) == wpk:
+        # one long instead of the (src, wn) composite.
+        contrib = (
+            lower.join(edges, edges["u"] == F.expr("pk DIV 16"))
+            .join(
+                succ.hint("shuffle_hash"),
+                (edges["v"] * 16 + F.expr("pk % 16")) == F.col("wpk"),
             )
-            .orderBy(F.desc("bcq"), F.asc("node"))
-            .limit(20)
-            .select("node", "betweenness")
-            .localCheckpoint()
+            .groupBy("pk", "lvl", "sigma")
+            .agg(
+                F.sum(
+                    F.expr(f"(sigma * ({_BC_Q} + wdq)) DIV wsig")
+                ).cast("bigint").alias("dq")
+            )
         )
-    finally:
-        edges.unpersist()
+        lvl_d = barrier(
+            lower.join(
+                contrib.select(
+                    F.col("pk").alias("cpk"), F.col("dq").alias("cdq")
+                ),
+                F.col("pk") == F.col("cpk"),
+                "left",
+            )
+            .select(
+                "pk", "lvl", "sigma",
+                F.coalesce(F.col("cdq"), F.lit(0)).cast("bigint").alias("dq"),
+            )
+        )
+        deltas = lvl_d
+        acc = acc.unionByName(lvl_d)  # legs checkpointed; no re-mat
+        rounds.append(lvl_d)
+    bc = (
+        acc.select(
+            F.expr("pk DIV 16").alias("node"),
+            ((F.col("pk") % 16) * 2).alias("src"),
+            "dq",
+        )
+        .filter(F.col("node") != F.col("src"))
+        .groupBy("node")
+        .agg(F.sum("dq").cast("bigint").alias("bcq"))
+    )
+    # re-materialize the oracle's string spelling on the |nodes|-row
+    # aggregate only, and tie-break on the STRING so the top-20 row
+    # order matches the oracle bit-for-bit ('c10' < 'c2' lexically).
+    node_str = F.concat(
+        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
+        F.expr("node div 2").cast("string"),
+    )
+    return barrier(
+        bc.select(
+            node_str.alias("node"),
+            r4(F.col("bcq").cast("double") / _BC_Q).alias("betweenness"),
+            "bcq",
+        )
+        .orderBy(F.desc("bcq"), F.asc("node"))
+        .limit(20)
+        .select("node", "betweenness"),
+        edges,
+        *rounds,
+    )
 
 
 # r12 C272: clustering coefficient — the triangle-density readout on

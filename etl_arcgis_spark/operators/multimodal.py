@@ -944,7 +944,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold {mh} would need {mh}+1 ~6-bit bands whose tiny buckets
     explode the candidate join at corpus scale — the wrong trade; the
     goldens pin the 4-band output exactly.""".format(mh=_PHASH_MAXHAM)
-    from .scale_patterns import spread_for_fanout
+    from .scale_patterns import barrier, spread_for_fanout
 
     # spread BEFORE the Python synth/codec ladder (optimization r12)
     docs = spread_for_fanout(
@@ -970,9 +970,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of (doc_id, ph) — two longs — and at any scale re-decoding the
     # corpus per join leg is exactly what the guide's "decide with
     # small rows" rule forbids.
-    hashed = docs.mapInPandas(
-        synth_hash, schema="doc_id bigint, ph long"
-    ).localCheckpoint()
+    hashed = barrier(docs.mapInPandas(synth_hash, schema="doc_id bigint, ph long"))
     bands = hashed.select(
         "doc_id",
         "ph",

@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scale_patterns import barrier
+
 
 def with_quarantine(
     df: DataFrame,
@@ -66,11 +68,12 @@ def with_quarantine(
                     )
             yield pd.DataFrame(rows, columns=all_names)
 
-    # persist: the two returned frames are both consumed (main sink +
-    # dead-letter sink); without it each action re-executes fn over
-    # every record — double cost, and divergent splits if fn is
-    # non-deterministic. Caller unpersists when done.
-    both = df.mapInPandas(run, schema=union_schema).persist()
+    # lazy barrier: the two returned frames are both consumed (main
+    # sink + dead-letter sink); without it each action re-executes fn
+    # over every record — double cost, and divergent splits if fn is
+    # non-deterministic. It never enters the session cache, so there is
+    # nothing for the caller to release: the blocks go with the frames.
+    both = barrier(df.mapInPandas(run, schema=union_schema), eager=False)
     good = both.filter(F.col("_qerror").isNull()).select(*out_names)
     quarantined = both.filter(F.col("_qerror").isNotNull()).select(
         *[F.col(f"_raw_{c}").alias(c) for c in in_cols],
@@ -113,9 +116,9 @@ def etl_quarantine_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     preservation, two-stream fan-out — hash-checks against a pure-SQL
     oracle.
 
-    Scale: one Arrow-batched Python pass (persisted so the good and
-    dead-letter sinks don't re-execute it), then two scan-side filters
-    of the persisted frame; counts are map-side combinable."""
+    Scale: one Arrow-batched Python pass (behind a barrier so the good
+    and dead-letter sinks don't re-execute it), then two scan-side
+    filters of the barriered frame; counts are map-side combinable."""
     import json as _json
 
     ev = table(spark, sf_dir, "events").select("event_id", "event_type", "props")

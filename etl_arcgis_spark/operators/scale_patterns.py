@@ -104,11 +104,13 @@ def two_phase_global_median(df: DataFrame, vcol: str, out: str = "m") -> DataFra
     # nests two medians plus a count pass: ~12 input evaluations).
     v = df.select(F.col(vcol).alias("v"))
     stats = F.broadcast(
-        v.agg(
-            F.min("v").alias("mn"),
-            F.max("v").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        ).localCheckpoint()
+        barrier(
+            v.agg(
+                F.min("v").alias("mn"),
+                F.max("v").alias("mx"),
+                F.count(F.lit(1)).alias("n"),
+            )
+        )
     )
     binned = v.crossJoin(stats).withColumn(
         "bin",
@@ -135,17 +137,19 @@ def two_phase_global_median(df: DataFrame, vcol: str, out: str = "m") -> DataFra
         .withColumn("r1", F.expr("(n + 1) div 2"))
         .withColumn("r2", F.expr("n div 2 + 1"))
     )
-    needed = cum.filter(
-        (F.col("cum_before") < F.col("r2"))
-        & ((F.col("cum_before") + F.col("cnt")) >= F.col("r1"))
-    ).select("bin", "cum_before", "r1", "r2").localCheckpoint()
+    needed = barrier(
+        cum.filter(
+            (F.col("cum_before") < F.col("r2"))
+            & ((F.col("cum_before") + F.col("cnt")) >= F.col("r1"))
+        ).select("bin", "cum_before", "r1", "r2")
+    )
     cand = binned.select("bin", "v").join(F.broadcast(needed), "bin")
     w_in = Window.partitionBy("bin").orderBy(F.asc("v"))
     ranked = cand.withColumn("grank", F.col("cum_before") + F.row_number().over(w_in))
     hits = ranked.filter(
         (F.col("grank") == F.col("r1")) | (F.col("grank") == F.col("r2"))
     )
-    return hits.agg(F.avg("v").alias(out)).localCheckpoint()
+    return barrier(hits.agg(F.avg("v").alias(out)))
 
 
 def direction_double(df: DataFrame, a: str, b: str, extra: tuple = ()) -> DataFrame:
@@ -171,23 +175,63 @@ def direction_double(df: DataFrame, a: str, b: str, extra: tuple = ()) -> DataFr
     )
 
 
-def free_checkpoint(df: DataFrame) -> None:
-    """Release the storage blocks behind a ``localCheckpoint()``ed
-    DataFrame whose data is DEAD — i.e. no live plan will read it
-    again. The DataFrame must not be used afterwards (its lineage was
-    truncated at checkpoint time, so the blocks are the only copy).
+def barrier(df: DataFrame, *dead: DataFrame, eager: bool = True) -> DataFrame:
+    """The one materialization barrier of the operators: return ``df``
+    behind a ``localCheckpoint`` (its lineage truncated, its rows
+    computed once however many plans read it), then free each frame in
+    ``dead`` with ``free_checkpoint``.
 
-    Why (optimization r12, guide §5): checkpoint blocks are pinned
+    The one rule: a dead frame is freed only AFTER its successor is
+    materialized, since the successor's rows may still be computed from
+    the dead frame's blocks until then — so ``dead`` needs ``eager``.
+    Plain (never checkpointed) frames in ``dead`` are no-ops, so a loop
+    may pass its init frame as round 0.
+
+    ``eager=False`` is the lazy barrier that replaces ``persist()``: the
+    first action that reads the frame materializes it. Unlike
+    ``persist()`` it never enters the session's CacheManager, so a later
+    run of the same plan recomputes instead of silently reading this
+    run's rows. Like ``persist()`` it keeps an explicit hash layout
+    (``repartition(n, key)``, optionally ``sortWithinPartitions``: the
+    partition-once, iterate-many edge lists) for the joins that follow:
+    such a frame is planned with AQE off, because a checkpoint of an
+    adaptive plan reports UnknownPartitioning and every consumer would
+    re-shuffle and re-sort the layout. Any other frame keeps the
+    session's planning.
+
+    Why free (optimization r12, guide §5): checkpoint blocks are pinned
     until the JVM garbage-collects the backing RDD *and* the
     ContextCleaner runs — in a long session that runs hundreds of
     queries (the driver's verification window, the full-registry
     sweep) dead blocks from iterative loops accumulate for minutes,
     inflating GC pressure until allocation stalls (measured: a
     35-query sweep session died with GCLocker retry failures, and
-    checkpoint-loop queries ran 2x their fresh-session cost).
-    Iterative operators call this on round t-1's frame as soon as
-    round t is materialized, making peak storage O(1 round), not
-    O(rounds).
+    checkpoint-loop queries ran 2x their fresh-session cost). Loops
+    therefore pass round t-1 as dead when round t lands (peak storage
+    O(1 round), not O(rounds)), and a function that ends in a barrier
+    passes every frame its result no longer reads."""
+    if dead and not eager:
+        raise ValueError("barrier frees dead frames only behind an eager checkpoint")
+    conf = df.sparkSession.conf
+    aqe = conf.get("spark.sql.adaptive.enabled")
+    layout = None if eager else df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if layout is not None and layout.getClass().getSimpleName() == "HashPartitioning":
+        conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        out = df.localCheckpoint(eager=eager)
+    finally:
+        conf.set("spark.sql.adaptive.enabled", aqe)
+    for d in dead:
+        free_checkpoint(d)
+    return out
+
+
+def free_checkpoint(df: DataFrame) -> None:
+    """Release the storage blocks behind a ``barrier``ed DataFrame
+    whose data is DEAD — i.e. no live plan will read it again (see
+    ``barrier`` for why). The DataFrame must not be used afterwards
+    (its lineage was truncated at checkpoint time, so the blocks are
+    the only copy). A frame that is not itself a checkpoint is a no-op.
 
     The py4j accessor path (analyzed plan -> LogicalRDD -> rdd ->
     unpersist) is version-sensitive. Failing to free is safe, so a
@@ -293,7 +337,7 @@ def bucketed_global_rank(
     itself NULL and the offsets equi-join silently dropped those rows.
 
     Evaluate-once (optimization r12, guide §2.6): the 1-row stats and
-    the <= n_bins+1-row offsets frames are localCheckpoint()ed —
+    the <= n_bins+1-row offsets frames are behind barriers —
     without the barriers Catalyst inlined the stats aggregate into
     BOTH ``binned`` references (offsets leg + join leg) and re-ran the
     full input subtree under each, 4 scans of the base per run. Both
@@ -310,11 +354,13 @@ def bucketed_global_rank(
     would otherwise plan an unpartitioned WindowExec (all distribution
     stats are pure functions of (rank, n))."""
     stats = F.broadcast(
-        df.agg(
-            F.min(value_col).alias("_mn"),
-            F.max(value_col).alias("_mx"),
-            F.count(F.lit(1)).alias(out_n),
-        ).localCheckpoint()
+        barrier(
+            df.agg(
+                F.min(value_col).alias("_mn"),
+                F.max(value_col).alias("_mx"),
+                F.count(F.lit(1)).alias(out_n),
+            )
+        )
     )
     binned = df.crossJoin(stats).withColumn(
         "_bin",
@@ -335,14 +381,13 @@ def bucketed_global_rank(
     w_off = Window.orderBy(F.asc("_bin")).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    offsets = (
+    offsets = barrier(
         binned.groupBy("_bin")
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .select(
             "_bin",
             F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_offset"),
         )
-        .localCheckpoint()
     )
     w_in = Window.partitionBy("_bin").orderBy(
         F.asc(value_col), F.asc(tiebreak_col)

@@ -1844,7 +1844,7 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         )
         % _KM_K
     ).cast("bigint")
-    from .scale_patterns import free_checkpoint, spread_for_fanout
+    from .scale_patterns import barrier, spread_for_fanout
 
     # spread BEFORE the per-row E-step ladders (optimization r12): the
     # single-split embeddings scan otherwise evaluates every
@@ -1857,7 +1857,7 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # does not re-execute iterations 1..t-1 (the unrolled chain was
     # quadratic in iteration count). Values are untouched — the
     # barriers only pin where recomputation stops.
-    q = (
+    q = barrier(
         spread_for_fanout(
             table(spark, sf_dir, "embeddings"),
             n_rows=row_count(sf_dir, "embeddings"),
@@ -1872,16 +1872,13 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
             bucket.alias("bucket"),
             h.alias("h"),
         )
-        .localCheckpoint()
     )
     c0 = q.groupBy(F.col("bucket").alias("cid")).agg(
         F.expr("transform(min_by(qv, h), x -> CAST(x AS DOUBLE))").alias(
             "cvec"
         )
     )
-    cents = c0.agg(
-        F.collect_list(F.struct("cid", "cvec")).alias("cents")
-    ).localCheckpoint()
+    cents = barrier(c0.agg(F.collect_list(F.struct("cid", "cvec")).alias("cents")))
     for _t in range(_KM_ITERS):
         e = q.crossJoin(F.broadcast(cents)).withColumn(
             "cid", F.expr(_km_argmin("spark") + ".cid")
@@ -1898,13 +1895,11 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
                 "e -> CAST(e.s AS DOUBLE) / e.c)"
             ).alias("cvec")
         )
-        new_cents = c_t.agg(
-            F.collect_list(F.struct("cid", "cvec")).alias("cents")
-        ).localCheckpoint()
         # iteration t-1's centroid checkpoint is dead once t's is
         # materialized (optimization r12 session hygiene)
-        free_checkpoint(cents)
-        cents = new_cents
+        cents = barrier(
+            c_t.agg(F.collect_list(F.struct("cid", "cvec")).alias("cents")), cents
+        )
     return q, cents
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..helpers import LAT, LON, r4
 from ..registry import query
 from ..tables import row_count, table
+from .scale_patterns import barrier
 
 _BAND = 2.5  # distance band for Moran/Gi* (degrees); band^2 = 6.25 exact
 
@@ -1811,16 +1812,18 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise each re-run the 3x3 grid join AND the md5-ladder
     # coordinate derivation — the pair set is ~1.5 |P| rows of two ints
     # at the subcritical density, so the checkpoint is tiny.
-    pairs = _band_pairs(p, _DB_EPS, _DB_EPS2).select("ka", "kb").localCheckpoint()
+    pairs = barrier(_band_pairs(p, _DB_EPS, _DB_EPS2).select("ka", "kb"))
     deg = (
         pairs.select(F.col("ka").alias("k"))
         .unionAll(pairs.select(F.col("kb").alias("k")))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    flagged = p.select("k").join(deg, "k", "left").select(
-        "k", (F.coalesce("d", F.lit(0)) + 1 >= _DB_MINPTS).alias("is_core")
-    ).localCheckpoint()  # |P| rows; consumed by core (3 uses) + border
+    flagged = barrier(  # |P| rows; consumed by core (3 uses) + border
+        p.select("k").join(deg, "k", "left").select(
+            "k", (F.coalesce("d", F.lit(0)) + 1 >= _DB_MINPTS).alias("is_core")
+        )
+    )
     core = flagged.where("is_core").select("k")
     ce = (
         pairs.join(core.select(F.col("k").alias("ka")), "ka", "semi")
@@ -1831,7 +1834,7 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     nbr = pairs.select(F.col("ka").alias("k"), F.col("kb").alias("nk")).unionAll(
         pairs.select(F.col("kb").alias("k"), F.col("ka").alias("nk"))
     )
-    border = (
+    border = barrier(
         flagged.where(~F.col("is_core"))
         .select("k")
         .join(nbr, "k")
@@ -1840,8 +1843,7 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("k")
         .agg(F.min("component_id").alias("c"))
-        .localCheckpoint()  # border adoption consumed twice (counts + noise)
-    )
+    )  # border adoption consumed twice (counts + noise)
     clusters = comp.groupBy(F.col("component_id").alias("cluster_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_core")
     )

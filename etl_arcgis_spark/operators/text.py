@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from ..helpers import r4
 from ..registry import query
 from ..tables import row_count, table
-from .scale_patterns import bucketed_running_sums
+from .scale_patterns import barrier, bucketed_running_sums, free_checkpoint
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_SQL = "('" + "', '".join(_STOPWORDS) + "')"
@@ -2527,10 +2527,8 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-token md5 ladder several times (12.0 s at sf0.1; 3.4 s with
     # the barrier). The checkpoint holds one row per doc with its chunk
     # array — document-table-sized, recomputed from parquet every run.
-    ch = (
-        docs.select("source", "chunks")
-        .localCheckpoint()
-        .select("source", F.explode("chunks").alias("c"))
+    ch = barrier(docs.select("source", "chunks")).select(
+        "source", F.explode("chunks").alias("c")
     )
     return (
         ch.groupBy("source")
@@ -3179,14 +3177,16 @@ def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("w").alias("word"))
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    v = wv.withColumn(
-        "seq",
-        F.expr(
-            "aggregate(split(word, ''), '', "
-            "(acc, c) -> CASE WHEN c = '' THEN acc "
-            "ELSE acc || '[' || c || ']' END)"
-        ),
-    ).localCheckpoint()
+    v = barrier(
+        wv.withColumn(
+            "seq",
+            F.expr(
+                "aggregate(split(word, ''), '', "
+                "(acc, c) -> CASE WHEN c = '' THEN acc "
+                "ELSE acc || '[' || c || ']' END)"
+            ),
+        )
+    )
     out_rows = []
     for t in range(1, _BPE_ROUNDS + 1):
         sy = v.withColumn(
@@ -3209,9 +3209,7 @@ def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("freq").alias("cnt"))
         )
-        best = pc.orderBy(
-            F.desc("cnt"), F.asc("a"), F.asc("b")
-        ).limit(1).localCheckpoint()
+        best = barrier(pc.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1))
         out_rows.append(
             best.select(
                 F.lit(t).alias("round"),
@@ -3221,18 +3219,20 @@ def text_bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cnt").cast("bigint").alias("pair_count"),
             )
         )
-        v = (
-            v.crossJoin(F.broadcast(best))
-            .select(
+        if t == _BPE_ROUNDS:
+            break  # the last round's merged vocabulary is never read
+        v = barrier(
+            v.crossJoin(F.broadcast(best)).select(
                 "word",
                 "freq",
                 F.expr(
                     "replace(seq, '[' || a || '][' || b || ']', "
                     "'[' || a || b || ']')"
                 ).alias("seq"),
-            )
-            .localCheckpoint()
+            ),
+            v,
         )
+    free_checkpoint(v)  # the output reads only the `best` barriers
     out = out_rows[0]
     for o in out_rows[1:]:
         out = out.unionAll(o)
@@ -3467,10 +3467,9 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     und = edges.groupBy("src", "dst").agg(F.sum("wt").alias("wt"))
     outw = und.groupBy("src").agg(F.sum("wt").alias("ow"))
-    norm = (
+    norm = barrier(
         und.join(outw, "src")
         .select("src", "dst", (F.col("wt") / F.col("ow")).alias("p"))
-        .localCheckpoint()
     )
     # Rank init reads the checkpointed transition table, NOT outw —
     # referencing outw here re-executed the whole bigram-count chain a
@@ -3479,14 +3478,11 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction). Round t-1's checkpoint is freed as round t lands
     # (batch-8 hygiene), and the transition table is freed once the
     # last round pins its result. (optimization r12 session 5)
-    from .scale_patterns import free_checkpoint
-
     ranks = norm.select(F.col("src").alias("w")).distinct().withColumn(
         "score", F.lit(1.0)
     )
     for _ in range(_TR_ITERS):
-        prev = ranks
-        ranks = (
+        ranks = barrier(
             norm.join(ranks, norm["src"] == ranks["w"])
             .groupBy(norm["dst"].alias("w2"))
             .agg(
@@ -3495,10 +3491,9 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.lit(_TR_D) * F.sum(norm["p"] * ranks["score"])
                 ).alias("score")
             )
-            .select(F.col("w2").alias("w"), "score")
-            .localCheckpoint()
+            .select(F.col("w2").alias("w"), "score"),
+            ranks,  # round 0 is the plain init frame: a no-op free
         )
-        free_checkpoint(prev)  # no-op on the non-checkpoint init frame
     # Freeing norm is only safe because _TR_ITERS >= 1 guarantees the
     # returned `ranks` is a checkpointed frame independent of norm; at
     # 0 iterations the init frame would still read norm's blocks

@@ -148,10 +148,12 @@ def main() -> int:
     names = args.names or sorted(queries)
 
     spark = get_session("check", shuffle_partitions=8)
+    cache = spark._jsparkSession.sharedState().cacheManager()
     con = duck_con(args.sf)
 
     n_pass = n_fail = n_weak = 0
     failures = []
+    leaks = []
     for name in names:
         if name not in queries:
             print(f"?? {name}: not registered")
@@ -164,6 +166,13 @@ def main() -> int:
             n_fail += 1
             failures.append(name)
             continue
+        finally:
+            # a plan left in the CacheManager is swapped into every later
+            # matching plan, so a rerun would time or check a cache read
+            if not cache.isEmpty():
+                print(f"LEAK {name}")
+                leaks.append(name)
+                spark.catalog.clearCache()
         if name not in oracles:
             # Golden-snapshot gate (VERDICT r9 #1): weak queries have no
             # DuckDB oracle by design, but they ARE deterministic within
@@ -219,7 +228,9 @@ def main() -> int:
             notes = "; ".join(p for p in problems)
             print(f"ok   {name}: rows={len(sdf)} ({time.time()-t0:.1f}s){' | ' + notes if notes else ''}")
     print(f"\n{n_pass} ok, {n_weak} weak, {n_fail} FAIL" + (f": {failures}" if failures else ""))
-    return 1 if n_fail else 0
+    if leaks:
+        print(f"{len(leaks)} LEAK: {leaks}")
+    return 1 if n_fail or leaks else 0
 
 
 if __name__ == "__main__":
