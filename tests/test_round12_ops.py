@@ -2608,6 +2608,24 @@ def test_odds_ratio_mh_matches_python_twin(spark):
     assert 0.8 < got["or_mantel_haenszel"] < 1.25
 
 
+def test_free_checkpoint_releases_blocks(spark):
+    """Optimization r12 session hygiene: free_checkpoint drops the
+    storage blocks behind a dead localCheckpoint (and is a safe no-op
+    on frames that never were one)."""
+    from pyspark.sql import functions as F
+
+    from etl_arcgis_spark.operators.scale_patterns import free_checkpoint
+
+    sc = spark.sparkContext
+    base = sc._jsc.sc().getPersistentRDDs().size()
+    ck = spark.range(10000).select(F.col("id") * 2).localCheckpoint(eager=True)
+    assert sc._jsc.sc().getPersistentRDDs().size() == base + 1
+    free_checkpoint(ck)
+    assert sc._jsc.sc().getPersistentRDDs().size() == base
+    # no-op path: a plain (non-checkpointed) frame
+    free_checkpoint(spark.range(5).select(F.col("id")))
+
+
 def test_min_label_rounds_free_their_checkpoints(spark):
     """propagate_min_labels keeps at most the CURRENT round's label
     barrier alive (plus the lazily barriered edge list, freed when the
