@@ -24,7 +24,19 @@ Commit protocol (the part that makes it ACID):
   2. write the manifest to a tmp name, fsync;
   3. PUBLISH with ``os.link(tmp, _v<N>)`` — atomic, and it FAILS with
      EEXIST if another writer already committed N: optimistic
-     concurrency, loser retries on top of the new snapshot.
+     concurrency.
+
+Every write to an existing table runs one loop, _commit: take the
+current snapshot, plan the write on top of it, publish it as the next
+version. A writer that loses the publish race plans again on the
+winner's snapshot, _COMMIT_ATTEMPTS attempts in all (merge() keeps its
+``max_retries``), then raises CommitConflict. Four commits raise on
+the first conflict instead, because planning again cannot repair it:
+create() and clone() write v1 of a new table (a v1 already there means
+the table exists); publish_staged() promotes a manifest audited
+against its parent, which a replan would publish unaudited (re-stage
+and re-audit, as streaming.pipelines.acid_wap_sink does); fast_forward()
+is valid only while main still sits at the branch's fork point.
 
 Readers never lock: they list manifests, pick the highest (or a
 requested version - time travel), and read exactly its file list —
@@ -57,11 +69,13 @@ import os
 import re
 import shutil
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 _MANIFEST_RE = re.compile(r"_v(\d+)\.manifest\.json$")
 
@@ -447,6 +461,54 @@ def _publish(root: str, version: int, manifest: dict[str, Any]) -> None:
         os.remove(tmp)
 
 
+# Attempts a writer makes before a lost publish race becomes its
+# CommitConflict (see _commit).
+_COMMIT_ATTEMPTS = 3
+
+# A write's plan on top of snapshot (base_v, manifest): the manifest
+# changes for _next_manifest, or None when there is nothing to commit.
+_Plan = Callable[[int, dict[str, Any]], "dict[str, Any] | None"]
+
+
+def _commit(
+    root: str,
+    operation: str,
+    plan: _Plan,
+    attempts: int = _COMMIT_ATTEMPTS,
+    publish: Callable[[str, int, dict[str, Any]], None] | None = None,
+) -> int:
+    """The optimistic commit loop of every write to an existing table.
+    Each attempt takes the current snapshot ``base_v``, calls
+    ``plan(base_v, manifest)`` (None: a no-op, return ``base_v``),
+    builds the manifest of ``operation`` from the changes and publishes
+    it as ``base_v + 1``. A lost publish race starts the next attempt
+    on the winner's snapshot; the lost attempt's data files are
+    orphans for vacuum. ``publish`` stands in for _publish when the
+    write stages its manifest instead (merge(staged=True))."""
+    publish = publish or _publish
+    for _ in range(attempts):
+        base_v, man = _snapshot(root)
+        changes = plan(base_v, man)
+        if changes is None:
+            return base_v
+        try:
+            publish(root, base_v + 1, _next_manifest(man, base_v, operation, **changes))
+        except CommitConflict:
+            continue
+        return base_v + 1
+    raise CommitConflict(f"{operation} lost {attempts} commit races at {root}")
+
+
+def _write_json(path: str, obj: Any) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically (tmp, fsync, rename)."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 def _check_reserved_cols(df: DataFrame, what: str) -> None:
     """``__mor_file``/``__mor_pos`` are projected as hidden row-identity
     metadata by _read_paths; a user table already carrying either name
@@ -506,35 +568,31 @@ def add_constraint(
     commit on violation; delete/compact/zorder commits cannot
     introduce rows and carry the constraint set forward untouched
     (_next_manifest carries it as table state)."""
-    base_v, man = _snapshot(root)
-    cons = dict(man.get("constraints") or {})
-    if name in cons:
-        raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
-    probe = {name: expr}
-    _enforce_constraints(
-        read(spark, root, base_v), {"constraints": probe},
-        f"add_constraint({name!r}) on existing data",
-    )
-    cons[name] = expr
-    _publish(
-        root, base_v + 1,
-        _next_manifest(man, base_v, "add_constraint", constraints=cons),
-    )
-    return base_v + 1
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        cons = dict(man.get("constraints") or {})
+        if name in cons:
+            raise ValueError(f"constraint {name!r} already exists: {cons[name]}")
+        _enforce_constraints(
+            read(spark, root, base_v), {"constraints": {name: expr}},
+            f"add_constraint({name!r}) on existing data",
+        )
+        return {"constraints": {**cons, name: expr}}
+
+    return _commit(root, "add_constraint", plan)
 
 
 def drop_constraint(root: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT — metadata-only commit."""
-    base_v, man = _snapshot(root)
-    cons = dict(man.get("constraints") or {})
-    if name not in cons:
-        raise ValueError(f"no constraint named {name!r} (have {sorted(cons)})")
-    del cons[name]
-    _publish(
-        root, base_v + 1,
-        _next_manifest(man, base_v, "drop_constraint", constraints=cons),
-    )
-    return base_v + 1
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        cons = dict(man.get("constraints") or {})
+        if name not in cons:
+            raise ValueError(f"no constraint named {name!r} (have {sorted(cons)})")
+        del cons[name]
+        return {"constraints": cons}
+
+    return _commit(root, "drop_constraint", plan)
 
 
 def list_constraints(root: str) -> dict[str, str]:
@@ -563,56 +621,48 @@ def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
     pruning is a may-contain filter, so a stats MISS is conservative
     (scan, don't skip) — correctness holds, the file just stops
     being skippable until a rewrite refreshes its stats."""
-    base_v, man = _snapshot(root)
-    from pyspark.sql.types import StructField, StructType
 
-    schema = (
-        StructType.fromJson(json.loads(man["schema"]))
-        if man.get("schema")
-        else read(spark, root, base_v).schema
-    )
-    names = [f.name for f in schema.fields]
-    if old not in names:
-        raise ValueError(f"no column {old!r} (have {names})")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    if man.get("partition_by") == old:
-        raise ValueError(
-            f"cannot rename partition column {old!r}: its name is "
-            "load-bearing in data paths; use evolve_partition_spec"
-        )
-    for cname, expr in (man.get("constraints") or {}).items():
-        import re as _re
-
-        if _re.search(rf"\b{_re.escape(old)}\b", expr):
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        schema = _table_schema(spark, root, base_v, man)
+        names = schema.fieldNames()
+        if old not in names:
+            raise ValueError(f"no column {old!r} (have {names})")
+        if new in names:
+            raise ValueError(f"column {new!r} already exists")
+        if man.get("partition_by") == old:
             raise ValueError(
-                f"column {old!r} is referenced by CHECK constraint "
-                f"{cname!r} ({expr}); drop the constraint first"
+                f"cannot rename partition column {old!r}: its name is "
+                "load-bearing in data paths; use evolve_partition_spec"
             )
-    new_schema = StructType(
-        [
-            StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-            for f in schema.fields
-        ]
-    )
-    files2 = []
-    for f in man["files"]:
-        e = dict(f)
-        al = dict(e.get("aliases") or {})
-        # chain renames: if `old` is itself a logical alias of an even
-        # older physical name, re-key it; else map new -> old physical
-        al[new] = al.pop(old) if old in al else old
-        e["aliases"] = al
-        files2.append(e)
-    new_man = _next_manifest(
-        man, base_v, "rename_column",
-        key=new if man["key"] == old else man["key"],
-        schema=new_schema.json(),
-        files=files2,
-        renamed={"from": old, "to": new},
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        for cname, expr in (man.get("constraints") or {}).items():
+            if re.search(rf"\b{re.escape(old)}\b", expr):
+                raise ValueError(
+                    f"column {old!r} is referenced by CHECK constraint "
+                    f"{cname!r} ({expr}); drop the constraint first"
+                )
+        new_schema = StructType(
+            [
+                StructField(new if f.name == old else f.name, f.dataType, f.nullable)
+                for f in schema.fields
+            ]
+        )
+        files2 = []
+        for f in man["files"]:
+            e = dict(f)
+            al = dict(e.get("aliases") or {})
+            # chain renames: if `old` is itself a logical alias of an even
+            # older physical name, re-key it; else map new -> old physical
+            al[new] = al.pop(old) if old in al else old
+            e["aliases"] = al
+            files2.append(e)
+        return {
+            "key": new if man["key"] == old else man["key"],
+            "schema": new_schema.json(),
+            "files": files2,
+            "renamed": {"from": old, "to": new},
+        }
+
+    return _commit(root, "rename_column", plan)
 
 
 def create(
@@ -628,7 +678,10 @@ def create(
     partition value, and merge()/read_partition() prune whole
     partitions before key-range stats even apply — the two-tier scan
     planning (partition summary, then file stats) that makes a 100 TB
-    date/category-partitioned table affordable to update."""
+    date/category-partitioned table affordable to update.
+
+    A create that loses the race for v1 raises CommitConflict instead
+    of retrying: the table it would create now exists."""
     _check_reserved_cols(df, "create()")
     os.makedirs(root, exist_ok=True)
     if current_version(root) is not None:
@@ -656,8 +709,6 @@ def read(spark: SparkSession, root: str, version: int | None = None) -> DataFram
         # manifest carries the schema so readers still get a typed
         # empty relation; only pre-r5 manifests lack it
         if "schema" in man:
-            from pyspark.sql.types import StructType
-
             return spark.createDataFrame(
                 [], StructType.fromJson(json.loads(man["schema"]))
             )
@@ -764,8 +815,6 @@ def _read_paths(
     # NULL — that is the path parser, not inference.
     pinned = None
     if man.get("schema"):
-        from pyspark.sql.types import StructType
-
         pinned = StructType.fromJson(json.loads(man["schema"]))
     all_dels = man.get("deletes") or []
     dels = [e for e in all_dels if e.get("kind", "positional") == "positional"]
@@ -776,9 +825,7 @@ def _read_paths(
         reader = spark.read
         if pinned is not None:
             if al:
-                from pyspark.sql.types import StructField, StructType as _ST
-
-                phys = _ST(
+                phys = StructType(
                     [
                         StructField(al.get(f.name, f.name), f.dataType, f.nullable)
                         for f in pinned.fields
@@ -924,6 +971,38 @@ def _pad(df: DataFrame, schema: Any) -> DataFrame:
         if fld.name not in df.columns:
             df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
     return df.select(*[fld.name for fld in schema.fields])
+
+
+def _table_schema(
+    spark: SparkSession, root: str, base_v: int, man: dict[str, Any]
+) -> StructType:
+    """Snapshot ``base_v``'s table schema: the manifest's, or what its
+    files read back as when the manifest predates the recorded schema."""
+    if man.get("schema"):
+        return StructType.fromJson(json.loads(man["schema"]))
+    return read(spark, root, base_v).schema
+
+
+def _write_schema(table: StructType, df: DataFrame) -> StructType:
+    """The table schema after a write of ``df``: ``table``'s columns,
+    then the ones only ``df`` carries (schema evolution). A table
+    column ``df`` lacks stays; its new rows read it as null."""
+    return StructType(
+        list(table.fields)
+        + [f for f in df.schema.fields if f.name not in table.fieldNames()]
+    )
+
+
+def _check_full_width(table: StructType, source: DataFrame, what: str) -> None:
+    """A keyed upsert replaces whole rows (MERGE UPDATE SET *), so its
+    source must carry every table column: a narrower one would null
+    out the missing columns of every row it replaces."""
+    narrow = [c for c in table.fieldNames() if c not in source.columns]
+    if narrow:
+        raise ValueError(
+            f"{what} source is missing table column(s) {narrow}; "
+            "MERGE UPDATE SET * requires a full-width source"
+        )
 
 
 def _read_kept(
@@ -1194,8 +1273,10 @@ def merge(
     MERGE affordable at 100 TB: rewrite cost scales with the files the
     keys actually hit, not the table.
 
-    On a concurrent-commit conflict the merge RE-READS the new current
-    snapshot and retries — optimistic concurrency, no locks held.
+    A merge that loses the publish race to a concurrent commit plans
+    again on the winner's snapshot (_commit), ``max_retries`` attempts
+    in all — optimistic concurrency, no locks held. A staged merge
+    cannot lose a race; its publish_staged() can, and raises.
 
     The source is read ONCE before the write: one aggregate
     (_scan_source) checks the MERGE INTO preconditions — the merge key
@@ -1228,14 +1309,15 @@ def merge(
     via a follow-up column projection, or accept them as lineage
     columns, the Delta CDC-apply convention)."""
     _check_reserved_cols(source, "merge() source")
-    for _ in range(max_retries):
-        base_v, man = _snapshot(root)
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
         key = man["key"]
         pcol = man.get("partition_by")
         if pcol is not None and pcol not in source.columns:
             raise ValueError(
                 f"merge source must carry partition column {pcol!r}"
             )
+        _check_full_width(_table_schema(spark, root, base_v, man), source, "merge")
         scan = _scan_source(source, key, "merge", man["files"], pcol)
         # a file is rewritten iff it may hold a source key: first its
         # partition, then its key range. Partition values are logical
@@ -1306,42 +1388,33 @@ def merge(
         new_files = _write_data_files(
             merged, root, key=key, partition_by=pcol, seq=new_seq
         )
-        try:
-            # untouched entries' recorded row counts do not know about
-            # a merge-on-read overlay — subtract the per-file deleted
-            # counts so the manifest `rows` stays exact; the overlay
-            # itself carries forward (stale entries for rewritten
-            # files are no-ops: basenames are fresh uuids)
-            mor_del = _mor_deleted_counts(man)
-            new_man = _next_manifest(
-                man, base_v, "merge",
-                schema=merged.schema.json(),
-                files=untouched + new_files,
-                rows=sum(f["rows"] for f in new_files)
-                + sum(
-                    f.get("rows", 0)
-                    - mor_del.get(os.path.basename(f["path"]), 0)
-                    for f in untouched
-                ),
-                rewrote_files=len(touched),
-                carried_files=len(untouched),
-                last_seq=new_seq,
-            )
-            if staged:
-                token = uuid.uuid4().hex
-                apath = os.path.join(root, f".audit-{token}.json")
-                tmp = apath + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(new_man, fh)
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                os.replace(tmp, apath)
-                return token
-            _publish(root, base_v + 1, new_man)
-            return base_v + 1
-        except CommitConflict:
-            continue  # someone else won; retry on their snapshot
-    raise CommitConflict(f"merge lost {max_retries} races at {root}")
+        # untouched entries' recorded row counts do not know about a
+        # merge-on-read overlay — subtract the per-file deleted counts
+        # so the manifest `rows` stays exact; the overlay itself carries
+        # forward (stale entries for rewritten files are no-ops:
+        # basenames are fresh uuids)
+        mor_del = _mor_deleted_counts(man)
+        return {
+            "schema": merged.schema.json(),
+            "files": untouched + new_files,
+            "rows": sum(f["rows"] for f in new_files)
+            + sum(
+                f.get("rows", 0) - mor_del.get(os.path.basename(f["path"]), 0)
+                for f in untouched
+            ),
+            "rewrote_files": len(touched),
+            "carried_files": len(untouched),
+            "last_seq": new_seq,
+        }
+
+    if not staged:
+        return _commit(root, "merge", plan, max_retries)
+    token = uuid.uuid4().hex
+    _commit(
+        root, "merge", plan, max_retries,
+        publish=lambda _root, _v, man: _write_json(_audit_path(root, token), man),
+    )
+    return token
 
 
 def append(spark: SparkSession, root: str, df: DataFrame) -> int:
@@ -1353,25 +1426,26 @@ def append(spark: SparkSession, root: str, df: DataFrame) -> int:
     would drop them, so a NULL key raises ValueError before any file is
     written. The cheapest possible commit: cost = new data only."""
     _check_reserved_cols(df, "append()")
-    base_v, man = _snapshot(root)
-    pcol = man.get("partition_by")
-    if pcol is not None and pcol not in df.columns:
-        raise ValueError(f"append must carry partition column {pcol!r}")
-    _scan_source(df, man["key"], "append", unique=False)
-    _enforce_constraints(df, man, "append()")
-    new_seq = _next_seq(man, base_v)
-    new_files = _write_data_files(
-        df, root, key=man["key"], partition_by=pcol, seq=new_seq
-    )
-    new_man = _next_manifest(
-        man, base_v, "append",
-        schema=df.schema.json(),
-        files=man["files"] + new_files,
-        rows=man.get("rows", 0) + sum(f["rows"] for f in new_files),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        pcol = man.get("partition_by")
+        if pcol is not None and pcol not in df.columns:
+            raise ValueError(f"append must carry partition column {pcol!r}")
+        _scan_source(df, man["key"], "append", unique=False)
+        _enforce_constraints(df, man, "append()")
+        schema = _write_schema(_table_schema(spark, root, base_v, man), df)
+        new_seq = _next_seq(man, base_v)
+        new_files = _write_data_files(
+            _pad(df, schema), root, key=man["key"], partition_by=pcol, seq=new_seq
+        )
+        return {
+            "schema": schema.json(),
+            "files": man["files"] + new_files,
+            "rows": man.get("rows", 0) + sum(f["rows"] for f in new_files),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "append", plan)
 
 
 def restore(spark: SparkSession, root: str, version: int) -> int:
@@ -1387,22 +1461,22 @@ def restore(spark: SparkSession, root: str, version: int) -> int:
     current snapshot like in any other commit, and the seq counter
     never goes backwards (the next equality delete must still outrank
     every file ever written)."""
-    base_v, cur = _snapshot(root)
-    if version == base_v:
-        return base_v
-    _, old = _snapshot(root, version)
-    data = ("key", "schema", "files", "rows", "partition_by", "deletes")
-    new_man = _next_manifest(
-        cur, base_v, "restore",
-        **{k: old.get(k) for k in data},
-        last_seq=max(
-            int(old.get("last_seq", version)),
-            int(cur.get("last_seq", base_v)),
-        ),
-        restored_from=version,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+
+    def plan(base_v: int, cur: dict[str, Any]) -> dict[str, Any] | None:
+        if version == base_v:
+            return None
+        _, old = _snapshot(root, version)
+        data = ("key", "schema", "files", "rows", "partition_by", "deletes")
+        return {
+            **{k: old.get(k) for k in data},
+            "last_seq": max(
+                int(old.get("last_seq", version)),
+                int(cur.get("last_seq", base_v)),
+            ),
+            "restored_from": version,
+        }
+
+    return _commit(root, "restore", plan)
 
 
 def _hit_file_split(
@@ -1431,6 +1505,8 @@ def _hit_file_split(
     # input_file_name(), which Spark refuses over multi-source plans —
     # it survives the merge-on-read anti-join (so match counts are
     # post-overlay, never re-counting already-deleted rows).
+    if not man["files"]:
+        return [], [], 0
     df = _read_paths(
         spark, root, man,
         [os.path.join(root, f["path"]) for f in man["files"]],
@@ -1471,34 +1547,29 @@ def delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     SQL DELETE semantics on NULLs: a row is deleted iff the predicate
     is TRUE; rows where it evaluates NULL/UNKNOWN survive (the pre-r6
     ``NOT (pred)`` spelling silently deleted them)."""
-    base_v, man = _snapshot(root)
-    pcol = man.get("partition_by")
-    touched: list[dict[str, Any]] = []
-    untouched: list[dict[str, Any]] = list(man["files"])
-    deleted_rows = 0
-    if man["files"]:
-        touched, untouched, deleted_rows = _hit_file_split(
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        touched, new_files, deleted_rows = _hit_file_split(
             spark, root, man, predicate
         )
-    new_files = untouched
-    new_seq = _next_seq(man, base_v)
-    if touched:
-        remaining = _read_paths(
-            spark, root, man,
-            [os.path.join(root, f["path"]) for f in touched],
-        ).filter(f"NOT ({predicate}) OR ({predicate}) IS NULL")
-        new_files = untouched + _write_data_files(
-            remaining, root, key=man["key"], partition_by=pcol, seq=new_seq
-        )
-    new_man = _next_manifest(
-        man, base_v, "delete",
-        files=new_files,
-        rows=max(0, int(man.get("rows", 0)) - int(deleted_rows)),
-        predicate=predicate,
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        new_seq = _next_seq(man, base_v)
+        if touched:
+            remaining = _read_paths(
+                spark, root, man,
+                [os.path.join(root, f["path"]) for f in touched],
+            ).filter(f"NOT ({predicate}) OR ({predicate}) IS NULL")
+            new_files += _write_data_files(
+                remaining, root, key=man["key"],
+                partition_by=man.get("partition_by"), seq=new_seq,
+            )
+        return {
+            "files": new_files,
+            "rows": max(0, int(man.get("rows", 0)) - int(deleted_rows)),
+            "predicate": predicate,
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "delete", plan)
 
 
 def version_as_of(root: str, ts: float) -> int:
@@ -1550,7 +1621,10 @@ def clone(
     Delta's documented shallow-clone hazard applies identically: a
     VACUUM on the SOURCE that expires files the clone still references
     breaks the clone. Compact (or fully rewrite) the clone to make it
-    self-contained before retiring source snapshots."""
+    self-contained before retiring source snapshots.
+
+    Like create(), a clone that loses the race for v1 raises
+    CommitConflict instead of retrying."""
     src_v, man = _snapshot(src_root, version)
     if current_version(dst_root) is not None:
         raise ValueError(f"table already exists at {dst_root}")
@@ -1612,59 +1686,59 @@ def delete_where_mor(spark: SparkSession, root: str, predicate: str) -> int:
     predicate is TRUE (NULL/UNKNOWN survive); positions are captured
     AFTER applying any existing overlay, so re-deleting an
     already-deleted row can never double-count."""
-    base_v, man = _snapshot(root)
-    entries = list(man.get("deletes") or [])
-    n = 0
-    if man["files"]:
-        hits = (
-            _read_paths(
-                spark, root, man,
-                [os.path.join(root, f["path"]) for f in man["files"]],
-                with_meta=True,
-            )
-            .filter(f"({predicate})")
-            .select(
-                F.col("__mor_file").alias("dfile"),
-                F.col("__mor_pos").alias("dpos"),
-            )
-        )
-        staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
-        hits.coalesce(1).write.mode("overwrite").parquet(staging)
-        import pyarrow.parquet as pq
 
-        del_dir = os.path.join(root, "deletes")
-        os.makedirs(del_dir, exist_ok=True)
-        for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-            meta_rows = pq.ParquetFile(part).metadata.num_rows
-            if meta_rows == 0:
-                continue
-            tbl = pq.read_table(part, columns=["dfile"])
-            import collections
-
-            targets = collections.Counter(tbl.column(0).to_pylist())
-            final = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
-            os.replace(part, final)
-            entries.append(
-                {
-                    "path": os.path.relpath(final, root),
-                    "rows": int(meta_rows),
-                    "targets": {bn: int(c) for bn, c in targets.items()},
-                }
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        entries = list(man.get("deletes") or [])
+        n = 0
+        if man["files"]:
+            hits = (
+                _read_paths(
+                    spark, root, man,
+                    [os.path.join(root, f["path"]) for f in man["files"]],
+                    with_meta=True,
+                )
+                .filter(f"({predicate})")
+                .select(
+                    F.col("__mor_file").alias("dfile"),
+                    F.col("__mor_pos").alias("dpos"),
+                )
             )
-            n += int(meta_rows)
-        # only part files were moved out; _SUCCESS/.crc/zero-row parts
-        # would otherwise accumulate under root forever (vacuum also
-        # sweeps aged .stage-* dirs as crash orphans)
-        shutil.rmtree(staging, ignore_errors=True)
-    new_man = _next_manifest(
-        man, base_v, "delete_mor",
-        rows=max(0, int(man.get("rows", 0)) - n),
-        predicate=predicate,
-        deletes=entries,
-        deleted_rows=n,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+            staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
+            hits.coalesce(1).write.mode("overwrite").parquet(staging)
+            import pyarrow.parquet as pq
+
+            del_dir = os.path.join(root, "deletes")
+            os.makedirs(del_dir, exist_ok=True)
+            for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
+                meta_rows = pq.ParquetFile(part).metadata.num_rows
+                if meta_rows == 0:
+                    continue
+                tbl = pq.read_table(part, columns=["dfile"])
+                import collections
+
+                targets = collections.Counter(tbl.column(0).to_pylist())
+                final = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
+                os.replace(part, final)
+                entries.append(
+                    {
+                        "path": os.path.relpath(final, root),
+                        "rows": int(meta_rows),
+                        "targets": {bn: int(c) for bn, c in targets.items()},
+                    }
+                )
+                n += int(meta_rows)
+            # only part files were moved out; _SUCCESS/.crc/zero-row parts
+            # would otherwise accumulate under root forever (vacuum also
+            # sweeps aged .stage-* dirs as crash orphans)
+            shutil.rmtree(staging, ignore_errors=True)
+        return {
+            "rows": max(0, int(man.get("rows", 0)) - n),
+            "predicate": predicate,
+            "deletes": entries,
+            "deleted_rows": n,
+        }
+
+    return _commit(root, "delete_mor", plan)
 
 
 def _eq_delete_entry(
@@ -1686,8 +1760,6 @@ def _eq_delete_entry(
     if not cols:
         raise ValueError("equality delete needs at least one column")
     if man.get("schema"):
-        from pyspark.sql.types import StructType
-
         schema_cols = {
             f.name for f in StructType.fromJson(json.loads(man["schema"])).fields
         }
@@ -1767,23 +1839,20 @@ def delete_eq(spark: SparkSession, root: str, keys: DataFrame) -> int:
     Cites the reference's keyed-delete leg of the upsert protocol
     (task.ts:235-350, query-by-key then act); the lakehouse form of A13
     for high-churn keys. Overlay resolution: compact_deletes()."""
-    base_v, man = _snapshot(root)
     _check_reserved_cols(keys, "delete_eq() keys")
-    new_seq = _next_seq(man, base_v)
-    entry, n = _eq_delete_entry(spark, root, man, keys, new_seq)
-    entries = list(man.get("deletes") or [])
-    if entry:
-        entries.append(entry)
-    new_man = _next_manifest(
-        man, base_v, "delete_eq",
-        rows=max(0, int(man.get("rows", 0)) - n),
-        deletes=entries,
-        deleted_rows=n,
-        eq_cols=list(keys.columns),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        new_seq = _next_seq(man, base_v)
+        entry, n = _eq_delete_entry(spark, root, man, keys, new_seq)
+        return {
+            "rows": max(0, int(man.get("rows", 0)) - n),
+            "deletes": list(man.get("deletes") or []) + ([entry] if entry else []),
+            "deleted_rows": n,
+            "eq_cols": list(keys.columns),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "delete_eq", plan)
 
 
 def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
@@ -1804,56 +1873,38 @@ def upsert_mor(spark: SparkSession, root: str, source: DataFrame) -> int:
     but CDF surfaces it as delete + insert rows (the Iceberg changelog
     convention for equality-delete upserts) rather than Delta's
     update_pre/postimage pairs."""
-    base_v, man = _snapshot(root)
     _check_reserved_cols(source, "upsert_mor() source")
-    key = man["key"]
-    n_source = _scan_source(source, key, "upsert_mor").rows
-    pcol = man.get("partition_by")
-    if pcol is not None and pcol not in source.columns:
-        raise ValueError(f"upsert_mor must carry partition column {pcol!r}")
-    # UPDATE SET * semantics (merge parity): the source must carry every
-    # table column — a narrower source would silently null out the
-    # surviving columns of the keys it replaces
-    from pyspark.sql.types import StructType
 
-    if man.get("schema"):
-        tbl_schema = StructType.fromJson(json.loads(man["schema"]))
-    else:
-        tbl_schema = read(spark, root, base_v).schema
-    narrow = [f.name for f in tbl_schema.fields if f.name not in source.columns]
-    if narrow:
-        raise ValueError(
-            f"upsert_mor source is missing table column(s) {narrow}; "
-            "MERGE UPDATE SET * requires a full-width source"
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        key = man["key"]
+        n_source = _scan_source(source, key, "upsert_mor").rows
+        pcol = man.get("partition_by")
+        if pcol is not None and pcol not in source.columns:
+            raise ValueError(f"upsert_mor must carry partition column {pcol!r}")
+        table = _table_schema(spark, root, base_v, man)
+        _check_full_width(table, source, "upsert_mor")
+        _enforce_constraints(source, man, "upsert_mor()")
+        new_seq = _next_seq(man, base_v)
+        entry, n_del = _eq_delete_entry(
+            spark, root, man, source.select(key), new_seq
         )
-    _enforce_constraints(source, man, "upsert_mor()")
-    new_seq = _next_seq(man, base_v)
-    entry, n_del = _eq_delete_entry(
-        spark, root, man, source.select(key), new_seq
-    )
-    new_files = _write_data_files(
-        source, root, key=key, partition_by=pcol, seq=new_seq
-    )
-    entries = list(man.get("deletes") or [])
-    if entry:
-        entries.append(entry)
-    # schema evolution like merge(): source-only columns append; old
-    # files read them as null through the pinned manifest schema
-    merged_fields = list(tbl_schema.fields) + [
-        f for f in source.schema.fields if f.name not in tbl_schema.fieldNames()
-    ]
-    new_man = _next_manifest(
-        man, base_v, "upsert_mor",
-        schema=StructType(merged_fields).json(),
-        files=man["files"] + new_files,
-        rows=max(0, int(man.get("rows", 0)) - n_del) + n_source,
-        deletes=entries or None,
-        matched_rows=n_del,
-        inserted_rows=n_source,
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        new_files = _write_data_files(
+            source, root, key=key, partition_by=pcol, seq=new_seq
+        )
+        entries = list(man.get("deletes") or []) + ([entry] if entry else [])
+        return {
+            # schema evolution like merge(): source-only columns append;
+            # old files read them as null through the pinned schema
+            "schema": _write_schema(table, source).json(),
+            "files": man["files"] + new_files,
+            "rows": max(0, int(man.get("rows", 0)) - n_del) + n_source,
+            "deletes": entries or None,
+            "matched_rows": n_del,
+            "inserted_rows": n_source,
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "upsert_mor", plan)
 
 
 def compact_deletes(spark: SparkSession, root: str) -> int:
@@ -1865,39 +1916,36 @@ def compact_deletes(spark: SparkSession, root: str) -> int:
     file path-identical, and publish a snapshot with no ``deletes``.
     Read amplification returns to zero; the overlay parquet files age
     out via vacuum once their referencing manifests expire."""
-    base_v, man = _snapshot(root)
-    entries = man.get("deletes") or []
-    if not entries:
-        return base_v  # idempotent no-op
-    targeted = set()
-    for e in entries:
-        targeted.update((e.get("targets") or {}).keys())
-    touched = [
-        f for f in man["files"] if os.path.basename(f["path"]) in targeted
-    ]
-    untouched = [
-        f for f in man["files"] if os.path.basename(f["path"]) not in targeted
-    ]
-    pcol = man.get("partition_by")
-    new_files = untouched
-    new_seq = _next_seq(man, base_v)
-    if touched:
-        survivors = _read_paths(
-            spark, root, man,
-            [os.path.join(root, f["path"]) for f in touched],
-        )
-        new_files = untouched + _write_data_files(
-            survivors, root, key=man["key"], partition_by=pcol, seq=new_seq
-        )
-    new_man = _next_manifest(
-        man, base_v, "compact_deletes",
-        files=new_files,
-        deletes=None,
-        resolved_delete_files=len(entries),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any] | None:
+        entries = man.get("deletes") or []
+        if not entries:
+            return None  # idempotent no-op
+        targeted = {bn for e in entries for bn in e.get("targets") or {}}
+        touched = [
+            f for f in man["files"] if os.path.basename(f["path"]) in targeted
+        ]
+        new_files = [
+            f for f in man["files"] if os.path.basename(f["path"]) not in targeted
+        ]
+        new_seq = _next_seq(man, base_v)
+        if touched:
+            survivors = _read_paths(
+                spark, root, man,
+                [os.path.join(root, f["path"]) for f in touched],
+            )
+            new_files += _write_data_files(
+                survivors, root, key=man["key"],
+                partition_by=man.get("partition_by"), seq=new_seq,
+            )
+        return {
+            "files": new_files,
+            "deletes": None,
+            "resolved_delete_files": len(entries),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "compact_deletes", plan)
 
 
 def update_where(
@@ -1917,44 +1965,39 @@ def update_where(
     (SQL UPDATE semantics). SET targets must be existing columns —
     schema evolution stays merge()'s job, so carried-file rows never
     silently lack an updated column."""
-    base_v, man = _snapshot(root)
-    pcol = man.get("partition_by")
-    _check_set_targets(spark, root, base_v, man, set_exprs, "update_where")
-    if pcol is not None and pcol in set_exprs:
-        raise ValueError(
-            f"update_where cannot SET the partition column {pcol!r} — "
-            "rows would need to move between partitions; use merge()"
-        )
-    touched: list[dict[str, Any]] = []
-    untouched: list[dict[str, Any]] = list(man["files"])
-    n_updated = 0
-    if man["files"]:
-        touched, untouched, n_updated = _hit_file_split(
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        pcol = man.get("partition_by")
+        _check_set_targets(spark, root, base_v, man, set_exprs, "update_where")
+        if pcol is not None and pcol in set_exprs:
+            raise ValueError(
+                f"update_where cannot SET the partition column {pcol!r} — "
+                "rows would need to move between partitions; use merge()"
+            )
+        touched, new_files, n_updated = _hit_file_split(
             spark, root, man, predicate
         )
-    new_files = untouched
-    new_seq = _next_seq(man, base_v)
-    if touched:
-        updated = _apply_set(
-            _read_paths(
-                spark, root, man,
-                [os.path.join(root, f["path"]) for f in touched],
-            ),
-            predicate, set_exprs, "update_where",
-        )
-        _enforce_constraints(updated, man, "update_where()")
-        new_files = untouched + _write_data_files(
-            updated, root, key=man["key"], partition_by=pcol, seq=new_seq
-        )
-    new_man = _next_manifest(
-        man, base_v, "update",
-        files=new_files,
-        predicate=predicate,
-        updated_rows=int(n_updated),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        new_seq = _next_seq(man, base_v)
+        if touched:
+            updated = _apply_set(
+                _read_paths(
+                    spark, root, man,
+                    [os.path.join(root, f["path"]) for f in touched],
+                ),
+                predicate, set_exprs, "update_where",
+            )
+            _enforce_constraints(updated, man, "update_where()")
+            new_files += _write_data_files(
+                updated, root, key=man["key"], partition_by=pcol, seq=new_seq
+            )
+        return {
+            "files": new_files,
+            "predicate": predicate,
+            "updated_rows": int(n_updated),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "update", plan)
 
 
 def _check_set_targets(
@@ -1966,12 +2009,7 @@ def _check_set_targets(
     what: str,
 ) -> None:
     """Reject SET targets that are not table columns (see update_where)."""
-    cols = [
-        f["name"]
-        for f in json.loads(
-            man.get("schema") or read(spark, root, base_v).schema.json()
-        )["fields"]
-    ]
+    cols = _table_schema(spark, root, base_v, man).fieldNames()
     bad = [c for c in set_exprs if c not in cols]
     if bad:
         raise ValueError(
@@ -2084,64 +2122,64 @@ def update_where_mor(
     a SET value won't cast to the column type. CDF surfaces the commit
     as update_preimage/postimage pairs like Delta (table_changes pairs
     the equality-delete pre-images with the same-key re-inserts)."""
-    base_v, man = _snapshot(root)
-    key = man["key"]
-    pcol = man.get("partition_by")
-    _check_set_targets(spark, root, base_v, man, set_exprs, "update_where_mor")
-    if key in set_exprs:
-        raise ValueError(
-            f"update_where_mor cannot SET the merge key {key!r} — the "
-            "equality tombstone and the CDF pre/post pairing are keyed "
-            "on it; use merge() or the CoW update_where"
-        )
-    new_seq = _next_seq(man, base_v)
-    entries = list(man.get("deletes") or [])
-    new_files: list[dict[str, Any]] = []
-    cur = read(spark, root, base_v)
-    matched = cur.filter(F.expr(f"({predicate})")).cache()
-    try:
-        # no match: parity with CoW, still publish a (no-op) snapshot
-        n_matched = matched.count()
-        if n_matched:
-            # duplicate-key hazard gate: the equality tombstone deletes
-            # by KEY, so every row sharing a matched key must itself be
-            # matched — otherwise MoR would delete rows CoW would keep.
-            n_sharing = (
-                cur.join(matched.select(key).distinct(), key, "semi").count()
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        key = man["key"]
+        _check_set_targets(spark, root, base_v, man, set_exprs, "update_where_mor")
+        if key in set_exprs:
+            raise ValueError(
+                f"update_where_mor cannot SET the merge key {key!r} — the "
+                "equality tombstone and the CDF pre/post pairing are keyed "
+                "on it; use merge() or the CoW update_where"
             )
-            if n_sharing != n_matched:
-                raise ValueError(
-                    f"update_where_mor: {n_sharing - n_matched} unmatched "
-                    f"row(s) share a merge key with matched rows — the "
-                    "equality tombstone would delete them; this table "
-                    "needs the copy-on-write update_where"
+        new_seq = _next_seq(man, base_v)
+        entries = list(man.get("deletes") or [])
+        new_files: list[dict[str, Any]] = []
+        cur = read(spark, root, base_v)
+        matched = cur.filter(F.expr(f"({predicate})")).cache()
+        try:
+            # no match: parity with CoW, still publish a (no-op) snapshot
+            n_matched = matched.count()
+            if n_matched:
+                # duplicate-key hazard gate: the equality tombstone deletes
+                # by KEY, so every row sharing a matched key must itself be
+                # matched — otherwise MoR would delete rows CoW would keep.
+                n_sharing = (
+                    cur.join(matched.select(key).distinct(), key, "semi").count()
                 )
-            # every row here matched, but the guarded SET spelling keeps
-            # SET expressions off any row a future refactor lets through
-            updated = _apply_set(
-                matched, predicate, set_exprs, "update_where_mor"
-            )
-            _enforce_constraints(updated, man, "update_where_mor()")
-            entry, _ = _eq_delete_entry(
-                spark, root, man, matched.select(key), new_seq
-            )
-            if entry:
-                entries.append(entry)
-            new_files = _write_data_files(
-                updated, root, key=key, partition_by=pcol, seq=new_seq
-            )
-    finally:
-        matched.unpersist()
-    new_man = _next_manifest(
-        man, base_v, "update_mor",
-        files=man["files"] + new_files,
-        deletes=entries or None,
-        predicate=predicate,
-        updated_rows=int(n_matched),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+                if n_sharing != n_matched:
+                    raise ValueError(
+                        f"update_where_mor: {n_sharing - n_matched} unmatched "
+                        f"row(s) share a merge key with matched rows — the "
+                        "equality tombstone would delete them; this table "
+                        "needs the copy-on-write update_where"
+                    )
+                # every row here matched, but the guarded SET spelling keeps
+                # SET expressions off any row a future refactor lets through
+                updated = _apply_set(
+                    matched, predicate, set_exprs, "update_where_mor"
+                )
+                _enforce_constraints(updated, man, "update_where_mor()")
+                entry, _ = _eq_delete_entry(
+                    spark, root, man, matched.select(key), new_seq
+                )
+                if entry:
+                    entries.append(entry)
+                new_files = _write_data_files(
+                    updated, root, key=key,
+                    partition_by=man.get("partition_by"), seq=new_seq,
+                )
+        finally:
+            matched.unpersist()
+        return {
+            "files": man["files"] + new_files,
+            "deletes": entries or None,
+            "predicate": predicate,
+            "updated_rows": int(n_matched),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "update_mor", plan)
 
 
 def vacuum(
@@ -2275,29 +2313,26 @@ def evolve_partition_spec(
     ``new_partition_by`` must be an existing string-typed data column
     (it IS data in every old file, which is what makes the lazy
     migration sound), or None to de-partition."""
-    base_v, man = _snapshot(root)
-    old_pcol = man.get("partition_by")
-    if new_partition_by == old_pcol:
-        return base_v
-    if new_partition_by is not None:
-        schema_cols = set(read(spark, root, base_v).columns)
-        if new_partition_by not in schema_cols:
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any] | None:
+        old_pcol = man.get("partition_by")
+        if new_partition_by == old_pcol:
+            return None
+        if (
+            new_partition_by is not None
+            and new_partition_by not in read(spark, root, base_v).columns
+        ):
             raise ValueError(
                 f"partition column {new_partition_by!r} not in table schema"
             )
-    files = []
-    for f in man["files"]:
-        e = dict(f)
-        e["spec"] = _file_spec(f, old_pcol)  # pin the legacy default
-        files.append(e)
-    new_man = _next_manifest(
-        man, base_v, "evolve-spec",
-        files=files,
-        partition_by=new_partition_by,
-        previous_partition_by=old_pcol,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        return {
+            # pin each file's legacy default spec
+            "files": [{**f, "spec": _file_spec(f, old_pcol)} for f in man["files"]],
+            "partition_by": new_partition_by,
+            "previous_partition_by": old_pcol,
+        }
+
+    return _commit(root, "evolve-spec", plan)
 
 
 def _audit_path(root: str, token: str) -> str:
@@ -2319,9 +2354,11 @@ def read_staged(spark: SparkSession, root: str, token: str) -> DataFrame:
 def publish_staged(root: str, token: str) -> int:
     """PUBLISH: atomically promote a staged snapshot. Optimistic —
     raises CommitConflict if any commit landed after the stage was
-    written (the audit validated a stale parent; re-stage and re-audit,
-    same rule as a lost merge race). On success the audit file is
-    consumed."""
+    written, and never plans again itself: the audit validated this
+    manifest on its parent, so a replan on the newer snapshot would
+    publish rows no audit saw. Re-stage and re-audit instead
+    (streaming.pipelines.acid_wap_sink does). On success the audit
+    file is consumed."""
     apath = _audit_path(root, token)
     with open(apath) as fh:
         man = json.load(fh)
@@ -2376,15 +2413,6 @@ def list_refs(root: str) -> dict[str, Any]:
         return {"branches": {}, "tags": {}}
 
 
-def _write_refs(root: str, refs: dict[str, Any]) -> None:
-    tmp = os.path.join(root, f".refs-{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(refs, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, _refs_path(root))
-
-
 def _check_ref_name(name: str) -> None:
     if not name or not all(c.isalnum() or c in "._-" for c in name):
         raise ValueError(
@@ -2414,7 +2442,7 @@ def create_branch(
     refs["branches"][name] = {
         "created_from": int(v), "created_at": _time.time(),
     }
-    _write_refs(root, refs)
+    _write_json(_refs_path(root), refs)
     return int(v)
 
 
@@ -2430,7 +2458,7 @@ def create_tag(root: str, name: str, version: int | None = None) -> int:
     import time as _time
 
     refs["tags"][name] = {"version": int(v), "created_at": _time.time()}
-    _write_refs(root, refs)
+    _write_json(_refs_path(root), refs)
     return int(v)
 
 
@@ -2441,11 +2469,11 @@ def drop_ref(root: str, name: str) -> None:
     refs = list_refs(root)
     if name in refs["branches"]:
         del refs["branches"][name]
-        _write_refs(root, refs)
+        _write_json(_refs_path(root), refs)
         shutil.rmtree(branch_root(root, name), ignore_errors=True)
     elif name in refs["tags"]:
         del refs["tags"][name]
-        _write_refs(root, refs)
+        _write_json(_refs_path(root), refs)
     else:
         raise KeyError(f"no ref {name!r}")
 
@@ -2480,7 +2508,10 @@ def fast_forward(spark: SparkSession, root: str, name: str) -> int:
 
     Returns the new main head version. CDF across the publish works
     because each branch commit keeps its own file delta and delete
-    entries (table_changes sees them as ordinary main commits)."""
+    entries (table_changes sees them as ordinary main commits). A main
+    commit since the fork, or one racing the publish, raises
+    CommitConflict: it is never retried, because on a moved main the
+    publish is no longer a fast-forward."""
     refs = list_refs(root)
     if name not in refs["branches"]:
         raise KeyError(f"no branch {name!r}")
@@ -2531,7 +2562,7 @@ def fast_forward(spark: SparkSession, root: str, name: str) -> int:
         _publish(root, head, man)
     refs = list_refs(root)
     refs["branches"][name]["created_from"] = int(head)
-    _write_refs(root, refs)
+    _write_json(_refs_path(root), refs)
     return head
 
 
@@ -2603,83 +2634,85 @@ def compact(
 
     At 100 TB this is the nightly maintenance job: each group is
     independent work (parallel across executors), and nothing blocks
-    concurrent readers (they hold older manifests) or writers (the
-    optimistic publish serializes with merges)."""
-    base_v, man = _snapshot(root)
-    key = man["key"]
-    pcol = man.get("partition_by")
-    small = [f for f in man["files"] if f["bytes"] < target_file_bytes]
-    keep = [f for f in man["files"] if f["bytes"] >= target_file_bytes]
-    if len(small) <= 1:
-        return base_v  # nothing to do
-    # greedy first-fit groups by byte budget; on a partitioned table a
-    # group NEVER crosses a partition (the rewrite must land back in
-    # its own <col>=<val> directory), so bins form per partition value
-    groups: list[list[dict[str, Any]]] = []
-    cur: list[dict[str, Any]] = []
-    cur_bytes = 0
-    cur_part: Any = object()  # sentinel != any real partition value
-    order = sorted(
-        small,
-        key=lambda f: (
-            str(_file_spec(f, pcol)),
-            str(f.get("partition")),
-            f.get("key_range", [None])[0] is None,
-        ),
-    )
-    for f in order:
-        fkey = (_file_spec(f, pcol), f.get("partition"))
-        if cur and (
-            cur_bytes + f["bytes"] > target_file_bytes or fkey != cur_part
-        ):
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(f)
-        cur_bytes += f["bytes"]
-        cur_part = fkey
-    if cur:
-        groups.append(cur)
-    groups = [g for g in groups if len(g) > 1] or []
-    if not groups:
-        return base_v
-    grouped_paths = {f["path"] for g in groups for f in g}
-    keep = keep + [f for f in small if f["path"] not in grouped_paths]
-    new_files: list[dict[str, Any]] = []
-    # the table's current full schema: a group mixing pre- and post-
-    # evolution files must rewrite under the UNION schema or the
-    # evolved column's values are silently dropped from the new
-    # snapshot (only recoverable via time travel until vacuum)
-    table_schema = read(spark, root, base_v).schema
-    new_seq = _next_seq(man, base_v)
-    for g in groups:
-        df = _pad(  # evolved cols absent from every file in the group
-            _read_paths(
-                spark, root, man, [os.path.join(root, f["path"]) for f in g]
+    concurrent readers (they hold older manifests) or writers: a
+    compaction that loses the publish race to a writer plans again on
+    the writer's snapshot (_commit), so it never drops that commit's
+    files."""
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any] | None:
+        key = man["key"]
+        pcol = man.get("partition_by")
+        small = [f for f in man["files"] if f["bytes"] < target_file_bytes]
+        keep = [f for f in man["files"] if f["bytes"] >= target_file_bytes]
+        if len(small) <= 1:
+            return None  # nothing to do
+        # greedy first-fit groups by byte budget; on a partitioned table a
+        # group NEVER crosses a partition (the rewrite must land back in
+        # its own <col>=<val> directory), so bins form per partition value
+        groups: list[list[dict[str, Any]]] = []
+        cur: list[dict[str, Any]] = []
+        cur_bytes = 0
+        cur_part: Any = object()  # sentinel != any real partition value
+        order = sorted(
+            small,
+            key=lambda f: (
+                str(_file_spec(f, pcol)),
+                str(f.get("partition")),
+                f.get("key_range", [None])[0] is None,
             ),
-            table_schema,
-        ).coalesce(1).sortWithinPartitions(key)
-        # rewritten files take the NEW sequence number: any carried
-        # equality-delete entry (lower seq) no longer applies to them —
-        # correct, because the rewrite read already applied the overlay
-        new_files.extend(
-            _write_data_files(df, root, key=key, partition_by=pcol, seq=new_seq)
         )
-    new_man = _next_manifest(
-        man, base_v, "compact",
-        schema=table_schema.json(),
-        files=keep + new_files,
-        # visible rows are invariant under compaction; with a
-        # merge-on-read overlay the kept entries' recorded counts
-        # overstate, so trust the running total instead of recounting
-        rows=man.get("rows", 0)
-        if man.get("deletes")
-        else sum(f.get("rows", 0) for f in keep + new_files),
-        compacted_files=len(grouped_paths),
-        produced_files=len(new_files),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        for f in order:
+            fkey = (_file_spec(f, pcol), f.get("partition"))
+            if cur and (
+                cur_bytes + f["bytes"] > target_file_bytes or fkey != cur_part
+            ):
+                groups.append(cur)
+                cur, cur_bytes = [], 0
+            cur.append(f)
+            cur_bytes += f["bytes"]
+            cur_part = fkey
+        if cur:
+            groups.append(cur)
+        groups = [g for g in groups if len(g) > 1]
+        if not groups:
+            return None
+        grouped_paths = {f["path"] for g in groups for f in g}
+        keep = keep + [f for f in small if f["path"] not in grouped_paths]
+        new_files: list[dict[str, Any]] = []
+        # the table's current full schema: a group mixing pre- and post-
+        # evolution files must rewrite under the UNION schema or the
+        # evolved column's values are silently dropped from the new
+        # snapshot (only recoverable via time travel until vacuum)
+        table_schema = read(spark, root, base_v).schema
+        new_seq = _next_seq(man, base_v)
+        for g in groups:
+            df = _pad(  # evolved cols absent from every file in the group
+                _read_paths(
+                    spark, root, man, [os.path.join(root, f["path"]) for f in g]
+                ),
+                table_schema,
+            ).coalesce(1).sortWithinPartitions(key)
+            # rewritten files take the NEW sequence number: any carried
+            # equality-delete entry (lower seq) no longer applies to them —
+            # correct, because the rewrite read already applied the overlay
+            new_files.extend(
+                _write_data_files(df, root, key=key, partition_by=pcol, seq=new_seq)
+            )
+        return {
+            "schema": table_schema.json(),
+            "files": keep + new_files,
+            # visible rows are invariant under compaction; with a
+            # merge-on-read overlay the kept entries' recorded counts
+            # overstate, so trust the running total instead of recounting
+            "rows": man.get("rows", 0)
+            if man.get("deletes")
+            else sum(f.get("rows", 0) for f in keep + new_files),
+            "compacted_files": len(grouped_paths),
+            "produced_files": len(new_files),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "compact", plan)
 
 
 def compact_zorder(
@@ -2703,7 +2736,7 @@ def compact_zorder(
     tables) pool into one range-shuffle by zkey into
     ceil(total_bytes/target) output files. Same snapshot protocol —
     readers on older manifests never block, a crash leaves vacuum-able
-    orphans, and the optimistic publish serializes with writers.
+    orphans, and a lost publish race reclusters the writer's snapshot.
 
     At 100 TB: one range shuffle per maintenance window over the
     partitions selected for rewrite; every selective rectangle query
@@ -2712,68 +2745,68 @@ def compact_zorder(
     file-level (not row-level) locality, which is all manifest
     pruning can use."""
     a, b = cols
-    base_v, man = _snapshot(root)
-    key = man["key"]
-    pcol = man.get("partition_by")
-    for c in (a, b):
-        if c == pcol:
-            raise ValueError(f"cannot z-order by partition column {c!r}")
-    table_schema = read(spark, root, base_v).schema
-    for c in (a, b):
-        if c not in table_schema.fieldNames():
-            raise ValueError(f"z-order column {c!r} not in table schema")
     zterms = " + ".join(
         [f"((({a} & 65535) >> {i} & 1) * {1 << (2 * i)})" for i in range(16)]
         + [f"((({b} & 65535) >> {i} & 1) * {1 << (2 * i + 1)})" for i in range(16)]
     )
-    # pool files per (spec, partition) value (z-order never crosses
-    # partitions; an older spec's files pool separately and land back
-    # under the CURRENT spec — reclustering migrates the layout)
-    pools: dict[Any, list[dict[str, Any]]] = {}
-    for f in man["files"]:
-        pools.setdefault((_file_spec(f, pcol), f.get("partition")), []).append(f)
-    new_files: list[dict[str, Any]] = []
-    new_seq = _next_seq(man, base_v)
-    for pval, pool in sorted(pools.items(), key=lambda kv: str(kv[0])):
-        total = sum(f["bytes"] for f in pool)
-        pool_rows = sum(f.get("rows", 0) for f in pool)
-        # clamp by row count: a degenerate byte target must not schedule
-        # more range partitions than there are rows to spread
-        n_out = max(1, min(-(-total // target_file_bytes), max(pool_rows, 1)))
-        df = (
-            _pad(
-                _read_paths(
-                    spark, root, man,
-                    [os.path.join(root, f["path"]) for f in pool],
-                ),
-                table_schema,
+
+    def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any]:
+        key = man["key"]
+        pcol = man.get("partition_by")
+        for c in (a, b):
+            if c == pcol:
+                raise ValueError(f"cannot z-order by partition column {c!r}")
+        table_schema = read(spark, root, base_v).schema
+        for c in (a, b):
+            if c not in table_schema.fieldNames():
+                raise ValueError(f"z-order column {c!r} not in table schema")
+        # pool files per (spec, partition) value (z-order never crosses
+        # partitions; an older spec's files pool separately and land back
+        # under the CURRENT spec — reclustering migrates the layout)
+        pools: dict[Any, list[dict[str, Any]]] = {}
+        for f in man["files"]:
+            pools.setdefault((_file_spec(f, pcol), f.get("partition")), []).append(f)
+        new_files: list[dict[str, Any]] = []
+        new_seq = _next_seq(man, base_v)
+        for _pval, pool in sorted(pools.items(), key=lambda kv: str(kv[0])):
+            total = sum(f["bytes"] for f in pool)
+            pool_rows = sum(f.get("rows", 0) for f in pool)
+            # clamp by row count: a degenerate byte target must not schedule
+            # more range partitions than there are rows to spread
+            n_out = max(1, min(-(-total // target_file_bytes), max(pool_rows, 1)))
+            df = (
+                _pad(
+                    _read_paths(
+                        spark, root, man,
+                        [os.path.join(root, f["path"]) for f in pool],
+                    ),
+                    table_schema,
+                )
+                .withColumn("__zkey", F.expr(zterms).cast("bigint"))
+                .repartitionByRange(n_out, F.col("__zkey"))
+                .sortWithinPartitions("__zkey")
+                .drop("__zkey")
             )
-            .withColumn("__zkey", F.expr(zterms).cast("bigint"))
-            .repartitionByRange(n_out, F.col("__zkey"))
-            .sortWithinPartitions("__zkey")
-            .drop("__zkey")
-        )
-        # a pool is one partition value; partition_by=pcol keeps the
-        # Hive data/<col>=<val>/ layout basePath recovery relies on
-        new_files.extend(
-            _write_data_files(
-                df, root, key=key, partition_by=pcol, seq=new_seq
+            # a pool is one partition value; partition_by=pcol keeps the
+            # Hive data/<col>=<val>/ layout basePath recovery relies on
+            new_files.extend(
+                _write_data_files(
+                    df, root, key=key, partition_by=pcol, seq=new_seq
+                )
             )
-        )
-    # every file is rewritten through the read overlay: deletes resolve
-    new_man = _next_manifest(
-        man, base_v, "zorder",
-        schema=table_schema.json(),
-        files=new_files,
-        rows=sum(f.get("rows", 0) for f in new_files),
-        deletes=None,
-        zorder_by=[a, b],
-        compacted_files=len(man["files"]),
-        produced_files=len(new_files),
-        last_seq=new_seq,
-    )
-    _publish(root, base_v + 1, new_man)
-    return base_v + 1
+        # every file is rewritten through the read overlay: deletes resolve
+        return {
+            "schema": table_schema.json(),
+            "files": new_files,
+            "rows": sum(f.get("rows", 0) for f in new_files),
+            "deletes": None,
+            "zorder_by": [a, b],
+            "compacted_files": len(man["files"]),
+            "produced_files": len(new_files),
+            "last_seq": new_seq,
+        }
+
+    return _commit(root, "zorder", plan)
 
 
 @dataclass(frozen=True)

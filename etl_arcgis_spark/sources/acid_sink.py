@@ -4,8 +4,8 @@ stream reader: ``df.writeStream.format("acid_sink").option("root", ...)``.
 
 Exactly-once without foreachBatch: executors stage each micro-batch's
 partitions as parquet under ``.stream-stage-<batch>/`` and the DRIVER
-commit publishes ONE snapshot per batch through the same atomic
-hard-link protocol as every other commit, recording the batch id in
+commit publishes ONE snapshot per batch through acid._commit, the
+commit loop every other writer runs, recording the batch id in
 the manifest (``stream_sinks: {sink_id: last_batch}``). A replayed
 batch (restart from checkpoint) finds its id already committed and
 becomes a NO-OP — the idempotence contract Delta's transactional sink
@@ -99,59 +99,44 @@ class AcidStreamWriter(DataSourceStreamWriter):
 
     # -- driver side ---------------------------------------------------
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
+        """Publish the batch's staged files as one snapshot through
+        acid._commit, which plans again on the winner's snapshot after
+        a lost publish race. A batch the ledger already holds (a
+        checkpoint replay) commits nothing."""
         staged = [m for m in messages if m is not None and m.rows > 0]
-        for _attempt in range(5):
-            base_v, man = acid._snapshot(self.root)
+
+        def plan(base_v: int, man: dict) -> dict | None:
             sinks = dict(man.get("stream_sinks") or {})
             last = sinks.get(self.sink_id)
             if last is not None and int(last) >= batchId:
-                # checkpoint replay of an already-committed batch:
-                # exactly-once means drop the re-staged files, publish
-                # nothing
+                # exactly-once: drop the re-staged files, publish nothing
                 for m in staged:
                     try:
                         os.remove(os.path.join(self.root, m.rel_path))
                     except FileNotFoundError:
                         pass
-                return
+                return None
             new_seq = acid._next_seq(man, base_v)
             entries = []
-            total = 0
             for m in staged:
-                final_rel = os.path.join(
-                    "data", os.path.basename(m.rel_path)
-                )
+                final_rel = os.path.join("data", os.path.basename(m.rel_path))
                 final = os.path.join(self.root, final_rel)
                 os.makedirs(os.path.dirname(final), exist_ok=True)
                 os.replace(os.path.join(self.root, m.rel_path), final)
+                m.rel_path = final_rel  # a later attempt finds it moved
                 e = acid._file_entry(final, self.root, man.get("key"))
                 e["seq"] = new_seq
                 entries.append(e)
-                total += m.rows
-                m.rel_path = final_rel  # retry-safe: already moved
             sinks[self.sink_id] = batchId
-            new_man = acid._next_manifest(
-                man, base_v, "stream_append",
-                files=man["files"] + entries,
-                rows=man.get("rows", 0) + total,
-                last_seq=new_seq,
-                stream_sinks=sinks,
-                stream_batch=batchId,
-            )
-            try:
-                acid._publish(self.root, base_v + 1, new_man)
-                return
-            except acid.CommitConflict:
-                # another writer committed; entries now reference
-                # data/-homed files — rebuild against the new head
-                staged = [
-                    _StagedFile(rel_path=m.rel_path, rows=m.rows)
-                    for m in staged
-                ]
-                continue
-        raise acid.CommitConflict(
-            f"acid_sink batch {batchId} lost 5 commit races at {self.root}"
-        )
+            return {
+                "files": man["files"] + entries,
+                "rows": man.get("rows", 0) + sum(m.rows for m in staged),
+                "last_seq": new_seq,
+                "stream_sinks": sinks,
+                "stream_batch": batchId,
+            }
+
+        acid._commit(self.root, "stream_append", plan)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         for m in messages or []:

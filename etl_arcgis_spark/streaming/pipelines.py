@@ -557,9 +557,11 @@ def acid_wap_sink(
     Scale: the stage is the same file-pruned copy-on-write merge; the
     audit is one filtered count over the staged snapshot (stats-pruned
     like any read); publish is an atomic hard-link. A conflict with a
-    concurrent writer surfaces as CommitConflict at publish — the
-    batch re-stages on the new snapshot (bounded retry), preserving
-    exactly-once visibility."""
+    concurrent writer surfaces as CommitConflict at publish. The batch
+    then re-stages AND re-audits on the new snapshot, because the
+    audit judged the old one; this is why the sink keeps its own loop
+    instead of acid._commit's replan, bounded by the same
+    acid._COMMIT_ATTEMPTS. Exactly-once visibility holds."""
     from .. import acid
 
     def stage_audit_publish(batch_df: DataFrame, epoch: int) -> None:
@@ -584,7 +586,7 @@ def acid_wap_sink(
                 return
             acid.create(spark, table_root, latest, key=key)
             return
-        for _ in range(3):  # re-stage on publish conflicts
+        for _ in range(acid._COMMIT_ATTEMPTS):  # re-stage on publish conflicts
             token = acid.merge(spark, table_root, latest, staged=True)
             bad = (
                 acid.read_staged(spark, table_root, token)
@@ -606,6 +608,8 @@ def acid_wap_sink(
             except acid.CommitConflict:
                 acid.abort_staged(table_root, token)
                 continue
-        raise acid.CommitConflict(f"wap sink lost 3 races at {table_root}")
+        raise acid.CommitConflict(
+            f"wap sink lost {acid._COMMIT_ATTEMPTS} races at {table_root}"
+        )
 
     return stream.writeStream.foreachBatch(stage_audit_publish)

@@ -1,6 +1,7 @@
 """A keyed merge reads its source once and counts nothing after the
 write; blooms are written only where they can prune; append() rejects
-NULL merge keys.
+NULL merge keys and keeps the table's columns; merge() rejects a source
+narrower than the table.
 
 Default tier on purpose — the test_acid*.py suites all run under
 ``-m slow``, and these are the guards on the merge's Spark job count,
@@ -151,3 +152,33 @@ def test_append_rejects_null_merge_keys(spark, tmp_path):
     # duplicate keys stay allowed (event-log semantics)
     v = acid.append(spark, root, spark.createDataFrame([(1, "b"), (1, "c")], schema))
     assert acid._read_manifest(root, v)["rows"] == 3 == acid.read(spark, root).count()
+
+
+def test_narrow_append_keeps_the_table_columns(spark, tmp_path):
+    """An append lacking a table column commits the table's schema, not
+    the frame's: the column stays, and the appended rows read it as
+    null."""
+    root = str(tmp_path / "t")
+    acid.create(
+        spark, root,
+        spark.createDataFrame([(1, "a", 10)], "id INT, v STRING, w INT"), key="id",
+    )
+    v = acid.append(spark, root, spark.createDataFrame([(2, "b")], "id INT, v STRING"))
+    df = acid.read(spark, root, v)
+    assert df.columns == ["id", "v", "w"]
+    assert sorted(map(tuple, df.collect())) == [(1, "a", 10), (2, "b", None)]
+
+
+def test_narrow_merge_source_is_rejected(spark, tmp_path):
+    """MERGE replaces whole rows, so a source lacking a table column
+    raises the same full-width ValueError as upsert_mor, before any
+    Spark job."""
+    root = str(tmp_path / "t")
+    acid.create(
+        spark, root,
+        spark.createDataFrame([(1, "a", 10)], "id INT, v STRING, w INT"), key="id",
+    )
+    src = spark.createDataFrame([(1, "b")], "id INT, v STRING")
+    with pytest.raises(ValueError, match=r"missing table column\(s\) \['w'\].*full-width"):
+        acid.merge(spark, root, src)
+    assert acid.current_version(root) == 1

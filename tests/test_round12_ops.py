@@ -7,19 +7,9 @@ import hashlib
 import math
 import os
 
-import pytest
-
 from etl_arcgis_spark.tables import table
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from etl_arcgis_spark.session import get_session
-
-    s = get_session("test_round12", shuffle_partitions=8)
-    yield s
 
 
 def test_grouped_hll_matches_python_register_twin(spark):
