@@ -48,8 +48,11 @@ Spark job), and only files with at least one source key inside their
 range are rewritten; everything else carries forward path-identical.
 A merge reads its source once before the write: one aggregate checks
 the keys, finds the files to rewrite and collects the partitions the
-source writes. Nothing is counted after the write: a commit's ``rows``
-is the sum of its files' footer counts. Files holding at most
+source writes. It streams the touched files past a broadcast batch,
+with no shuffle, and writes them back as key chunks of at most
+_CHUNK_ROWS rows that overlap no other live file. Nothing is counted
+after the write: a commit's ``rows`` is the sum of its files' footer
+counts. Files holding at most
 _BLOOM_BITS distinct keys also carry a key Bloom sidecar for
 read_point(); bigger files get none, as a saturated filter skips
 nothing. read_key_range() uses the same stats for file skipping, and
@@ -387,17 +390,26 @@ def _next_seq(man: dict[str, Any], base_v: int) -> int:
     return max(int(man.get("last_seq", 0)), base_v) + 1
 
 
+# rows per file of a chunked write (merge's post-image): a rewritten
+# file splits into key chunks this size, so a point read opens one
+# small file and the next merge rewrites only the chunks it hits
+_CHUNK_ROWS = 16_384
+
+
 def _write_data_files(
     df: DataFrame,
     root: str,
     key: str | None = None,
     partition_by: str | None = None,
     seq: int | None = None,
+    chunked: bool = False,
 ) -> list[dict[str, Any]]:
     """Write df as new immutable parquet files; return file entries
     (with per-file key min/max stats when ``key`` is given). Files are
     invisible until a manifest references them. ``seq`` stamps the
-    entries' data sequence number (see _next_seq).
+    entries' data sequence number (see _next_seq). ``chunked`` caps
+    each file at _CHUNK_ROWS rows (the writer's ``maxRecordsPerFile``):
+    a task whose rows are sorted by key writes contiguous key chunks.
 
     With ``partition_by``, files land under Hive-style
     ``data/<col>=<val>/`` directories and each entry records its
@@ -409,8 +421,11 @@ def _write_data_files(
     os.makedirs(data_dir, exist_ok=True)
     staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
     entries = []
+    writer = df.write.mode("overwrite")
+    if chunked:
+        writer = writer.option("maxRecordsPerFile", _CHUNK_ROWS)
     if partition_by is None:
-        df.write.mode("overwrite").parquet(staging)
+        writer.parquet(staging)
         for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
             final = os.path.join(data_dir, f"{uuid.uuid4().hex}.parquet")
             os.replace(part, final)
@@ -419,7 +434,7 @@ def _write_data_files(
                 e["seq"] = seq
             entries.append(e)
     else:
-        df.write.mode("overwrite").partitionBy(partition_by).parquet(staging)
+        writer.partitionBy(partition_by).parquet(staging)
         for pdir in sorted(glob.glob(os.path.join(staging, f"{partition_by}=*"))):
             pname = os.path.basename(pdir)  # "<col>=<val>", val escaped
             pval = _decode_hive_value(pname.split("=", 1)[1])
@@ -1197,9 +1212,9 @@ def _scan_source(
     """MERGE INTO's source preconditions and write planning, answered
     by ONE aggregate over the source before any file is written:
 
-    - the merge key is non-null (a NULL key can never match and would
-      otherwise emit an all-NULL ghost row out of the full-outer join;
-      an appended NULL key is dropped by both change feeds) and, with
+    - the merge key is non-null (a NULL key can never match, so every
+      merge would insert it again; an appended NULL key is dropped by
+      both change feeds) and, with
       ``unique``, unique (duplicate source keys would multiply matched
       target rows; SQL MERGE errors on multiple matches);
     - which of ``files`` hold a source key inside their recorded key
@@ -1243,6 +1258,34 @@ def _scan_source(
     return _SourceScan(rows=int(chk["n"]), hit=hit, parts=parts)
 
 
+def _segments(
+    files: list[dict[str, Any]], touched: list[dict[str, Any]]
+) -> list[list[dict[str, Any]]]:
+    """``touched`` (a sublist of ``files``) cut into the units a merge
+    rewrites one task each: runs of files adjacent in key order (no
+    carried file's range starts between them) of at most _CHUNK_ROWS
+    rows in all, or one bigger file alone. Sorted in its task and cut
+    into chunks, a segment lands in files whose key ranges overlap no
+    other segment's and no carried file's, and small neighbours compact
+    into one chunk. Files without a key range are a segment each."""
+    hit = {id(f) for f in touched}
+    segs: list[list[dict[str, Any]]] = []
+    rows = 0
+    for f in sorted(
+        (f for f in files if "key_range" in f), key=lambda f: f["key_range"][0]
+    ):
+        if id(f) not in hit:
+            rows = _CHUNK_ROWS  # a carried file ends the run
+            continue
+        n = f.get("rows", 0)
+        if not segs or rows + n > _CHUNK_ROWS:
+            segs.append([])
+            rows = 0
+        segs[-1].append(f)
+        rows += n
+    return segs + [[f] for f in touched if "key_range" not in f]
+
+
 def merge(
     spark: SparkSession,
     root: str,
@@ -1273,6 +1316,26 @@ def merge(
     MERGE affordable at 100 TB: rewrite cost scales with the files the
     keys actually hit, not the table.
 
+    The rewrite moves no target row through a shuffle. The touched
+    files are cut into segments (_segments: runs of key-adjacent files
+    of at most _CHUNK_ROWS rows, or one bigger file), each read by one
+    task. The post-image is two branches over them:
+      - touched LEFT OUTER JOIN source: a micro-batch under
+        ``spark.sql.autoBroadcastJoinThreshold`` is broadcast, so the
+        target rows stream through their segment's task in file order;
+      - source LEFT ANTI JOIN the touched keys: the inserts.
+    Both go through the same delete filter and CASE WHEN projection
+    (the insert branch reads ``t.*`` as NULL from an empty target).
+    Sorted by (partition column, key) within each task, the union is
+    written in files of at most _CHUNK_ROWS rows: every segment comes
+    back as contiguous key chunks that overlap no other live file, and
+    a point read of a rewritten key opens one file. Inserted rows are
+    chunks of their own; new keys above every range (a feed's usual
+    inserts) overlap nothing either. A source too large to broadcast
+    plans both joins as sort-merge joins, with no hint and no second
+    code path: target rows then cross a shuffle and the chunks follow
+    its hash layout, as every merge did before.
+
     A merge that loses the publish race to a concurrent commit plans
     again on the winner's snapshot (_commit), ``max_retries`` attempts
     in all — optimistic concurrency, no locks held. A staged merge
@@ -1280,8 +1343,8 @@ def merge(
 
     The source is read ONCE before the write: one aggregate
     (_scan_source) checks the MERGE INTO preconditions — the merge key
-    must be non-null (a NULL key can never match and would otherwise
-    emit an all-NULL ghost row out of the full-outer join) and unique
+    must be non-null (a NULL key can never match, so every merge would
+    insert it again) and unique
     (duplicate source keys would multiply matched target rows; SQL
     MERGE errors on multiple matches); violations raise ValueError
     before any file is written — and, in the same pass, finds the files
@@ -1340,22 +1403,35 @@ def merge(
             in_range = "key_range" not in f or i in scan.hit
             (touched if in_part and in_range else untouched).append(f)
         if touched:
-            target = _read_paths(
-                spark, root, man,
-                [os.path.join(root, f["path"]) for f in touched],
-            )
+            # one scan per segment; several files share one task
+            # (coalesce: no shuffle), a single file keeps its scan's
+            # splits, each a contiguous key range already
+            target = None
+            for seg in _segments(man["files"], touched):
+                d = _read_paths(
+                    spark, root, man, [os.path.join(root, f["path"]) for f in seg]
+                )
+                d = d.coalesce(1) if len(seg) > 1 else d
+                target = d if target is None else target.unionByName(
+                    d, allowMissingColumns=True
+                )
         else:  # no file overlaps: pure insert, but keep the schema
             target = read(spark, root, base_v).limit(0)
         src = source.alias("s")
-        tgt = target.alias("t")
+        on = F.col(f"t.{key}") == F.col(f"s.{key}")
+        # two branches that move no target row (see the docstring); the
+        # inserts meet an empty target, so both read the same t.* / s.*
+        carried = target.alias("t").join(src, on, "left_outer")
+        inserts = src.join(
+            target.select(key).alias("k"),
+            F.col(f"s.{key}") == F.col(f"k.{key}"),
+            "left_anti",
+        ).join(target.limit(0).alias("t"), on, "left_outer")
         # schema evolution: source-only columns append to the table
         # schema; rows from unmatched target (and from files this merge
         # does not rewrite) read them as null via mergeSchema
         new_cols = [c for c in source.columns if c not in target.columns]
         cols = target.columns
-        joined = tgt.join(
-            src, F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer"
-        )
         # the post-image projection is SQL text, one py4j call for all
         # columns (Column builders cost several calls per column)
         matched = f"s.{_ident(key)} IS NOT NULL"
@@ -1365,12 +1441,7 @@ def merge(
             take_source = (
                 f"{matched} AND (t.{_ident(key)} IS NULL OR ({update_condition}))"
             )
-        if delete_condition is not None:
-            # matched + delete-cond -> drop; unmatched tombstone -> no-op
-            joined = joined.filter(
-                f"NOT ({matched} AND coalesce(({delete_condition}), false))"
-            )
-        merged = joined.selectExpr(
+        post = [
             *[
                 f"CASE WHEN {take_source} THEN s.{_ident(c)} "
                 f"ELSE t.{_ident(c)} END AS {_ident(c)}"
@@ -1380,14 +1451,37 @@ def merge(
                 f"CASE WHEN {take_source} THEN s.{_ident(c)} END AS {_ident(c)}"
                 for c in new_cols
             ],
+        ]
+        branches = []
+        for joined in (carried, inserts):
+            if delete_condition is not None:
+                # matched + delete-cond -> drop; unmatched tombstone -> no-op
+                joined = joined.filter(
+                    f"NOT ({matched} AND coalesce(({delete_condition}), false))"
+                )
+            branches.append(joined.selectExpr(*post))
+        # sorted in its task, each segment is written as key chunks; the
+        # partition column leads, so the writer's own partition sort
+        # keeps the key order inside each partition
+        merged = branches[0].unionByName(branches[1]).sortWithinPartitions(
+            *([pcol] if pcol is not None else []), key
         )
         # CHECK constraints gate the post-image actually being written
         # (carried files were validated by their own writing commit)
         _enforce_constraints(merged, man, "merge()")
         new_seq = _next_seq(man, base_v)
-        new_files = _write_data_files(
-            merged, root, key=key, partition_by=pcol, seq=new_seq
-        )
+        # a union whose children each report a single partition is
+        # zipped into one task (spark.sql.unionOutputPartitioning);
+        # off for this write, so each coalesced segment keeps its task
+        conf = spark.conf
+        zipped = conf.get("spark.sql.unionOutputPartitioning")
+        conf.set("spark.sql.unionOutputPartitioning", "false")
+        try:
+            new_files = _write_data_files(
+                merged, root, key=key, partition_by=pcol, seq=new_seq, chunked=True
+            )
+        finally:
+            conf.set("spark.sql.unionOutputPartitioning", zipped)
         # untouched entries' recorded row counts do not know about a
         # merge-on-read overlay — subtract the per-file deleted counts
         # so the manifest `rows` stays exact; the overlay itself carries

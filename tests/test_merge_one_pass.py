@@ -1,6 +1,8 @@
 """A keyed merge reads its source once and counts nothing after the
-write; blooms are written only where they can prune; append() rejects
-NULL merge keys and keeps the table's columns; merge() rejects a source
+write; it moves no target row through a shuffle and rewrites its files
+as disjoint key chunks; its conditional clauses match a dict model;
+blooms are written only where they can prune; append() rejects NULL
+merge keys and keeps the table's columns; merge() rejects a source
 narrower than the table.
 
 Default tier on purpose — the test_acid*.py suites all run under
@@ -11,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -19,9 +22,10 @@ from pyspark.sql import functions as F
 from etl_arcgis_spark import acid
 from perfbench.tracing import SparkCounters
 
-# Spark jobs one merge runs on the shape below: the source aggregate,
-# then the join's shuffle stages and the write. Measured 6 (13 when the
-# source was scanned three times and the join recounted after the write).
+# Spark jobs one merge runs on the shape below: the source aggregate's
+# three, the two broadcasts (the batch, the touched keys) and the write.
+# Measured 6 (13 when the source was scanned three times and the join
+# recounted after the write).
 MERGE_JOB_BUDGET = 6
 
 
@@ -67,6 +71,152 @@ def test_merge_stays_within_job_budget(spark, tmp_path):
     finally:
         jobs = counters.end("merge-job-budget", before)["jobs"]
     assert jobs <= MERGE_JOB_BUDGET, f"merge ran {jobs:.0f} Spark jobs"
+
+
+def _disjoint(files):
+    """Whether the files' recorded key ranges are pairwise disjoint."""
+    rs = sorted(f["key_range"] for f in files)
+    return all(a[1] < b[0] for a, b in zip(rs, rs[1:]))
+
+
+def test_merge_shuffles_less_than_its_batch(spark, tmp_path):
+    """The touched target rows stream past the broadcast batch: the
+    merge's jobs shuffle fewer bytes than the batch file holds (only the
+    source aggregate exchanges anything)."""
+    root = str(tmp_path / "t")
+    _table(spark, root)
+    path = _batch(
+        str(tmp_path / "b.parquet"), range(0, 12_000, 7), range(40_000, 40_500)
+    )
+    counters = SparkCounters(spark)
+    before = counters.begin("merge-shuffle")
+    try:
+        acid.merge(spark, root, spark.read.parquet(path))
+    finally:
+        shuffled = counters.end("merge-shuffle", before)["shuffle_write_bytes"]
+    assert shuffled < os.path.getsize(path), f"merge shuffled {shuffled:.0f} bytes"
+
+
+def test_recency_merges_keep_key_ranges_disjoint(spark, tmp_path):
+    """Ten micro-batches of recency-skewed updates plus tail inserts
+    into a range-clustered table: every commit leaves the live files'
+    key ranges pairwise disjoint, and a point read of a key the last
+    batch updated opens one file."""
+    root = str(tmp_path / "t")
+    _table(spark, root)
+    rng = np.random.default_rng(0)
+    n = 40_000
+    for i in range(10):
+        ages = rng.exponential(2_000, 500).astype(np.int64)
+        upd = np.unique(np.clip(n - 1 - ages, 0, None)).tolist()
+        path = _batch(str(tmp_path / f"b{i}.parquet"), upd, range(n, n + 500))
+        n += 500
+        v = acid.merge(spark, root, spark.read.parquet(path))
+        files = acid._read_manifest(root, v)["files"]
+        assert _disjoint(files), f"merge {i}: {sorted(f['key_range'] for f in files)}"
+    got = acid.read_point(spark, root, upd[-1])
+    assert len(got.inputFiles()) == 1
+    assert [r.v for r in got.collect()] == [f"b{upd[-1]}"]
+
+
+def test_partitioned_merge_chunks_are_disjoint_per_partition(spark, tmp_path):
+    """On a partitioned table the post-image is sorted by (partition,
+    key), so the new files of each partition hold disjoint key ranges."""
+    root = str(tmp_path / "p")
+    df = spark.range(60_000).select(
+        F.col("id").alias("fid"),
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("p"),
+    )
+    acid.create(spark, root, df.repartitionByRange(4, "fid"), key="fid", partition_by="p")
+    old = {f["path"] for f in acid._read_manifest(root, 1)["files"]}
+    keys = range(20_000, 62_000, 3)
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(
+        pa.table({
+            "fid": pa.array(keys, pa.int64()),
+            "v": [f"u{k}" for k in keys],
+            "p": ["a" if k % 2 == 0 else "b" for k in keys],
+        }),
+        path,
+    )
+    v = acid.merge(spark, root, spark.read.parquet(path))
+    new = [f for f in acid._read_manifest(root, v)["files"] if f["path"] not in old]
+    for part in ("a", "b"):
+        mine = [f for f in new if f["partition"] == part]
+        assert len(mine) > 1 and _disjoint(mine), sorted(f["key_range"] for f in mine)
+    got = {r.fid: (r.v, r.p) for r in acid.read(spark, root).collect()}
+    assert len(got) == len(set(range(60_000)) | set(keys))
+    assert got[20_000] == ("u20000", "a") and got[20_001] == ("v20001", "b")
+
+
+def _model_merge(state, rows, delete, update):
+    """MERGE INTO over a dict ``{id: {column: value}}``: ``rows`` are
+    source dicts, ``delete``/``update`` predicates over (source row,
+    target row or None)."""
+    out = {k: dict(r) for k, r in state.items()}
+    for s in rows:
+        t = state.get(s["id"])
+        if delete(s, t):
+            out.pop(s["id"], None)  # matched: drop; absent key: no-op
+        elif t is None or update(s, t):
+            out[s["id"]] = dict(s)
+        else:
+            out[s["id"]] = {**t, **{c: None for c in s if c not in t}}
+    cols = {c for r in out.values() for c in r}
+    return {k: {c: r.get(c) for c in cols} for k, r in out.items()}
+
+
+@pytest.mark.parametrize("broadcast", [True, False], ids=["broadcast", "sort_merge"])
+def test_conditional_merge_matches_dict_model(spark, tmp_path, broadcast):
+    """The conditional MERGE clauses against a dict model, with the
+    batch broadcast and with every join planned as a sort-merge join
+    (the large-source plan): a false update condition keeps the target
+    row, the delete condition drops a matched row and ignores a
+    tombstone for an absent key, a source-only column reads NULL on
+    carried rows, and a batch that touches no file still inserts."""
+    root = str(tmp_path / "t")
+    rows = [(i, f"v{i}") for i in range(100)]
+    acid.create(
+        spark, root,
+        spark.createDataFrame(rows, "id INT, v STRING").repartitionByRange(4, "id"),
+        key="id",
+    )
+    state = {i: {"id": i, "v": v} for i, v in rows}
+    batches = [
+        # (rows, touches a file)
+        ([(1, "A", "U", 1), (2, "B", "U", 0), (3, None, "D", 1),
+          (60, "X", "U", 5), (500, None, "D", 1), (200, "N", "U", 0)], True),
+        ([(1000, "P", "U", 0), (1001, None, "D", 0), (1002, "Q", "U", 2)], False),
+    ]
+    conf = spark.conf
+    threshold = conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if not broadcast:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for i, (batch, touches) in enumerate(batches):
+            # a parquet batch carries a size estimate, so it can broadcast
+            path = str(tmp_path / f"b{i}.parquet")
+            spark.createDataFrame(
+                batch, "id INT, v STRING, op STRING, prio INT"
+            ).write.parquet(path)
+            src = spark.read.parquet(path)
+            v = acid.merge(
+                spark, root, src,
+                delete_condition="s.op = 'D'", update_condition="s.prio > 0",
+            )
+            state = _model_merge(
+                state,
+                [dict(zip(("id", "v", "op", "prio"), r)) for r in batch],
+                delete=lambda s, t: s["op"] == "D",
+                update=lambda s, t: s["prio"] > 0,
+            )
+            man = acid._read_manifest(root, v)
+            assert (man["rewrote_files"] > 0) == touches
+            got = {r["id"]: r.asDict() for r in acid.read(spark, root).collect()}
+            assert got == state
+    finally:
+        conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_merge_manifest_counts(spark, tmp_path):
