@@ -218,15 +218,23 @@ def floors(spark) -> dict[str, float]:
     analysis/optimization) — the representative per-query harness cost.
     floor_sec_python_stage (INFORMATIONAL — deliberately not fed into
     adjusted()): a trivial 1-row mapInPandas through a warm reused
-    worker. Measured r3: ~0.15-0.25 s per Python stage in this
-    environment regardless of data size or UDF flavor (plain UDF /
-    pandas_udf / mapInPandas / RDD all pay it; additive per chained
-    Python stage) — the fixed JVM->Python dispatch latency the one
-    Python-path headline query (sim_cosine_topk_pairs) carries on top of
-    its ~50 ms of GEMM work; at cluster scale it amortizes over
-    minutes-long tasks."""
+    worker that has imported the engine, as the worker of every engine
+    Python stage has (their functions are unpickled by reference). It
+    is paid per Python task, whatever the data size, and it is not
+    fixed JVM->Python dispatch latency: most of what it used to read
+    (0.15-0.35 s) was the worker re-parsing the directory of every
+    cached zip archive before each task (importlib.invalidate_caches()
+    on CPython < 3.13, ~0.19 s), which importing the engine turns off
+    (etl_arcgis_spark/_zipcache.py). A Python stage whose worker never
+    imports the engine still pays it."""
     tiny = spark.range(10)
-    tiny_py = spark.range(1).mapInPandas(lambda batches: batches, schema="id bigint")
+
+    def engine_stage(batches):
+        import etl_arcgis_spark  # noqa: F401
+
+        return batches
+
+    tiny_py = spark.range(1).mapInPandas(engine_stage, schema="id bigint")
     return {
         "floor_sec_per_job": measure(spark, lambda: tiny, "floor_job", 1, 7)[1],
         "floor_sec_per_query": measure(

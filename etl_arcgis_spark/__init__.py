@@ -21,4 +21,10 @@ physical strategy; Python touches data only through Arrow-vectorized
 pandas UDFs where built-ins genuinely cannot express the semantics.
 """
 
+from etl_arcgis_spark import _zipcache
+
 __version__ = "0.1.0"
+
+# Python workers call importlib.invalidate_caches() before every task;
+# see _zipcache for why that re-parses zip archives and what this does.
+_zipcache.install()
