@@ -49,10 +49,12 @@ range are rewritten; everything else carries forward path-identical.
 A merge reads its source once before the write: one aggregate checks
 the keys, finds the files to rewrite and collects the partitions the
 source writes. It streams the touched files past a broadcast batch,
-with no shuffle, and writes them back as key chunks of at most
-_CHUNK_ROWS rows that overlap no other live file. Nothing is counted
-after the write: a commit's ``rows`` is the sum of its files' footer
-counts. Files holding at most
+with no shuffle. merge(), delete_where(), update_where() and
+compact_deletes() all rewrite their touched files through one pair of
+helpers, _read_touched and _write_touched; the latter's docstring
+states the key-chunk layout they leave. Nothing is counted after a
+merge's write: its ``rows`` is the sum of its files' footer counts.
+Files holding at most
 _BLOOM_BITS distinct keys also carry a key Bloom sidecar for
 read_point(); bigger files get none, as a saturated filter skips
 nothing. read_key_range() uses the same stats for file skipping, and
@@ -66,6 +68,7 @@ makes transactional).
 
 from __future__ import annotations
 
+import collections
 import glob
 import json
 import os
@@ -76,7 +79,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -315,11 +318,6 @@ def _bloom_may_contain(b64: str, value: Any) -> bool:
     )
 
 
-def _key_stats(path: str, key: str) -> list[Any] | None:
-    """Back-compat shim: the merge key's [min, max] from _col_stats."""
-    return _col_stats(path).get(key)
-
-
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 # Partition-value ENCODING version stamped on file entries (like
@@ -390,9 +388,9 @@ def _next_seq(man: dict[str, Any], base_v: int) -> int:
     return max(int(man.get("last_seq", 0)), base_v) + 1
 
 
-# rows per file of a chunked write (merge's post-image): a rewritten
-# file splits into key chunks this size, so a point read opens one
-# small file and the next merge rewrites only the chunks it hits
+# rows per file of a copy-on-write rewrite (see _write_touched): a
+# rewritten file splits into key chunks this size, so a point read
+# opens one small file and the next rewrite touches only the chunks it hits
 _CHUNK_ROWS = 16_384
 
 
@@ -402,14 +400,22 @@ def _write_data_files(
     key: str | None = None,
     partition_by: str | None = None,
     seq: int | None = None,
-    chunked: bool = False,
 ) -> list[dict[str, Any]]:
     """Write df as new immutable parquet files; return file entries
-    (with per-file key min/max stats when ``key`` is given). Files are
-    invisible until a manifest references them. ``seq`` stamps the
-    entries' data sequence number (see _next_seq). ``chunked`` caps
-    each file at _CHUNK_ROWS rows (the writer's ``maxRecordsPerFile``):
-    a task whose rows are sorted by key writes contiguous key chunks.
+    (with per-file key min/max stats when ``key`` is given)."""
+    return _write_files(df.write, root, key, partition_by, seq)
+
+
+def _write_files(
+    writer: DataFrameWriter,
+    root: str,
+    key: str | None,
+    partition_by: str | None,
+    seq: int | None,
+) -> list[dict[str, Any]]:
+    """_write_data_files through ``writer`` (which may carry write
+    options). Files are invisible until a manifest references them.
+    ``seq`` stamps the entries' data sequence number (see _next_seq).
 
     With ``partition_by``, files land under Hive-style
     ``data/<col>=<val>/`` directories and each entry records its
@@ -421,9 +427,7 @@ def _write_data_files(
     os.makedirs(data_dir, exist_ok=True)
     staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
     entries = []
-    writer = df.write.mode("overwrite")
-    if chunked:
-        writer = writer.option("maxRecordsPerFile", _CHUNK_ROWS)
+    writer = writer.mode("overwrite")
     if partition_by is None:
         writer.parquet(staging)
         for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
@@ -718,7 +722,7 @@ def read(spark: SparkSession, root: str, version: int | None = None) -> DataFram
     travel). Snapshot isolation: the file list is fixed at manifest
     read time; later commits add new files this reader never sees."""
     v, man = _snapshot(root, version)
-    paths = [os.path.join(root, f["path"]) for f in man["files"]]
+    paths = [f["path"] for f in man["files"]]
     if not paths:
         # an empty TABLE is legitimate state (e.g. delete-all): the
         # manifest carries the schema so readers still get a typed
@@ -750,9 +754,10 @@ def _read_paths(
     paths: list[str],
     with_meta: bool = False,
 ) -> DataFrame:
-    """Read an explicit file list under this table's layout(s).
-    Partition-spec EVOLUTION means one snapshot can mix layouts
-    (Iceberg: each file belongs to the spec it was written under), so
+    """Read an explicit list of manifest paths (relative to ``root``)
+    under this table's layout(s). Partition-spec EVOLUTION means one
+    snapshot can mix layouts (Iceberg: each file belongs to the spec it
+    was written under), so
     the read groups files by their per-file spec: each group's
     basePath pass recovers ITS directory column, and the groups
     union by name — a column that is layout in one spec is plain data
@@ -816,7 +821,8 @@ def _read_paths(
     groups: dict[
         tuple[str | None, str | None, tuple[tuple[str, str], ...]], list[str]
     ] = {}
-    for p in paths:
+    for rel in paths:
+        p = os.path.join(root, rel)
         spec, base = _layout_of(p)
         groups.setdefault((spec, base, _alias_sig(p)), []).append(p)
     # Pin the read schema from the manifest whenever it carries one:
@@ -951,11 +957,7 @@ def read_partition(
     other = [f for f in man["files"] if not _trusted(f)]
     parts = []
     if same:
-        parts.append(
-            _read_paths(
-                spark, root, man, [os.path.join(root, f["path"]) for f in same]
-            )
-        )
+        parts.append(_read_paths(spark, root, man, [f["path"] for f in same]))
     if other:
         nonnull = [x for x in vals if x is not None]
         resid = (
@@ -966,9 +968,7 @@ def read_partition(
         if None in vals:  # isin() never matches NULL; spell it out
             resid = resid | F.col(pcol).isNull()
         parts.append(
-            _read_paths(
-                spark, root, man, [os.path.join(root, f["path"]) for f in other]
-            ).filter(resid)
+            _read_paths(spark, root, man, [f["path"] for f in other]).filter(resid)
         )
     if not parts:
         return read(spark, root, v).filter(F.lit(False))
@@ -1036,9 +1036,7 @@ def _read_kept(
     filter."""
     if not keep:
         return read(spark, root, v).filter(F.lit(False))
-    df = _read_paths(
-        spark, root, man, [os.path.join(root, f["path"]) for f in keep]
-    )
+    df = _read_paths(spark, root, man, [f["path"] for f in keep])
     return _pad(df, read(spark, root, v).schema)
 
 
@@ -1286,6 +1284,69 @@ def _segments(
     return segs + [[f] for f in touched if "key_range" not in f]
 
 
+def _read_touched(
+    spark: SparkSession,
+    root: str,
+    base_v: int,
+    man: dict[str, Any],
+    touched: list[dict[str, Any]],
+) -> DataFrame:
+    """The read half of every copy-on-write rewrite (merge, delete_where,
+    update_where, compact_deletes): the ``touched`` entries of snapshot
+    ``base_v`` (manifest ``man``), one scan per _segments segment.
+    Several files share one task (coalesce: no shuffle); a single file
+    keeps its scan's splits, each a contiguous key range already. A
+    typed empty frame when nothing is touched. The caller transforms
+    the rows and hands them to _write_touched."""
+    if not touched:
+        return read(spark, root, base_v).limit(0)
+    target = None
+    for seg in _segments(man["files"], touched):
+        d = _read_paths(spark, root, man, [f["path"] for f in seg])
+        d = d.coalesce(1) if len(seg) > 1 else d
+        target = d if target is None else target.unionByName(
+            d, allowMissingColumns=True
+        )
+    return target
+
+
+def _write_touched(
+    df: DataFrame, root: str, man: dict[str, Any], seq: int
+) -> list[dict[str, Any]]:
+    """The write half of every copy-on-write rewrite: ``df`` (rows from
+    _read_touched's segments, plus any rows of its own) sorted by
+    (partition column, key) within each task and written in files of at
+    most _CHUNK_ROWS rows, stamped ``seq``; returns the file entries.
+
+    This is the table's rewrite layout. Each segment's task writes
+    contiguous key chunks inside the segment's own key span, where no
+    carried file's range starts, so on a table whose ranges are
+    disjoint the chunks overlap no other live file and a point read of
+    a rewritten key opens one file. Rows a
+    writer adds in tasks of their own (merge's inserts) are chunks of
+    their own; new keys above every range overlap nothing either. The
+    partition column leads the sort, so the writer's own partition
+    sort keeps the key order inside each partition. A frame that
+    crossed a shuffle (a merge whose source is too large to broadcast)
+    comes back in that shuffle's hash layout instead.
+
+    A union whose children each report a single partition is zipped
+    into one task (spark.sql.unionOutputPartitioning); it is off for
+    this write, so each coalesced segment keeps its task."""
+    pcol = man.get("partition_by")
+    key = man["key"]
+    df = df.sortWithinPartitions(*([pcol] if pcol is not None else []), key)
+    conf = df.sparkSession.conf
+    zipped = conf.get("spark.sql.unionOutputPartitioning")
+    conf.set("spark.sql.unionOutputPartitioning", "false")
+    try:
+        return _write_files(
+            df.write.option("maxRecordsPerFile", _CHUNK_ROWS), root, key, pcol, seq
+        )
+    finally:
+        conf.set("spark.sql.unionOutputPartitioning", zipped)
+
+
 def merge(
     spark: SparkSession,
     root: str,
@@ -1317,24 +1378,18 @@ def merge(
     keys actually hit, not the table.
 
     The rewrite moves no target row through a shuffle. The touched
-    files are cut into segments (_segments: runs of key-adjacent files
-    of at most _CHUNK_ROWS rows, or one bigger file), each read by one
-    task. The post-image is two branches over them:
+    files are read by _read_touched, one task per segment of
+    key-adjacent files. The post-image is two branches over them:
       - touched LEFT OUTER JOIN source: a micro-batch under
         ``spark.sql.autoBroadcastJoinThreshold`` is broadcast, so the
         target rows stream through their segment's task in file order;
       - source LEFT ANTI JOIN the touched keys: the inserts.
     Both go through the same delete filter and CASE WHEN projection
     (the insert branch reads ``t.*`` as NULL from an empty target).
-    Sorted by (partition column, key) within each task, the union is
-    written in files of at most _CHUNK_ROWS rows: every segment comes
-    back as contiguous key chunks that overlap no other live file, and
-    a point read of a rewritten key opens one file. Inserted rows are
-    chunks of their own; new keys above every range (a feed's usual
-    inserts) overlap nothing either. A source too large to broadcast
-    plans both joins as sort-merge joins, with no hint and no second
-    code path: target rows then cross a shuffle and the chunks follow
-    its hash layout, as every merge did before.
+    _write_touched writes the union; its docstring states the key-chunk
+    layout that leaves. A source too large to broadcast plans both
+    joins as sort-merge joins, with no hint and no second code path:
+    target rows then cross a shuffle.
 
     A merge that loses the publish race to a concurrent commit plans
     again on the winner's snapshot (_commit), ``max_retries`` attempts
@@ -1402,21 +1457,7 @@ def merge(
             )
             in_range = "key_range" not in f or i in scan.hit
             (touched if in_part and in_range else untouched).append(f)
-        if touched:
-            # one scan per segment; several files share one task
-            # (coalesce: no shuffle), a single file keeps its scan's
-            # splits, each a contiguous key range already
-            target = None
-            for seg in _segments(man["files"], touched):
-                d = _read_paths(
-                    spark, root, man, [os.path.join(root, f["path"]) for f in seg]
-                )
-                d = d.coalesce(1) if len(seg) > 1 else d
-                target = d if target is None else target.unionByName(
-                    d, allowMissingColumns=True
-                )
-        else:  # no file overlaps: pure insert, but keep the schema
-            target = read(spark, root, base_v).limit(0)
+        target = _read_touched(spark, root, base_v, man, touched)
         src = source.alias("s")
         on = F.col(f"t.{key}") == F.col(f"s.{key}")
         # two branches that move no target row (see the docstring); the
@@ -1460,28 +1501,12 @@ def merge(
                     f"NOT ({matched} AND coalesce(({delete_condition}), false))"
                 )
             branches.append(joined.selectExpr(*post))
-        # sorted in its task, each segment is written as key chunks; the
-        # partition column leads, so the writer's own partition sort
-        # keeps the key order inside each partition
-        merged = branches[0].unionByName(branches[1]).sortWithinPartitions(
-            *([pcol] if pcol is not None else []), key
-        )
+        merged = branches[0].unionByName(branches[1])
         # CHECK constraints gate the post-image actually being written
         # (carried files were validated by their own writing commit)
         _enforce_constraints(merged, man, "merge()")
         new_seq = _next_seq(man, base_v)
-        # a union whose children each report a single partition is
-        # zipped into one task (spark.sql.unionOutputPartitioning);
-        # off for this write, so each coalesced segment keeps its task
-        conf = spark.conf
-        zipped = conf.get("spark.sql.unionOutputPartitioning")
-        conf.set("spark.sql.unionOutputPartitioning", "false")
-        try:
-            new_files = _write_data_files(
-                merged, root, key=key, partition_by=pcol, seq=new_seq, chunked=True
-            )
-        finally:
-            conf.set("spark.sql.unionOutputPartitioning", zipped)
+        new_files = _write_touched(merged, root, man, new_seq)
         # untouched entries' recorded row counts do not know about a
         # merge-on-read overlay — subtract the per-file deleted counts
         # so the manifest `rows` stays exact; the overlay itself carries
@@ -1602,9 +1627,7 @@ def _hit_file_split(
     if not man["files"]:
         return [], [], 0
     df = _read_paths(
-        spark, root, man,
-        [os.path.join(root, f["path"]) for f in man["files"]],
-        with_meta=True,
+        spark, root, man, [f["path"] for f in man["files"]], with_meta=True
     )
     hits = (
         df.filter(predicate)
@@ -1630,13 +1653,14 @@ def _hit_file_split(
 def delete_where(spark: SparkSession, root: str, predicate: str) -> int:
     """Transactional DELETE, file-pruned copy-on-write: one scan finds
     which data files actually CONTAIN matching rows (per-file match
-    counts via input_file_name — |files| driver rows); only those files
-    are rewritten without their matches, every other file carries into
-    the new snapshot path-identical. Delta/Iceberg DELETE shape:
-    deleting one partition/day from a 100 TB table rewrites that
-    slice's files, never the table (the pre-r6 spelling rewrote every
-    file on every delete). Smaller file deltas also keep CDF diffs
-    delta-sized.
+    counts keyed by the reader's ``_metadata.file_name`` — |files|
+    driver rows, see _hit_file_split); only those files are rewritten
+    without their matches (_read_touched/_write_touched), every other
+    file carries into the new snapshot path-identical. Delta/Iceberg
+    DELETE shape: deleting one partition/day from a 100 TB table
+    rewrites that slice's files, never the table (the pre-r6 spelling
+    rewrote every file on every delete). Smaller file deltas also keep
+    CDF diffs delta-sized.
 
     SQL DELETE semantics on NULLs: a row is deleted iff the predicate
     is TRUE; rows where it evaluates NULL/UNKNOWN survive (the pre-r6
@@ -1648,14 +1672,10 @@ def delete_where(spark: SparkSession, root: str, predicate: str) -> int:
         )
         new_seq = _next_seq(man, base_v)
         if touched:
-            remaining = _read_paths(
-                spark, root, man,
-                [os.path.join(root, f["path"]) for f in touched],
-            ).filter(f"NOT ({predicate}) OR ({predicate}) IS NULL")
-            new_files += _write_data_files(
-                remaining, root, key=man["key"],
-                partition_by=man.get("partition_by"), seq=new_seq,
+            remaining = _read_touched(spark, root, base_v, man, touched).filter(
+                f"NOT ({predicate}) OR ({predicate}) IS NULL"
             )
+            new_files += _write_touched(remaining, root, man, new_seq)
         return {
             "files": new_files,
             "rows": max(0, int(man.get("rows", 0)) - int(deleted_rows)),
@@ -1763,6 +1783,32 @@ def _mor_deleted_counts(man: dict) -> dict:
     return out
 
 
+def _write_delete_file(df: DataFrame, root: str) -> tuple[str, int] | None:
+    """Write ``df`` as one parquet delete file under ``deletes/``; return
+    (its root-relative path, its row count), or None when ``df`` has no
+    rows (nothing to commit). The file is invisible until a manifest's
+    ``deletes`` entry references it."""
+    import pyarrow.parquet as pq
+
+    staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    del_dir = os.path.join(root, "deletes")
+    os.makedirs(del_dir, exist_ok=True)
+    out = None
+    for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
+        rows = pq.ParquetFile(part).metadata.num_rows
+        if rows:
+            final = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
+            os.replace(part, final)
+            out = (os.path.relpath(final, root), int(rows))
+            break  # coalesce(1): at most one non-empty part
+    # only the part was moved out; _SUCCESS/.crc/zero-row parts would
+    # otherwise accumulate under root forever (vacuum also sweeps aged
+    # .stage-* dirs as crash orphans)
+    shutil.rmtree(staging, ignore_errors=True)
+    return out
+
+
 def delete_where_mor(spark: SparkSession, root: str, predicate: str) -> int:
     """Transactional DELETE, MERGE-ON-READ (Iceberg v2 positional
     deletes): instead of rewriting the touched data files (the
@@ -1787,8 +1833,7 @@ def delete_where_mor(spark: SparkSession, root: str, predicate: str) -> int:
         if man["files"]:
             hits = (
                 _read_paths(
-                    spark, root, man,
-                    [os.path.join(root, f["path"]) for f in man["files"]],
+                    spark, root, man, [f["path"] for f in man["files"]],
                     with_meta=True,
                 )
                 .filter(f"({predicate})")
@@ -1797,34 +1842,14 @@ def delete_where_mor(spark: SparkSession, root: str, predicate: str) -> int:
                     F.col("__mor_pos").alias("dpos"),
                 )
             )
-            staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
-            hits.coalesce(1).write.mode("overwrite").parquet(staging)
-            import pyarrow.parquet as pq
+            written = _write_delete_file(hits, root)
+            if written is not None:
+                import pyarrow.parquet as pq
 
-            del_dir = os.path.join(root, "deletes")
-            os.makedirs(del_dir, exist_ok=True)
-            for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-                meta_rows = pq.ParquetFile(part).metadata.num_rows
-                if meta_rows == 0:
-                    continue
-                tbl = pq.read_table(part, columns=["dfile"])
-                import collections
-
+                path, n = written
+                tbl = pq.read_table(os.path.join(root, path), columns=["dfile"])
                 targets = collections.Counter(tbl.column(0).to_pylist())
-                final = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
-                os.replace(part, final)
-                entries.append(
-                    {
-                        "path": os.path.relpath(final, root),
-                        "rows": int(meta_rows),
-                        "targets": {bn: int(c) for bn, c in targets.items()},
-                    }
-                )
-                n += int(meta_rows)
-            # only part files were moved out; _SUCCESS/.crc/zero-row parts
-            # would otherwise accumulate under root forever (vacuum also
-            # sweeps aged .stage-* dirs as crash orphans)
-            shutil.rmtree(staging, ignore_errors=True)
+                entries.append({"path": path, "rows": n, "targets": dict(targets)})
         return {
             "rows": max(0, int(man.get("rows", 0)) - n),
             "predicate": predicate,
@@ -1868,9 +1893,7 @@ def _eq_delete_entry(
     n = 0
     if man["files"]:
         cur = _read_paths(
-            spark, root, man,
-            [os.path.join(root, f["path"]) for f in man["files"]],
-            with_meta=True,
+            spark, root, man, [f["path"] for f in man["files"]], with_meta=True
         )
         kren = kdist.select(*[F.col(c).alias(f"__eq_{c}") for c in cols])
         cond = None
@@ -1886,31 +1909,14 @@ def _eq_delete_entry(
         targets = {r["__mor_file"]: int(r["count"]) for r in hit_counts}
         n = sum(targets.values())
     # write the key tuples (small by contract: keys, not positions)
-    staging = os.path.join(root, f".stage-{uuid.uuid4().hex}")
-    kdist.coalesce(1).write.mode("overwrite").parquet(staging)
-    import pyarrow.parquet as pq
-
-    del_dir = os.path.join(root, "deletes")
-    os.makedirs(del_dir, exist_ok=True)
-    entry: dict[str, Any] | None = None
-    for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-        n_keys = pq.ParquetFile(part).metadata.num_rows
-        if n_keys == 0:
-            continue
-        final = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
-        os.replace(part, final)
-        entry = {
-            "path": os.path.relpath(final, root),
-            "kind": "equality",
-            "cols": cols,
-            "rows": int(n_keys),
-            "seq": int(seq),
-            "targets": targets,
-        }
-        break  # coalesce(1): at most one non-empty part
-    shutil.rmtree(staging, ignore_errors=True)
-    if entry is None:  # zero key tuples: no entry to commit
+    written = _write_delete_file(kdist, root)
+    if written is None:  # zero key tuples: no entry to commit
         return {}, 0
+    path, n_keys = written
+    entry = {
+        "path": path, "kind": "equality", "cols": cols, "rows": n_keys,
+        "seq": int(seq), "targets": targets,
+    }
     return entry, n
 
 
@@ -2005,9 +2011,10 @@ def compact_deletes(spark: SparkSession, root: str) -> int:
     """Fold the merge-on-read delete overlay back into plain data
     files (Iceberg's rewrite_position_delete_files + data-file
     rewrite, reduced to one maintenance op): rewrite ONLY the data
-    files some delete entry targets (reads apply the overlay, so the
-    rewrite materializes the surviving rows), carry every untargeted
-    file path-identical, and publish a snapshot with no ``deletes``.
+    files some delete entry targets (_read_touched/_write_touched;
+    reads apply the overlay, so the rewrite materializes the surviving
+    rows), carry every untargeted file path-identical, and publish a
+    snapshot with no ``deletes``.
     Read amplification returns to zero; the overlay parquet files age
     out via vacuum once their referencing manifests expire."""
 
@@ -2024,14 +2031,8 @@ def compact_deletes(spark: SparkSession, root: str) -> int:
         ]
         new_seq = _next_seq(man, base_v)
         if touched:
-            survivors = _read_paths(
-                spark, root, man,
-                [os.path.join(root, f["path"]) for f in touched],
-            )
-            new_files += _write_data_files(
-                survivors, root, key=man["key"],
-                partition_by=man.get("partition_by"), seq=new_seq,
-            )
+            survivors = _read_touched(spark, root, base_v, man, touched)
+            new_files += _write_touched(survivors, root, man, new_seq)
         return {
             "files": new_files,
             "deletes": None,
@@ -2050,8 +2051,9 @@ def update_where(
 ) -> int:
     """Transactional predicate UPDATE (Delta's ``UPDATE t SET ... WHERE
     ...``), file-pruned copy-on-write like delete_where: one scan finds
-    the files containing matching rows; only those rewrite, with each
-    SET column replaced by ``CASE WHEN pred THEN expr ELSE old END``;
+    the files containing matching rows; only those rewrite
+    (_read_touched/_write_touched), with each SET column replaced by
+    ``CASE WHEN pred THEN expr ELSE old END``;
     every other file carries path-identical. The keyed path for upserts
     stays merge() — this is the maintenance shape (backfills, GDPR
     redaction, unit fixes) where the filter, not a key set, names the
@@ -2074,16 +2076,11 @@ def update_where(
         new_seq = _next_seq(man, base_v)
         if touched:
             updated = _apply_set(
-                _read_paths(
-                    spark, root, man,
-                    [os.path.join(root, f["path"]) for f in touched],
-                ),
+                _read_touched(spark, root, base_v, man, touched),
                 predicate, set_exprs, "update_where",
             )
             _enforce_constraints(updated, man, "update_where()")
-            new_files += _write_data_files(
-                updated, root, key=man["key"], partition_by=pcol, seq=new_seq
-            )
+            new_files += _write_touched(updated, root, man, new_seq)
         return {
             "files": new_files,
             "predicate": predicate,
@@ -2195,7 +2192,7 @@ def update_where_mor(
     :func:`update_where`): the matched rows' KEYS go into one
     Iceberg-v2 equality-delete file and their updated versions append
     as new data files stamped with the SAME sequence number (the
-    upsert_mor protocol, acid.py:1565) — nothing is rewritten, write
+    :func:`upsert_mor` protocol) — nothing is rewritten, write
     cost = matched rows + one key file, versus CoW's rewrite of every
     file the predicate touches. Same visible result as
     ``update_where(root, predicate, set_exprs)`` — parity-tested —
@@ -2440,9 +2437,7 @@ def read_staged(spark: SparkSession, root: str, token: str) -> DataFrame:
     version."""
     with open(_audit_path(root, token)) as fh:
         man = json.load(fh)
-    return _read_paths(
-        spark, root, man, [os.path.join(root, f["path"]) for f in man["files"]]
-    )
+    return _read_paths(spark, root, man, [f["path"] for f in man["files"]])
 
 
 def publish_staged(root: str, token: str) -> int:
@@ -2781,9 +2776,7 @@ def compact(
         new_seq = _next_seq(man, base_v)
         for g in groups:
             df = _pad(  # evolved cols absent from every file in the group
-                _read_paths(
-                    spark, root, man, [os.path.join(root, f["path"]) for f in g]
-                ),
+                _read_paths(spark, root, man, [f["path"] for f in g]),
                 table_schema,
             ).coalesce(1).sortWithinPartitions(key)
             # rewritten files take the NEW sequence number: any carried
@@ -2870,10 +2863,7 @@ def compact_zorder(
             n_out = max(1, min(-(-total // target_file_bytes), max(pool_rows, 1)))
             df = (
                 _pad(
-                    _read_paths(
-                        spark, root, man,
-                        [os.path.join(root, f["path"]) for f in pool],
-                    ),
+                    _read_paths(spark, root, man, [f["path"] for f in pool]),
                     table_schema,
                 )
                 .withColumn("__zkey", F.expr(zterms).cast("bigint"))
@@ -3049,12 +3039,7 @@ def table_changes(
     def _read_files(paths: list[str], side_man: dict[str, Any] | None) -> DataFrame:
         if not paths:
             return _pad(read(spark, root, v_to).limit(0), full)
-        return _pad(
-            _read_paths(
-                spark, root, side_man, [os.path.join(root, p) for p in paths]
-            ),
-            full,
-        )
+        return _pad(_read_paths(spark, root, side_man, paths), full)
 
     out: DataFrame | None = None
     for plan in plans:
@@ -3112,8 +3097,7 @@ def table_changes(
             if not tgt:
                 return None
             return _read_paths(
-                spark, root, plan.pre_overlay,
-                [os.path.join(root, p) for p in tgt], with_meta=True,
+                spark, root, plan.pre_overlay, tgt, with_meta=True
             )
 
         pos_new = [

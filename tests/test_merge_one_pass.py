@@ -150,6 +150,40 @@ def test_partitioned_merge_chunks_are_disjoint_per_partition(spark, tmp_path):
     assert got[20_000] == ("u20000", "a") and got[20_001] == ("v20001", "b")
 
 
+@pytest.mark.parametrize(
+    "writer", ["delete_where", "update_where", "delete_where_mor+compact_deletes"]
+)
+def test_predicate_rewrites_keep_key_ranges_disjoint(spark, tmp_path, writer):
+    """The other copy-on-write writers rewrite their touched files the
+    way merge does: a predicate that hits every other file of a 40-file
+    range-clustered table leaves the live files' key ranges pairwise
+    disjoint, a point read opens one file, and the table matches a dict
+    model."""
+    root = str(tmp_path / "t")
+    _table(spark, root, files=40)
+    model = {k: (3 * k, f"v{k}") for k in range(40_000)}
+    pred = "fid % 2000 = 7"
+    hit = [k for k in model if k % 2000 == 7]
+    if writer == "update_where":
+        acid.update_where(spark, root, pred, {"x": "x + 1"})
+        model.update({k: (3 * k + 1, f"v{k}") for k in hit})
+    else:
+        if writer == "delete_where":
+            acid.delete_where(spark, root, pred)
+        else:
+            acid.delete_where_mor(spark, root, pred)
+            acid.compact_deletes(spark, root)
+        for k in hit:
+            del model[k]
+    files = acid._snapshot(root)[1]["files"]
+    assert _disjoint(files), sorted(f["key_range"] for f in files)
+    opened = len(acid.read_point(spark, root, 4007).inputFiles())
+    # a deleted key may also be skipped by its chunk's bloom
+    assert opened == 1 if writer == "update_where" else opened <= 1, opened
+    got = {r.fid: (r.x, r.v) for r in acid.read(spark, root).collect()}
+    assert got == model
+
+
 def _model_merge(state, rows, delete, update):
     """MERGE INTO over a dict ``{id: {column: value}}``: ``rows`` are
     source dicts, ``delete``/``update`` predicates over (source row,
