@@ -83,6 +83,8 @@ from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from etl_arcgis_spark.helpers import sql_ident, sql_string
+
 _MANIFEST_RE = re.compile(r"_v(\d+)\.manifest\.json$")
 
 
@@ -1154,11 +1156,6 @@ def read_point(
     return _read_kept(spark, root, v, man, keep).filter(F.col(key) == value)
 
 
-def _ident(name: str) -> str:
-    """``name`` as a quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 @dataclass
 class _SourceScan:
     """What one aggregate over a write's source answers before any
@@ -1169,13 +1166,13 @@ class _SourceScan:
     parts: set[str | None] | None  # source partition values, NULL kept
 
 
-def _range_hits(k: Any, ranged: list[tuple[int, dict[str, Any]]]) -> Any:
-    """Per-row array of the indices ``i`` of the ``(i, file entry)``
-    pairs whose recorded [min, max] key range holds ``k``. The ranges
-    enter the plan as ONE JSON literal parsed by from_json
-    (constant-folded once), not one column expression or py4j call per
-    file. The range type is inferred from the
-    recorded values the way a Python row would be (bool, bigint,
+def _range_hits(k: str, ranged: list[tuple[int, dict[str, Any]]]) -> str:
+    """SQL for the per-row array of the indices ``i`` of the ``(i, file
+    entry)`` pairs whose recorded [min, max] key range holds the SQL
+    key ``k``. The ranges enter the plan as ONE escaped JSON string
+    literal parsed by from_json (constant-folded once), not one column
+    expression or py4j call per file. The range type is inferred from
+    the recorded values the way a Python row would be (bool, bigint,
     double, string), so ``k`` compares under Spark's usual coercion."""
     vals = [v for _, f in ranged for v in f["key_range"]]
     if all(isinstance(v, bool) for v in vals):
@@ -1186,16 +1183,13 @@ def _range_hits(k: Any, ranged: list[tuple[int, dict[str, Any]]]) -> Any:
         typ = "double"
     else:
         typ = "string"
-    ranges = F.from_json(
-        F.lit(json.dumps([
-            {"i": i, "lo": f["key_range"][0], "hi": f["key_range"][1]}
-            for i, f in ranged
-        ])),
-        f"array<struct<i:int,lo:{typ},hi:{typ}>>",
-    )
-    return F.transform(
-        F.filter(ranges, lambda r: (k >= r["lo"]) & (k <= r["hi"])),
-        lambda r: r["i"],
+    ranges = sql_string(json.dumps([
+        {"i": i, "lo": f["key_range"][0], "hi": f["key_range"][1]}
+        for i, f in ranged
+    ]))
+    return (
+        f"transform(filter(from_json({ranges}, 'array<struct<i:int,lo:{typ},hi:{typ}>>'),"
+        f" _rng -> {k} >= _rng.lo AND {k} <= _rng.hi), _rng -> _rng.i)"
     )
 
 
@@ -1221,20 +1215,19 @@ def _scan_source(
     - with ``pcol``, the set of the source's partition values, NULL
       included (None; non-NULL values as ``str``).
 
+    The aggregate is SQL text, one py4j call for all of it.
     Violations raise ValueError."""
-    k = F.col(key)
-    aggs = [F.count(F.lit(1)).alias("n"), F.count(key).alias("n_nonnull")]
+    k = sql_ident(key)
+    aggs = ["count(1) AS n", f"count({k}) AS n_nonnull"]
     if unique:
-        aggs.append(F.count_distinct(key).alias("n_distinct"))
+        aggs.append(f"count(DISTINCT {k}) AS n_distinct")
     ranged = [(i, f) for i, f in enumerate(files or []) if "key_range" in f]
     if ranged:
-        aggs.append(F.flatten(F.collect_set(_range_hits(k, ranged))).alias("hits"))
+        aggs.append(f"flatten(collect_set({_range_hits(k, ranged)})) AS hits")
     if pcol is not None:
-        aggs += [
-            F.collect_set(pcol).alias("parts"),
-            F.max(F.col(pcol).isNull()).alias("part_null"),
-        ]
-    chk = source.agg(*aggs).collect()[0]
+        p = sql_ident(pcol)
+        aggs += [f"collect_set({p}) AS parts", f"max({p} IS NULL) AS part_null"]
+    chk = source.selectExpr(*aggs).collect()[0]
     if chk["n"] != chk["n_nonnull"]:
         raise ValueError(
             f"{what} source has {chk['n'] - chk['n_nonnull']} NULL "
@@ -1475,21 +1468,21 @@ def merge(
         cols = target.columns
         # the post-image projection is SQL text, one py4j call for all
         # columns (Column builders cost several calls per column)
-        matched = f"s.{_ident(key)} IS NOT NULL"
+        matched = f"s.{sql_ident(key)} IS NOT NULL"
         take_source = matched
         if update_condition is not None:
             # matched but condition false: keep the TARGET row
             take_source = (
-                f"{matched} AND (t.{_ident(key)} IS NULL OR ({update_condition}))"
+                f"{matched} AND (t.{sql_ident(key)} IS NULL OR ({update_condition}))"
             )
         post = [
             *[
-                f"CASE WHEN {take_source} THEN s.{_ident(c)} "
-                f"ELSE t.{_ident(c)} END AS {_ident(c)}"
+                f"CASE WHEN {take_source} THEN s.{sql_ident(c)} "
+                f"ELSE t.{sql_ident(c)} END AS {sql_ident(c)}"
                 for c in cols
             ],
             *[
-                f"CASE WHEN {take_source} THEN s.{_ident(c)} END AS {_ident(c)}"
+                f"CASE WHEN {take_source} THEN s.{sql_ident(c)} END AS {sql_ident(c)}"
                 for c in new_cols
             ],
         ]

@@ -19,17 +19,33 @@ with singleton wrappers:
     MultiPolygon     [rings, ...]       (N parts)
 
 The outer dimension is always the *part* axis, so the reference's
-UnMulti explode (task.ts:433-444) is exactly ``posexplode(coords)`` for
+UnMulti explode (task.ts:433-444) is one generator over ``coords`` for
 every type, and reprojection (task.ts:194,203-207,213-217) is one
 nested ``transform`` over vertices regardless of type. All operators
 here are narrow, shuffle-free, codegen'd projections — they run at scan
 speed at any scale.
+
+Each operator on the sync path is ONE SQL-text expression (``F.expr`` /
+``selectExpr``), its lambdas SQL lambdas (``transform(coords, part ->
+...)``), the idiom of ``acid.merge``'s post-image. The same expression
+built through the Column API costs py4j round trips per node, and every
+Python lambda is rebuilt node by node through the gateway; as text the
+JVM parses it in one call. On ``feature_sync``'s pull (6,000-feature
+layer, 4-core VM) building the chain went from ~1,770 round trips to
+~125, and its traced build time from 0.31-0.36 s to 0.14 s per sync.
+Identifiers are backtick-quoted and string literals escaped
+(``helpers.sql_ident`` / ``sql_string``); double literals carry the
+``D`` suffix (a bare ``6378137.0`` is a DECIMAL) and natural log is
+``ln`` (one-argument ``log`` divides by ``ln(e)``), so every value is
+bit-identical to the Column-API spelling.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from etl_arcgis_spark.helpers import sql_ident, sql_string
 
 MULTI_TYPES = ("MultiPoint", "MultiLineString", "MultiPolygon")
 ROUTED_TYPES = ("Point", "LineString", "Polygon")
@@ -42,33 +58,30 @@ def parse_geometry(df: DataFrame, type_col: str = "geom_type", json_col: str = "
     canonical depth-4 ``coords`` column. Unknown/null geometry yields
     NULL coords (the reference skips those downstream, task.ts:184-187).
     """
-    t = F.col(type_col)
-    j = F.col(json_col)
-    pt = F.from_json(j, "array<double>")
-    line = F.from_json(j, "array<array<double>>")
-    rings = F.from_json(j, "array<array<array<double>>>")
-    parts4 = F.from_json(j, _C4)
-    coords = (
-        F.when(t == "Point", F.array(F.array(F.array(pt))))
-        .when(t == "LineString", F.array(F.array(line)))
-        .when(t == "Polygon", F.array(rings))
-        .when(t == "MultiPoint", F.transform(line, lambda p: F.array(F.array(p))))
-        .when(t == "MultiLineString", F.transform(rings, lambda ln: F.array(ln)))
-        .when(t == "MultiPolygon", parts4)
-    )
-    return df.withColumn("coords", coords)
+    t, j = sql_ident(type_col), sql_ident(json_col)
+    return df.withColumn("coords", F.expr(
+        f"CASE WHEN {t} = 'Point' THEN array(array(array(from_json({j}, 'array<double>'))))"
+        f" WHEN {t} = 'LineString' THEN array(array(from_json({j}, 'array<array<double>>')))"
+        f" WHEN {t} = 'Polygon' THEN array(from_json({j}, 'array<array<array<double>>>'))"
+        f" WHEN {t} = 'MultiPoint'"
+        f" THEN transform(from_json({j}, 'array<array<double>>'), p -> array(array(p)))"
+        f" WHEN {t} = 'MultiLineString'"
+        f" THEN transform(from_json({j}, 'array<array<array<double>>>'), line -> array(line))"
+        f" WHEN {t} = 'MultiPolygon' THEN from_json({j}, '{_C4}') END"
+    ))
 
 
 def rewrite_id(df: DataFrame, layer_id: int | str, id_col: str = "id") -> DataFrame:
     """A6 (task.ts:427): ``feature.id = 'layer-{layerId}-{id}'``."""
+    prefix = sql_string(f"layer-{layer_id}-")
     return df.withColumn(
-        id_col, F.concat(F.lit(f"layer-{layer_id}-"), F.col(id_col).cast("string"))
+        id_col, F.expr(f"concat({prefix}, CAST({sql_ident(id_col)} AS STRING))")
     )
 
 
 def nest_metadata(df: DataFrame, props_col: str = "properties") -> DataFrame:
     """A7 (task.ts:429-431): ``properties = {metadata: properties}``."""
-    return df.withColumn(props_col, F.struct(F.col(props_col).alias("metadata")))
+    return df.withColumn(props_col, F.expr(f"struct({sql_ident(props_col)} AS metadata)"))
 
 
 def explode_multi(df: DataFrame, id_col: str = "id") -> DataFrame:
@@ -76,84 +89,69 @@ def explode_multi(df: DataFrame, id_col: str = "id") -> DataFrame:
     type ``X`` with ids suffixed ``-{idx}`` and duplicated attributes;
     non-Multi features pass through with id and part count 1 intact.
 
-    ``posexplode`` is a generator in the scan stage: row-count expansion
-    without any shuffle.
+    One ``inline`` generator in the scan stage: a Multi row with coords
+    yields one struct per part, any other row yields itself — row-count
+    expansion without a shuffle or a union. Multi features with NULL
+    coords (unparseable geometry) and rows with NULL ``geom_type`` pass
+    through unexploded, so the routing stage counts them as skips; an
+    empty Multi yields nothing. The input is scanned ONCE, so a pushdown
+    scan (``arcgis_sim_pushdown``) can feed it without a pin: the
+    reader's two-scans-one-relation hazard (``ArcGISSimReader``) needs
+    two scans.
     """
-    is_multi = F.col("geom_type").isin(*MULTI_TYPES)
-    explodable = is_multi & F.col("coords").isNotNull()
-    exploded = (
-        df.filter(explodable)
-        .select(
-            "*", F.posexplode("coords").alias("part_idx", "part")
-        )
-        .withColumn(id_col, F.concat(F.col(id_col), F.lit("-"), F.col("part_idx")))
-        .withColumn("geom_type", F.regexp_replace("geom_type", "^Multi", ""))
-        .withColumn("coords", F.array(F.col("part")))
-        .drop("part_idx", "part")
+    part = {
+        id_col: f"concat({sql_ident(id_col)}, '-', _idx)",
+        "geom_type": "regexp_replace(geom_type, '^Multi', '')",
+        "coords": "array(_part)",
+    }
+    cols = [sql_ident(c) for c in df.columns]
+    exploded = ", ".join(
+        f"{part.get(c, q)} AS {q}" for c, q in zip(df.columns, cols)
     )
-    # Multi features with NULL coords (unparseable geometry) pass
-    # through unexploded so the routing stage can count them as skips —
-    # posexplode alone would silently erase them
-    passthrough = df.filter(~explodable | F.col("geom_type").isNull())
-    return passthrough.unionByName(exploded)
+    whole = ", ".join(f"{q} AS {q}" for q in cols)
+    multi = ", ".join(sql_string(t) for t in MULTI_TYPES)
+    return df.selectExpr(
+        f"inline(CASE WHEN geom_type IN ({multi}) AND coords IS NOT NULL"
+        f" THEN transform(coords, (_part, _idx) -> struct({exploded}))"
+        f" ELSE array(struct({whole})) END)"
+    )
 
 
 def route_by_geom_type(df: DataFrame) -> DataFrame:
     """A9 (task.ts:178-187): add the target-layer route; NULL route ==
     the reference's skip counter. Per-sink writes filter on ``route``."""
-    return df.withColumn(
-        "route",
-        F.when(F.col("geom_type") == "Point", "points")
-        .when(F.col("geom_type") == "LineString", "lines")
-        .when(F.col("geom_type") == "Polygon", "polys"),
-    )
+    return df.withColumn("route", F.expr(
+        "CASE WHEN geom_type = 'Point' THEN 'points'"
+        " WHEN geom_type = 'LineString' THEN 'lines'"
+        " WHEN geom_type = 'Polygon' THEN 'polys' END"
+    ))
 
 
-_R = 6378137.0
+# Web-Mercator sphere radius, π/4 and π/2 as SQL DOUBLE literals
+_R = "6378137.0D"
+_QUARTER_PI = "0.7853981633974483D"
+_HALF_PI = "1.5707963267948966D"
 
 
-def _merc_x(lon: Column) -> Column:
-    return F.lit(_R) * F.radians(lon)
-
-
-_PI = 3.141592653589793
-
-
-def _merc_y(lat: Column) -> Column:
-    return F.lit(_R) * F.log(F.tan(F.lit(_PI / 4) + F.radians(lat) / 2))
-
-
-def _map_vertices(df: DataFrame, vertex) -> DataFrame:
-    """Apply ``vertex`` (a ``[x, y]`` Column -> Column function) to
-    every vertex of every ring of every part — one nested ``transform``
-    chain, type-agnostic thanks to the canonical depth-4 coords."""
-    return df.withColumn(
-        "coords",
-        F.transform(
-            "coords",
-            lambda part: F.transform(part, lambda ring: F.transform(ring, vertex)),
-        ),
-    )
+# ``{}`` (SQL over the ``[x, y]`` array ``v``) applied to every vertex of
+# every ring of every part: type-agnostic thanks to the canonical coords
+_EACH_VERTEX = "transform(coords, part -> transform(part, ring -> transform(ring, v -> {})))"
 
 
 def reproject_web_mercator(df: DataFrame) -> DataFrame:
     """A10 (task.ts:194,203-207,213-217): EPSG:4326 -> EPSG:3857 over
-    every vertex."""
-    return _map_vertices(
-        df, lambda pt: F.array(_merc_x(pt.getItem(0)), _merc_y(pt.getItem(1)))
-    )
+    every vertex: x = R·radians(lon); y = R·ln(tan(π/4 + radians(lat)/2))."""
+    return df.withColumn("coords", F.expr(_EACH_VERTEX.format(
+        f"array({_R} * radians(v[0]), {_R} * ln(tan({_QUARTER_PI} + radians(v[1]) / 2)))"
+    )))
 
 
 def reproject_inverse(df: DataFrame) -> DataFrame:
     """Inverse Web-Mercator (3857 -> 4326), for round-trip property
     tests: lon = degrees(x/R); lat = degrees(2·atan(exp(y/R)) − π/2)."""
-    return _map_vertices(
-        df,
-        lambda pt: F.array(
-            F.degrees(pt.getItem(0) / F.lit(_R)),
-            F.degrees(F.atan(F.exp(pt.getItem(1) / F.lit(_R))) * 2 - F.lit(_PI / 2)),
-        ),
-    )
+    return df.withColumn("coords", F.expr(_EACH_VERTEX.format(
+        f"array(degrees(v[0] / {_R}), degrees(atan(exp(v[1] / {_R})) * 2 - {_HALF_PI}))"
+    )))
 
 
 def ring_signed_area2(ring: Column) -> Column:
@@ -162,7 +160,9 @@ def ring_signed_area2(ring: Column) -> Column:
     clockwise. The ``% n`` wrap makes closed rings (first == last
     vertex, the GeoJSON convention) and open rings evaluate
     identically — the wrap edge of a closed ring is degenerate and
-    contributes exactly 0. Pure in-row fold, codegen'd."""
+    contributes exactly 0. Pure in-row fold, codegen'd.
+    ``orient_rings_esri`` spells the same fold as SQL text
+    (``_AREA2``); the tests hold the two equal."""
     n = F.size(ring)
     return F.aggregate(
         F.sequence(F.lit(0), n - 1),
@@ -171,6 +171,14 @@ def ring_signed_area2(ring: Column) -> Column:
         + ring[i][0] * ring[(i + 1) % n][1]
         - ring[(i + 1) % n][0] * ring[i][1],
     )
+
+
+# ring_signed_area2 over the SQL ring ``{r}``
+_AREA2 = (
+    "aggregate(sequence(0, size({r}) - 1), 0.0D, (acc, i) -> acc"
+    " + {r}[i][0] * {r}[(i + 1) % size({r})][1]"
+    " - {r}[(i + 1) % size({r})][0] * {r}[i][1])"
+)
 
 
 def orient_rings_esri(df: DataFrame) -> DataFrame:
@@ -186,18 +194,16 @@ def orient_rings_esri(df: DataFrame) -> DataFrame:
 
     Narrow in-row transform — no shuffle, no Python, runs at scan
     speed with the rest of the A11 conversion."""
-    def fix_ring(ring: Column, ri: Column) -> Column:
-        s2 = ring_signed_area2(ring)
-        wrong = F.when(ri == 0, s2 > 0).otherwise(s2 < 0)
-        return F.when(wrong, F.reverse(ring)).otherwise(ring)
-
-    fixed = F.transform(
-        "coords", lambda part: F.transform(part, fix_ring)
+    s2 = _AREA2.format(r="ring")
+    fix_ring = (
+        f"CASE WHEN CASE WHEN ri = 0 THEN {s2} > 0 ELSE {s2} < 0 END"
+        " THEN reverse(ring) ELSE ring END"
     )
-    is_poly = F.col("geom_type").isin("Polygon", "MultiPolygon")
-    return df.withColumn(
-        "coords", F.when(is_poly, fixed).otherwise(F.col("coords"))
-    )
+    return df.withColumn("coords", F.expr(
+        "CASE WHEN geom_type IN ('Polygon', 'MultiPolygon')"
+        f" THEN transform(coords, part -> transform(part, (ring, ri) -> {fix_ring}))"
+        " ELSE coords END"
+    ))
 
 
 def upsert_by_key(existing: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
@@ -241,21 +247,16 @@ def to_esri_json(df: DataFrame) -> DataFrame:
     Expects single-part (exploded) features; emits an ``esri_json``
     string column with fixed field order (hash-stable).
     """
-    sr = F.struct(
-        F.lit(102100).alias("wkid"), F.lit(3857).alias("latestWkid")
-    ).alias("spatialReference")
-    pt = F.col("coords").getItem(0).getItem(0).getItem(0)
-    point_json = F.to_json(
-        F.struct(pt.getItem(0).alias("x"), pt.getItem(1).alias("y"), sr)
-    )
-    line_json = F.to_json(F.struct(F.col("coords").getItem(0).alias("paths"), sr))
-    poly_json = F.to_json(F.struct(F.col("coords").getItem(0).alias("rings"), sr))
-    return df.withColumn(
-        "esri_json",
-        F.when(F.col("geom_type") == "Point", point_json)
-        .when(F.col("geom_type") == "LineString", line_json)
-        .when(F.col("geom_type") == "Polygon", poly_json),
-    )
+    sr = "'spatialReference', named_struct('wkid', 102100, 'latestWkid', 3857)"
+    pt = "coords[0][0][0]"
+    return df.withColumn("esri_json", F.expr(
+        "CASE WHEN geom_type = 'Point'"
+        f" THEN to_json(named_struct('x', {pt}[0], 'y', {pt}[1], {sr}))"
+        " WHEN geom_type = 'LineString'"
+        f" THEN to_json(named_struct('paths', coords[0], {sr}))"
+        " WHEN geom_type = 'Polygon'"
+        f" THEN to_json(named_struct('rings', coords[0], {sr})) END"
+    ))
 
 
 # Permissive superset schema: exactly one of x/y, paths, rings is

@@ -59,6 +59,18 @@ def r4_sql(expr: str) -> str:
     return f"CAST(signum({expr}) * floor(abs({expr}) * 10000 + 0.5) / 10000 AS DOUBLE)"
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """``s`` as a single-quoted SQL string literal: backslash and quote
+    escaped the way Spark's parser unescapes them (its default
+    ``spark.sql.parser.escapedStringLiterals=false``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def ev_us(col: str = "ts") -> Column:
     """events.ts (µs timestamp) -> epoch microseconds. Oracle: ``epoch_us(ts)``."""
     return F.unix_micros(_c(col))

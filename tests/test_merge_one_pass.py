@@ -366,3 +366,30 @@ def test_narrow_merge_source_is_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match=r"missing table column\(s\) \['w'\].*full-width"):
         acid.merge(spark, root, src)
     assert acid.current_version(root) == 1
+
+
+def test_string_keys_with_quote_and_backslash_find_their_files(spark, tmp_path):
+    """The source aggregate carries the files' key ranges as one SQL
+    string literal. Keys holding ``'`` and ``\\`` must survive the
+    escaping: a range literal the parser rejects fails the merge, and
+    one that from_json cannot read finds no file, so every update would
+    land as a duplicate insert."""
+    root = str(tmp_path / "t")
+    keys = [f"k\\{i:04d}'q" for i in range(400)]
+    src = spark.createDataFrame([(k, 0) for k in keys], "fid string, x bigint")
+    acid.create(spark, root, src.repartitionByRange(4, "fid"), key="fid")
+    files = acid._snapshot(root)[1]["files"]
+    assert len(files) == 4
+    assert all("\\" in f["key_range"][0] and "'" in f["key_range"][1] for f in files)
+    batch = spark.createDataFrame(
+        [(k, 1) for k in keys[250:260]] + [("new'\\", 1)], "fid string, x bigint"
+    )
+    want = {
+        i for i, f in enumerate(files)
+        if any(f["key_range"][0] <= k <= f["key_range"][1] for k in keys[250:260])
+    }
+    assert want and acid._scan_source(batch, "fid", "merge", files).hit == want
+    acid.merge(spark, root, batch)
+    got = {r["fid"]: r["x"] for r in acid.read(spark, root).collect()}
+    assert len(got) == 401 and acid.read(spark, root).count() == 401
+    assert {k for k, x in got.items() if x == 1} == set(keys[250:260]) | {"new'\\"}

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from etl_arcgis_spark.geojson import orient_rings_esri, ring_signed_area2
+from etl_arcgis_spark.geojson import _AREA2, orient_rings_esri, ring_signed_area2
 
 
 # ---------------------------------------------------------------------------
@@ -41,6 +41,14 @@ def test_ring_signed_area2_sign_and_closure(spark):
     assert out["ccw"] == 8.0  # 2x area of the 2x2 square, CCW positive
     assert out["cw"] == -8.0
     assert out["ccw_closed"] == 8.0  # closure edge contributes 0
+    # orient_rings_esri's SQL-text spelling of the same fold agrees
+    sql = {
+        r["id"]: r["s2"]
+        for r in df.select(
+            "id", F.expr(_AREA2.format(r="coords[0][0]")).alias("s2")
+        ).collect()
+    }
+    assert sql == out
 
 
 def test_orient_rings_esri_repairs_only_wrong_rings(spark):
