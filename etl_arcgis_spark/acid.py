@@ -49,18 +49,18 @@ range are rewritten; everything else carries forward path-identical.
 A merge reads its source once before the write: one aggregate checks
 the keys, finds the files to rewrite and collects the partitions the
 source writes. It streams the touched files past a broadcast batch,
-with no shuffle. merge(), delete_where(), update_where() and
-compact_deletes() all rewrite their touched files through one pair of
-helpers, _read_touched and _write_touched; the latter's docstring
-states the key-chunk layout they leave. Nothing is counted after a
-merge's write: its ``rows`` is the sum of its files' footer counts.
-Files holding at most
-_BLOOM_BITS distinct keys also carry a key Bloom sidecar for
-read_point(); bigger files get none, as a saturated filter skips
-nothing. read_key_range() uses the same stats for file skipping, and
-compact() bin-packs merge-fragmented small files under the same
-protocol. The commit protocol is IDENTICAL at any scale, which is the
-point.
+with no shuffle. merge(), delete_where(), update_where(),
+compact_deletes() and compact() all rewrite their touched files
+through one pair of helpers, _read_touched and _write_touched; the
+latter's docstring states the key-chunk layout they leave, and
+compact() folds key-adjacent files of fewer than _CHUNK_ROWS rows
+into it. Nothing is counted after a merge's write: its ``rows`` is
+the sum of its files' footer counts. Files of at most _BLOOM_BITS
+rows also carry a key Bloom sidecar for read_point(); bigger files
+get none, as a saturated filter skips nothing. read_key_range(),
+read_where() and read_point() prune files by the same stats, through
+one rule (_prune). The commit protocol is IDENTICAL at any scale,
+which is the point.
 
 Reference: dfpc-coe/etl-arcgis task.ts:235-350 (the keyed upsert this
 makes transactional).
@@ -287,21 +287,18 @@ def _bloom_of_column(path: str, col: str) -> str | None:
     for high-cardinality keys, where [min, max] ranges are too loose
     to skip anything (e.g. uuid-ish keys interleaved across files).
 
-    None (no sidecar) when the file holds more than ``_BLOOM_BITS``
-    distinct non-null values: past one key per bit, a share of at
-    least 1 - e^-3 of the bits is set, so a k=3 filter passes at least
-    (1 - e^-3)^3 = 86% of absent probes. It could not skip the file
-    and would only cost the hashing. The distinct
-    count comes first, from pyarrow, before any value is hashed.
-    Readers treat a missing sidecar as "may contain"."""
+    _file_entry calls it only for files of at most ``_BLOOM_BITS``
+    footer rows: past one key per bit, a share of at least 1 - e^-3 of
+    the bits is set, so a k=3 filter passes at least (1 - e^-3)^3 = 86%
+    of absent probes. It could not skip the file, and reading the key
+    column to build it would cost a driver-side scan per file. Readers
+    treat a missing sidecar as "may contain"."""
     try:
         import base64
 
         import pyarrow.parquet as pq
 
         vals = pq.read_table(path, columns=[col]).column(0).unique().drop_null()
-        if len(vals) > _BLOOM_BITS:
-            return None
         bits = bytearray(_BLOOM_BITS // 8)
         for v in vals.to_pylist():
             for pos in _bloom_positions(v):
@@ -368,7 +365,7 @@ def _file_entry(final: str, root: str, key: str | None) -> dict[str, Any]:
         entry["col_stats"] = stats
     if key is not None and key in stats:
         entry["key_range"] = stats[key]
-    if key is not None:
+    if key is not None and entry["rows"] <= _BLOOM_BITS:
         bloom = _bloom_of_column(final, key)
         if bloom is not None:
             entry["key_bloom"] = bloom
@@ -1042,42 +1039,14 @@ def _read_kept(
     return _pad(df, read(spark, root, v).schema)
 
 
-def read_key_range(
-    spark: SparkSession, root: str, lo: Any, hi: Any, version: int | None = None
-) -> DataFrame:
-    """Stats-pruned read: open ONLY data files whose manifest key range
-    intersects [lo, hi], then apply the exact residual filter — the
-    manifest-level file skipping that stacks on top of parquet's own
-    row-group pruning (two pruning tiers, same as Iceberg scan
-    planning). Files without stats are read conservatively."""
-    v, man = _snapshot(root, version)
-    key = man["key"]
-    keep = [
-        f
-        for f in man["files"]
-        if "key_range" not in f
-        or not (f["key_range"][1] < lo or f["key_range"][0] > hi)
-    ]
-    return _read_kept(spark, root, v, man, keep).filter(
-        (F.col(key) >= lo) & (F.col(key) <= hi)
-    )
-
-
-def read_where(
-    spark: SparkSession,
-    root: str,
-    col: str,
-    lo: Any,
-    hi: Any,
-    version: int | None = None,
-) -> DataFrame:
-    """Stats-pruned read on ANY primitive column (not just the merge
-    key): open only files whose manifest-recorded [min, max] for
-    ``col`` intersects [lo, hi], then apply the exact residual filter.
-    This is full Iceberg-style scan planning — partition pruning
-    (read_partition) above it, parquet row-group pruning below it.
-    Files without stats for the column read conservatively."""
-    v, man = _snapshot(root, version)
+def _prune(
+    man: dict[str, Any], col: str, lo: Any, hi: Any
+) -> list[dict[str, Any]]:
+    """The files of ``man`` that may hold a ``col`` value in [lo, hi],
+    by their manifest stats — the one file-skipping rule of
+    read_key_range, read_where and read_point. A file without stats
+    for ``col`` stays (conservative, never wrong); the caller applies
+    the exact residual filter."""
     keep = []
     for f in man["files"]:
         # RENAME safety: a file's col_stats are keyed by its PHYSICAL
@@ -1119,7 +1088,40 @@ def read_where(
                 st = [pv, pv]
         if st is None or not (st[1] < lo or st[0] > hi):
             keep.append(f)
-    return _read_kept(spark, root, v, man, keep).filter(
+    return keep
+
+
+def read_key_range(
+    spark: SparkSession, root: str, lo: Any, hi: Any, version: int | None = None
+) -> DataFrame:
+    """Stats-pruned read: open ONLY data files whose manifest key range
+    intersects [lo, hi], then apply the exact residual filter — the
+    manifest-level file skipping that stacks on top of parquet's own
+    row-group pruning (two pruning tiers, same as Iceberg scan
+    planning). Files without stats are read conservatively."""
+    v, man = _snapshot(root, version)
+    key = man["key"]
+    return _read_kept(spark, root, v, man, _prune(man, key, lo, hi)).filter(
+        (F.col(key) >= lo) & (F.col(key) <= hi)
+    )
+
+
+def read_where(
+    spark: SparkSession,
+    root: str,
+    col: str,
+    lo: Any,
+    hi: Any,
+    version: int | None = None,
+) -> DataFrame:
+    """Stats-pruned read on ANY primitive column (not just the merge
+    key): open only files whose manifest-recorded [min, max] for
+    ``col`` intersects [lo, hi], then apply the exact residual filter.
+    This is full Iceberg-style scan planning — partition pruning
+    (read_partition) above it, parquet row-group pruning below it.
+    Files without stats for the column read conservatively."""
+    v, man = _snapshot(root, version)
+    return _read_kept(spark, root, v, man, _prune(man, col, lo, hi)).filter(
         (F.col(col) >= lo) & (F.col(col) <= hi)
     )
 
@@ -1140,19 +1142,13 @@ def read_point(
     would be the silent-row-drop bug the stamp exists to prevent."""
     v, man = _snapshot(root, version)
     key = man["key"]
-    keep = []
-    for f in man["files"]:
-        rng = f.get("key_range")
-        if rng is not None and (value < rng[0] or value > rng[1]):
-            continue
-        bloom = f.get("key_bloom")
-        if (
-            bloom is not None
-            and f.get("bloom_v") == _BLOOM_VERSION
-            and not _bloom_may_contain(bloom, value)
-        ):
-            continue
-        keep.append(f)
+    keep = [
+        f
+        for f in _prune(man, key, value, value)
+        if f.get("key_bloom") is None
+        or f.get("bloom_v") != _BLOOM_VERSION
+        or _bloom_may_contain(f["key_bloom"], value)
+    ]
     return _read_kept(spark, root, v, man, keep).filter(F.col(key) == value)
 
 
@@ -1252,29 +1248,33 @@ def _scan_source(
 def _segments(
     files: list[dict[str, Any]], touched: list[dict[str, Any]]
 ) -> list[list[dict[str, Any]]]:
-    """``touched`` (a sublist of ``files``) cut into the units a merge
-    rewrites one task each: runs of files adjacent in key order (no
+    """``touched`` (a sublist of ``files``) cut into the units a rewrite
+    writes one task each: runs of files adjacent in key order (no
     carried file's range starts between them) of at most _CHUNK_ROWS
     rows in all, or one bigger file alone. Sorted in its task and cut
     into chunks, a segment lands in files whose key ranges overlap no
     other segment's and no carried file's, and small neighbours compact
-    into one chunk. Files without a key range are a segment each."""
+    into one chunk. Files without a key range (a key type whose footer
+    stats are not recorded, see _json_safe) follow the same rule in
+    manifest order, the only order they have."""
     hit = {id(f) for f in touched}
-    segs: list[list[dict[str, Any]]] = []
-    rows = 0
-    for f in sorted(
+    ranged = sorted(
         (f for f in files if "key_range" in f), key=lambda f: f["key_range"][0]
-    ):
-        if id(f) not in hit:
-            rows = _CHUNK_ROWS  # a carried file ends the run
-            continue
-        n = f.get("rows", 0)
-        if not segs or rows + n > _CHUNK_ROWS:
-            segs.append([])
-            rows = 0
-        segs[-1].append(f)
-        rows += n
-    return segs + [[f] for f in touched if "key_range" not in f]
+    )
+    segs: list[list[dict[str, Any]]] = []
+    for run in (ranged, [f for f in files if "key_range" not in f]):
+        rows = None  # None: the next touched file starts a segment
+        for f in run:
+            if id(f) not in hit:
+                rows = None  # a carried file ends the run
+                continue
+            n = f.get("rows", 0)
+            if rows is None or rows + n > _CHUNK_ROWS:
+                segs.append([])
+                rows = 0
+            segs[-1].append(f)
+            rows += n
+    return segs
 
 
 def _read_touched(
@@ -1285,8 +1285,8 @@ def _read_touched(
     touched: list[dict[str, Any]],
 ) -> DataFrame:
     """The read half of every copy-on-write rewrite (merge, delete_where,
-    update_where, compact_deletes): the ``touched`` entries of snapshot
-    ``base_v`` (manifest ``man``), one scan per _segments segment.
+    update_where, compact_deletes, compact): the ``touched`` entries of
+    snapshot ``base_v`` (manifest ``man``), one scan per _segments segment.
     Several files share one task (coalesce: no shuffle); a single file
     keeps its scan's splits, each a contiguous key range already. A
     typed empty frame when nothing is touched. The caller transforms
@@ -1306,10 +1306,11 @@ def _read_touched(
 def _write_touched(
     df: DataFrame, root: str, man: dict[str, Any], seq: int
 ) -> list[dict[str, Any]]:
-    """The write half of every copy-on-write rewrite: ``df`` (rows from
-    _read_touched's segments, plus any rows of its own) sorted by
-    (partition column, key) within each task and written in files of at
-    most _CHUNK_ROWS rows, stamped ``seq``; returns the file entries.
+    """The write half of every copy-on-write rewrite (the writers
+    _read_touched lists): ``df`` (rows from _read_touched's segments,
+    plus any rows of its own) sorted by (partition column, key) within
+    each task and written in files of at most _CHUNK_ROWS rows, stamped
+    ``seq``; returns the file entries.
 
     This is the table's rewrite layout. Each segment's task writes
     contiguous key chunks inside the segment's own key span, where no
@@ -2698,96 +2699,62 @@ def expire_snapshots(
     return expired
 
 
-def compact(
-    spark: SparkSession, root: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """OPTIMIZE: bin-pack small data files into ~target-size files
+def compact(spark: SparkSession, root: str) -> int:
+    """OPTIMIZE: fold small data files into the table's rewrite layout
     under the same snapshot protocol — a metadata-only change to
     readers (same rows, operation='compact' in history). Small files
-    are the tax every merge-heavy table pays (each merge writes its
-    touched set as fresh files); compaction amortizes it back out.
+    are the tax every merge-heavy table pays; compaction amortizes it
+    back out.
 
-    Greedy first-fit by manifest byte counts picks groups of small
-    files; each group is read and rewritten as one coalesced file
-    (sorted by the table key, which also tightens the key_range stats
-    pruning granularity). Files already at/over target size carry
-    forward untouched. Publishes atomically like every other commit —
-    a crash mid-compaction leaves only vacuum-able orphans.
+    A file is small when its footer holds fewer than _CHUNK_ROWS rows.
+    The small files are cut by _segments, as any rewrite's touched
+    files are, and each segment of two or more files is rewritten
+    through _read_touched/_write_touched: sorted by key in one task
+    and written in chunks of at most _CHUNK_ROWS rows, so the result
+    keeps the disjoint key ranges a merge leaves. A file with no rows
+    is dropped. Every other file carries forward path-identical; when
+    nothing packs or drops, nothing is published. Rewritten files take
+    the NEW sequence number: a carried equality-delete entry (lower
+    seq) no longer applies to them, which is correct, because the
+    rewrite read already applied the overlay.
 
-    At 100 TB this is the nightly maintenance job: each group is
-    independent work (parallel across executors), and nothing blocks
-    concurrent readers (they hold older manifests) or writers: a
-    compaction that loses the publish race to a writer plans again on
-    the writer's snapshot (_commit), so it never drops that commit's
-    files."""
+    At 100 TB this is the nightly maintenance job: each segment is an
+    independent task, and nothing blocks concurrent readers (they hold
+    older manifests) or writers: a compaction that loses the publish
+    race to a writer plans again on the writer's snapshot (_commit),
+    so it never drops that commit's files. A crash mid-compaction
+    leaves only vacuum-able orphans."""
 
     def plan(base_v: int, man: dict[str, Any]) -> dict[str, Any] | None:
-        key = man["key"]
-        pcol = man.get("partition_by")
-        small = [f for f in man["files"] if f["bytes"] < target_file_bytes]
-        keep = [f for f in man["files"] if f["bytes"] >= target_file_bytes]
-        if len(small) <= 1:
+        # a file with no rows (an empty write task leaves one) carries no
+        # key range, so no segment would take it: it is simply dropped
+        empty = [f for f in man["files"] if f.get("rows") == 0]
+        small = [f for f in man["files"] if 0 < f.get("rows", 0) < _CHUNK_ROWS]
+        packed = [
+            f for seg in _segments(man["files"], small) if len(seg) > 1 for f in seg
+        ]
+        if not packed and not empty:
             return None  # nothing to do
-        # greedy first-fit groups by byte budget; on a partitioned table a
-        # group NEVER crosses a partition (the rewrite must land back in
-        # its own <col>=<val> directory), so bins form per partition value
-        groups: list[list[dict[str, Any]]] = []
-        cur: list[dict[str, Any]] = []
-        cur_bytes = 0
-        cur_part: Any = object()  # sentinel != any real partition value
-        order = sorted(
-            small,
-            key=lambda f: (
-                str(_file_spec(f, pcol)),
-                str(f.get("partition")),
-                f.get("key_range", [None])[0] is None,
-            ),
-        )
-        for f in order:
-            fkey = (_file_spec(f, pcol), f.get("partition"))
-            if cur and (
-                cur_bytes + f["bytes"] > target_file_bytes or fkey != cur_part
-            ):
-                groups.append(cur)
-                cur, cur_bytes = [], 0
-            cur.append(f)
-            cur_bytes += f["bytes"]
-            cur_part = fkey
-        if cur:
-            groups.append(cur)
-        groups = [g for g in groups if len(g) > 1]
-        if not groups:
-            return None
-        grouped_paths = {f["path"] for g in groups for f in g}
-        keep = keep + [f for f in small if f["path"] not in grouped_paths]
-        new_files: list[dict[str, Any]] = []
-        # the table's current full schema: a group mixing pre- and post-
-        # evolution files must rewrite under the UNION schema or the
-        # evolved column's values are silently dropped from the new
-        # snapshot (only recoverable via time travel until vacuum)
-        table_schema = read(spark, root, base_v).schema
+        gone = {id(f) for f in packed + empty}
+        carried = [f for f in man["files"] if id(f) not in gone]
         new_seq = _next_seq(man, base_v)
-        for g in groups:
-            df = _pad(  # evolved cols absent from every file in the group
-                _read_paths(spark, root, man, [f["path"] for f in g]),
-                table_schema,
-            ).coalesce(1).sortWithinPartitions(key)
-            # rewritten files take the NEW sequence number: any carried
-            # equality-delete entry (lower seq) no longer applies to them —
-            # correct, because the rewrite read already applied the overlay
-            new_files.extend(
-                _write_data_files(df, root, key=key, partition_by=pcol, seq=new_seq)
+        new_files = (
+            _write_touched(
+                _read_touched(spark, root, base_v, man, packed), root, man, new_seq
             )
+            if packed
+            else []
+        )
         return {
-            "schema": table_schema.json(),
-            "files": keep + new_files,
+            "schema": _table_schema(spark, root, base_v, man).json(),
+            "files": carried + new_files,
             # visible rows are invariant under compaction; with a
-            # merge-on-read overlay the kept entries' recorded counts
+            # merge-on-read overlay the carried entries' recorded counts
             # overstate, so trust the running total instead of recounting
             "rows": man.get("rows", 0)
             if man.get("deletes")
-            else sum(f.get("rows", 0) for f in keep + new_files),
-            "compacted_files": len(grouped_paths),
+            else sum(f.get("rows", 0) for f in carried + new_files),
+            "compacted_files": len(gone),
             "produced_files": len(new_files),
             "last_seq": new_seq,
         }
@@ -2811,9 +2778,9 @@ def compact_zorder(
     as a query). Plain compact() sorts by the single table key, which
     leaves the second dimension scattered across every file.
 
-    Unlike bin-packing (which must preserve file groups), z-ordering
-    is a RECLUSTER: all files (per partition value, on partitioned
-    tables) pool into one range-shuffle by zkey into
+    Unlike compact() (which folds key-adjacent small files into key
+    chunks), z-ordering is a RECLUSTER: all files (per partition value,
+    on partitioned tables) pool into one range-shuffle by zkey into
     ceil(total_bytes/target) output files. Same snapshot protocol —
     readers on older manifests never block, a crash leaves vacuum-able
     orphans, and a lost publish race reclusters the writer's snapshot.

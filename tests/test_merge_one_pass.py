@@ -1,6 +1,7 @@
 """A keyed merge reads its source once and counts nothing after the
 write; it moves no target row through a shuffle and rewrites its files
-as disjoint key chunks; its conditional clauses match a dict model;
+as disjoint key chunks, and compact() folds small files into the same
+layout; its conditional clauses match a dict model;
 blooms are written only where they can prune; append() rejects NULL
 merge keys and keeps the table's columns; merge() rejects a source
 narrower than the table.
@@ -184,6 +185,75 @@ def test_predicate_rewrites_keep_key_ranges_disjoint(spark, tmp_path, writer):
     assert got == model
 
 
+def test_compact_leaves_full_chunks_in_place(spark, tmp_path):
+    """Files of at least _CHUNK_ROWS rows are not small: compacting a
+    table of two 20,000-row files publishes nothing and leaves every
+    file where it was."""
+    root = str(tmp_path / "t")
+    _table(spark, root, files=2)
+    files = acid._read_manifest(root, 1)["files"]
+    assert len(files) == 2 and all(f["rows"] >= acid._CHUNK_ROWS for f in files)
+    assert acid.compact(spark, root) == 1
+    assert acid.current_version(root) == 1
+    assert acid._snapshot(root)[1]["files"] == files
+
+
+def test_compact_folds_small_files_into_disjoint_chunks(spark, tmp_path):
+    """Three narrow merges fragment a 40-file range-clustered table;
+    compact() rewrites the small files as key chunks of at most
+    _CHUNK_ROWS rows with pairwise disjoint ranges. A point read then
+    opens one file, the table matches a dict model, and the next
+    one-key merge rewrites one chunk, not the table."""
+    root = str(tmp_path / "t")
+    _table(spark, root, files=40)
+    model = {k: (3 * k, f"v{k}") for k in range(40_000)}
+    batches = [
+        ([5, 7_005, 21_005], [40_000]),
+        ([12_003, 33_333], [40_001, 40_002]),
+        ([1, 39_999], []),
+    ]
+    for i, (upd, ins) in enumerate(batches):
+        path = _batch(str(tmp_path / f"b{i}.parquet"), upd, ins)
+        acid.merge(spark, root, spark.read.parquet(path))
+        model.update({k: (-k, f"b{k}") for k in upd + ins})
+    before = acid._snapshot(root)[1]["files"]
+    v = acid.compact(spark, root)
+    man = acid._read_manifest(root, v)
+    files = man["files"]
+    assert man["operation"] == "compact" and len(files) < len(before)
+    assert man["rows"] == len(model)
+    assert all(f["rows"] <= acid._CHUNK_ROWS for f in files), [f["rows"] for f in files]
+    assert _disjoint(files), sorted(f["key_range"] for f in files)
+    got = acid.read_point(spark, root, 21_005)
+    assert len(got.inputFiles()) == 1
+    assert [r.v for r in got.collect()] == ["b21005"]
+    assert {r.fid: (r.x, r.v) for r in acid.read(spark, root).collect()} == model
+    path = _batch(str(tmp_path / "one.parquet"), [20_500], [])
+    v = acid.merge(spark, root, spark.read.parquet(path))
+    live = {f["path"] for f in acid._read_manifest(root, v)["files"]}
+    rewritten = sum(f["rows"] for f in files if f["path"] not in live)
+    assert 0 < rewritten <= acid._CHUNK_ROWS, rewritten
+
+
+def test_compact_packs_files_without_key_ranges(spark, tmp_path):
+    """A DECIMAL key records no key_range (its footer stats are not
+    JSON-safe), so its small files pack in manifest order into runs
+    of at most _CHUNK_ROWS rows: fewer files, the same rows."""
+    root = str(tmp_path / "t")
+    src = spark.range(20_000).select(
+        F.col("id").cast("decimal(12,2)").alias("fid"), (F.col("id") * 3).alias("x")
+    )
+    acid.create(spark, root, src.repartitionByRange(20, "fid"), key="fid")
+    before = acid._read_manifest(root, 1)["files"]
+    assert len(before) == 20 and not any("key_range" in f for f in before)
+    rows = sorted(map(tuple, acid.read(spark, root).collect()))
+    v = acid.compact(spark, root)
+    man = acid._read_manifest(root, v)
+    assert len(man["files"]) < len(before) and man["rows"] == 20_000
+    assert all(f["rows"] <= acid._CHUNK_ROWS for f in man["files"])
+    assert sorted(map(tuple, acid.read(spark, root).collect())) == rows
+
+
 def _model_merge(state, rows, delete, update):
     """MERGE INTO over a dict ``{id: {column: value}}``: ``rows`` are
     source dicts, ``delete``/``update`` predicates over (source row,
@@ -300,11 +370,20 @@ def test_partitioned_merge_manifest_counts(spark, tmp_path):
     assert got[2] == ("X", None) and got[5] == ("Y", None) and got[100] == ("Z", "a")
 
 
-def test_no_bloom_past_one_key_per_bit(spark, tmp_path):
-    """A file with more distinct keys than the bloom has bits gets no
-    key_bloom (it could not skip the file); read_point still finds its
-    rows. A small file of the same table keeps its bloom."""
+def test_no_bloom_past_one_key_per_bit(spark, tmp_path, monkeypatch):
+    """A file with more rows than the bloom has bits gets no key_bloom
+    (it could not skip the file), and its key column is never read to
+    build one; read_point still finds its rows. A small file of the
+    same table keeps its bloom."""
     root = str(tmp_path / "t")
+    scanned = []
+    real = acid._bloom_of_column
+
+    def spy(path, col):
+        scanned.append(os.path.basename(path))
+        return real(path, col)
+
+    monkeypatch.setattr(acid, "_bloom_of_column", spy)
     n_big = acid._BLOOM_BITS + 200
     big = spark.range(n_big).select(
         F.col("id").alias("fid"), F.concat(F.lit("v"), F.col("id").cast("string")).alias("v")
@@ -317,6 +396,7 @@ def test_no_bloom_past_one_key_per_bit(spark, tmp_path):
     big_f, small_f = acid._read_manifest(root, v)["files"]
     assert big_f["rows"] == n_big and "key_bloom" not in big_f
     assert small_f["rows"] == 50 and small_f["bloom_v"] == acid._BLOOM_VERSION
+    assert scanned == [os.path.basename(small_f["path"])]
     for k in (0, 517, n_big - 1, n_big + 7):
         assert [r.v for r in acid.read_point(spark, root, k).collect()] == [f"v{k}"]
 
